@@ -1,7 +1,6 @@
 package graft.olist
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** CSV → bronze ingest — the Spark re-expression of
@@ -42,13 +41,8 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
   def loadOne(csvDir: String, table: String, schema: StructType, pipe: Boolean): Long = {
     val sep = if (pipe) "|" else ","
     val csv = s"$csvDir/$table.csv"
-    try {
-      audit.withRun("csv", table, "bronze", table) {
-        val df = readCsv(csv, schema, sep)
-        df.write.mode(SaveMode.Overwrite).parquet(tablePath(table))
-        spark.read.parquet(tablePath(table)).count()
-      }
-    } catch {
+    try audit.overwrite("csv", table, "bronze", table, tablePath(table))(readCsv(csv, schema, sep))
+    catch {
       case e: Throwable =>
         // bronze failures don't cascade (reference has no THROW here)
         -1L
@@ -61,5 +55,5 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
       table -> loadOne(csvDir, table, schema, pipe)
     }.toMap
 
-  def table(name: String): DataFrame = spark.read.parquet(tablePath(name))
+  def table(name: String): DataFrame = Schemas.read(spark, warehouse, "bronze", name)
 }

@@ -1,6 +1,6 @@
 package graft.olist
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Functions._
@@ -210,21 +210,16 @@ object Silver {
     * written truncate+insert (= parquet overwrite). Fail-fast: the first
     * exception aborts the remaining loads (XACT_ABORT + THROW). */
   def run(spark: SparkSession, warehouse: String, bronze: Bronze, audit: Audit): Map[String, Long] = {
-    def load(table: String, df: => DataFrame): (String, Long) = {
-      val rows = audit.withRun("silver-etl", s"bronze→$table", "silver", table) {
-        val out = df
-        out.write.mode(SaveMode.Overwrite).parquet(s"$warehouse/silver/$table")
-        spark.read.parquet(s"$warehouse/silver/$table").count()
-      }
-      table -> rows
-    }
+    def load(table: String, df: => DataFrame): (String, Long) =
+      table -> audit.overwrite("silver-etl", s"bronze→$table", "silver", table,
+        s"$warehouse/silver/$table")(df)
     val results = Seq(
       load("customers", customers(bronze.table("olist_customers"))),
       load("sellers", sellers(bronze.table("olist_sellers"))),
       load("product_category_translation",
         categoryTranslation(bronze.table("product_category_name_translation"))),
       load("products", products(bronze.table("olist_products"),
-        spark.read.parquet(s"$warehouse/silver/product_category_translation"))),
+        table(spark, warehouse, "product_category_translation"))),
       load("geolocation", geolocation(bronze.table("olist_geolocation"))),
       load("orders", orders(bronze.table("olist_orders"))),
       load("order_items", orderItems(bronze.table("olist_order_items"))),
@@ -234,5 +229,5 @@ object Silver {
   }
 
   def table(spark: SparkSession, warehouse: String, name: String): DataFrame =
-    spark.read.parquet(s"$warehouse/silver/$name")
+    Schemas.read(spark, warehouse, "silver", name)
 }

@@ -27,9 +27,19 @@ object Validate {
     def silver(n: String) = Silver.table(spark, warehouse, n)
     def gold(n: String) = Gold.table(spark, warehouse, n)
 
+    // one scan per fact for its scalar checks: row count (volumetry),
+    // undelivered and impossible deliveries; row count and revenue
+    val orders = gold("fact_orders").agg(
+      count(lit(1)),
+      count(when(col("delivered_date_key").isNull, 1)),
+      count(when(col("total_delivery_days") < 0, 1))).head
+    val items = gold("fact_order_items").agg(
+      count(lit(1)),
+      sum(col("total_item_value")).cast(DecimalType(19, 2))).head
+
     // 1. volumetry (silver vs gold row counts)
-    val ordersDiff = gold("fact_orders").count() - silver("orders").count()
-    val itemsDiff = gold("fact_order_items").count() - silver("order_items").count()
+    val ordersDiff = orders.getLong(0) - silver("orders").count()
+    val itemsDiff = items.getLong(0) - silver("order_items").count()
 
     // 2. referential integrity: facts with no dim row (left_anti ≡
     //    LEFT JOIN ... WHERE d.customer_sk IS NULL)
@@ -37,9 +47,7 @@ object Validate {
       .join(gold("dim_customer"), Seq("customer_sk"), "left_anti").count()
 
     // 3a. total revenue (raw numeric — FORMAT 'C' pt-BR is presentation)
-    val revenue = gold("fact_order_items")
-      .agg(sum(col("total_item_value")).cast(DecimalType(19, 2)).as("v"))
-      .head.getDecimal(0)
+    val revenue = items.getDecimal(1)
 
     // 3b. purchase-date range through dim_date
     val range = gold("fact_orders")
@@ -55,9 +63,9 @@ object Validate {
       .limit(3).collect()
       .map(r => (Option(r.getString(0)).getOrElse("NULL"), r.getLong(1), r.getDecimal(2))).toSeq
 
-    // 4. anomalies
-    val undelivered = gold("fact_orders").filter(col("delivered_date_key").isNull).count()
-    val impossible = gold("fact_orders").filter(col("total_delivery_days") < 0).count()
+    // 4. anomalies (08:70-77)
+    val undelivered = orders.getLong(1)
+    val impossible = orders.getLong(2)
 
     // PK uniqueness (DDL constraints → validation aggregates)
     def pkCheck(df: DataFrame, cols: Seq[String]): Long =
