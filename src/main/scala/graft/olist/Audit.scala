@@ -21,6 +21,13 @@ import scala.concurrent.duration._
   * (`02_create_tables_bronze.sql:117-118`). A FAILED row is durable
   * before the failure propagates. A load whose process dies mid-flight
   * leaves no row (the reference would leave its STARTED row).
+  *
+  * One instance is shared by a layer's concurrent loads. Its appends are
+  * serialized on the instance: concurrent parquet appends into one
+  * directory break the file committer (one job's commit deletes the
+  * shared `_temporary` directory). `withRun` also calls `started`,
+  * `succeeded` and `failed` under that lock, so a subclass that
+  * overrides them sees one call at a time.
   */
 class Audit(spark: SparkSession, warehouse: String) {
 
@@ -60,7 +67,7 @@ class Audit(spark: SparkSession, warehouse: String) {
         runId, srcSys, srcObj, tgtSchema, tgtTable, status, rows, err.orNull,
         new java.sql.Timestamp(now), startedAt, endedAt, durationMs)),
       schema)
-    row.write.mode(SaveMode.Append).parquet(path)
+    synchronized(row.write.mode(SaveMode.Append).parquet(path))
   }
 
   /** INSERT ... 'STARTED'; SCOPE_IDENTITY() → run id (`03:35-37`). Nothing
@@ -85,14 +92,14 @@ class Audit(spark: SparkSession, warehouse: String) {
     * failure (fail-fast contract, `05_sp_master_orchestrator_silver.sql:33-40`). */
   def withRun(srcSys: String, srcObj: String, tgtSchema: String, tgtTable: String)
              (load: => Long): Long = {
-    val runId = started(srcSys, srcObj, tgtSchema, tgtTable)
+    val runId = synchronized(started(srcSys, srcObj, tgtSchema, tgtTable))
     try {
       val rows = load
-      succeeded(runId, srcSys, srcObj, tgtSchema, tgtTable, rows)
+      synchronized(succeeded(runId, srcSys, srcObj, tgtSchema, tgtTable, rows))
       rows
     } catch {
       case e: Throwable =>
-        failed(runId, srcSys, srcObj, tgtSchema, tgtTable, e.getMessage)
+        synchronized(failed(runId, srcSys, srcObj, tgtSchema, tgtTable, e.getMessage))
         throw e
     }
   }

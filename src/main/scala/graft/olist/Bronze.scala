@@ -2,6 +2,7 @@ package graft.olist
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** CSV → bronze ingest — the Spark re-expression of
   * `etl.sp_bulk_load_bronze` (`03_load_csv_to_bronze.sql:15-75`) and its 9
@@ -13,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * split, which is what the hint was approximating on a single server.
   * Unlike the silver SPs, a bronze file failure is recorded in the audit
   * trail but does NOT abort the other loads (the reference swallows the
-  * error without THROW, `03:65-72`).
+  * error without THROW, `03:65-72`). The 9 loads are independent and
+  * run concurrently (`Steps`).
   */
 class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
 
@@ -43,7 +45,7 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
     val csv = s"$csvDir/$table.csv"
     try audit.overwrite("csv", table, "bronze", table, tablePath(table))(readCsv(csv, schema, sep))
     catch {
-      case e: Throwable =>
+      case NonFatal(_) =>
         // bronze failures don't cascade (reference has no THROW here)
         -1L
     }
@@ -51,9 +53,9 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
 
   /** Load all 9 bronze tables (`03:87-115`). */
   def loadAll(csvDir: String): Map[String, Long] =
-    Schemas.bronzeTables.map { case (table, schema, pipe) =>
-      table -> loadOne(csvDir, table, schema, pipe)
-    }.toMap
+    Steps.run(Schemas.bronzeTables.map { case (table, schema, pipe) =>
+      Steps.step(table)(loadOne(csvDir, table, schema, pipe))
+    }).toMap
 
   def table(name: String): DataFrame = Schemas.read(spark, warehouse, "bronze", name)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import scala.util.control.NonFatal
 import Functions._
 
 /** Silver → gold star-schema build (the Spark re-expression of
@@ -146,17 +147,25 @@ object Gold {
 
   // ── orchestration (07:326-358) ───────────────────────────────────────────
 
-  /** Gold load in FK dependency order: dims first, fact_orders before
-    * fact_order_items/fact_reviews. Overwrite = the reference's
-    * DELETE + reseed + INSERT. The dim_date already-loaded guard
-    * (`07:18-22`) is a driver-side existence check. */
+  /** The gold loads (`07:326-358`), run concurrently along their FK
+    * edges: the 4 dims are independent; fact_orders waits for
+    * dim_customer; fact_order_items waits for fact_orders, dim_product
+    * and dim_seller; fact_reviews waits for fact_orders. Overwrite = the
+    * reference's DELETE + reseed + INSERT. The dim_date already-loaded
+    * guard (`07:18-22`) is a driver-side existence check, run before
+    * any load.
+    *
+    * Fail-fast (XACT_ABORT + THROW): a failed load aborts every load
+    * that depends on it, without running it or auditing it; independent
+    * loads run to the end and are audited. Once every load has ended,
+    * the first failure in the list's order is rethrown. */
   def run(spark: SparkSession, warehouse: String, audit: Audit): Map[String, Long] = {
     def silver(name: String) = Silver.table(spark, warehouse, name)
     def gold(name: String) = table(spark, warehouse, name)
-    def write(table: String, df: => DataFrame,
-              options: Map[String, String] = Map.empty): (String, Long) =
-      table -> audit.overwrite("gold-etl", s"silver→$table", "gold", table,
-        s"$warehouse/gold/$table", options)(df)
+    def write(table: String, after: Seq[String] = Nil, options: Map[String, String] = Map.empty)
+             (df: => DataFrame): Steps.Step[Long] =
+      Steps.step(table, after: _*)(audit.overwrite("gold-etl", s"silver→$table", "gold", table,
+        s"$warehouse/gold/$table", options)(df))
     /** Fact writes are READ-OPTIMIZED: REBALANCE evens the output
       * files (the upstream join leaves skewed post-shuffle partitions
       * — a 30M-order run produced a 5:1 file-size spread without it),
@@ -167,10 +176,10 @@ object Gold {
       * sized for ~row-group-level cardinality at the 100 TB bar and
       * merely over-allocates a few KB per group below it.
       * graft.tools.ScaleSkipProbe measures the resulting skip ratio. */
-    def writeFact(table: String, keyCol: String, df: => DataFrame): (String, Long) =
-      write(table, df.hint("rebalance"), Map(
+    def writeFact(table: String, keyCol: String, after: String*)(df: => DataFrame): Steps.Step[Long] =
+      write(table, after, Map(
         s"parquet.bloom.filter.enabled#$keyCol" -> "true",
-        s"parquet.bloom.filter.expected.ndv#$keyCol" -> "4000000"))
+        s"parquet.bloom.filter.expected.ndv#$keyCol" -> "4000000"))(df.hint("rebalance"))
 
     // already-loaded guard (07:18-22), one aggregate over the existing
     // table: loaded = any non-sentinel day; its row count is reported
@@ -184,24 +193,25 @@ object Gold {
         val r = gold("dim_date").agg(count(lit(1)),
           count(when(col("date_key") =!= 19000101, 1))).head
         if (r.getLong(1) > 0) Some(r.getLong(0)) else None
-      } catch { case _: Throwable => None }
-    val dateResult = existingDimDate match {
-      case Some(rows) => "dim_date" -> rows
-      case None => write("dim_date", dimDate(spark))
-    }
+      } catch { case NonFatal(_) => None }
 
-    val results = Seq(dateResult,
-      write("dim_customer", dimCustomer(silver("customers"))),
-      write("dim_product", dimProduct(silver("products"))),
-      write("dim_seller", dimSeller(silver("sellers"))),
-      writeFact("fact_orders", "order_id", factOrders(silver("orders"), gold("dim_customer"))),
-      writeFact("fact_order_items", "order_id", factOrderItems(silver("order_items"),
-        gold("fact_orders"), gold("dim_product"), gold("dim_seller"))),
+    Steps.run(Seq(
+      existingDimDate match {
+        case Some(rows) => Steps.step("dim_date")(rows)
+        case None => write("dim_date")(dimDate(spark))
+      },
+      write("dim_customer")(dimCustomer(silver("customers"))),
+      write("dim_product")(dimProduct(silver("products"))),
+      write("dim_seller")(dimSeller(silver("sellers"))),
+      writeFact("fact_orders", "order_id", "dim_customer")(
+        factOrders(silver("orders"), gold("dim_customer"))),
+      writeFact("fact_order_items", "order_id", "fact_orders", "dim_product", "dim_seller")(
+        factOrderItems(silver("order_items"),
+          gold("fact_orders"), gold("dim_product"), gold("dim_seller"))),
       // fact_reviews drops the order natural key (it carries order_sk);
       // its point-lookup key is review_id
-      writeFact("fact_reviews", "review_id", factReviews(silver("order_reviews"),
-        gold("fact_orders"))))
-    results.toMap
+      writeFact("fact_reviews", "review_id", "fact_orders")(
+        factReviews(silver("order_reviews"), gold("fact_orders"))))).toMap
   }
 
   def table(spark: SparkSession, warehouse: String, name: String): DataFrame =

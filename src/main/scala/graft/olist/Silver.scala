@@ -205,27 +205,33 @@ object Silver {
     withLineage(dedup, "bronze.olist_order_reviews")
   }
 
-  /** The 9 loads in the master orchestrator's dependency order
-    * (`05_sp_master_orchestrator_silver.sql:17-27`), each audited and
-    * written truncate+insert (= parquet overwrite). Fail-fast: the first
-    * exception aborts the remaining loads (XACT_ABORT + THROW). */
+  /** The master orchestrator's 9 loads (`05_sp_master_orchestrator_silver.sql:17-27`),
+    * each audited and written truncate+insert (= parquet overwrite), run
+    * concurrently along the reference's one dependency edge: `products`
+    * reads the silver `product_category_translation` and starts after
+    * it; the other 8 loads are independent.
+    *
+    * Fail-fast (XACT_ABORT + THROW): a failed load aborts every load
+    * that depends on it, without running it or auditing it; independent
+    * loads run to the end and are audited. Once every load has ended,
+    * the first failure in the list's order is rethrown, so no later
+    * layer starts. */
   def run(spark: SparkSession, warehouse: String, bronze: Bronze, audit: Audit): Map[String, Long] = {
-    def load(table: String, df: => DataFrame): (String, Long) =
-      table -> audit.overwrite("silver-etl", s"bronze→$table", "silver", table,
-        s"$warehouse/silver/$table")(df)
-    val results = Seq(
-      load("customers", customers(bronze.table("olist_customers"))),
-      load("sellers", sellers(bronze.table("olist_sellers"))),
-      load("product_category_translation",
+    def load(table: String, after: String*)(df: => DataFrame) =
+      Steps.step(table, after: _*)(audit.overwrite("silver-etl", s"bronze→$table", "silver", table,
+        s"$warehouse/silver/$table")(df))
+    Steps.run(Seq(
+      load("customers")(customers(bronze.table("olist_customers"))),
+      load("sellers")(sellers(bronze.table("olist_sellers"))),
+      load("product_category_translation")(
         categoryTranslation(bronze.table("product_category_name_translation"))),
-      load("products", products(bronze.table("olist_products"),
+      load("products", "product_category_translation")(products(bronze.table("olist_products"),
         table(spark, warehouse, "product_category_translation"))),
-      load("geolocation", geolocation(bronze.table("olist_geolocation"))),
-      load("orders", orders(bronze.table("olist_orders"))),
-      load("order_items", orderItems(bronze.table("olist_order_items"))),
-      load("order_payments", orderPayments(bronze.table("olist_order_payments"))),
-      load("order_reviews", orderReviews(bronze.table("olist_order_reviews"))))
-    results.toMap
+      load("geolocation")(geolocation(bronze.table("olist_geolocation"))),
+      load("orders")(orders(bronze.table("olist_orders"))),
+      load("order_items")(orderItems(bronze.table("olist_order_items"))),
+      load("order_payments")(orderPayments(bronze.table("olist_order_payments"))),
+      load("order_reviews")(orderReviews(bronze.table("olist_order_reviews"))))).toMap
   }
 
   def table(spark: SparkSession, warehouse: String, name: String): DataFrame =

@@ -2,16 +2,18 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.olist.{Orchestrator, Validate}
+import graft.olist.{Audit, Orchestrator}
 
 /** Deterministic volume generator + pipeline bench for the medallion
   * engine: synthesizes Olist-shaped CSVs at a requested order count
   * (hash-derived pseudo-randomness — no rand(), so the dataset is
   * identical across runs and partitionings), runs the full
-  * CSV → bronze → silver → gold → QA pipeline, and reports per-phase
-  * timings. This is the engine's own scale test: the graded testdata
-  * exercises the operator queries; this exercises the warehouse
-  * pipeline at Kaggle-Olist-and-beyond volume.
+  * CSV → bronze → silver → gold → QA pipeline, and reports its wall
+  * plus each audited layer's span from the audit trail (earliest
+  * `load_started_at` to latest `load_ended_at` per `target_schema`).
+  * This is the engine's own scale test: the graded testdata exercises
+  * the operator queries; this exercises the warehouse pipeline at
+  * Kaggle-Olist-and-beyond volume.
   *
   * Usage: runMain graft.tools.OlistScaleGen [nOrders] [workDir]
   */
@@ -165,8 +167,18 @@ object OlistScaleGen {
     val csvDir = s"$work/csv"
     val warehouse = s"$work/warehouse"
     timed(s"generate ($nOrders orders)")(generate(spark, csvDir, nOrders))
+    val runStart = new java.sql.Timestamp(System.currentTimeMillis())
     val result = timed("pipeline csv→bronze→silver→gold→qa")(
       Orchestrator.runAll(spark, csvDir, warehouse))
+    // this run's loads only: a reused workDir keeps older audit rows
+    new Audit(spark, warehouse).runSummary()
+      .filter(col("load_started_at") >= runStart)
+      .groupBy("target_schema")
+      .agg(min("load_started_at").as("start"), max("load_ended_at").as("end"))
+      .collect()
+      .map(r => r.getString(0) -> (r.getTimestamp(2).getTime - r.getTimestamp(1).getTime) / 1e3)
+      .sortBy { case (layer, _) => Seq("bronze", "silver", "gold").indexOf(layer) }
+      .foreach { case (layer, s) => println(f"[scale]   $layer (audit span): $s%.1f s") }
     println(s"[scale] silver rows: ${result.silverRows.toSeq.sortBy(_._1)}")
     println(s"[scale] gold rows:   ${result.goldRows.toSeq.sortBy(_._1)}")
     val qa = result.qa

@@ -1,37 +1,12 @@
 package graft.olist
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.testbridge.ListenerBus
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The audited load protocol (`Audit.overwrite`): the row count comes
   * from the write job itself, a load is one write job plus one audit
   * append, and the audit trail holds one row per load. */
 class LoadProtocolSpec extends SparkTestBase {
-
-  /** Runs `body` and counts the Spark jobs it submits. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-of-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job census")
-    try {
-      val out = body
-      ListenerBus.drain(sc)
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("empty frame: returns 0 without waiting out the bound, audits rows_inserted = 0") {
     val wh = tempDir("load-empty")
