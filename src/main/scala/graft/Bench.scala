@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark harness. Prints ONE compact JSON line as the
   * final stdout line; the driver recovers it from a bounded (2000-char)
@@ -13,14 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm up the session (codegen compiler, shuffle machinery, parquet
     // reader) so the first measured query doesn't absorb ~4s of one-time
     // JVM initialization that no steady-state deployment pays per query.
@@ -75,8 +67,13 @@ object Bench {
     val firsts = results.map { case (k, (f, _, _)) => k -> f }
     val steadies = results.map { case (k, (_, st, _)) => k -> st }
     val canaries = results.map { case (k, (_, _, c)) => k -> c }
-    val total = if (firsts.nonEmpty) firsts.values.sum else 0.0
-    val totalSteady = if (steadies.nonEmpty) steadies.values.sum else 0.0
+    // a failed rep records -1.0; its key stays out of both totals, so a
+    // key that throws can never lower them
+    val failed = results.collect { case (k, (f, st, _)) if f < 0 || st < 0 => k }.toSet
+    def okSum(m: Map[String, Double]): Double =
+      m.collect { case (k, v) if !failed(k) => v }.sum
+    val total = okSum(firsts)
+    val totalSteady = okSum(steadies)
     val fullQs = entries(firsts.toSeq.sortBy(_._1))
     val fullSteady = entries(steadies.toSeq.sortBy(_._1))
     val fullCanary = entries(canaries.toSeq.sortBy(_._1))
@@ -109,9 +106,9 @@ object Bench {
     val canarySummary =
       s""""canary_min":${num(cMin)},"canary_med":${num(cMed)},"canary_max":${num(cMax)}"""
     val fullLine =
-      s"""{"metric":"total","value":${num(total)},"value_steady":${num(totalSteady)},"unit":"sec","nqueries":${results.size},"reps":2,$canarySummary,"queries":$fullQs,"queries_steady":$fullSteady,"canary":$fullCanary,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total)},"value_steady":${num(totalSteady)},"unit":"sec","nqueries":${results.size},"nfailed":${failed.size},"reps":2,$canarySummary,"queries":$fullQs,"queries_steady":$fullSteady,"canary":$fullCanary,"sf":"$sfDir"}"""
     val line =
-      s"""{"metric":"total","value":${num(total)},"value_steady":${num(totalSteady)},"unit":"sec","nqueries":${results.size},"reps":2,$canarySummary,"queries":$headline,"queries_file":"${benchFile.getAbsolutePath}","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total)},"value_steady":${num(totalSteady)},"unit":"sec","nqueries":${results.size},"nfailed":${failed.size},"reps":2,$canarySummary,"queries":$headline,"queries_file":"${benchFile.getAbsolutePath}","sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(benchFile.toPath, fullLine + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist $benchFile: $e")

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   *   spark.sql.extensions=graft.functions.GraftExtensions
   *
-  * or programmatically:
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  * or programmatically, on a `SparkSession.Builder`:
+  *   .withExtensions(new GraftExtensions)
   *
   * Injected at the FunctionRegistry level (vs the per-session
   * createOrReplaceTempFunction used by the register() helpers), so the

@@ -21,7 +21,7 @@ import Tables._
   * All similarity math is double, left-fold summed, rounded to 9 dp —
   * bit-aligned with DuckDB's list_inner_product (see TextDedup).
   */
-object Ann {
+object Ann extends KeyModule {
 
   private val NumQueries = 10  // vec_id < 10 are the query vectors
   private val TopK = 5
@@ -666,31 +666,17 @@ object Ann {
        |FROM counts
        |ORDER BY centroid_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "ann-cell-balance" -> annCellBalance,
-    "ann-nprobe-curve" -> annNprobeCurve,
-    "ann-recall-measure" -> annRecallMeasure,
-    "ann-filtered-search" -> annFilteredSearch,
-    "emb-mrl-recall" -> embMrlRecall,
-    "emb-norm-outliers" -> embNormOutliers,
-    "emb-kmeans-assign" -> embKmeansAssign,
-    "ann-topk-bruteforce" -> annTopkBruteforce,
-    "ann-ivf" -> annIvf,
-    "ann-lsh-bucket" -> annLshBucket,
-    "ann-range-search" -> annRangeSearch,
-    "emb-quantize" -> embQuantize)
-
-  val oracles: Map[String, String] = Map(
-    "ann-cell-balance" -> annCellBalanceSql,
-    "ann-nprobe-curve" -> annNprobeCurveSql,
-    "ann-recall-measure" -> annRecallMeasureSql,
-    "ann-filtered-search" -> annFilteredSearchSql,
-    "emb-mrl-recall" -> embMrlRecallSql,
-    "emb-norm-outliers" -> embNormOutliersSql,
-    "emb-kmeans-assign" -> embKmeansAssignSql,
-    "ann-topk-bruteforce" -> annTopkBruteforceSql,
-    "ann-ivf" -> annIvfSql,
-    "ann-lsh-bucket" -> annLshBucketSql,
-    "ann-range-search" -> annRangeSearchSql,
-    "emb-quantize" -> embQuantizeSql)
+  val keys: Seq[Key] = Seq(
+    Key("ann-cell-balance", annCellBalance, annCellBalanceSql),
+    Key("ann-nprobe-curve", annNprobeCurve, annNprobeCurveSql),
+    Key("ann-recall-measure", annRecallMeasure, annRecallMeasureSql),
+    Key("ann-filtered-search", annFilteredSearch, annFilteredSearchSql),
+    Key("emb-mrl-recall", embMrlRecall, embMrlRecallSql),
+    Key("emb-norm-outliers", embNormOutliers, embNormOutliersSql),
+    Key("emb-kmeans-assign", embKmeansAssign, embKmeansAssignSql),
+    Key("ann-topk-bruteforce", annTopkBruteforce, annTopkBruteforceSql),
+    Key("ann-ivf", annIvf, annIvfSql),
+    Key("ann-lsh-bucket", annLshBucket, annLshBucketSql),
+    Key("ann-range-search", annRangeSearch, annRangeSearchSql),
+    Key("emb-quantize", embQuantize, embQuantizeSql))
 }

@@ -25,7 +25,7 @@ import graft.olist.Functions.{accentFoldLower, weekOfYearTsql, weekdayTsql}
   * the plan cost is the parquet read itself (column pruning verified:
   * ReadSchema carries only the referenced columns).
   */
-object FuncSuites {
+object FuncSuites extends KeyModule {
 
   /** func-string-suite — TRIM/UPPER/LOWER/LEFT/REPLACE/NULLIF/LEN/
     * concat (`sp_load_silver_customers.sql:35-39`,
@@ -212,17 +212,10 @@ object FuncSuites {
       |FROM events
       |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "func-bitwise-suite" -> funcBitwiseSuite,
-    "func-string-suite" -> funcStringSuite,
-    "func-date-suite" -> funcDateSuite,
-    "func-math-suite" -> funcMathSuite,
-    "func-regex-suite" -> funcRegexSuite)
-
-  val oracles: Map[String, String] = Map(
-    "func-bitwise-suite" -> funcBitwiseSuiteSql,
-    "func-string-suite" -> funcStringSuiteSql,
-    "func-date-suite" -> funcDateSuiteSql,
-    "func-math-suite" -> funcMathSuiteSql,
-    "func-regex-suite" -> funcRegexSuiteSql)
+  val keys: Seq[Key] = Seq(
+    Key("func-bitwise-suite", funcBitwiseSuite, funcBitwiseSuiteSql),
+    Key("func-string-suite", funcStringSuite, funcStringSuiteSql),
+    Key("func-date-suite", funcDateSuite, funcDateSuiteSql),
+    Key("func-math-suite", funcMathSuite, funcMathSuiteSql),
+    Key("func-regex-suite", funcRegexSuite, funcRegexSuiteSql))
 }

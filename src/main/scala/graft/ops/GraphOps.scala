@@ -19,7 +19,7 @@ import Tables._
   * iterations you'd checkpoint every ~20 to cut the plan-size growth;
   * at the fixed 5 here, persist+count per step is enough.
   */
-object GraphOps {
+object GraphOps extends KeyModule {
 
   /** Distinct (l_partkey, l_suppkey) pairs — the bipartite graph every
     * part↔supplier op iterates over — staged once per process (r14
@@ -239,13 +239,8 @@ object GraphOps {
       |GROUP BY 1
       |ORDER BY node_class""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "graph-pagerank" -> graphPagerank,
-    "graph-pagerank-resume" -> graphPagerankResume,
-    "graph-degree-stats" -> graphDegreeStats)
-
-  val oracles: Map[String, String] = Map(
-    "graph-pagerank" -> graphPagerankSql,
-    "graph-pagerank-resume" -> graphPagerankSql,
-    "graph-degree-stats" -> graphDegreeStatsSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-pagerank", graphPagerank, graphPagerankSql),
+    Key("graph-pagerank-resume", graphPagerankResume, graphPagerankSql),
+    Key("graph-degree-stats", graphDegreeStats, graphDegreeStatsSql))
 }

@@ -15,7 +15,7 @@ import Tables._
   * frame explode. At scale this is exactly the shape a decode/resize
   * pass has: narrow, no shuffle, per-partition library initialization.
   */
-object Multimodal {
+object Multimodal extends KeyModule {
 
   /** Decoded-media metadata record (the stub "decoder" output). */
   case class MediaMeta(doc_id: Long, n_bytes: Long, content_hash: String,
@@ -282,17 +282,10 @@ object Multimodal {
       |WHERE doc_id % 25 = 0
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "mm-decode-header" -> mmDecodeHeader,
-    "mm-decode-stub" -> mmDecodeStub,
-    "mm-frame-sample" -> mmFrameSample,
-    "mm-resize-stub" -> mmResizeStub,
-    "mm-feature-extract" -> mmFeatureExtract)
-
-  val oracles: Map[String, String] = Map(
-    "mm-decode-header" -> mmDecodeHeaderSql,
-    "mm-decode-stub" -> mmDecodeStubSql,
-    "mm-frame-sample" -> mmFrameSampleSql,
-    "mm-resize-stub" -> mmResizeStubSql,
-    "mm-feature-extract" -> mmFeatureExtractSql)
+  val keys: Seq[Key] = Seq(
+    Key("mm-decode-header", mmDecodeHeader, mmDecodeHeaderSql),
+    Key("mm-decode-stub", mmDecodeStub, mmDecodeStubSql),
+    Key("mm-frame-sample", mmFrameSample, mmFrameSampleSql),
+    Key("mm-resize-stub", mmResizeStub, mmResizeStubSql),
+    Key("mm-feature-extract", mmFeatureExtract, mmFeatureExtractSql))
 }

@@ -13,7 +13,7 @@ import Tables._
   * HashAggregate(final), which is exactly the map-side-combine shape that
   * scales to 100 TB (shuffle volume = |groups| per partition, not |rows|).
   */
-object RelAggs {
+object RelAggs extends KeyModule {
 
   /** agg-topk — reference `08_validacionsql.sql:55-62` (top-3 categories by
     * revenue). GroupBy+sum+orderBy+limit: Spark plans TakeOrderedAndProject
@@ -453,41 +453,22 @@ object RelAggs {
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-regression" -> aggRegression,
-    "agg-bitmap-distinct" -> aggBitmapDistinct,
-    "agg-histogram" -> aggHistogram,
-    "agg-sketch-union" -> aggSketchUnion,
-    "agg-mode-median" -> aggModeMedian,
-    "agg-approx-quantile" -> aggApproxQuantile,
-    "agg-approx-distinct" -> aggApproxDistinct,
-    "agg-stats" -> aggStats,
-    "agg-percentile" -> aggPercentile,
-    "agg-topk" -> aggTopk,
-    "agg-sum-total" -> aggSumTotal,
-    "agg-minmax" -> aggMinmax,
-    "agg-distinct" -> aggDistinct,
-    "agg-dedup-groupby" -> aggDedupGroupby,
-    "agg-sum-by-key" -> aggSumByKey,
-    "agg-count-volumetry" -> aggCountVolumetry,
-    "agg-rowcount-audit" -> aggRowcountAudit)
-
-  val oracles: Map[String, String] = Map(
-    "agg-regression" -> aggRegressionSql,
-    "agg-bitmap-distinct" -> aggBitmapDistinctSql,
-    "agg-histogram" -> aggHistogramSql,
-    "agg-sketch-union" -> aggSketchUnionSql,
-    "agg-mode-median" -> aggModeMedianSql,
-    "agg-approx-quantile" -> aggApproxQuantileSql,
-    "agg-approx-distinct" -> aggApproxDistinctSql,
-    "agg-stats" -> aggStatsSql,
-    "agg-percentile" -> aggPercentileSql,
-    "agg-topk" -> aggTopkSql,
-    "agg-sum-total" -> aggSumTotalSql,
-    "agg-minmax" -> aggMinmaxSql,
-    "agg-distinct" -> aggDistinctSql,
-    "agg-dedup-groupby" -> aggDedupGroupbySql,
-    "agg-sum-by-key" -> aggSumByKeySql,
-    "agg-count-volumetry" -> aggCountVolumetrySql,
-    "agg-rowcount-audit" -> aggRowcountAuditSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-regression", aggRegression, aggRegressionSql),
+    Key("agg-bitmap-distinct", aggBitmapDistinct, aggBitmapDistinctSql),
+    Key("agg-histogram", aggHistogram, aggHistogramSql),
+    Key("agg-sketch-union", aggSketchUnion, aggSketchUnionSql),
+    Key("agg-mode-median", aggModeMedian, aggModeMedianSql),
+    Key("agg-approx-quantile", aggApproxQuantile, aggApproxQuantileSql),
+    Key("agg-approx-distinct", aggApproxDistinct, aggApproxDistinctSql),
+    Key("agg-stats", aggStats, aggStatsSql),
+    Key("agg-percentile", aggPercentile, aggPercentileSql),
+    Key("agg-topk", aggTopk, aggTopkSql),
+    Key("agg-sum-total", aggSumTotal, aggSumTotalSql),
+    Key("agg-minmax", aggMinmax, aggMinmaxSql),
+    Key("agg-distinct", aggDistinct, aggDistinctSql),
+    Key("agg-dedup-groupby", aggDedupGroupby, aggDedupGroupbySql),
+    Key("agg-sum-by-key", aggSumByKey, aggSumByKeySql),
+    Key("agg-count-volumetry", aggCountVolumetry, aggCountVolumetrySql),
+    Key("agg-rowcount-audit", aggRowcountAudit, aggRowcountAuditSql))
 }

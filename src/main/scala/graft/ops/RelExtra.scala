@@ -12,7 +12,7 @@ import Tables._
   * preferred tier for operators Spark lacks as single nodes), pivot, and
   * the Scala UDF registration path.
   */
-object RelExtra {
+object RelExtra extends KeyModule {
 
   /** win-rank-ntile — rank / dense_rank / ntile: the rest of the ranking
     * window family (the reference only uses ROW_NUMBER). Same physical
@@ -409,33 +409,18 @@ object RelExtra {
       |GROUP BY CUBE(o_orderstatus, CAST(year(o_orderdate) AS INT))
       |ORDER BY gid, status, oyear""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cube" -> aggCube,
-    "join-interval-overlap" -> joinIntervalOverlap,
-    "agg-sessionize" -> aggSessionize,
-    "sink-incremental-merge" -> sinkIncrementalMerge,
-    "agg-typed-aggregator" -> aggTypedAggregator,
-    "win-rank-ntile" -> winRankNtile,
-    "agg-rollup" -> aggRollup,
-    "agg-grouping-sets" -> aggGroupingSets,
-    "set-intersect-except" -> setIntersectExcept,
-    "join-range" -> joinRange,
-    "join-asof" -> joinAsof,
-    "agg-pivot" -> aggPivot,
-    "udf-scala-reverse" -> udfScalaReverse)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cube" -> aggCubeSql,
-    "join-interval-overlap" -> joinIntervalOverlapSql,
-    "agg-sessionize" -> aggSessionizeSql,
-    "sink-incremental-merge" -> sinkIncrementalMergeSql,
-    "agg-typed-aggregator" -> aggTypedAggregatorSql,
-    "win-rank-ntile" -> winRankNtileSql,
-    "agg-rollup" -> aggRollupSql,
-    "agg-grouping-sets" -> aggGroupingSetsSql,
-    "set-intersect-except" -> setIntersectExceptSql,
-    "join-range" -> joinRangeSql,
-    "join-asof" -> joinAsofSql,
-    "agg-pivot" -> aggPivotSql,
-    "udf-scala-reverse" -> udfScalaReverseSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cube", aggCube, aggCubeSql),
+    Key("join-interval-overlap", joinIntervalOverlap, joinIntervalOverlapSql),
+    Key("agg-sessionize", aggSessionize, aggSessionizeSql),
+    Key("sink-incremental-merge", sinkIncrementalMerge, sinkIncrementalMergeSql),
+    Key("agg-typed-aggregator", aggTypedAggregator, aggTypedAggregatorSql),
+    Key("win-rank-ntile", winRankNtile, winRankNtileSql),
+    Key("agg-rollup", aggRollup, aggRollupSql),
+    Key("agg-grouping-sets", aggGroupingSets, aggGroupingSetsSql),
+    Key("set-intersect-except", setIntersectExcept, setIntersectExceptSql),
+    Key("join-range", joinRange, joinRangeSql),
+    Key("join-asof", joinAsof, joinAsofSql),
+    Key("agg-pivot", aggPivot, aggPivotSql),
+    Key("udf-scala-reverse", udfScalaReverse, udfScalaReverseSql))
 }

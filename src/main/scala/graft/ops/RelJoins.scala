@@ -12,7 +12,7 @@ import Tables._
   * the plan survives even if stats are missing at 100 TB), shuffled
   * sort-merge/hash for fact-to-fact on the join key.
   */
-object RelJoins {
+object RelJoins extends KeyModule {
 
   /** Deterministic surrogate-key dimension: reference IDENTITY(1,1)
     * (`06_create_gold_tables.sql:55` etc.) re-expressed as dense keys in
@@ -242,25 +242,14 @@ object RelJoins {
       |GROUP BY r_name, CAST(year(o_orderdate) AS INT)
       |ORDER BY r_name, oyear""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join-star-dims" -> joinStarDims,
-    "join-left-translate" -> joinLeftTranslate,
-    "join-left-geo" -> joinLeftGeo,
-    "join-sk-customer" -> joinSkCustomer,
-    "join-3way-items" -> join3wayItems,
-    "join-sk-reviews" -> joinSkReviews,
-    "join-anti-orphan" -> joinAntiOrphan,
-    "join-daterange" -> joinDaterange,
-    "join-topcat" -> joinTopcat)
-
-  val oracles: Map[String, String] = Map(
-    "join-star-dims" -> joinStarDimsSql,
-    "join-left-translate" -> joinLeftTranslateSql,
-    "join-left-geo" -> joinLeftGeoSql,
-    "join-sk-customer" -> joinSkCustomerSql,
-    "join-3way-items" -> join3wayItemsSql,
-    "join-sk-reviews" -> joinSkReviewsSql,
-    "join-anti-orphan" -> joinAntiOrphanSql,
-    "join-daterange" -> joinDaterangeSql,
-    "join-topcat" -> joinTopcatSql)
+  val keys: Seq[Key] = Seq(
+    Key("join-star-dims", joinStarDims, joinStarDimsSql),
+    Key("join-left-translate", joinLeftTranslate, joinLeftTranslateSql),
+    Key("join-left-geo", joinLeftGeo, joinLeftGeoSql),
+    Key("join-sk-customer", joinSkCustomer, joinSkCustomerSql),
+    Key("join-3way-items", join3wayItems, join3wayItemsSql),
+    Key("join-sk-reviews", joinSkReviews, joinSkReviewsSql),
+    Key("join-anti-orphan", joinAntiOrphan, joinAntiOrphanSql),
+    Key("join-daterange", joinDaterange, joinDaterangeSql),
+    Key("join-topcat", joinTopcat, joinTopcatSql))
 }

@@ -14,7 +14,7 @@ import Tables._
   * cohort retention, a relationally-built count-min sketch, CDC
   * changelog apply, and deterministic exactly-k sampling.
   */
-object RelMore {
+object RelMore extends KeyModule {
 
   /** func-hof-suite — the higher-order array-function surface:
     * transform / filter / exists / forall / aggregate / zip_with /
@@ -290,23 +290,13 @@ object RelMore {
       |ORDER BY h, o_orderkey
       |LIMIT 100""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "func-hof-suite" -> funcHofSuite,
-    "gen-explode-ordinal" -> genExplodeOrdinal,
-    "sql-tpch-q6" -> sqlTpchQ6,
-    "join-exists-subquery" -> joinExistsSubquery,
-    "agg-cohort-retention" -> aggCohortRetention,
-    "agg-cms-heavyhitters" -> aggCmsHeavyhitters,
-    "sink-cdc-apply" -> sinkCdcApply,
-    "sample-uniform-k" -> sampleUniformK)
-
-  val oracles: Map[String, String] = Map(
-    "func-hof-suite" -> funcHofSuiteSql,
-    "gen-explode-ordinal" -> genExplodeOrdinalSql,
-    "sql-tpch-q6" -> sqlTpchQ6Sql,
-    "join-exists-subquery" -> joinExistsSubquerySql,
-    "agg-cohort-retention" -> aggCohortRetentionSql,
-    "agg-cms-heavyhitters" -> aggCmsHeavyhittersSql,
-    "sink-cdc-apply" -> sinkCdcApplySql,
-    "sample-uniform-k" -> sampleUniformKSql)
+  val keys: Seq[Key] = Seq(
+    Key("func-hof-suite", funcHofSuite, funcHofSuiteSql),
+    Key("gen-explode-ordinal", genExplodeOrdinal, genExplodeOrdinalSql),
+    Key("sql-tpch-q6", sqlTpchQ6, sqlTpchQ6Sql),
+    Key("join-exists-subquery", joinExistsSubquery, joinExistsSubquerySql),
+    Key("agg-cohort-retention", aggCohortRetention, aggCohortRetentionSql),
+    Key("agg-cms-heavyhitters", aggCmsHeavyhitters, aggCmsHeavyhittersSql),
+    Key("sink-cdc-apply", sinkCdcApply, sinkCdcApplySql),
+    Key("sample-uniform-k", sampleUniformK, sampleUniformKSql))
 }

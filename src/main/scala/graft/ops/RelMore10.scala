@@ -9,7 +9,7 @@ import Tables._
   * multi-distinct aggregation (the Expand plan), and the binaryFile
   * source (raw-asset multimodal ingest).
   */
-object RelMore10 {
+object RelMore10 extends KeyModule {
 
   /** expr-uuid-name — name-based (UUIDv5-style) deterministic IDs:
     * md5 of a namespaced natural key formatted as 8-4-4-4-12, with the
@@ -142,15 +142,9 @@ object RelMore10 {
       |ORDER BY revenue DESC, c.c_custkey
       |LIMIT 20""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-tpch-q10" -> sqlTpchQ10,
-    "expr-uuid-name" -> exprUuidName,
-    "agg-multi-distinct" -> aggMultiDistinct,
-    "src-binaryfile" -> srcBinaryfile)
-
-  val oracles: Map[String, String] = Map(
-    "sql-tpch-q10" -> sqlTpchQ10Sql,
-    "expr-uuid-name" -> exprUuidNameSql,
-    "agg-multi-distinct" -> aggMultiDistinctSql,
-    "src-binaryfile" -> srcBinaryfileSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-tpch-q10", sqlTpchQ10, sqlTpchQ10Sql),
+    Key("expr-uuid-name", exprUuidName, exprUuidNameSql),
+    Key("agg-multi-distinct", aggMultiDistinct, aggMultiDistinctSql),
+    Key("src-binaryfile", srcBinaryfile, srcBinaryfileSql))
 }

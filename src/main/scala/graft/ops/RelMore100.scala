@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-11 batch A: Kruskal-Wallis H, Ljung-Box portmanteau, runs test,
   * Theil inequality decomposition. */
-object RelMore100 {
+object RelMore100 extends KeyModule {
 
   /** agg-kruskal-wallis — rank-based one-way ANOVA (Kruskal-Wallis H
     * with tie correction) of l_quantity across the three return-flag
@@ -287,15 +287,9 @@ object RelMore100 {
       |       round(t_between / t_total, 4) AS between_share
       |FROM t_total CROSS JOIN t_within CROSS JOIN t_between""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-kruskal-wallis" -> aggKruskalWallis,
-    "agg-ljung-box" -> aggLjungBox,
-    "agg-runs-test" -> aggRunsTest,
-    "agg-theil-index" -> aggTheilIndex)
-
-  val oracles: Map[String, String] = Map(
-    "agg-kruskal-wallis" -> aggKruskalWallisSql,
-    "agg-ljung-box" -> aggLjungBoxSql,
-    "agg-runs-test" -> aggRunsTestSql,
-    "agg-theil-index" -> aggTheilIndexSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-kruskal-wallis", aggKruskalWallis, aggKruskalWallisSql),
+    Key("agg-ljung-box", aggLjungBox, aggLjungBoxSql),
+    Key("agg-runs-test", aggRunsTest, aggRunsTestSql),
+    Key("agg-theil-index", aggTheilIndex, aggTheilIndexSql))
 }

@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-11 batch B: Cp/Cpk process capability, Weibull plotting-position
   * fit, per-brand price elasticity, Wilder RSI. */
-object RelMore101 {
+object RelMore101 extends KeyModule {
 
   /** agg-cpk-capability — Cp/Cpk process-capability indices of shipped
     * quantity per part brand against the declared spec window [5, 45]
@@ -265,15 +265,9 @@ object RelMore101 {
        |ORDER BY dt""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-cpk-capability" -> aggCpkCapability,
-    "agg-weibull-fit" -> aggWeibullFit,
-    "agg-price-elasticity" -> aggPriceElasticity,
-    "win-rsi" -> winRsi)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cpk-capability" -> aggCpkCapabilitySql,
-    "agg-weibull-fit" -> aggWeibullFitSql,
-    "agg-price-elasticity" -> aggPriceElasticitySql,
-    "win-rsi" -> winRsiSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cpk-capability", aggCpkCapability, aggCpkCapabilitySql),
+    Key("agg-weibull-fit", aggWeibullFit, aggWeibullFitSql),
+    Key("agg-price-elasticity", aggPriceElasticity, aggPriceElasticitySql),
+    Key("win-rsi", winRsi, winRsiSql))
 }

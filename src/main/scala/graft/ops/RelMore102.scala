@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-11 batch C: Brown double exponential smoothing, trailing VWAP
   * deviation, bipartite rich-club coefficient, neighbor-degree curve. */
-object RelMore102 {
+object RelMore102 extends KeyModule {
 
   /** win-holt-brown — Brown's double exponential smoothing (level +
     * trend) of daily revenue with α = 1/2: s1 = EWMA(x), s2 = EWMA(s1),
@@ -219,15 +219,9 @@ object RelMore102 {
       |             / 1e6 / count(*), 4) AS knn
       |FROM per_part GROUP BY pd ORDER BY pd""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-holt-brown" -> winHoltBrown,
-    "win-vwap-deviation" -> winVwapDeviation,
-    "graph-rich-club" -> graphRichClub,
-    "graph-knn-degree" -> graphKnnDegree)
-
-  val oracles: Map[String, String] = Map(
-    "win-holt-brown" -> winHoltBrownSql,
-    "win-vwap-deviation" -> winVwapDeviationSql,
-    "graph-rich-club" -> graphRichClubSql,
-    "graph-knn-degree" -> graphKnnDegreeSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-holt-brown", winHoltBrown, winHoltBrownSql),
+    Key("win-vwap-deviation", winVwapDeviation, winVwapDeviationSql),
+    Key("graph-rich-club", graphRichClub, graphRichClubSql),
+    Key("graph-knn-degree", graphKnnDegree, graphKnnDegreeSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch D: one NN-descent refinement round, semi-hard triplet
   * mining, self-normalized importance reweighting, interpolated
   * Jelinek-Mercer LM perplexity. */
-object RelMore103 {
+object RelMore103 extends KeyModule {
 
   private def cos(a: String, b: String) =
     round(expr(s"cosine_similarity($a, $b)"), 9)
@@ -380,15 +380,9 @@ object RelMore103 {
       |       round(exp(-(CAST(sum(CAST(floor(ln(p_uni) * 1e6) AS BIGINT)) AS DOUBLE) / 1e6) / count(*)), 4) AS ppl_unigram
       |FROM scored""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "ann-nndescent-round" -> annNndescentRound,
-    "emb-triplet-semihard" -> embTripletSemihard,
-    "sample-importance-weights" -> sampleImportanceWeights,
-    "text-interpolated-lm" -> textInterpolatedLm)
-
-  val oracles: Map[String, String] = Map(
-    "ann-nndescent-round" -> annNndescentRoundSql,
-    "emb-triplet-semihard" -> embTripletSemihardSql,
-    "sample-importance-weights" -> sampleImportanceWeightsSql,
-    "text-interpolated-lm" -> textInterpolatedLmSql)
+  val keys: Seq[Key] = Seq(
+    Key("ann-nndescent-round", annNndescentRound, annNndescentRoundSql),
+    Key("emb-triplet-semihard", embTripletSemihard, embTripletSemihardSql),
+    Key("sample-importance-weights", sampleImportanceWeights, sampleImportanceWeightsSql),
+    Key("text-interpolated-lm", textInterpolatedLm, textInterpolatedLmSql))
 }

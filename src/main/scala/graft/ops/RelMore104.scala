@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch E: VALUES inline tables, NATURAL JOIN, catalog column
   * statistics (CBO input), Grubbs outlier statistic. */
-object RelMore104 {
+object RelMore104 extends KeyModule {
 
   /** sql-values-inline — the VALUES table constructor as a first-class
     * source: a 5-row regional price-adjustment table declared INLINE in
@@ -173,15 +173,9 @@ object RelMore104 {
       |       round(adev / sd, 4) AS g_stat, adev / sd > 3.0 AS is_outlier
       |FROM dev WHERE r = 1 ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-values-inline" -> sqlValuesInline,
-    "sql-natural-join" -> sqlNaturalJoin,
-    "ddl-analyze-stats" -> ddlAnalyzeStats,
-    "dq-grubbs-stat" -> dqGrubbsStat)
-
-  val oracles: Map[String, String] = Map(
-    "sql-values-inline" -> sqlValuesInlineSql,
-    "sql-natural-join" -> sqlNaturalJoinSql,
-    "ddl-analyze-stats" -> ddlAnalyzeStatsSql,
-    "dq-grubbs-stat" -> dqGrubbsStatSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-values-inline", sqlValuesInline, sqlValuesInlineSql),
+    Key("sql-natural-join", sqlNaturalJoin, sqlNaturalJoinSql),
+    Key("ddl-analyze-stats", ddlAnalyzeStats, ddlAnalyzeStatsSql),
+    Key("dq-grubbs-stat", dqGrubbsStat, dqGrubbsStatSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch F: Little's law consistency, Hurst exponent, fixed-
   * period DFT power, Neyman allocation gain. */
-object RelMore105 {
+object RelMore105 extends KeyModule {
 
   /** agg-littles-law — the L = λW queueing identity measured three ways
     * on user sessions (30-min gap rule, the agg-sessionize convention):
@@ -322,15 +322,9 @@ object RelMore105 {
       |FROM seg CROSS JOIN tot
       |ORDER BY seg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-littles-law" -> aggLittlesLaw,
-    "agg-hurst-exponent" -> aggHurstExponent,
-    "agg-dft-weekly-power" -> aggDftWeeklyPower,
-    "sample-neyman-gain" -> sampleNeymanGain)
-
-  val oracles: Map[String, String] = Map(
-    "agg-littles-law" -> aggLittlesLawSql,
-    "agg-hurst-exponent" -> aggHurstExponentSql,
-    "agg-dft-weekly-power" -> aggDftWeeklyPowerSql,
-    "sample-neyman-gain" -> sampleNeymanGainSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-littles-law", aggLittlesLaw, aggLittlesLawSql),
+    Key("agg-hurst-exponent", aggHurstExponent, aggHurstExponentSql),
+    Key("agg-dft-weekly-power", aggDftWeeklyPower, aggDftWeeklyPowerSql),
+    Key("sample-neyman-gain", sampleNeymanGain, sampleNeymanGainSql))
 }

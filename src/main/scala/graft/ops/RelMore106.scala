@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch G: PC2 by deflated power iteration, session-gap
   * sensitivity curve, Fisher ideal price index, Dickey-Fuller test. */
-object RelMore106 {
+object RelMore106 extends KeyModule {
 
   /** emb-pca2-deflation — the SECOND principal direction by deflated
     * power iteration: v2 ← (I − v̂1v̂1ᵀ)·Xᵀ(Xv2), 3 rounds, after v1
@@ -353,15 +353,9 @@ object RelMore106 {
       |       rho / sqrt((rss / (n - 2)) / sxx_c) < -2.86 AS unit_root_rejected
       |FROM fit""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-pca2-deflation" -> embPca2Deflation,
-    "win-session-gap-curve" -> winSessionGapCurve,
-    "agg-price-index-fisher" -> aggPriceIndexFisher,
-    "agg-dickey-fuller" -> aggDickeyFuller)
-
-  val oracles: Map[String, String] = Map(
-    "emb-pca2-deflation" -> embPca2DeflationSql,
-    "win-session-gap-curve" -> winSessionGapCurveSql,
-    "agg-price-index-fisher" -> aggPriceIndexFisherSql,
-    "agg-dickey-fuller" -> aggDickeyFullerSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-pca2-deflation", embPca2Deflation, embPca2DeflationSql),
+    Key("win-session-gap-curve", winSessionGapCurve, winSessionGapCurveSql),
+    Key("agg-price-index-fisher", aggPriceIndexFisher, aggPriceIndexFisherSql),
+    Key("agg-dickey-fuller", aggDickeyFuller, aggDickeyFullerSql))
 }

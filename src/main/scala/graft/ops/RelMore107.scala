@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch H: Engle-Granger cointegration, embedding isotropy,
   * hash k-fold assignment, zone-map skipping simulation. */
-object RelMore107 {
+object RelMore107 extends KeyModule {
 
   /** agg-cointegration — Engle-Granger two-step cointegration test
     * between the daily order-count and daily revenue series: (1) OLS
@@ -321,15 +321,9 @@ object RelMore107 {
       |GROUP BY z.layout
       |ORDER BY z.layout""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cointegration" -> aggCointegration,
-    "emb-isotropy" -> embIsotropy,
-    "sample-kfold-assign" -> sampleKfoldAssign,
-    "layout-overscan-rows" -> layoutZonemapSkipping)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cointegration" -> aggCointegrationSql,
-    "emb-isotropy" -> embIsotropySql,
-    "sample-kfold-assign" -> sampleKfoldAssignSql,
-    "layout-overscan-rows" -> layoutZonemapSkippingSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cointegration", aggCointegration, aggCointegrationSql),
+    Key("emb-isotropy", embIsotropy, embIsotropySql),
+    Key("sample-kfold-assign", sampleKfoldAssign, sampleKfoldAssignSql),
+    Key("layout-overscan-rows", layoutZonemapSkipping, layoutZonemapSkippingSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch I: Benjamini-Hochberg FDR gate, STL-style seasonality
   * strength, Bass diffusion fit, token truncation-loss curve. */
-object RelMore108 {
+object RelMore108 extends KeyModule {
 
   /** Shared erfc approximation (Abramowitz & Stegun 7.1.26, |ε|<1.5e-7):
     * the SAME literal arithmetic runs in both engines — elementary ops
@@ -368,15 +368,9 @@ object RelMore108 {
       |ORDER BY cap""".stripMargin.replace("CAPS", caps)
   }
 
-  val queries: Map[String, Q] = Map(
-    "dq-fdr-bh" -> dqFdrBh,
-    "agg-seasonality-strength" -> aggSeasonalityStrength,
-    "agg-bass-diffusion" -> aggBassDiffusion,
-    "text-truncation-loss" -> textTruncationLoss)
-
-  val oracles: Map[String, String] = Map(
-    "dq-fdr-bh" -> dqFdrBhSql,
-    "agg-seasonality-strength" -> aggSeasonalityStrengthSql,
-    "agg-bass-diffusion" -> aggBassDiffusionSql,
-    "text-truncation-loss" -> textTruncationLossSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-fdr-bh", dqFdrBh, dqFdrBhSql),
+    Key("agg-seasonality-strength", aggSeasonalityStrength, aggSeasonalityStrengthSql),
+    Key("agg-bass-diffusion", aggBassDiffusion, aggBassDiffusionSql),
+    Key("text-truncation-loss", textTruncationLoss, textTruncationLossSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch J: binary-segmentation changepoint, geo nearest-
   * warehouse assignment, Nelson-Aalen cumulative hazard, GPD
   * peaks-over-threshold tail fit. */
-object RelMore109 {
+object RelMore109 extends KeyModule {
 
   /** win-binseg-split — the first binary-segmentation changepoint of
     * the daily revenue series: the split k maximizing the CUSUM
@@ -291,15 +291,9 @@ object RelMore109 {
        |         AS return_level_365d_usd
        |FROM fit CROSS JOIN nn""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-binseg-split" -> winBinsegSplit,
-    "join-geo-knn" -> joinGeoKnn,
-    "agg-nelson-aalen" -> aggNelsonAalen,
-    "agg-gpd-pot" -> aggGpdPot)
-
-  val oracles: Map[String, String] = Map(
-    "win-binseg-split" -> winBinsegSplitSql,
-    "join-geo-knn" -> joinGeoKnnSql,
-    "agg-nelson-aalen" -> aggNelsonAalenSql,
-    "agg-gpd-pot" -> aggGpdPotSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-binseg-split", winBinsegSplit, winBinsegSplitSql),
+    Key("join-geo-knn", joinGeoKnn, joinGeoKnnSql),
+    Key("agg-nelson-aalen", aggNelsonAalen, aggNelsonAalenSql),
+    Key("agg-gpd-pot", aggGpdPot, aggGpdPotSql))
 }

@@ -18,7 +18,7 @@ import Tables._
   * each front door is its PLAN shape (semi/anti join, null-aware anti,
   * scalar-subquery broadcast), not the retail semantics.
   */
-object RelMore11 {
+object RelMore11 extends KeyModule {
 
   /** sql-tpch-q4 — order-priority checking: EXISTS decorrelates to a
     * LEFT SEMI join (each order tested once, no row multiplication from
@@ -348,27 +348,15 @@ object RelMore11 {
        |LIMIT 20""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "sql-tpch-q4" -> sqlTpchQ4,
-    "sql-tpch-q12" -> sqlTpchQ12,
-    "sql-tpch-q13" -> sqlTpchQ13,
-    "sql-tpch-q14" -> sqlTpchQ14,
-    "sql-tpch-q16" -> sqlTpchQ16,
-    "sql-tpch-q19" -> sqlTpchQ19,
-    "sql-tpch-q22" -> sqlTpchQ22,
-    "func-map-suite" -> funcMapSuite,
-    "graph-triangle-count" -> graphTriangleCount,
-    "graph-cc-hashmin" -> graphCcHashmin)
-
-  val oracles: Map[String, String] = Map(
-    "sql-tpch-q4" -> sqlTpchQ4Sql,
-    "sql-tpch-q12" -> sqlTpchQ12Sql,
-    "sql-tpch-q13" -> sqlTpchQ13Sql,
-    "sql-tpch-q14" -> sqlTpchQ14Sql,
-    "sql-tpch-q16" -> sqlTpchQ16Sql,
-    "sql-tpch-q19" -> sqlTpchQ19Sql,
-    "sql-tpch-q22" -> sqlTpchQ22Sql,
-    "func-map-suite" -> funcMapSuiteSql,
-    "graph-triangle-count" -> graphTriangleCountSql,
-    "graph-cc-hashmin" -> graphCcHashminSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-tpch-q4", sqlTpchQ4, sqlTpchQ4Sql),
+    Key("sql-tpch-q12", sqlTpchQ12, sqlTpchQ12Sql),
+    Key("sql-tpch-q13", sqlTpchQ13, sqlTpchQ13Sql),
+    Key("sql-tpch-q14", sqlTpchQ14, sqlTpchQ14Sql),
+    Key("sql-tpch-q16", sqlTpchQ16, sqlTpchQ16Sql),
+    Key("sql-tpch-q19", sqlTpchQ19, sqlTpchQ19Sql),
+    Key("sql-tpch-q22", sqlTpchQ22, sqlTpchQ22Sql),
+    Key("func-map-suite", funcMapSuite, funcMapSuiteSql),
+    Key("graph-triangle-count", graphTriangleCount, graphTriangleCountSql),
+    Key("graph-cc-hashmin", graphCcHashmin, graphCcHashminSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch K: Durbin-Watson residual autocorrelation, Theil's
   * U2 forecast skill, participation-ratio effective dimension, Heaps'
   * law vocabulary-growth fit. */
-object RelMore110 {
+object RelMore110 extends KeyModule {
 
   /** dq-durbin-watson — the Durbin-Watson statistic on the residuals
     * of the daily revenue-on-count OLS: DW = Σ(eₜ−eₜ₋₁)²/Σeₜ² ≈
@@ -330,15 +330,9 @@ object RelMore110 {
       |FROM pts CROSS JOIN fit
       |ORDER BY decile""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-durbin-watson" -> dqDurbinWatson,
-    "agg-theil-u2" -> aggTheilU2,
-    "emb-participation-ratio" -> embParticipationRatio,
-    "text-heaps-law" -> textHeapsLaw)
-
-  val oracles: Map[String, String] = Map(
-    "dq-durbin-watson" -> dqDurbinWatsonSql,
-    "agg-theil-u2" -> aggTheilU2Sql,
-    "emb-participation-ratio" -> embParticipationRatioSql,
-    "text-heaps-law" -> textHeapsLawSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-durbin-watson", dqDurbinWatson, dqDurbinWatsonSql),
+    Key("agg-theil-u2", aggTheilU2, aggTheilU2Sql),
+    Key("emb-participation-ratio", embParticipationRatio, embParticipationRatioSql),
+    Key("text-heaps-law", textHeapsLaw, textHeapsLawSql))
 }

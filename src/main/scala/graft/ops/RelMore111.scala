@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch L: nested-model ANOVA F, Rocchio centroid classifier
   * confusion, CSV null/escape roundtrip, constrained gravity model. */
-object RelMore111 {
+object RelMore111 extends KeyModule {
 
   /** agg-anova-nested-f — extra-sum-of-squares F-tests on nested
     * groupings of order value: does market segment explain revenue
@@ -321,15 +321,9 @@ object RelMore111 {
        |FROM sums""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-anova-nested-f" -> aggAnovaNestedF,
-    "emb-rocchio-confusion" -> embRocchioConfusion,
-    "src-csv-null-escape" -> srcCsvNullEscape,
-    "join-gravity-trade" -> joinGravityTrade)
-
-  val oracles: Map[String, String] = Map(
-    "agg-anova-nested-f" -> aggAnovaNestedFSql,
-    "emb-rocchio-confusion" -> embRocchioConfusionSql,
-    "src-csv-null-escape" -> srcCsvNullEscapeSql,
-    "join-gravity-trade" -> joinGravityTradeSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-anova-nested-f", aggAnovaNestedF, aggAnovaNestedFSql),
+    Key("emb-rocchio-confusion", embRocchioConfusion, embRocchioConfusionSql),
+    Key("src-csv-null-escape", srcCsvNullEscape, srcCsvNullEscapeSql),
+    Key("join-gravity-trade", joinGravityTrade, joinGravityTradeSql))
 }

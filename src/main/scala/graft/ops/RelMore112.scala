@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch M: Kneser-Ney bigram LM, Croston intermittent-demand
   * forecast, seasonal Mann-Kendall, newsvendor critical fractile. */
-object RelMore112 {
+object RelMore112 extends KeyModule {
 
   /** text-kneser-ney — bigram language model with Kneser-Ney
     * smoothing, trained on 4/5 of the corpus (doc_id mod 5 ≠ 0) and
@@ -307,15 +307,9 @@ object RelMore112 {
       |GROUP BY 1, 2, 3
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-kneser-ney" -> textKneserNey,
-    "agg-croston-demand" -> aggCrostonDemand,
-    "dq-seasonal-mann-kendall" -> dqSeasonalMannKendall,
-    "agg-newsvendor-fractile" -> aggNewsvendorFractile)
-
-  val oracles: Map[String, String] = Map(
-    "text-kneser-ney" -> textKneserNeySql,
-    "agg-croston-demand" -> aggCrostonDemandSql,
-    "dq-seasonal-mann-kendall" -> dqSeasonalMannKendallSql,
-    "agg-newsvendor-fractile" -> aggNewsvendorFractileSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-kneser-ney", textKneserNey, textKneserNeySql),
+    Key("agg-croston-demand", aggCrostonDemand, aggCrostonDemandSql),
+    Key("dq-seasonal-mann-kendall", dqSeasonalMannKendall, dqSeasonalMannKendallSql),
+    Key("agg-newsvendor-fractile", aggNewsvendorFractile, aggNewsvendorFractileSql))
 }

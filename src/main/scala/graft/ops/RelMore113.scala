@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch N: Gumbel block maxima, Baxter-King bandpass filter,
   * BM25 retrieval, Fellegi-Sunter linkage weights. */
-object RelMore113 {
+object RelMore113 extends KeyModule {
 
   /** agg-gumbel-block-maxima — block-maxima EVT with a Gumbel fit on
     * monthly daily-revenue maxima: method-of-moments closed form
@@ -286,15 +286,9 @@ object RelMore113 {
        |ORDER BY 1""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-gumbel-block-maxima" -> aggGumbelBlockMaxima,
-    "win-bandpass-bk" -> winBandpassBk,
-    "text-bm25-topk" -> textBm25Topk,
-    "dq-linkage-weights" -> dqLinkageWeights)
-
-  val oracles: Map[String, String] = Map(
-    "agg-gumbel-block-maxima" -> aggGumbelBlockMaximaSql,
-    "win-bandpass-bk" -> winBandpassBkSql,
-    "text-bm25-topk" -> textBm25TopkSql,
-    "dq-linkage-weights" -> dqLinkageWeightsSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-gumbel-block-maxima", aggGumbelBlockMaxima, aggGumbelBlockMaximaSql),
+    Key("win-bandpass-bk", winBandpassBk, winBandpassBkSql),
+    Key("text-bm25-topk", textBm25Topk, textBm25TopkSql),
+    Key("dq-linkage-weights", dqLinkageWeights, dqLinkageWeightsSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch O: Mincer-Zarnowitz rationality F, Wilcoxon signed
   * rank, ulcer index, self-validating Zipf key generator. */
-object RelMore114 {
+object RelMore114 extends KeyModule {
 
   /** agg-mincer-zarnowitz — the Mincer-Zarnowitz forecast-rationality
     * regression y = α + β·ŷ with the joint F-test of (α,β) = (0,1),
@@ -309,15 +309,9 @@ object RelMore114 {
        |FROM head CROSS JOIN fit
        |ORDER BY k""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-mincer-zarnowitz" -> aggMincerZarnowitz,
-    "agg-wilcoxon-signed-rank" -> aggWilcoxonSignedRank,
-    "win-ulcer-index" -> winUlcerIndex,
-    "gen-zipf-keys" -> genZipfKeys)
-
-  val oracles: Map[String, String] = Map(
-    "agg-mincer-zarnowitz" -> aggMincerZarnowitzSql,
-    "agg-wilcoxon-signed-rank" -> aggWilcoxonSignedRankSql,
-    "win-ulcer-index" -> winUlcerIndexSql,
-    "gen-zipf-keys" -> genZipfKeysSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-mincer-zarnowitz", aggMincerZarnowitz, aggMincerZarnowitzSql),
+    Key("agg-wilcoxon-signed-rank", aggWilcoxonSignedRank, aggWilcoxonSignedRankSql),
+    Key("win-ulcer-index", winUlcerIndex, winUlcerIndexSql),
+    Key("gen-zipf-keys", genZipfKeys, genZipfKeysSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch P: grid-blocked spatial self-join, grouping_id cube,
   * intraclass correlation / design effect, sequential Poisson πps
   * sample. */
-object RelMore115 {
+object RelMore115 extends KeyModule {
 
   private def mdB(key: String, pos: Int): Column =
     (expr(s"instr('0123456789abcdef', substring(md5(CAST($key AS STRING)), ${2 * pos - 1}, 1))") - 1) * 16 +
@@ -298,15 +298,9 @@ object RelMore115 {
       |FROM sample
       |GROUP BY np""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join-geo-grid-pairs" -> joinGeoGridPairs,
-    "sql-grouping-id" -> sqlGroupingId,
-    "agg-icc-design-effect" -> aggIccDesignEffect,
-    "sample-sequential-poisson" -> sampleSequentialPoisson)
-
-  val oracles: Map[String, String] = Map(
-    "join-geo-grid-pairs" -> joinGeoGridPairsSql,
-    "sql-grouping-id" -> sqlGroupingIdSql,
-    "agg-icc-design-effect" -> aggIccDesignEffectSql,
-    "sample-sequential-poisson" -> sampleSequentialPoissonSql)
+  val keys: Seq[Key] = Seq(
+    Key("join-geo-grid-pairs", joinGeoGridPairs, joinGeoGridPairsSql),
+    Key("sql-grouping-id", sqlGroupingId, sqlGroupingIdSql),
+    Key("agg-icc-design-effect", aggIccDesignEffect, aggIccDesignEffectSql),
+    Key("sample-sequential-poisson", sampleSequentialPoisson, sampleSequentialPoissonSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch Q: Hill diversity profile, embedding bit balance,
   * lead-lag cross-correlation, Western Electric run rules. */
-object RelMore116 {
+object RelMore116 extends KeyModule {
 
   /** agg-hill-diversity-profile — the Hill-number diversity profile
     * of the event-type mix: D₀ (richness), D₁ = exp(Shannon)
@@ -294,15 +294,9 @@ object RelMore116 {
       |       CAST(sum(r4) AS BIGINT) AS r4_8_same_side
       |FROM flagged""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-hill-diversity-profile" -> aggHillDiversityProfile,
-    "emb-bit-balance" -> embBitBalance,
-    "agg-cross-correlation" -> aggCrossCorrelation,
-    "dq-western-electric" -> dqWesternElectric)
-
-  val oracles: Map[String, String] = Map(
-    "agg-hill-diversity-profile" -> aggHillDiversityProfileSql,
-    "emb-bit-balance" -> embBitBalanceSql,
-    "agg-cross-correlation" -> aggCrossCorrelationSql,
-    "dq-western-electric" -> dqWesternElectricSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-hill-diversity-profile", aggHillDiversityProfile, aggHillDiversityProfileSql),
+    Key("emb-bit-balance", embBitBalance, embBitBalanceSql),
+    Key("agg-cross-correlation", aggCrossCorrelation, aggCrossCorrelationSql),
+    Key("dq-western-electric", dqWesternElectric, dqWesternElectricSql))
 }

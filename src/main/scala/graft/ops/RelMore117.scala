@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch R: Cook's distance influence, tolerance-band payment
   * reconciliation, ABC-XYZ matrix, James-Stein shrinkage. */
-object RelMore117 {
+object RelMore117 extends KeyModule {
 
   /** dq-cooks-distance — regression influence diagnostics on the
     * daily revenue-on-count OLS: leverage hᵢ = 1/n + (xᵢ−x̄)²/Sxx and
@@ -347,15 +347,9 @@ object RelMore117 {
       |FROM with_s CROSS JOIN ss
       |ORDER BY nationkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-cooks-distance" -> dqCooksDistance,
-    "join-reconcile-tolerance" -> joinReconcileTolerance,
-    "agg-abc-xyz-matrix" -> aggAbcXyzMatrix,
-    "agg-james-stein" -> aggJamesStein)
-
-  val oracles: Map[String, String] = Map(
-    "dq-cooks-distance" -> dqCooksDistanceSql,
-    "join-reconcile-tolerance" -> joinReconcileToleranceSql,
-    "agg-abc-xyz-matrix" -> aggAbcXyzMatrixSql,
-    "agg-james-stein" -> aggJamesSteinSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-cooks-distance", dqCooksDistance, dqCooksDistanceSql),
+    Key("join-reconcile-tolerance", joinReconcileTolerance, joinReconcileToleranceSql),
+    Key("agg-abc-xyz-matrix", aggAbcXyzMatrix, aggAbcXyzMatrixSql),
+    Key("agg-james-stein", aggJamesStein, aggJamesSteinSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch S: RiskMetrics EWMA volatility, chain-ladder
   * development factors, compound-Poisson forecast band, keyset
   * pagination. */
-object RelMore118 {
+object RelMore118 extends KeyModule {
 
   /** win-riskmetrics-vol — the RiskMetrics EWMA volatility
     * (λ = 0.94) of daily log revenue returns: σ²ₜ = (1−λ)Σλ^(t−i)r²ᵢ,
@@ -283,15 +283,9 @@ object RelMore118 {
       |FROM offset_page JOIN keyset_page USING (rn)
       |ORDER BY page_row""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-riskmetrics-vol" -> winRiskmetricsVol,
-    "agg-chain-ladder" -> aggChainLadder,
-    "agg-compound-poisson" -> aggCompoundPoisson,
-    "sql-keyset-pagination" -> sqlKeysetPagination)
-
-  val oracles: Map[String, String] = Map(
-    "win-riskmetrics-vol" -> winRiskmetricsVolSql,
-    "agg-chain-ladder" -> aggChainLadderSql,
-    "agg-compound-poisson" -> aggCompoundPoissonSql,
-    "sql-keyset-pagination" -> sqlKeysetPaginationSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-riskmetrics-vol", winRiskmetricsVol, winRiskmetricsVolSql),
+    Key("agg-chain-ladder", aggChainLadder, aggChainLadderSql),
+    Key("agg-compound-poisson", aggCompoundPoisson, aggCompoundPoissonSql),
+    Key("sql-keyset-pagination", sqlKeysetPagination, sqlKeysetPaginationSql))
 }

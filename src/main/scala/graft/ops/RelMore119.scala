@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch T: log-rank survival test, LSH banding optimizer,
   * cross-domain LM cross-entropy, moving-block bootstrap. */
-object RelMore119 {
+object RelMore119 extends KeyModule {
 
   /** agg-logrank-test — the log-rank test comparing churn between the
     * BUILDING market segment and everyone else, on the customer
@@ -324,15 +324,9 @@ object RelMore119 {
       |             (count(*) - 1)) / 100, 2) AS block_boot_se_usd
       |FROM means""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-logrank-test" -> aggLogrankTest,
-    "dedup-banding-optimizer" -> dedupBandingOptimizer,
-    "text-domain-crossentropy" -> textDomainCrossentropy,
-    "sample-moving-block-bootstrap" -> sampleMovingBlockBootstrap)
-
-  val oracles: Map[String, String] = Map(
-    "agg-logrank-test" -> aggLogrankTestSql,
-    "dedup-banding-optimizer" -> dedupBandingOptimizerSql,
-    "text-domain-crossentropy" -> textDomainCrossentropySql,
-    "sample-moving-block-bootstrap" -> sampleMovingBlockBootstrapSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-logrank-test", aggLogrankTest, aggLogrankTestSql),
+    Key("dedup-banding-optimizer", dedupBandingOptimizer, dedupBandingOptimizerSql),
+    Key("text-domain-crossentropy", textDomainCrossentropy, textDomainCrossentropySql),
+    Key("sample-moving-block-bootstrap", sampleMovingBlockBootstrap, sampleMovingBlockBootstrapSql))
 }

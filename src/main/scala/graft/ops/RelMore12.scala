@@ -20,7 +20,7 @@ import Tables._
   * semantics. All ratio/threshold arithmetic stays in exact integers
   * (floor-ppm / cross-multiplication) so no engine's libm gets a vote.
   */
-object RelMore12 {
+object RelMore12 extends KeyModule {
 
   /** sql-tpch-q7 — volume shipping between two nations, by year: the
     * 6-table chain where BOTH endpoints of the flow (supplier nation,
@@ -341,27 +341,15 @@ object RelMore12 {
       |WHERE d.lang = 'en' AND d.n_chars BETWEEN 50 AND 5000
       |ORDER BY d.doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-tpch-q7" -> sqlTpchQ7,
-    "sql-tpch-q8" -> sqlTpchQ8,
-    "sql-tpch-q9" -> sqlTpchQ9,
-    "sql-tpch-q15" -> sqlTpchQ15,
-    "sql-tpch-q17" -> sqlTpchQ17,
-    "sql-tpch-q20" -> sqlTpchQ20,
-    "sql-tpch-q21" -> sqlTpchQ21,
-    "dq-rule-engine" -> dqRuleEngine,
-    "dq-anomaly-zscore" -> dqAnomalyZscore,
-    "mm-caption-join" -> mmCaptionJoin)
-
-  val oracles: Map[String, String] = Map(
-    "sql-tpch-q7" -> sqlTpchQ7Sql,
-    "sql-tpch-q8" -> sqlTpchQ8Sql,
-    "sql-tpch-q9" -> sqlTpchQ9Sql,
-    "sql-tpch-q15" -> sqlTpchQ15Sql,
-    "sql-tpch-q17" -> sqlTpchQ17Sql,
-    "sql-tpch-q20" -> sqlTpchQ20Sql,
-    "sql-tpch-q21" -> sqlTpchQ21Sql,
-    "dq-rule-engine" -> dqRuleEngineSql,
-    "dq-anomaly-zscore" -> dqAnomalyZscoreSql,
-    "mm-caption-join" -> mmCaptionJoinSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-tpch-q7", sqlTpchQ7, sqlTpchQ7Sql),
+    Key("sql-tpch-q8", sqlTpchQ8, sqlTpchQ8Sql),
+    Key("sql-tpch-q9", sqlTpchQ9, sqlTpchQ9Sql),
+    Key("sql-tpch-q15", sqlTpchQ15, sqlTpchQ15Sql),
+    Key("sql-tpch-q17", sqlTpchQ17, sqlTpchQ17Sql),
+    Key("sql-tpch-q20", sqlTpchQ20, sqlTpchQ20Sql),
+    Key("sql-tpch-q21", sqlTpchQ21, sqlTpchQ21Sql),
+    Key("dq-rule-engine", dqRuleEngine, dqRuleEngineSql),
+    Key("dq-anomaly-zscore", dqAnomalyZscore, dqAnomalyZscoreSql),
+    Key("mm-caption-join", mmCaptionJoin, mmCaptionJoinSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch U: linear CKA view similarity, OC acceptance-
   * sampling curve, Kendall's W concordance, mean-excess EVT curve. */
-object RelMore120 {
+object RelMore120 extends KeyModule {
 
   /** emb-cka-similarity — linear Centered Kernel Alignment between
     * the first-32 and last-32 dimension VIEWS of the embedding
@@ -281,15 +281,9 @@ object RelMore120 {
       |FROM exc CROSS JOIN fit
       |ORDER BY pct""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-cka-similarity" -> embCkaSimilarity,
-    "agg-oc-acceptance-sampling" -> aggOcAcceptanceSampling,
-    "agg-kendall-w" -> aggKendallW,
-    "agg-mean-excess-curve" -> aggMeanExcessCurve)
-
-  val oracles: Map[String, String] = Map(
-    "emb-cka-similarity" -> embCkaSimilaritySql,
-    "agg-oc-acceptance-sampling" -> aggOcAcceptanceSamplingSql,
-    "agg-kendall-w" -> aggKendallWSql,
-    "agg-mean-excess-curve" -> aggMeanExcessCurveSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-cka-similarity", embCkaSimilarity, embCkaSimilaritySql),
+    Key("agg-oc-acceptance-sampling", aggOcAcceptanceSampling, aggOcAcceptanceSamplingSql),
+    Key("agg-kendall-w", aggKendallW, aggKendallWSql),
+    Key("agg-mean-excess-curve", aggMeanExcessCurve, aggMeanExcessCurveSql))
 }

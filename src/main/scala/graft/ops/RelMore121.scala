@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch V: turning-points randomness test, delta+varint
   * encoding-size model, soft nearest-neighbor loss. */
-object RelMore121 {
+object RelMore121 extends KeyModule {
 
   /** dq-turning-points — the turning-points test on daily order
     * counts: a local max/min occurs at t when xₜ is strictly above
@@ -251,13 +251,8 @@ object RelMore121 {
       |       round(CAST(sum(loss_uq) AS DOUBLE) / 1e6 / count(*), 6) AS soft_nn_loss
       |FROM per_anchor""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-turning-points" -> dqTurningPoints,
-    "layout-delta-varint-size" -> layoutDeltaVarintSize,
-    "emb-soft-nn-loss" -> embSoftNnLoss)
-
-  val oracles: Map[String, String] = Map(
-    "dq-turning-points" -> dqTurningPointsSql,
-    "layout-delta-varint-size" -> layoutDeltaVarintSizeSql,
-    "emb-soft-nn-loss" -> embSoftNnLossSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-turning-points", dqTurningPoints, dqTurningPointsSql),
+    Key("layout-delta-varint-size", layoutDeltaVarintSize, layoutDeltaVarintSizeSql),
+    Key("emb-soft-nn-loss", embSoftNnLoss, embSoftNnLossSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch W: schema compatibility matrix, whitening isotropy
   * gain, min-variance pair portfolio, BCG growth-share matrix. */
-object RelMore122 {
+object RelMore122 extends KeyModule {
 
   /** ddl-compat-matrix — schema-evolution compatibility triage
     * between two declared contract versions: each column change is
@@ -370,15 +370,9 @@ object RelMore122 {
       |GROUP BY quadrant, t
       |ORDER BY quadrant""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "ddl-compat-matrix" -> ddlCompatMatrix,
-    "emb-whiten-isotropy-gain" -> embWhitenIsotropyGain,
-    "agg-min-variance-pair" -> aggMinVariancePair,
-    "agg-bcg-matrix" -> aggBcgMatrix)
-
-  val oracles: Map[String, String] = Map(
-    "ddl-compat-matrix" -> ddlCompatMatrixSql,
-    "emb-whiten-isotropy-gain" -> embWhitenIsotropyGainSql,
-    "agg-min-variance-pair" -> aggMinVariancePairSql,
-    "agg-bcg-matrix" -> aggBcgMatrixSql)
+  val keys: Seq[Key] = Seq(
+    Key("ddl-compat-matrix", ddlCompatMatrix, ddlCompatMatrixSql),
+    Key("emb-whiten-isotropy-gain", embWhitenIsotropyGain, embWhitenIsotropyGainSql),
+    Key("agg-min-variance-pair", aggMinVariancePair, aggMinVariancePairSql),
+    Key("agg-bcg-matrix", aggBcgMatrix, aggBcgMatrixSql))
 }

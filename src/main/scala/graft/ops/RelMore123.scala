@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch X: Breusch-Pagan heteroskedasticity test, embedding
   * hubness skew, fixed-effect meta-analysis, copy-on-write
   * amplification model. */
-object RelMore123 {
+object RelMore123 extends KeyModule {
 
   /** dq-breusch-pagan — the Breusch-Pagan heteroskedasticity test on
     * the daily revenue-on-count OLS: regress the squared residuals on
@@ -343,15 +343,9 @@ object RelMore123 {
       |       floor(CAST(sum(touched) AS DOUBLE) * 1e2 / sum(touched)) / 1e2 AS mor_amplification
       |FROM per_file""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-breusch-pagan" -> dqBreuschPagan,
-    "emb-hubness-skew" -> embHubnessSkew,
-    "agg-meta-analysis-fixed" -> aggMetaAnalysisFixed,
-    "sink-cow-write-amplification" -> sinkCowWriteAmplification)
-
-  val oracles: Map[String, String] = Map(
-    "dq-breusch-pagan" -> dqBreuschPaganSql,
-    "emb-hubness-skew" -> embHubnessSkewSql,
-    "agg-meta-analysis-fixed" -> aggMetaAnalysisFixedSql,
-    "sink-cow-write-amplification" -> sinkCowWriteAmplificationSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-breusch-pagan", dqBreuschPagan, dqBreuschPaganSql),
+    Key("emb-hubness-skew", embHubnessSkew, embHubnessSkewSql),
+    Key("agg-meta-analysis-fixed", aggMetaAnalysisFixed, aggMetaAnalysisFixedSql),
+    Key("sink-cow-write-amplification", sinkCowWriteAmplification, sinkCowWriteAmplificationSql))
 }

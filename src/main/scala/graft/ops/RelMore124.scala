@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch Y: Kupiec VaR backtest, edge-sampled triangle
   * estimator, file-overlap clustering depth, late-postings audit. */
-object RelMore124 {
+object RelMore124 extends KeyModule {
 
   /** dq-kupiec-var-backtest — Kupiec's proportion-of-failures test on
     * the 5% one-day VaR of daily revenue SHORTFALL: the VaR level is
@@ -296,15 +296,9 @@ object RelMore124 {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-kupiec-var-backtest" -> dqKupiecVarBacktest,
-    "graph-triangle-sampled" -> graphTriangleSampled,
-    "layout-overlap-depth" -> layoutOverlapDepth,
-    "dq-late-postings" -> dqLatePostings)
-
-  val oracles: Map[String, String] = Map(
-    "dq-kupiec-var-backtest" -> dqKupiecVarBacktestSql,
-    "graph-triangle-sampled" -> graphTriangleSampledSql,
-    "layout-overlap-depth" -> layoutOverlapDepthSql,
-    "dq-late-postings" -> dqLatePostingsSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-kupiec-var-backtest", dqKupiecVarBacktest, dqKupiecVarBacktestSql),
+    Key("graph-triangle-sampled", graphTriangleSampled, graphTriangleSampledSql),
+    Key("layout-overlap-depth", layoutOverlapDepth, layoutOverlapDepthSql),
+    Key("dq-late-postings", dqLatePostings, dqLatePostingsSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch Z: Epanechnikov KDE grid, Simpson's-paradox
   * detector, PRR disproportionality signals, variance changepoint. */
-object RelMore125 {
+object RelMore125 extends KeyModule {
 
   /** agg-kde-epanechnikov — kernel density estimate of the daily
     * revenue distribution on a fixed 20-point grid, Epanechnikov
@@ -289,15 +289,9 @@ object RelMore125 {
       |         AS var_after_usd2
       |FROM best""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-kde-epanechnikov" -> aggKdeEpanechnikov,
-    "dq-simpsons-paradox" -> dqSimpsonsParadox,
-    "dq-prr-signals" -> dqPrrSignals,
-    "win-binseg-variance" -> winBinsegVariance)
-
-  val oracles: Map[String, String] = Map(
-    "agg-kde-epanechnikov" -> aggKdeEpanechnikovSql,
-    "dq-simpsons-paradox" -> dqSimpsonsParadoxSql,
-    "dq-prr-signals" -> dqPrrSignalsSql,
-    "win-binseg-variance" -> winBinsegVarianceSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-kde-epanechnikov", aggKdeEpanechnikov, aggKdeEpanechnikovSql),
+    Key("dq-simpsons-paradox", dqSimpsonsParadox, dqSimpsonsParadoxSql),
+    Key("dq-prr-signals", dqPrrSignals, dqPrrSignalsSql),
+    Key("win-binseg-variance", winBinsegVariance, winBinsegVarianceSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AA: IPW treatment effect, Gauss Easter computus,
   * weighted reservoir sample, pinball quantile loss. */
-object RelMore126 {
+object RelMore126 extends KeyModule {
 
   /** agg-ipw-ate — the inverse-propensity-weighted average treatment
     * effect of the BUILDING segment on order value, with nation as
@@ -287,15 +287,9 @@ object RelMore126 {
       |         AS coverage_p90
       |FROM terms""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-ipw-ate" -> aggIpwAte,
-    "gen-easter-dates" -> genEasterDates,
-    "sample-weighted-reservoir" -> sampleWeightedReservoir,
-    "agg-pinball-loss" -> aggPinballLoss)
-
-  val oracles: Map[String, String] = Map(
-    "agg-ipw-ate" -> aggIpwAteSql,
-    "gen-easter-dates" -> genEasterDatesSql,
-    "sample-weighted-reservoir" -> sampleWeightedReservoirSql,
-    "agg-pinball-loss" -> aggPinballLossSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-ipw-ate", aggIpwAte, aggIpwAteSql),
+    Key("gen-easter-dates", genEasterDates, genEasterDatesSql),
+    Key("sample-weighted-reservoir", sampleWeightedReservoir, sampleWeightedReservoirSql),
+    Key("agg-pinball-loss", aggPinballLoss, aggPinballLossSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AB: Kaufman efficiency ratio, Jarque-Bera normality,
   * multi-format sink parity, repetition position profile. */
-object RelMore127 {
+object RelMore127 extends KeyModule {
 
   /** win-kaufman-er — Kaufman's efficiency ratio on daily revenue:
     * ER = |net 30-day change| / Σ|daily changes| per day, then the
@@ -266,15 +266,9 @@ object RelMore127 {
       |GROUP BY third, n_total
       |ORDER BY third""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-kaufman-er" -> winKaufmanEr,
-    "dq-jarque-bera" -> dqJarqueBera,
-    "sink-format-parity" -> sinkFormatParity,
-    "text-repetition-position" -> textRepetitionPosition)
-
-  val oracles: Map[String, String] = Map(
-    "win-kaufman-er" -> winKaufmanErSql,
-    "dq-jarque-bera" -> dqJarqueBeraSql,
-    "sink-format-parity" -> sinkFormatParitySql,
-    "text-repetition-position" -> textRepetitionPositionSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-kaufman-er", winKaufmanEr, winKaufmanErSql),
+    Key("dq-jarque-bera", dqJarqueBera, dqJarqueBeraSql),
+    Key("sink-format-parity", sinkFormatParity, sinkFormatParitySql),
+    Key("text-repetition-position", textRepetitionPosition, textRepetitionPositionSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AC: risk pooling, candidate-key discovery, PQ
   * codebook utilization, scientific-notation cast suite. */
-object RelMore128 {
+object RelMore128 extends KeyModule {
 
   /** agg-risk-pooling — the inventory risk-pooling effect over the 10
     * highest-volume parts: safety stock held SEPARATELY (z·Σσᵢ over
@@ -250,15 +250,9 @@ object RelMore128 {
       |             ('1,234.5'), (''), ('3.14159'), ('1e40'), ('0042')) t(raw)
       |ORDER BY raw""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-risk-pooling" -> aggRiskPooling,
-    "dq-key-discovery" -> dqKeyDiscovery,
-    "emb-pq-usage" -> embPqUsage,
-    "cast-scientific-notation" -> castScientificNotation)
-
-  val oracles: Map[String, String] = Map(
-    "agg-risk-pooling" -> aggRiskPoolingSql,
-    "dq-key-discovery" -> dqKeyDiscoverySql,
-    "emb-pq-usage" -> embPqUsageSql,
-    "cast-scientific-notation" -> castScientificNotationSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-risk-pooling", aggRiskPooling, aggRiskPoolingSql),
+    Key("dq-key-discovery", dqKeyDiscovery, dqKeyDiscoverySql),
+    Key("emb-pq-usage", embPqUsage, embPqUsageSql),
+    Key("cast-scientific-notation", castScientificNotation, castScientificNotationSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AD: Erlang-C staffing curve, content-defined
   * chunking, spectral flatness, alarm flappiness. */
-object RelMore129 {
+object RelMore129 extends KeyModule {
 
   /** agg-erlang-c-staffing — the Erlang-C staffing curve for the
     * order-processing "call center": offered load a = λ·s from the
@@ -290,15 +290,9 @@ object RelMore129 {
       |             sum(CASE WHEN alarm THEN 1 ELSE 0 END)) / 1e4 AS flappiness
       |FROM flagged""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-erlang-c-staffing" -> aggErlangCStaffing,
-    "mm-cdc-chunking" -> mmCdcChunking,
-    "agg-spectral-flatness" -> aggSpectralFlatness,
-    "dq-alarm-flappiness" -> dqAlarmFlappiness)
-
-  val oracles: Map[String, String] = Map(
-    "agg-erlang-c-staffing" -> aggErlangCStaffingSql,
-    "mm-cdc-chunking" -> mmCdcChunkingSql,
-    "agg-spectral-flatness" -> aggSpectralFlatnessSql,
-    "dq-alarm-flappiness" -> dqAlarmFlappinessSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-erlang-c-staffing", aggErlangCStaffing, aggErlangCStaffingSql),
+    Key("mm-cdc-chunking", mmCdcChunking, mmCdcChunkingSql),
+    Key("agg-spectral-flatness", aggSpectralFlatness, aggSpectralFlatnessSql),
+    Key("dq-alarm-flappiness", dqAlarmFlappiness, dqAlarmFlappinessSql))
 }

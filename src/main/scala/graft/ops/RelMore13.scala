@@ -13,7 +13,7 @@ import Tables._
   * LOCF/backfill imputation, dense reporting scaffolds, feature
   * hashing, and equi-depth histograms.
   */
-object RelMore13 {
+object RelMore13 extends KeyModule {
 
   /** sql-tpch-q2 — minimum-cost supplier per part: the correlated
     * scalar-min subquery re-runs the OUTER query's own join inside the
@@ -357,25 +357,14 @@ object RelMore13 {
       |GROUP BY l_orderkey
       |ORDER BY l_orderkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-tpch-q2" -> sqlTpchQ2,
-    "sql-tpch-q11" -> sqlTpchQ11,
-    "agg-rfm-segmentation" -> aggRfmSegmentation,
-    "agg-basket-affinity" -> aggBasketAffinity,
-    "win-locf-backfill" -> winLocfBackfill,
-    "gen-dense-scaffold" -> genDenseScaffold,
-    "text-feature-hashing" -> textFeatureHashing,
-    "agg-equidepth-histogram" -> aggEquidepthHistogram,
-    "func-struct-suite" -> funcStructSuite)
-
-  val oracles: Map[String, String] = Map(
-    "sql-tpch-q2" -> sqlTpchQ2Sql,
-    "sql-tpch-q11" -> sqlTpchQ11Sql,
-    "agg-rfm-segmentation" -> aggRfmSegmentationSql,
-    "agg-basket-affinity" -> aggBasketAffinitySql,
-    "win-locf-backfill" -> winLocfBackfillSql,
-    "gen-dense-scaffold" -> genDenseScaffoldSql,
-    "text-feature-hashing" -> textFeatureHashingSql,
-    "agg-equidepth-histogram" -> aggEquidepthHistogramSql,
-    "func-struct-suite" -> funcStructSuiteSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-tpch-q2", sqlTpchQ2, sqlTpchQ2Sql),
+    Key("sql-tpch-q11", sqlTpchQ11, sqlTpchQ11Sql),
+    Key("agg-rfm-segmentation", aggRfmSegmentation, aggRfmSegmentationSql),
+    Key("agg-basket-affinity", aggBasketAffinity, aggBasketAffinitySql),
+    Key("win-locf-backfill", winLocfBackfill, winLocfBackfillSql),
+    Key("gen-dense-scaffold", genDenseScaffold, genDenseScaffoldSql),
+    Key("text-feature-hashing", textFeatureHashing, textFeatureHashingSql),
+    Key("agg-equidepth-histogram", aggEquidepthHistogram, aggEquidepthHistogramSql),
+    Key("func-struct-suite", funcStructSuite, funcStructSuiteSql))
 }

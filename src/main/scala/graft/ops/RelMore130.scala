@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AE: Fleiss' kappa, opening-boilerplate profile,
   * degree-stratified clustering, Amihud illiquidity. */
-object RelMore130 {
+object RelMore130 extends KeyModule {
 
   /** agg-fleiss-kappa — Fleiss' kappa over m = 4 "raters" (the
     * calendar quarters) assigning the top-12 revenue parts to demand
@@ -254,15 +254,9 @@ object RelMore130 {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-fleiss-kappa" -> aggFleissKappa,
-    "text-opening-boilerplate" -> textOpeningBoilerplate,
-    "graph-clustering-by-degree" -> graphClusteringByDegree,
-    "win-amihud-illiq" -> winAmihudIlliq)
-
-  val oracles: Map[String, String] = Map(
-    "agg-fleiss-kappa" -> aggFleissKappaSql,
-    "text-opening-boilerplate" -> textOpeningBoilerplateSql,
-    "graph-clustering-by-degree" -> graphClusteringByDegreeSql,
-    "win-amihud-illiq" -> winAmihudIlliqSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-fleiss-kappa", aggFleissKappa, aggFleissKappaSql),
+    Key("text-opening-boilerplate", textOpeningBoilerplate, textOpeningBoilerplateSql),
+    Key("graph-clustering-by-degree", graphClusteringByDegree, graphClusteringByDegreeSql),
+    Key("win-amihud-illiq", winAmihudIlliq, winAmihudIlliqSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AF: Taylor's power law, per-term burstiness, Halton
   * low-discrepancy audit, illegal-transition audit. */
-object RelMore131 {
+object RelMore131 extends KeyModule {
 
   /** agg-taylors-law — Taylor's power law across parts: per-part
     * daily-demand variance against mean on log-log axes, fitting
@@ -259,15 +259,9 @@ object RelMore131 {
       |GROUP BY prev, curr, n_transitions
       |ORDER BY prev, curr""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-taylors-law" -> aggTaylorsLaw,
-    "text-term-burstiness" -> textTermBurstiness,
-    "gen-halton-sequence" -> genHaltonSequence,
-    "dq-illegal-transitions" -> dqIllegalTransitions)
-
-  val oracles: Map[String, String] = Map(
-    "agg-taylors-law" -> aggTaylorsLawSql,
-    "text-term-burstiness" -> textTermBurstinessSql,
-    "gen-halton-sequence" -> genHaltonSequenceSql,
-    "dq-illegal-transitions" -> dqIllegalTransitionsSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-taylors-law", aggTaylorsLaw, aggTaylorsLawSql),
+    Key("text-term-burstiness", textTermBurstiness, textTermBurstinessSql),
+    Key("gen-halton-sequence", genHaltonSequence, genHaltonSequenceSql),
+    Key("dq-illegal-transitions", dqIllegalTransitions, dqIllegalTransitionsSql))
 }

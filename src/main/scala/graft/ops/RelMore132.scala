@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AG: Tukey HSD post-hoc pairs, Cronbach's alpha,
   * VIF collinearity audit, Parkinson range volatility. */
-object RelMore132 {
+object RelMore132 extends KeyModule {
 
   /** agg-tukey-hsd — Tukey's honestly-significant-difference post-hoc
     * scan over order priorities: the omnibus F (agg-anova-nested-f)
@@ -301,15 +301,9 @@ object RelMore132 {
       |FROM terms GROUP BY mth HAVING count(*) >= 15
       |ORDER BY month""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-tukey-hsd" -> aggTukeyHsd,
-    "agg-cronbach-alpha" -> aggCronbachAlpha,
-    "dq-vif-collinearity" -> dqVifCollinearity,
-    "agg-parkinson-vol" -> aggParkinsonVol)
-
-  val oracles: Map[String, String] = Map(
-    "agg-tukey-hsd" -> aggTukeyHsdSql,
-    "agg-cronbach-alpha" -> aggCronbachAlphaSql,
-    "dq-vif-collinearity" -> dqVifCollinearitySql,
-    "agg-parkinson-vol" -> aggParkinsonVolSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-tukey-hsd", aggTukeyHsd, aggTukeyHsdSql),
+    Key("agg-cronbach-alpha", aggCronbachAlpha, aggCronbachAlphaSql),
+    Key("dq-vif-collinearity", dqVifCollinearity, dqVifCollinearitySql),
+    Key("agg-parkinson-vol", aggParkinsonVol, aggParkinsonVolSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AH: Haar wavelet energy ladder, Cochran-Armitage
   * trend test, TOST equivalence gate, Burrows' delta stylometry. */
-object RelMore133 {
+object RelMore133 extends KeyModule {
 
   /** agg-haar-energy — orthonormal Haar wavelet energy decomposition
     * of the first 256 trading days of daily revenue: detail energy
@@ -308,15 +308,9 @@ object RelMore133 {
       |ORDER BY burrows_delta DESC, src_a, src_b
       |LIMIT 20""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-haar-energy" -> aggHaarEnergy,
-    "dq-cochran-armitage" -> dqCochranArmitage,
-    "agg-tost-equivalence" -> aggTostEquivalence,
-    "text-burrows-delta" -> textBurrowsDelta)
-
-  val oracles: Map[String, String] = Map(
-    "agg-haar-energy" -> aggHaarEnergySql,
-    "dq-cochran-armitage" -> dqCochranArmitageSql,
-    "agg-tost-equivalence" -> aggTostEquivalenceSql,
-    "text-burrows-delta" -> textBurrowsDeltaSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-haar-energy", aggHaarEnergy, aggHaarEnergySql),
+    Key("dq-cochran-armitage", dqCochranArmitage, dqCochranArmitageSql),
+    Key("agg-tost-equivalence", aggTostEquivalence, aggTostEquivalenceSql),
+    Key("text-burrows-delta", textBurrowsDelta, textBurrowsDeltaSql))
 }

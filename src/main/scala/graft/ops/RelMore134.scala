@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-11 batch AI: Apriori 3-itemsets, NDCG ranking evaluation,
   * doubly-robust ATE, McNemar paired-proportions test. */
-object RelMore134 {
+object RelMore134 extends KeyModule {
 
   /** agg-apriori-triples — frequent brand TRIPLES in order baskets by
     * the Apriori candidate discipline: frequent single brands → pair
@@ -428,15 +428,9 @@ object RelMore134 {
       |               CAST(b + c AS DOUBLE), 4) END > 3.841 AS significant
       |FROM cells""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-apriori-triples" -> aggAprioriTriples,
-    "text-ndcg-eval" -> textNdcgEval,
-    "agg-doubly-robust-ate" -> aggDoublyRobustAte,
-    "dq-mcnemar-paired" -> dqMcnemarPaired)
-
-  val oracles: Map[String, String] = Map(
-    "agg-apriori-triples" -> aggAprioriTriplesSql,
-    "text-ndcg-eval" -> textNdcgEvalSql,
-    "agg-doubly-robust-ate" -> aggDoublyRobustAteSql,
-    "dq-mcnemar-paired" -> dqMcnemarPairedSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-apriori-triples", aggAprioriTriples, aggAprioriTriplesSql),
+    Key("text-ndcg-eval", textNdcgEval, textNdcgEvalSql),
+    Key("agg-doubly-robust-ate", aggDoublyRobustAte, aggDoublyRobustAteSql),
+    Key("dq-mcnemar-paired", dqMcnemarPaired, dqMcnemarPairedSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AJ: KNN-Shapley data valuation, Nemenyi post-hoc,
   * Yule's K lexical richness, 2D orthogonal Procrustes. */
-object RelMore135 {
+object RelMore135 extends KeyModule {
 
   /** emb-knn-shapley — exact KNN-Shapley data valuation (Jia et al.,
     * PVLDB 2019 closed form): for each held-out test vector, every
@@ -279,15 +279,9 @@ object RelMore135 {
       |             CAST(sum(normq) - 2 * sum(dotq) AS DOUBLE), 6) AS improvement_share
       |FROM terms""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-knn-shapley" -> embKnnShapley,
-    "agg-friedman-nemenyi" -> aggFriedmanNemenyi,
-    "text-yules-k" -> textYulesK,
-    "emb-procrustes-align" -> embProcrustesAlign)
-
-  val oracles: Map[String, String] = Map(
-    "emb-knn-shapley" -> embKnnShapleySql,
-    "agg-friedman-nemenyi" -> aggFriedmanNemenyiSql,
-    "text-yules-k" -> textYulesKSql,
-    "emb-procrustes-align" -> embProcrustesAlignSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-knn-shapley", embKnnShapley, embKnnShapleySql),
+    Key("agg-friedman-nemenyi", aggFriedmanNemenyi, aggFriedmanNemenyiSql),
+    Key("text-yules-k", textYulesK, textYulesKSql),
+    Key("emb-procrustes-align", embProcrustesAlign, embProcrustesAlignSql))
 }

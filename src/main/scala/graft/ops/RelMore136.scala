@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AK: KPSS stationarity test, Wilson EOQ, Pratt
   * importance decomposition, Sortino downside ratio. */
-object RelMore136 {
+object RelMore136 extends KeyModule {
 
   /** dq-kpss-stationarity — the KPSS test on daily revenue, the
     * REVERSED-null partner of dq-dickey-fuller: DF's null is a unit
@@ -305,15 +305,9 @@ object RelMore136 {
       |             sqrt(CAST(sdd AS DOUBLE) / n_days), 4) AS sortino
       |FROM agg ORDER BY month""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-kpss-stationarity" -> dqKpssStationarity,
-    "agg-eoq-wilson" -> aggEoqWilson,
-    "agg-pratt-importance" -> aggPrattImportance,
-    "agg-sortino-ratio" -> aggSortinoRatio)
-
-  val oracles: Map[String, String] = Map(
-    "dq-kpss-stationarity" -> dqKpssStationaritySql,
-    "agg-eoq-wilson" -> aggEoqWilsonSql,
-    "agg-pratt-importance" -> aggPrattImportanceSql,
-    "agg-sortino-ratio" -> aggSortinoRatioSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-kpss-stationarity", dqKpssStationarity, dqKpssStationaritySql),
+    Key("agg-eoq-wilson", aggEoqWilson, aggEoqWilsonSql),
+    Key("agg-pratt-importance", aggPrattImportance, aggPrattImportanceSql),
+    Key("agg-sortino-ratio", aggSortinoRatio, aggSortinoRatioSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AL: Moran's I spatial autocorrelation, Cliff's delta
   * effect size, underwater-spell duration, BOM-tolerant CSV source. */
-object RelMore137 {
+object RelMore137 extends KeyModule {
 
   /** agg-morans-i — Moran's I spatial autocorrelation of per-nation
     * revenue under a same-region contiguity matrix (wᵢⱼ = 1 iff
@@ -265,15 +265,9 @@ object RelMore137 {
       |FROM nation
       |ORDER BY n_nationkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-morans-i" -> aggMoransI,
-    "agg-cliffs-delta" -> aggCliffsDelta,
-    "win-underwater-spell" -> winUnderwaterSpell,
-    "src-csv-bom" -> srcCsvBom)
-
-  val oracles: Map[String, String] = Map(
-    "agg-morans-i" -> aggMoransISql,
-    "agg-cliffs-delta" -> aggCliffsDeltaSql,
-    "win-underwater-spell" -> winUnderwaterSpellSql,
-    "src-csv-bom" -> srcCsvBomSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-morans-i", aggMoransI, aggMoransISql),
+    Key("agg-cliffs-delta", aggCliffsDelta, aggCliffsDeltaSql),
+    Key("win-underwater-spell", winUnderwaterSpell, winUnderwaterSpellSql),
+    Key("src-csv-bom", srcCsvBom, srcCsvBomSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AM: Granger causality, Bland-Altman agreement,
   * variance-reduction stump, Calinski-Harabasz index. */
-object RelMore138 {
+object RelMore138 extends KeyModule {
 
   /** agg-granger-causality — lag-1 Granger test in BOTH directions
     * between daily order revenue and daily shipped quantity: does
@@ -357,15 +357,9 @@ object RelMore138 {
       |         / 1e6 AS between_share
       |FROM folded CROSS JOIN overall""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-granger-causality" -> aggGrangerCausality,
-    "dq-bland-altman" -> dqBlandAltman,
-    "agg-variance-split-stump" -> aggVarianceSplitStump,
-    "emb-calinski-harabasz" -> embCalinskiHarabasz)
-
-  val oracles: Map[String, String] = Map(
-    "agg-granger-causality" -> aggGrangerCausalitySql,
-    "dq-bland-altman" -> dqBlandAltmanSql,
-    "agg-variance-split-stump" -> aggVarianceSplitStumpSql,
-    "emb-calinski-harabasz" -> embCalinskiHarabaszSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-granger-causality", aggGrangerCausality, aggGrangerCausalitySql),
+    Key("dq-bland-altman", dqBlandAltman, dqBlandAltmanSql),
+    Key("agg-variance-split-stump", aggVarianceSplitStump, aggVarianceSplitStumpSql),
+    Key("emb-calinski-harabasz", embCalinskiHarabasz, embCalinskiHarabaszSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AN: Oaxaca-Blinder gap decomposition, Lin's
   * concordance, brand-rank Kendall stability, embedding axis gain. */
-object RelMore139 {
+object RelMore139 extends KeyModule {
 
   /** agg-oaxaca-blinder — twofold Oaxaca-Blinder decomposition of the
     * returned-vs-kept revenue gap: how much of mean(extendedprice|R)
@@ -328,15 +328,9 @@ object RelMore139 {
       |       round(score / 1e6 / CAST(n AS DOUBLE), 6) AS weighted_purity
       |FROM best JOIN ranges ON best.dim = ranges.dim""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-oaxaca-blinder" -> aggOaxacaBlinder,
-    "agg-lin-ccc" -> aggLinCcc,
-    "agg-rank-stability-kendall" -> aggRankStabilityKendall,
-    "emb-axis-split-gain" -> embAxisSplitGain)
-
-  val oracles: Map[String, String] = Map(
-    "agg-oaxaca-blinder" -> aggOaxacaBlinderSql,
-    "agg-lin-ccc" -> aggLinCccSql,
-    "agg-rank-stability-kendall" -> aggRankStabilityKendallSql,
-    "emb-axis-split-gain" -> embAxisSplitGainSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-oaxaca-blinder", aggOaxacaBlinder, aggOaxacaBlinderSql),
+    Key("agg-lin-ccc", aggLinCcc, aggLinCccSql),
+    Key("agg-rank-stability-kendall", aggRankStabilityKendall, aggRankStabilityKendallSql),
+    Key("emb-axis-split-gain", embAxisSplitGain, embAxisSplitGainSql))
 }

@@ -12,7 +12,7 @@ import Tables._
   * suite, Markov event transitions, quality-aware dedup
   * canonicalization, and the manifest-commit atomic-publish sink.
   */
-object RelMore14 {
+object RelMore14 extends KeyModule {
 
   /** sql-recursive-cte — WITH RECURSIVE (new in Spark 4): ancestry
     * walk over a synthetic parent edge (parent = floor(key/7) — a
@@ -185,7 +185,7 @@ object RelMore14 {
     * verbatim; one window pick per cluster; emits only multi-member
     * clusters (the ones where the choice mattered). */
   val dedupKeepBest: Q = (s, d) => {
-    val labels = TextDedup.queries("dedup-cluster")(s, d)
+    val labels = TextDedup.dedupCluster(s, d)
       .select("doc_id", "cluster_id")
     val sized = labels.join(
       documents(s, d).select(col("doc_id"), col("n_chars")), Seq("doc_id"))
@@ -208,7 +208,7 @@ object RelMore14 {
   }
 
   def dedupKeepBestSql: String =
-    s"""WITH cl AS (SELECT doc_id, cluster_id FROM (${TextDedup.oracles("dedup-cluster")})),
+    s"""WITH cl AS (SELECT doc_id, cluster_id FROM (${TextDedup.dedupClusterSql})),
        |sized AS (
        |  SELECT cl.cluster_id, cl.doc_id, d.n_chars,
        |         row_number() OVER (PARTITION BY cl.cluster_id
@@ -276,21 +276,12 @@ object RelMore14 {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-recursive-cte" -> sqlRecursiveCte,
-    "expr-variant-json" -> exprVariantJson,
-    "agg-ivm-merge" -> aggIvmMerge,
-    "func-null-suite" -> funcNullSuite,
-    "agg-event-transitions" -> aggEventTransitions,
-    "dedup-keep-best" -> dedupKeepBest,
-    "sink-manifest-atomic" -> sinkManifestAtomic)
-
-  val oracles: Map[String, String] = Map(
-    "sql-recursive-cte" -> sqlRecursiveCteSql,
-    "expr-variant-json" -> exprVariantJsonSql,
-    "agg-ivm-merge" -> aggIvmMergeSql,
-    "func-null-suite" -> funcNullSuiteSql,
-    "agg-event-transitions" -> aggEventTransitionsSql,
-    "dedup-keep-best" -> dedupKeepBestSql,
-    "sink-manifest-atomic" -> sinkManifestAtomicSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-recursive-cte", sqlRecursiveCte, sqlRecursiveCteSql),
+    Key("expr-variant-json", exprVariantJson, exprVariantJsonSql),
+    Key("agg-ivm-merge", aggIvmMerge, aggIvmMergeSql),
+    Key("func-null-suite", funcNullSuite, funcNullSuiteSql),
+    Key("agg-event-transitions", aggEventTransitions, aggEventTransitionsSql),
+    Key("dedup-keep-best", dedupKeepBest, dedupKeepBestSql),
+    Key("sink-manifest-atomic", sinkManifestAtomic, sinkManifestAtomicSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AO: green-list watermark detector, stupid-backoff
   * bigram LM, one-step Gaussian mixture EM, activity h-index. */
-object RelMore140 {
+object RelMore140 extends KeyModule {
 
   /** text-greenlist-watermark — Kirchenbauer-style green-list
     * watermark detection: each position's vocabulary is notionally
@@ -316,15 +316,9 @@ object RelMore140 {
       |       (SELECT CAST(max(rn) AS BIGINT) FROM ranked WHERE c >= rn) AS h_index,
       |       (SELECT CAST(max(rn) AS BIGINT) FROM ranked WHERE cum >= rn * rn) AS g_index""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-greenlist-watermark" -> textGreenlistWatermark,
-    "text-stupid-backoff" -> textStupidBackoff,
-    "agg-gaussian-mixture-step" -> aggGaussianMixtureStep,
-    "agg-h-index" -> aggHIndex)
-
-  val oracles: Map[String, String] = Map(
-    "text-greenlist-watermark" -> textGreenlistWatermarkSql,
-    "text-stupid-backoff" -> textStupidBackoffSql,
-    "agg-gaussian-mixture-step" -> aggGaussianMixtureStepSql,
-    "agg-h-index" -> aggHIndexSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-greenlist-watermark", textGreenlistWatermark, textGreenlistWatermarkSql),
+    Key("text-stupid-backoff", textStupidBackoff, textStupidBackoffSql),
+    Key("agg-gaussian-mixture-step", aggGaussianMixtureStep, aggGaussianMixtureStepSql),
+    Key("agg-h-index", aggHIndex, aggHIndexSql))
 }

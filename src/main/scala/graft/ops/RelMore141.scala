@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AP: segment migration matrix, brand growth rates,
   * expected-shortfall backtest, quadratic-weighted kappa. */
-object RelMore141 {
+object RelMore141 extends KeyModule {
 
   /** agg-segment-migration — the FM-segment migration matrix between
     * the two halves of the order history: customers scored into 9
@@ -312,15 +312,9 @@ object RelMore141 {
       |             CAST(weN AS DOUBLE), 6) AS weighted_kappa
       |FROM obs CROSS JOIN we""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-segment-migration" -> aggSegmentMigration,
-    "agg-brand-growth-rate" -> aggBrandGrowthRate,
-    "agg-es-backtest-z2" -> aggEsBacktestZ2,
-    "agg-weighted-kappa" -> aggWeightedKappa)
-
-  val oracles: Map[String, String] = Map(
-    "agg-segment-migration" -> aggSegmentMigrationSql,
-    "agg-brand-growth-rate" -> aggBrandGrowthRateSql,
-    "agg-es-backtest-z2" -> aggEsBacktestZ2Sql,
-    "agg-weighted-kappa" -> aggWeightedKappaSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-segment-migration", aggSegmentMigration, aggSegmentMigrationSql),
+    Key("agg-brand-growth-rate", aggBrandGrowthRate, aggBrandGrowthRateSql),
+    Key("agg-es-backtest-z2", aggEsBacktestZ2, aggEsBacktestZ2Sql),
+    Key("agg-weighted-kappa", aggWeightedKappa, aggWeightedKappaSql))
 }

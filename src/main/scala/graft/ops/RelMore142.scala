@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AQ: column format templates, nested-JSON flatten
   * source, Atkinson inequality family, Lorenz asymmetry. */
-object RelMore142 {
+object RelMore142 extends KeyModule {
 
   /** dq-format-templates — string-format profiling: map every value
     * to its character-class template (runs of [A-Z]→A, [a-z]→a,
@@ -236,15 +236,9 @@ object RelMore142 {
       |       round(f_mu + l_mu, 6) < 1.0 AS driven_by_small_values
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-format-templates" -> dqFormatTemplates,
-    "src-json-nested-flatten" -> srcJsonNestedFlatten,
-    "agg-atkinson-index" -> aggAtkinsonIndex,
-    "agg-lorenz-asymmetry" -> aggLorenzAsymmetry)
-
-  val oracles: Map[String, String] = Map(
-    "dq-format-templates" -> dqFormatTemplatesSql,
-    "src-json-nested-flatten" -> srcJsonNestedFlattenSql,
-    "agg-atkinson-index" -> aggAtkinsonIndexSql,
-    "agg-lorenz-asymmetry" -> aggLorenzAsymmetrySql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-format-templates", dqFormatTemplates, dqFormatTemplatesSql),
+    Key("src-json-nested-flatten", srcJsonNestedFlatten, srcJsonNestedFlattenSql),
+    Key("agg-atkinson-index", aggAtkinsonIndex, aggAtkinsonIndexSql),
+    Key("agg-lorenz-asymmetry", aggLorenzAsymmetry, aggLorenzAsymmetrySql))
 }

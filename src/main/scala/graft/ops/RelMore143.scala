@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AR: partial correlation, ANCOVA adjusted means,
   * Tukey median polish, k-truss cohesion peel. */
-object RelMore143 {
+object RelMore143 extends KeyModule {
 
   /** agg-partial-correlation — r(price, quantity | discount): the
     * correlation that REMAINS after controlling the third variable,
@@ -315,15 +315,9 @@ object RelMore143 {
       |ORDER BY support DESC, u, v
       |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-partial-correlation" -> aggPartialCorrelation,
-    "agg-ancova-adjust" -> aggAncovaAdjust,
-    "agg-median-polish" -> aggMedianPolish,
-    "graph-ktruss" -> graphKtruss)
-
-  val oracles: Map[String, String] = Map(
-    "agg-partial-correlation" -> aggPartialCorrelationSql,
-    "agg-ancova-adjust" -> aggAncovaAdjustSql,
-    "agg-median-polish" -> aggMedianPolishSql,
-    "graph-ktruss" -> graphKtrussSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-partial-correlation", aggPartialCorrelation, aggPartialCorrelationSql),
+    Key("agg-ancova-adjust", aggAncovaAdjust, aggAncovaAdjustSql),
+    Key("agg-median-polish", aggMedianPolish, aggMedianPolishSql),
+    Key("graph-ktruss", graphKtruss, graphKtrussSql))
 }

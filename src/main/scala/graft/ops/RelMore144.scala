@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AS: Cramér-von Mises two-sample test, L-moments,
   * two-way IPF raking, coupon-collector coverage audit. */
-object RelMore144 {
+object RelMore144 extends KeyModule {
 
   /** dq-cramer-von-mises — the two-sample Cramér-von Mises test
     * between URGENT and LOW order values via the rank formula
@@ -297,15 +297,9 @@ object RelMore144 {
       |             round(25.0 * (1.0 - pow(24.0 / 25.0, basket_size)), 4), 4) AS gap
       |FROM g ORDER BY basket_size""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-cramer-von-mises" -> dqCramerVonMises,
-    "agg-lmoments" -> aggLmoments,
-    "sample-raking-ipf" -> sampleRakingIpf,
-    "agg-coupon-collector" -> aggCouponCollector)
-
-  val oracles: Map[String, String] = Map(
-    "dq-cramer-von-mises" -> dqCramerVonMisesSql,
-    "agg-lmoments" -> aggLmomentsSql,
-    "sample-raking-ipf" -> sampleRakingIpfSql,
-    "agg-coupon-collector" -> aggCouponCollectorSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-cramer-von-mises", dqCramerVonMises, dqCramerVonMisesSql),
+    Key("agg-lmoments", aggLmoments, aggLmomentsSql),
+    Key("sample-raking-ipf", sampleRakingIpf, sampleRakingIpfSql),
+    Key("agg-coupon-collector", aggCouponCollector, aggCouponCollectorSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AT: Bornhuetter-Ferguson reserves, lead-time SLA
   * percentiles, edit-distance function suite, quantization SNR. */
-object RelMore145 {
+object RelMore145 extends KeyModule {
 
   /** agg-bornhuetter-ferguson — the BF reserve estimate per origin
     * quarter, on agg-chain-ladder's exact triangle (same origins,
@@ -296,15 +296,9 @@ object RelMore145 {
       |FROM per_bits CROSS JOIN rng
       |ORDER BY bits""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-bornhuetter-ferguson" -> aggBornhuetterFerguson,
-    "agg-lead-time-sla" -> aggLeadTimeSla,
-    "func-editdist-suite" -> funcEditdistSuite,
-    "emb-quantization-snr-curve" -> embQuantizationSnrCurve)
-
-  val oracles: Map[String, String] = Map(
-    "agg-bornhuetter-ferguson" -> aggBornhuetterFergusonSql,
-    "agg-lead-time-sla" -> aggLeadTimeSlaSql,
-    "func-editdist-suite" -> funcEditdistSuiteSql,
-    "emb-quantization-snr-curve" -> embQuantizationSnrCurveSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-bornhuetter-ferguson", aggBornhuetterFerguson, aggBornhuetterFergusonSql),
+    Key("agg-lead-time-sla", aggLeadTimeSla, aggLeadTimeSlaSql),
+    Key("func-editdist-suite", funcEditdistSuite, funcEditdistSuiteSql),
+    Key("emb-quantization-snr-curve", embQuantizationSnrCurve, embQuantizationSnrCurveSql))
 }

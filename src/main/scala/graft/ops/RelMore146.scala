@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AU: adstock decay grid fit, Poisson rate test,
   * erasure-coding layout model, largest-remainder apportionment. */
-object RelMore146 {
+object RelMore146 extends KeyModule {
 
   /** agg-adstock-fit — geometric adstock calibration by grid search:
     * for λ ∈ {0.1, 0.3, 0.5, 0.7, 0.9}, transform daily shipped
@@ -274,15 +274,9 @@ object RelMore146 {
       |             / 100, 2) AS share_pct
       |FROM ranked ORDER BY brand""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-adstock-fit" -> aggAdstockFit,
-    "dq-poisson-rate-test" -> dqPoissonRateTest,
-    "mm-erasure-layout-model" -> mmErasureLayoutModel,
-    "agg-largest-remainder-apportion" -> aggLargestRemainderApportion)
-
-  val oracles: Map[String, String] = Map(
-    "agg-adstock-fit" -> aggAdstockFitSql,
-    "dq-poisson-rate-test" -> dqPoissonRateTestSql,
-    "mm-erasure-layout-model" -> mmErasureLayoutModelSql,
-    "agg-largest-remainder-apportion" -> aggLargestRemainderApportionSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-adstock-fit", aggAdstockFit, aggAdstockFitSql),
+    Key("dq-poisson-rate-test", dqPoissonRateTest, dqPoissonRateTestSql),
+    Key("mm-erasure-layout-model", mmErasureLayoutModel, mmErasureLayoutModelSql),
+    Key("agg-largest-remainder-apportion", aggLargestRemainderApportion, aggLargestRemainderApportionSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AV: Unicode script profile, split-conformal
   * intervals, chained Törnqvist index, disguised-missing sentinels. */
-object RelMore147 {
+object RelMore147 extends KeyModule {
 
   /** text-script-profile — Unicode script composition per language
     * label: Latin, CJK, digit, whitespace and other shares of the
@@ -320,15 +320,9 @@ object RelMore147 {
       |FROM ranked WHERE rk <= 5
       |ORDER BY column_name, rank""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-script-profile" -> textScriptProfile,
-    "agg-conformal-interval" -> aggConformalInterval,
-    "agg-tornqvist-index" -> aggTornqvistIndex,
-    "dq-disguised-missing" -> dqDisguisedMissing)
-
-  val oracles: Map[String, String] = Map(
-    "text-script-profile" -> textScriptProfileSql,
-    "agg-conformal-interval" -> aggConformalIntervalSql,
-    "agg-tornqvist-index" -> aggTornqvistIndexSql,
-    "dq-disguised-missing" -> dqDisguisedMissingSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-script-profile", textScriptProfile, textScriptProfileSql),
+    Key("agg-conformal-interval", aggConformalInterval, aggConformalIntervalSql),
+    Key("agg-tornqvist-index", aggTornqvistIndex, aggTornqvistIndexSql),
+    Key("dq-disguised-missing", dqDisguisedMissing, dqDisguisedMissingSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AW: cluster-robust standard errors, Wang-Isola
   * alignment/uniformity, month-end effect, locale-grouped casts. */
-object RelMore148 {
+object RelMore148 extends KeyModule {
 
   /** agg-clustered-se — cluster-robust (Liang-Zeger) standard error
     * for the revenue-on-quantity slope, clustered by ORDER: lines of
@@ -334,15 +334,9 @@ object RelMore148 {
       |         AS max_abs_err_cents
       |FROM parsed""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-clustered-se" -> aggClusteredSe,
-    "emb-align-uniformity" -> embAlignUniformity,
-    "agg-month-end-effect" -> aggMonthEndEffect,
-    "cast-locale-grouping" -> castLocaleGrouping)
-
-  val oracles: Map[String, String] = Map(
-    "agg-clustered-se" -> aggClusteredSeSql,
-    "emb-align-uniformity" -> embAlignUniformitySql,
-    "agg-month-end-effect" -> aggMonthEndEffectSql,
-    "cast-locale-grouping" -> castLocaleGroupingSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-clustered-se", aggClusteredSe, aggClusteredSeSql),
+    Key("emb-align-uniformity", embAlignUniformity, embAlignUniformitySql),
+    Key("agg-month-end-effect", aggMonthEndEffect, aggMonthEndEffectSql),
+    Key("cast-locale-grouping", castLocaleGrouping, castLocaleGroupingSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch AX: prompt-injection lint, volume profile with
   * point of control, D'Hondt vs Hamilton apportionment, Holm
   * step-down FWER gate. */
-object RelMore149 {
+object RelMore149 extends KeyModule {
 
   /** text-injection-lint — prompt-injection pattern scan over the
     * corpus: per pattern class (override phrases, role spoofing,
@@ -310,15 +310,9 @@ object RelMore149 {
        |ORDER BY p_rank""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "text-injection-lint" -> textInjectionLint,
-    "agg-volume-profile-poc" -> aggVolumeProfilePoc,
-    "agg-dhondt-apportion" -> aggDhondtApportion,
-    "dq-holm-stepdown" -> dqHolmStepdown)
-
-  val oracles: Map[String, String] = Map(
-    "text-injection-lint" -> textInjectionLintSql,
-    "agg-volume-profile-poc" -> aggVolumeProfilePocSql,
-    "agg-dhondt-apportion" -> aggDhondtApportionSql,
-    "dq-holm-stepdown" -> dqHolmStepdownSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-injection-lint", textInjectionLint, textInjectionLintSql),
+    Key("agg-volume-profile-poc", aggVolumeProfilePoc, aggVolumeProfilePocSql),
+    Key("agg-dhondt-apportion", aggDhondtApportion, aggDhondtApportionSql),
+    Key("dq-holm-stepdown", dqHolmStepdown, dqHolmStepdownSql))
 }

@@ -17,7 +17,7 @@ import Tables._
   * TEXTUALLY identical formula in both engines so the IEEE ops match
   * bit-for-bit.
   */
-object RelMore15 {
+object RelMore15 extends KeyModule {
 
   /** agg-attribution — multi-touch attribution: every touchpoint
     * (view/click/signup) is assigned to its user's NEXT purchase via
@@ -361,21 +361,12 @@ object RelMore15 {
       |FROM ranked
       |WHERE cum * 5 >= total * 4""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-attribution" -> aggAttribution,
-    "agg-twap" -> aggTwap,
-    "win-interpolate" -> winInterpolate,
-    "dq-benford" -> dqBenford,
-    "graph-kcore" -> graphKcore,
-    "sample-block" -> sampleBlock,
-    "agg-pareto-point" -> aggParetoPoint)
-
-  val oracles: Map[String, String] = Map(
-    "agg-attribution" -> aggAttributionSql,
-    "agg-twap" -> aggTwapSql,
-    "win-interpolate" -> winInterpolateSql,
-    "dq-benford" -> dqBenfordSql,
-    "graph-kcore" -> graphKcoreSql,
-    "sample-block" -> sampleBlockSql,
-    "agg-pareto-point" -> aggParetoPointSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-attribution", aggAttribution, aggAttributionSql),
+    Key("agg-twap", aggTwap, aggTwapSql),
+    Key("win-interpolate", winInterpolate, winInterpolateSql),
+    Key("dq-benford", dqBenford, dqBenfordSql),
+    Key("graph-kcore", graphKcore, graphKcoreSql),
+    Key("sample-block", sampleBlock, sampleBlockSql),
+    Key("agg-pareto-point", aggParetoPoint, aggParetoPointSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AY: projection trustworthiness, purged k-fold CV,
   * weight-of-evidence IV, Brier score decomposition. */
-object RelMore150 {
+object RelMore150 extends KeyModule {
 
   /** emb-trustworthiness — the trustworthiness of the naive 2D view
     * (dims 0-1) of the embedding space at k = 10: for each probe
@@ -335,15 +335,9 @@ object RelMore150 {
       |       round(brier - (reliability - resolution + uncertainty), 6) AS identity_gap
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-trustworthiness" -> embTrustworthiness,
-    "sample-purged-kfold" -> samplePurgedKfold,
-    "agg-woe-iv" -> aggWoeIv,
-    "agg-brier-decomposition" -> aggBrierDecomposition)
-
-  val oracles: Map[String, String] = Map(
-    "emb-trustworthiness" -> embTrustworthinessSql,
-    "sample-purged-kfold" -> samplePurgedKfoldSql,
-    "agg-woe-iv" -> aggWoeIvSql,
-    "agg-brier-decomposition" -> aggBrierDecompositionSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-trustworthiness", embTrustworthiness, embTrustworthinessSql),
+    Key("sample-purged-kfold", samplePurgedKfold, samplePurgedKfoldSql),
+    Key("agg-woe-iv", aggWoeIv, aggWoeIvSql),
+    Key("agg-brier-decomposition", aggBrierDecomposition, aggBrierDecompositionSql))
 }

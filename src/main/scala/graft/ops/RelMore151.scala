@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch AZ: bot fingerprinting, profit-curve targeting,
   * week-numbering conventions, DeLong AUC interval. */
-object RelMore151 {
+object RelMore151 extends KeyModule {
 
   /** dq-bot-fingerprint — behavioral bot scoring per user from three
     * orthogonal fingerprints: burst share (inter-arrival < 5 min),
@@ -306,15 +306,9 @@ object RelMore151 {
       |         AS distinguishes
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-bot-fingerprint" -> dqBotFingerprint,
-    "agg-profit-curve" -> aggProfitCurve,
-    "gen-week-conventions" -> genWeekConventions,
-    "agg-auc-delong-ci" -> aggAucDelongCi)
-
-  val oracles: Map[String, String] = Map(
-    "dq-bot-fingerprint" -> dqBotFingerprintSql,
-    "agg-profit-curve" -> aggProfitCurveSql,
-    "gen-week-conventions" -> genWeekConventionsSql,
-    "agg-auc-delong-ci" -> aggAucDelongCiSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-bot-fingerprint", dqBotFingerprint, dqBotFingerprintSql),
+    Key("agg-profit-curve", aggProfitCurve, aggProfitCurveSql),
+    Key("gen-week-conventions", genWeekConventions, genWeekConventionsSql),
+    Key("agg-auc-delong-ci", aggAucDelongCi, aggAucDelongCiSql))
 }

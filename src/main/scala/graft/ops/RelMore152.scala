@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BA: cross-price elasticity, revenue beta,
   * brand-switching flows, mean segmental TTR. */
-object RelMore152 {
+object RelMore152 extends KeyModule {
 
   /** agg-cross-elasticity — the cross-price elasticity matrix of the
     * top 3 revenue brands: ∂ln q_A/∂ln p_B from monthly series (all
@@ -329,15 +329,9 @@ object RelMore152 {
       |FROM segs GROUP BY source
       |ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cross-elasticity" -> aggCrossElasticity,
-    "agg-revenue-beta" -> aggRevenueBeta,
-    "agg-brand-switching" -> aggBrandSwitching,
-    "text-msttr" -> textMsttr)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cross-elasticity" -> aggCrossElasticitySql,
-    "agg-revenue-beta" -> aggRevenueBetaSql,
-    "agg-brand-switching" -> aggBrandSwitchingSql,
-    "text-msttr" -> textMsttrSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cross-elasticity", aggCrossElasticity, aggCrossElasticitySql),
+    Key("agg-revenue-beta", aggRevenueBeta, aggRevenueBetaSql),
+    Key("agg-brand-switching", aggBrandSwitching, aggBrandSwitchingSql),
+    Key("text-msttr", textMsttr, textMsttrSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BB: SLO burn-rate windows, PSIS k-hat, PQ subspace
   * energy balance, von Neumann succession ratio. */
-object RelMore153 {
+object RelMore153 extends KeyModule {
 
   /** dq-slo-burn-rate — Google-SRE multiwindow burn-rate alerting
     * replayed over the event stream: against a 75%-success SLO (25%
@@ -278,15 +278,9 @@ object RelMore153 {
       |         AS serially_dependent
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-slo-burn-rate" -> dqSloBurnRate,
-    "sample-psis-khat" -> samplePsisKhat,
-    "emb-subspace-energy" -> embSubspaceEnergy,
-    "dq-von-neumann-ratio" -> dqVonNeumannRatio)
-
-  val oracles: Map[String, String] = Map(
-    "dq-slo-burn-rate" -> dqSloBurnRateSql,
-    "sample-psis-khat" -> samplePsisKhatSql,
-    "emb-subspace-energy" -> embSubspaceEnergySql,
-    "dq-von-neumann-ratio" -> dqVonNeumannRatioSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-slo-burn-rate", dqSloBurnRate, dqSloBurnRateSql),
+    Key("sample-psis-khat", samplePsisKhat, samplePsisKhatSql),
+    Key("emb-subspace-energy", embSubspaceEnergy, embSubspaceEnergySql),
+    Key("dq-von-neumann-ratio", dqVonNeumannRatio, dqVonNeumannRatioSql))
 }

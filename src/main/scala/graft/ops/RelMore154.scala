@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BC: hash-collision birthday budget, concentration
   * ratios, quota-fill sampling, mutual nearest neighbors. */
-object RelMore154 {
+object RelMore154 extends KeyModule {
 
   /** dq-hash-collision-budget — the birthday-bound audit for hash-
     * derived keys: truncate an md5 of the order key to 32 bits, count
@@ -214,15 +214,9 @@ object RelMore154 {
       |ORDER BY d2, vec_a
       |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-hash-collision-budget" -> dqHashCollisionBudget,
-    "agg-concentration-ratios" -> aggConcentrationRatios,
-    "sample-quota-fill" -> sampleQuotaFill,
-    "emb-mutual-nn-pairs" -> embMutualNnPairs)
-
-  val oracles: Map[String, String] = Map(
-    "dq-hash-collision-budget" -> dqHashCollisionBudgetSql,
-    "agg-concentration-ratios" -> aggConcentrationRatiosSql,
-    "sample-quota-fill" -> sampleQuotaFillSql,
-    "emb-mutual-nn-pairs" -> embMutualNnPairsSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-hash-collision-budget", dqHashCollisionBudget, dqHashCollisionBudgetSql),
+    Key("agg-concentration-ratios", aggConcentrationRatios, aggConcentrationRatiosSql),
+    Key("sample-quota-fill", sampleQuotaFill, sampleQuotaFillSql),
+    Key("emb-mutual-nn-pairs", embMutualNnPairs, embMutualNnPairsSql))
 }

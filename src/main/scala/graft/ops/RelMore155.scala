@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BD: price waterfall, Bayesian A/B posterior,
   * shrunken-centroid dimensions, Acklam normal quantiles. */
-object RelMore155 {
+object RelMore155 extends KeyModule {
 
   /** agg-price-waterfall — the pocket-price waterfall: gross list
     * revenue → discount leakage → invoiced → tax → billed, each
@@ -329,15 +329,9 @@ object RelMore155 {
        |FROM ($rows) ORDER BY p""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-price-waterfall" -> aggPriceWaterfall,
-    "agg-bayes-ab-posterior" -> aggBayesAbPosterior,
-    "emb-shrunken-centroid-dims" -> embShrunkenCentroidDims,
-    "func-normal-quantile-suite" -> funcNormalQuantileSuite)
-
-  val oracles: Map[String, String] = Map(
-    "agg-price-waterfall" -> aggPriceWaterfallSql,
-    "agg-bayes-ab-posterior" -> aggBayesAbPosteriorSql,
-    "emb-shrunken-centroid-dims" -> embShrunkenCentroidDimsSql,
-    "func-normal-quantile-suite" -> funcNormalQuantileSuiteSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-price-waterfall", aggPriceWaterfall, aggPriceWaterfallSql),
+    Key("agg-bayes-ab-posterior", aggBayesAbPosterior, aggBayesAbPosteriorSql),
+    Key("emb-shrunken-centroid-dims", embShrunkenCentroidDims, embShrunkenCentroidDimsSql),
+    Key("func-normal-quantile-suite", funcNormalQuantileSuite, funcNormalQuantileSuiteSql))
 }

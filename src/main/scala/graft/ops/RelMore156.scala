@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BE: PERT three-point estimates, variance-ratio
   * test, CSV+JSON hybrid source, lexical-semantic dedup agreement. */
-object RelMore156 {
+object RelMore156 extends KeyModule {
 
   /** agg-pert-estimate — PERT three-point lead-time estimates per
     * priority: optimistic (exact p5 order statistic), most likely
@@ -362,15 +362,9 @@ object RelMore156 {
       |GROUP BY agreement, n_docs
       |ORDER BY agreement""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-pert-estimate" -> aggPertEstimate,
-    "agg-variance-ratio-test" -> aggVarianceRatioTest,
-    "src-csv-json-hybrid" -> srcCsvJsonHybrid,
-    "dedup-lexical-semantic-agreement" -> dedupLexicalSemanticAgreement)
-
-  val oracles: Map[String, String] = Map(
-    "agg-pert-estimate" -> aggPertEstimateSql,
-    "agg-variance-ratio-test" -> aggVarianceRatioTestSql,
-    "src-csv-json-hybrid" -> srcCsvJsonHybridSql,
-    "dedup-lexical-semantic-agreement" -> dedupLexicalSemanticAgreementSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-pert-estimate", aggPertEstimate, aggPertEstimateSql),
+    Key("agg-variance-ratio-test", aggVarianceRatioTest, aggVarianceRatioTestSql),
+    Key("src-csv-json-hybrid", srcCsvJsonHybrid, srcCsvJsonHybridSql),
+    Key("dedup-lexical-semantic-agreement", dedupLexicalSemanticAgreement, dedupLexicalSemanticAgreementSql))
 }

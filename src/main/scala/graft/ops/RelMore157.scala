@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BF: Mahalanobis outliers, funnel-plot limits,
   * adjacent-sentence coherence, purchase regularity. */
-object RelMore157 {
+object RelMore157 extends KeyModule {
 
   /** dq-mahalanobis-outliers — MULTIVARIATE outlier detection on
     * (quantity, unit price): squared Mahalanobis distance through
@@ -306,15 +306,9 @@ object RelMore157 {
       |GROUP BY regime, n_customers
       |ORDER BY regime""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-mahalanobis-outliers" -> dqMahalanobisOutliers,
-    "dq-funnel-plot-limits" -> dqFunnelPlotLimits,
-    "text-coherence-adjacent" -> textCoherenceAdjacent,
-    "agg-purchase-regularity" -> aggPurchaseRegularity)
-
-  val oracles: Map[String, String] = Map(
-    "dq-mahalanobis-outliers" -> dqMahalanobisOutliersSql,
-    "dq-funnel-plot-limits" -> dqFunnelPlotLimitsSql,
-    "text-coherence-adjacent" -> textCoherenceAdjacentSql,
-    "agg-purchase-regularity" -> aggPurchaseRegularitySql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-mahalanobis-outliers", dqMahalanobisOutliers, dqMahalanobisOutliersSql),
+    Key("dq-funnel-plot-limits", dqFunnelPlotLimits, dqFunnelPlotLimitsSql),
+    Key("text-coherence-adjacent", textCoherenceAdjacent, textCoherenceAdjacentSql),
+    Key("agg-purchase-regularity", aggPurchaseRegularity, aggPurchaseRegularitySql))
 }

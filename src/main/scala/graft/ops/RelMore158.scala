@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BG: instrumental-variable 2SLS, revenue bridge
   * decomposition, embedding cone effect, percent-string casts. */
-object RelMore158 {
+object RelMore158 extends KeyModule {
 
   /** agg-iv-2sls — the Wald/2SLS instrumental-variable estimate of
     * the quantity→revenue slope, instrumented by part size:
@@ -317,15 +317,9 @@ object RelMore158 {
       |         AS all_roundtrip
       |FROM parsed""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-iv-2sls" -> aggIv2sls,
-    "agg-revenue-bridge" -> aggRevenueBridge,
-    "emb-cone-effect" -> embConeEffect,
-    "cast-percent-suite" -> castPercentSuite)
-
-  val oracles: Map[String, String] = Map(
-    "agg-iv-2sls" -> aggIv2slsSql,
-    "agg-revenue-bridge" -> aggRevenueBridgeSql,
-    "emb-cone-effect" -> embConeEffectSql,
-    "cast-percent-suite" -> castPercentSuiteSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-iv-2sls", aggIv2sls, aggIv2slsSql),
+    Key("agg-revenue-bridge", aggRevenueBridge, aggRevenueBridgeSql),
+    Key("emb-cone-effect", embConeEffect, embConeEffectSql),
+    Key("cast-percent-suite", castPercentSuite, castPercentSuiteSql))
 }

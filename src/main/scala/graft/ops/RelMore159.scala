@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BH: champion-challenger regret, O'Brien-Fleming
   * interim looks, Qini coefficient, Gompertz diffusion fit. */
-object RelMore159 {
+object RelMore159 extends KeyModule {
 
   /** agg-champion-regret — the cumulative regret of freezing a
     * champion: pick the best-revenue brand in the FIRST complete
@@ -371,15 +371,9 @@ object RelMore159 {
       |              CAST(n * syy - sy * sy AS DOUBLE)), 4) > 0.8 AS gompertz_plausible
       |FROM fit""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-champion-regret" -> aggChampionRegret,
-    "agg-obrien-fleming-looks" -> aggObrienFlemingLooks,
-    "agg-qini-coefficient" -> aggQiniCoefficient,
-    "agg-gompertz-fit" -> aggGompertzFit)
-
-  val oracles: Map[String, String] = Map(
-    "agg-champion-regret" -> aggChampionRegretSql,
-    "agg-obrien-fleming-looks" -> aggObrienFlemingLooksSql,
-    "agg-qini-coefficient" -> aggQiniCoefficientSql,
-    "agg-gompertz-fit" -> aggGompertzFitSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-champion-regret", aggChampionRegret, aggChampionRegretSql),
+    Key("agg-obrien-fleming-looks", aggObrienFlemingLooks, aggObrienFlemingLooksSql),
+    Key("agg-qini-coefficient", aggQiniCoefficient, aggQiniCoefficientSql),
+    Key("agg-gompertz-fit", aggGompertzFit, aggGompertzFitSql))
 }

@@ -10,7 +10,7 @@ import Tables._
   * monitoring op), rolling OLS trend slopes, the string-formatting
   * function surface, and inter-purchase gap histograms.
   */
-object RelMore16 {
+object RelMore16 extends KeyModule {
 
   /** emb-drift-dims — per-dimension embedding drift between two
     * corpus halves (vec_id parity as the split proxy for
@@ -194,15 +194,9 @@ object RelMore16 {
       |GROUP BY c.c_mktsegment, b.bucket
       |ORDER BY c.c_mktsegment, b.bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-drift-dims" -> embDriftDims,
-    "win-rolling-slope" -> winRollingSlope,
-    "func-format-suite" -> funcFormatSuite,
-    "agg-gap-histogram" -> aggGapHistogram)
-
-  val oracles: Map[String, String] = Map(
-    "emb-drift-dims" -> embDriftDimsSql,
-    "win-rolling-slope" -> winRollingSlopeSql,
-    "func-format-suite" -> funcFormatSuiteSql,
-    "agg-gap-histogram" -> aggGapHistogramSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-drift-dims", embDriftDims, embDriftDimsSql),
+    Key("win-rolling-slope", winRollingSlope, winRollingSlopeSql),
+    Key("func-format-suite", funcFormatSuite, funcFormatSuiteSql),
+    Key("agg-gap-histogram", aggGapHistogram, aggGapHistogramSql))
 }

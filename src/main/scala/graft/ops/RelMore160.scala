@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BI: timezone-shift detector, capture ratios,
   * columnar encoding advisor, forward-buying dip. */
-object RelMore160 {
+object RelMore160 extends KeyModule {
 
   /** dq-timezone-shift — did the event clock MOVE between the two
     * halves of the window? The hour-of-day histograms of each half
@@ -356,15 +356,9 @@ object RelMore160 {
       |         AS forward_buying_detected
       |FROM j""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-timezone-shift" -> dqTimezoneShift,
-    "agg-capture-ratios" -> aggCaptureRatios,
-    "layout-encoding-advisor" -> layoutEncodingAdvisor,
-    "agg-forward-buying-dip" -> aggForwardBuyingDip)
-
-  val oracles: Map[String, String] = Map(
-    "dq-timezone-shift" -> dqTimezoneShiftSql,
-    "agg-capture-ratios" -> aggCaptureRatiosSql,
-    "layout-encoding-advisor" -> layoutEncodingAdvisorSql,
-    "agg-forward-buying-dip" -> aggForwardBuyingDipSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-timezone-shift", dqTimezoneShift, dqTimezoneShiftSql),
+    Key("agg-capture-ratios", aggCaptureRatios, aggCaptureRatiosSql),
+    Key("layout-encoding-advisor", layoutEncodingAdvisor, layoutEncodingAdvisorSql),
+    Key("agg-forward-buying-dip", aggForwardBuyingDip, aggForwardBuyingDipSql))
 }

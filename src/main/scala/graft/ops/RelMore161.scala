@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch BJ: Lundberg ruin curve, extremal index,
   * consolidation opportunity, individuals/moving-range chart. */
-object RelMore161 {
+object RelMore161 extends KeyModule {
 
   /** agg-lundberg-ruin — the Cramér-Lundberg ruin-probability curve
     * under exponential claim severity, calibrated on the data's own
@@ -230,15 +230,9 @@ object RelMore161 {
       |CROSS JOIN viol
       |ORDER BY deviation_usd DESC, day""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-lundberg-ruin" -> aggLundbergRuin,
-    "agg-extremal-index" -> aggExtremalIndex,
-    "agg-consolidation-opportunity" -> aggConsolidationOpportunity,
-    "dq-imr-chart" -> dqImrChart)
-
-  val oracles: Map[String, String] = Map(
-    "agg-lundberg-ruin" -> aggLundbergRuinSql,
-    "agg-extremal-index" -> aggExtremalIndexSql,
-    "agg-consolidation-opportunity" -> aggConsolidationOpportunitySql,
-    "dq-imr-chart" -> dqImrChartSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-lundberg-ruin", aggLundbergRuin, aggLundbergRuinSql),
+    Key("agg-extremal-index", aggExtremalIndex, aggExtremalIndexSql),
+    Key("agg-consolidation-opportunity", aggConsolidationOpportunity, aggConsolidationOpportunitySql),
+    Key("dq-imr-chart", dqImrChart, dqImrChartSql))
 }

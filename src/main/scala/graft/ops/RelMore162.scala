@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch BK: Roll effective spread, Kyle lambda, Cornish-Fisher
   * VaR, Omega ratio — the market-microstructure/risk quartet on the
   * daily revenue series. */
-object RelMore162 {
+object RelMore162 extends KeyModule {
 
   /** Daily revenue in exact integer cents with the day's order count —
     * the shared base series for this batch. One shuffle on the date
@@ -297,15 +297,9 @@ object RelMore162 {
       |FROM ex GROUP BY k
       |ORDER BY threshold_factor""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-roll-spread" -> aggRollSpread,
-    "agg-kyle-lambda" -> aggKyleLambda,
-    "agg-cornish-fisher-var" -> aggCornishFisherVar,
-    "agg-omega-ratio" -> aggOmegaRatio)
-
-  val oracles: Map[String, String] = Map(
-    "agg-roll-spread" -> aggRollSpreadSql,
-    "agg-kyle-lambda" -> aggKyleLambdaSql,
-    "agg-cornish-fisher-var" -> aggCornishFisherVarSql,
-    "agg-omega-ratio" -> aggOmegaRatioSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-roll-spread", aggRollSpread, aggRollSpreadSql),
+    Key("agg-kyle-lambda", aggKyleLambda, aggKyleLambdaSql),
+    Key("agg-cornish-fisher-var", aggCornishFisherVar, aggCornishFisherVarSql),
+    Key("agg-omega-ratio", aggOmegaRatio, aggOmegaRatioSql))
 }

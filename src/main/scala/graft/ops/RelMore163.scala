@@ -12,7 +12,7 @@ import Tables._
   * existing agg-xbar-r-chart (subgroup means), dq-imr-chart (n=1
   * individuals) and dq-western-electric (run rules) this closes the
   * classical control-chart menu. */
-object RelMore163 {
+object RelMore163 extends KeyModule {
 
   /** dq-p-chart — attribute control chart on the daily share of
     * urgent orders (priority 1-2): centerline p̄ = ΣX/ΣN, per-day 3σ
@@ -299,15 +299,9 @@ object RelMore163 {
       |ORDER BY round""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "dq-p-chart" -> dqPChart,
-    "dq-u-chart" -> dqUChart,
-    "dq-ewma-chart" -> dqEwmaChart,
-    "dq-gesd-outliers" -> dqGesdOutliers)
-
-  val oracles: Map[String, String] = Map(
-    "dq-p-chart" -> dqPChartSql,
-    "dq-u-chart" -> dqUChartSql,
-    "dq-ewma-chart" -> dqEwmaChartSql,
-    "dq-gesd-outliers" -> dqGesdOutliersSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-p-chart", dqPChart, dqPChartSql),
+    Key("dq-u-chart", dqUChart, dqUChartSql),
+    Key("dq-ewma-chart", dqEwmaChart, dqEwmaChartSql),
+    Key("dq-gesd-outliers", dqGesdOutliers, dqGesdOutliersSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch BM: inequality-panel completion (Palma, Hoover,
   * quintile shares), inter-rater agreement beyond kappa (Krippendorff
   * alpha, Gwet AC1), and a lexical-richness panel. */
-object RelMore164 {
+object RelMore164 extends KeyModule {
 
   /** agg-inequality-panel — the Palma ratio (top-10% share / bottom-40%
     * share), Hoover/Robin-Hood index (half the relative mean absolute
@@ -294,15 +294,9 @@ object RelMore164 {
       |FROM freq GROUP BY lang
       |ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-inequality-panel" -> aggInequalityPanel,
-    "agg-krippendorff-alpha" -> aggKrippendorffAlpha,
-    "agg-gwet-ac1" -> aggGwetAc1,
-    "text-lexical-richness-panel" -> textLexicalRichnessPanel)
-
-  val oracles: Map[String, String] = Map(
-    "agg-inequality-panel" -> aggInequalityPanelSql,
-    "agg-krippendorff-alpha" -> aggKrippendorffAlphaSql,
-    "agg-gwet-ac1" -> aggGwetAc1Sql,
-    "text-lexical-richness-panel" -> textLexicalRichnessPanelSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-inequality-panel", aggInequalityPanel, aggInequalityPanelSql),
+    Key("agg-krippendorff-alpha", aggKrippendorffAlpha, aggKrippendorffAlphaSql),
+    Key("agg-gwet-ac1", aggGwetAc1, aggGwetAc1Sql),
+    Key("text-lexical-richness-panel", textLexicalRichnessPanel, textLexicalRichnessPanelSql))
 }

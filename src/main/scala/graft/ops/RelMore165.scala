@@ -14,7 +14,7 @@ import graft.functions.Midranks
   * value histogram first (graft.functions.Midranks — map-side
   * combinable, output bounded by the value domain) and never rank a
   * row. */
-object RelMore165 {
+object RelMore165 extends KeyModule {
 
   /** agg-brunner-munzel — the Brunner-Munzel generalized Wilcoxon
     * test on lineitem quantity between return outcomes 'A' (accepted
@@ -394,15 +394,9 @@ object RelMore165 {
       |       round(chi2, 4) AS chi2_stat, chi2 >= 5.991 AS location_differs
       |FROM chi""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-brunner-munzel" -> aggBrunnerMunzel,
-    "agg-jonckheere-terpstra" -> aggJonckheereTerpstra,
-    "dq-kuiper-drift" -> dqKuiperDrift,
-    "agg-mood-median-test" -> aggMoodMedianTest)
-
-  val oracles: Map[String, String] = Map(
-    "agg-brunner-munzel" -> aggBrunnerMunzelSql,
-    "agg-jonckheere-terpstra" -> aggJonckheereTerpstraSql,
-    "dq-kuiper-drift" -> dqKuiperDriftSql,
-    "agg-mood-median-test" -> aggMoodMedianTestSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-brunner-munzel", aggBrunnerMunzel, aggBrunnerMunzelSql),
+    Key("agg-jonckheere-terpstra", aggJonckheereTerpstra, aggJonckheereTerpstraSql),
+    Key("dq-kuiper-drift", dqKuiperDrift, dqKuiperDriftSql),
+    Key("agg-mood-median-test", aggMoodMedianTest, aggMoodMedianTestSql))
 }

@@ -11,7 +11,7 @@ import Tables._
   * reliability growth. All run on day/month-keyed aggregates of the
   * fact tables — the 100 TB cost is the daily rollup; everything
   * after is bounded by the calendar. */
-object RelMore166 {
+object RelMore166 extends KeyModule {
 
   /** Daily revenue series: day index t (days since 1992-01-01, the
     * corpus epoch) and revenue in whole dollars (cents div 100 —
@@ -325,15 +325,9 @@ object RelMore166 {
       |       (dn * dxy - dx * dy) / (dn * dxx - dx * dx) < 1.0 AS reliability_growth
       |FROM f""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-chow-break" -> aggChowBreak,
-    "agg-quandt-andrews" -> aggQuandtAndrews,
-    "agg-newey-west" -> aggNeweyWest,
-    "agg-crow-amsaa" -> aggCrowAmsaa)
-
-  val oracles: Map[String, String] = Map(
-    "agg-chow-break" -> aggChowBreakSql,
-    "agg-quandt-andrews" -> aggQuandtAndrewsSql,
-    "agg-newey-west" -> aggNeweyWestSql,
-    "agg-crow-amsaa" -> aggCrowAmsaaSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-chow-break", aggChowBreak, aggChowBreakSql),
+    Key("agg-quandt-andrews", aggQuandtAndrews, aggQuandtAndrewsSql),
+    Key("agg-newey-west", aggNeweyWest, aggNeweyWestSql),
+    Key("agg-crow-amsaa", aggCrowAmsaa, aggCrowAmsaaSql))
 }

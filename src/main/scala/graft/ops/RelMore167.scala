@@ -10,7 +10,7 @@ import Tables._
   * demand+lead-time uncertainty, fill-rate/expected-shortage ladder)
   * and marketing science (shifted-beta-geometric churn fit,
   * mixture-SPRT always-valid A/B inference). */
-object RelMore167 {
+object RelMore167 extends KeyModule {
 
   /** Shared erfc literal (Abramowitz & Stegun 7.1.26, |ε|<1.5e-7) —
     * identical elementary double arithmetic in both engines, so the
@@ -353,15 +353,9 @@ object RelMore167 {
       |       1.0 / lam < 0.05 AS reject_null
       |FROM g""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-safety-stock" -> aggSafetyStock,
-    "agg-fill-rate-esc" -> aggFillRateEsc,
-    "agg-sbg-churn" -> aggSbgChurn,
-    "agg-msprt" -> aggMsprt)
-
-  val oracles: Map[String, String] = Map(
-    "agg-safety-stock" -> aggSafetyStockSql,
-    "agg-fill-rate-esc" -> aggFillRateEscSql,
-    "agg-sbg-churn" -> aggSbgChurnSql,
-    "agg-msprt" -> aggMsprtSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-safety-stock", aggSafetyStock, aggSafetyStockSql),
+    Key("agg-fill-rate-esc", aggFillRateEsc, aggFillRateEscSql),
+    Key("agg-sbg-churn", aggSbgChurn, aggSbgChurnSql),
+    Key("agg-msprt", aggMsprt, aggMsprtSql))
 }

@@ -14,7 +14,7 @@ import Tables._
   * probe with the identical scoring tail — is SHIPPED AND GRADED here
   * since r13 (emb-lof-ivf), and the exact top-10 kNN edge table is
   * staged once per process (knnExactStored) for the whole family. */
-object RelMore168 {
+object RelMore168 extends KeyModule {
 
   /** Milli-quantized embedding lattice (the emb-family standard): int
     * coordinates as doubles so dot_product folds are exact. */
@@ -560,17 +560,10 @@ object RelMore168 {
       |WHERE t.rank <= 10
       |ORDER BY t.rank""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-dbscan-core" -> embDbscanCore,
-    "emb-kdist-elbow" -> embKdistElbow,
-    "emb-lof" -> embLof,
-    "emb-lof-ivf" -> embLofIvf,
-    "graph-louvain-round" -> graphLouvainRound)
-
-  val oracles: Map[String, String] = Map(
-    "emb-dbscan-core" -> embDbscanCoreSql,
-    "emb-kdist-elbow" -> embKdistElbowSql,
-    "emb-lof" -> embLofSql,
-    "emb-lof-ivf" -> embLofIvfSql,
-    "graph-louvain-round" -> graphLouvainRoundSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-dbscan-core", embDbscanCore, embDbscanCoreSql),
+    Key("emb-kdist-elbow", embKdistElbow, embKdistElbowSql),
+    Key("emb-lof", embLof, embLofSql),
+    Key("emb-lof-ivf", embLofIvf, embLofIvfSql),
+    Key("graph-louvain-round", graphLouvainRound, graphLouvainRoundSql))
 }

@@ -10,7 +10,7 @@ import Tables._
   * dispersion, and TextRank keyword extraction. All start from the
   * corpus-standard lowercase word tokenization; every fact-scale pass
   * is a map-side-combinable token aggregate. */
-object RelMore169 {
+object RelMore169 extends KeyModule {
 
   private def toks(s: SparkSession, d: String): DataFrame =
     documents(s, d).select(col("doc_id"), col("lang"),
@@ -316,15 +316,9 @@ object RelMore169 {
       |LIMIT 15""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "text-good-turing" -> textGoodTuring,
-    "text-mattr" -> textMattr,
-    "text-juilland-d" -> textJuillandD,
-    "text-textrank" -> textTextrank)
-
-  val oracles: Map[String, String] = Map(
-    "text-good-turing" -> textGoodTuringSql,
-    "text-mattr" -> textMattrSql,
-    "text-juilland-d" -> textJuillandDSql,
-    "text-textrank" -> textTextrankSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-good-turing", textGoodTuring, textGoodTuringSql),
+    Key("text-mattr", textMattr, textMattrSql),
+    Key("text-juilland-d", textJuillandD, textJuillandDSql),
+    Key("text-textrank", textTextrank, textTextrankSql))
 }

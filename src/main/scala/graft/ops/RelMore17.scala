@@ -12,7 +12,7 @@ import Tables._
   * frames, robust MAD outlier gating, and an exact-arithmetic A/B
   * significance gate.
   */
-object RelMore17 {
+object RelMore17 extends KeyModule {
 
   /** agg-fifo-match — FIFO allocation as interval algebra: number each
     * part's supply stream and demand stream with cumulative-quantity
@@ -246,17 +246,10 @@ object RelMore17 {
       |         4 * n1 * n2 * (c1 + c2) * (n1 + n2 - c1 - c2) AS significant
       |FROM agg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-fifo-match" -> aggFifoMatch,
-    "dq-reconcile-checksum" -> dqReconcileChecksum,
-    "win-range-interval" -> winRangeInterval,
-    "dq-mad-outliers" -> dqMadOutliers,
-    "agg-abtest-gate" -> aggAbtestGate)
-
-  val oracles: Map[String, String] = Map(
-    "agg-fifo-match" -> aggFifoMatchSql,
-    "dq-reconcile-checksum" -> dqReconcileChecksumSql,
-    "win-range-interval" -> winRangeIntervalSql,
-    "dq-mad-outliers" -> dqMadOutliersSql,
-    "agg-abtest-gate" -> aggAbtestGateSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-fifo-match", aggFifoMatch, aggFifoMatchSql),
+    Key("dq-reconcile-checksum", dqReconcileChecksum, dqReconcileChecksumSql),
+    Key("win-range-interval", winRangeInterval, winRangeIntervalSql),
+    Key("dq-mad-outliers", dqMadOutliers, dqMadOutliersSql),
+    Key("agg-abtest-gate", aggAbtestGate, aggAbtestGateSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-8 batch F: bloom-filter sizing with a MEASURED false-positive
   * curve, a row-group sizing advisor, and three modern SQL surfaces
   * (IDENTIFIER clause, named function arguments, session variables). */
-object RelMore170 {
+object RelMore170 extends KeyModule {
 
   /** (bits-per-key, optimal hash count ⌈b·ln2⌋) ladder shared by the
     * bloom op's Spark and oracle sides. Declared before the SQL val
@@ -274,17 +274,10 @@ object RelMore170 {
       |GROUP BY o_orderpriority
       |ORDER BY priority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "layout-bloom-fpp-curve" -> layoutBloomFppCurve,
-    "layout-rowgroup-advisor" -> layoutRowgroupAdvisor,
-    "sql-identifier-clause" -> sqlIdentifierClause,
-    "sql-named-arguments" -> sqlNamedArguments,
-    "sql-session-variable" -> sqlSessionVariable)
-
-  val oracles: Map[String, String] = Map(
-    "layout-bloom-fpp-curve" -> layoutBloomFppCurveSql,
-    "layout-rowgroup-advisor" -> layoutRowgroupAdvisorSql,
-    "sql-identifier-clause" -> sqlIdentifierClauseSql,
-    "sql-named-arguments" -> sqlNamedArgumentsSql,
-    "sql-session-variable" -> sqlSessionVariableSql)
+  val keys: Seq[Key] = Seq(
+    Key("layout-bloom-fpp-curve", layoutBloomFppCurve, layoutBloomFppCurveSql),
+    Key("layout-rowgroup-advisor", layoutRowgroupAdvisor, layoutRowgroupAdvisorSql),
+    Key("sql-identifier-clause", sqlIdentifierClause, sqlIdentifierClauseSql),
+    Key("sql-named-arguments", sqlNamedArguments, sqlNamedArgumentsSql),
+    Key("sql-session-variable", sqlSessionVariable, sqlSessionVariableSql))
 }

@@ -10,7 +10,7 @@ import graft.functions.Midranks
 /** Round-8 batch G: post-hoc rank inference (Dunn's pairwise test,
   * Page's ordered trend over blocks) and Fellegi-Sunter EM parameter
   * estimation for record linkage. */
-object RelMore171 {
+object RelMore171 extends KeyModule {
 
   /** Shared erfc literal (A&S 7.1.26) — see RelMore108. */
   private def erfcSql(x: String): String =
@@ -296,13 +296,8 @@ object RelMore171 {
        |FROM s3""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-dunns-test" -> aggDunnsTest,
-    "agg-page-trend" -> aggPageTrend,
-    "dq-linkage-em" -> dqLinkageEm)
-
-  val oracles: Map[String, String] = Map(
-    "agg-dunns-test" -> aggDunnsTestSql,
-    "agg-page-trend" -> aggPageTrendSql,
-    "dq-linkage-em" -> dqLinkageEmSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-dunns-test", aggDunnsTest, aggDunnsTestSql),
+    Key("agg-page-trend", aggPageTrend, aggPageTrendSql),
+    Key("dq-linkage-em", dqLinkageEm, dqLinkageEmSql))
 }

@@ -12,7 +12,7 @@ import Tables._
   * makes the unrolled level structure identical in both engines and
   * keeps the cost bounded at ANY corpus size (6 frontier expansions,
   * not a diameter-dependent loop). */
-object RelMore172 {
+object RelMore172 extends KeyModule {
 
   private val MaxLev = 6
 
@@ -218,11 +218,7 @@ object RelMore172 {
        |FROM per CROSS JOIN nn CROSS JOIN diam
        |ORDER BY seed""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "graph-betweenness-sampled" -> graphBetweennessSampled,
-    "graph-eccentricity-sweep" -> graphEccentricitySweep)
-
-  val oracles: Map[String, String] = Map(
-    "graph-betweenness-sampled" -> graphBetweennessSampledSql,
-    "graph-eccentricity-sweep" -> graphEccentricitySweepSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-betweenness-sampled", graphBetweennessSampled, graphBetweennessSampledSql),
+    Key("graph-eccentricity-sweep", graphEccentricitySweep, graphEccentricitySweepSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-8 batch I: charset-aware CSV ingestion, a Data Vault
   * hub/link/satellite load with hashdiff change detection, and the
   * HNSW layer-assignment model. */
-object RelMore173 {
+object RelMore173 extends KeyModule {
 
   /** src-csv-charset — ISO-8859-1 (Latin-1) CSV ingestion: a fixture
     * file is written as RAW LATIN-1 BYTES (accented characters at
@@ -168,13 +168,8 @@ object RelMore173 {
       |GROUP BY level, n
       |ORDER BY level""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "src-csv-charset" -> srcCsvCharset,
-    "sink-data-vault" -> sinkDataVault,
-    "ann-hnsw-layers" -> annHnswLayers)
-
-  val oracles: Map[String, String] = Map(
-    "src-csv-charset" -> srcCsvCharsetSql,
-    "sink-data-vault" -> sinkDataVaultSql,
-    "ann-hnsw-layers" -> annHnswLayersSql)
+  val keys: Seq[Key] = Seq(
+    Key("src-csv-charset", srcCsvCharset, srcCsvCharsetSql),
+    Key("sink-data-vault", sinkDataVault, sinkDataVaultSql),
+    Key("ann-hnsw-layers", annHnswLayers, annHnswLayersSql))
 }

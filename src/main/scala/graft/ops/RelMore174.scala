@@ -9,7 +9,7 @@ import graft.functions.Midranks
 /** Round-8 batch J: joint location-scale and multivariate two-sample
   * tests (Cucconi, Hotelling T²) and the variance-homogeneity pair
   * every ANOVA should run first (Brown-Forsythe Levene, Bartlett). */
-object RelMore174 {
+object RelMore174 extends KeyModule {
 
   /** agg-cucconi — the Cucconi joint location-SCALE rank test between
     * returned ('R') and accepted ('A') line prices: U standardizes the
@@ -343,15 +343,9 @@ object RelMore174 {
       |       chi2 >= 5.991 AS variances_differ
       |FROM b""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cucconi" -> aggCucconi,
-    "agg-hotelling-t2" -> aggHotellingT2,
-    "agg-levene-test" -> aggLeveneTest,
-    "agg-bartlett-test" -> aggBartlettTest)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cucconi" -> aggCucconiSql,
-    "agg-hotelling-t2" -> aggHotellingT2Sql,
-    "agg-levene-test" -> aggLeveneTestSql,
-    "agg-bartlett-test" -> aggBartlettTestSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cucconi", aggCucconi, aggCucconiSql),
+    Key("agg-hotelling-t2", aggHotellingT2, aggHotellingT2Sql),
+    Key("agg-levene-test", aggLeveneTest, aggLeveneTestSql),
+    Key("agg-bartlett-test", aggBartlettTest, aggBartlettTestSql))
 }

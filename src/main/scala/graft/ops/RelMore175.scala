@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-8 batch K: DSIR-style importance weighting for pretraining
   * data selection, and the audio VAD pipeline shape over stubbed PCM. */
-object RelMore175 {
+object RelMore175 extends KeyModule {
 
   /** sample-dsir-weights — Data Selection via Importance Resampling
     * (hashed n-gram form): the target domain is the 'en' slice, every
@@ -189,11 +189,7 @@ object RelMore175 {
       |       max_segment_len
       |FROM f""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sample-dsir-weights" -> sampleDsirWeights,
-    "mm-audio-vad-stub" -> mmAudioVadStub)
-
-  val oracles: Map[String, String] = Map(
-    "sample-dsir-weights" -> sampleDsirWeightsSql,
-    "mm-audio-vad-stub" -> mmAudioVadStubSql)
+  val keys: Seq[Key] = Seq(
+    Key("sample-dsir-weights", sampleDsirWeights, sampleDsirWeightsSql),
+    Key("mm-audio-vad-stub", mmAudioVadStub, mmAudioVadStubSql))
 }

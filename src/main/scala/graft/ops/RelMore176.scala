@@ -10,7 +10,7 @@ import Tables._
   * engine ships (GROUPING SETS / ROLLUP / CUBE with grouping flags),
   * the bitmap-word exact-distinct trick, and a closed-form CUSUM
   * changepoint scan. */
-object RelMore176 {
+object RelMore176 extends KeyModule {
 
   /** sql-grouping-sets — one pass, three grains: (flag,status),
     * (flag), and grand total over lineitem revenue via GROUPING SETS,
@@ -249,17 +249,10 @@ object RelMore176 {
       |       round(CAST(max(sd) AS DOUBLE) / 1e6, 4) AS max_cusum_down
       |FROM c""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-grouping-sets" -> sqlGroupingSets,
-    "sql-rollup-ym" -> sqlRollupYm,
-    "sql-cube-year-priority" -> sqlCubeYearPriority,
-    "agg-bitmap-word-distinct" -> aggBitmapDistinct,
-    "agg-cusum-changepoint" -> aggCusumChangepoint)
-
-  val oracles: Map[String, String] = Map(
-    "sql-grouping-sets" -> sqlGroupingSetsSql,
-    "sql-rollup-ym" -> sqlRollupYmSql,
-    "sql-cube-year-priority" -> sqlCubeYearPrioritySql,
-    "agg-bitmap-word-distinct" -> aggBitmapDistinctSql,
-    "agg-cusum-changepoint" -> aggCusumChangepointSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-grouping-sets", sqlGroupingSets, sqlGroupingSetsSql),
+    Key("sql-rollup-ym", sqlRollupYm, sqlRollupYmSql),
+    Key("sql-cube-year-priority", sqlCubeYearPriority, sqlCubeYearPrioritySql),
+    Key("agg-bitmap-word-distinct", aggBitmapDistinct, aggBitmapDistinctSql),
+    Key("agg-cusum-changepoint", aggCusumChangepoint, aggCusumChangepointSql))
 }

@@ -11,7 +11,7 @@ import graft.functions.PrefixScan
   * systematic sampling on the PrefixScan cumulative, Katz burstiness
   * over the corpus, and the Page-Hinkley drift detector in prefix-min
   * closed form. */
-object RelMore177 {
+object RelMore177 extends KeyModule {
 
   /** agg-hll-measured — HyperLogLog (p=9, m=512) built from first
     * principles and graded against the exact count, per order year:
@@ -284,15 +284,9 @@ object RelMore177 {
       |       round(CAST(max(lam) AS DOUBLE) / 1000.0, 2) AS lambda_cents
       |FROM t3""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-hll-measured" -> aggHllMeasured,
-    "sample-pps-systematic" -> samplePpsSystematic,
-    "text-burstiness" -> textBurstiness,
-    "dq-page-hinkley" -> dqPageHinkley)
-
-  val oracles: Map[String, String] = Map(
-    "agg-hll-measured" -> aggHllMeasuredSql,
-    "sample-pps-systematic" -> samplePpsSystematicSql,
-    "text-burstiness" -> textBurstinessSql,
-    "dq-page-hinkley" -> dqPageHinkleySql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-hll-measured", aggHllMeasured, aggHllMeasuredSql),
+    Key("sample-pps-systematic", samplePpsSystematic, samplePpsSystematicSql),
+    Key("text-burstiness", textBurstiness, textBurstinessSql),
+    Key("dq-page-hinkley", dqPageHinkley, dqPageHinkleySql))
 }

@@ -9,7 +9,7 @@ import graft.functions.PrefixScan
 /** Round-8 batch N: closed-form ZCA whitening, a Count-Min sketch
   * with measured overestimation, HDR-style log-bucketed quantiles
   * graded against exact ranks, and the bucketed band join. */
-object RelMore178 {
+object RelMore178 extends KeyModule {
 
   /** emb-zca-whitening — ZCA whitening of the first two embedding
     * coordinates with the closed-form 2×2 inverse square root:
@@ -373,15 +373,9 @@ object RelMore178 {
       |         AS hit_rate_pct
       |FROM pb""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-zca-whitening" -> embZcaWhitening,
-    "agg-countmin-measured" -> aggCountminMeasured,
-    "agg-hdr-histogram" -> aggHdrHistogram,
-    "join-band" -> joinBand)
-
-  val oracles: Map[String, String] = Map(
-    "emb-zca-whitening" -> embZcaWhiteningSql,
-    "agg-countmin-measured" -> aggCountminMeasuredSql,
-    "agg-hdr-histogram" -> aggHdrHistogramSql,
-    "join-band" -> joinBandSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-zca-whitening", embZcaWhitening, embZcaWhiteningSql),
+    Key("agg-countmin-measured", aggCountminMeasured, aggCountminMeasuredSql),
+    Key("agg-hdr-histogram", aggHdrHistogram, aggHdrHistogramSql),
+    Key("join-band", joinBand, joinBandSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch O: Matryoshka truncation-recall, contrastive
   * hard-negative mining, isotonic regression via the minimax closed
   * form, and hash-deterministic RANSAC line fitting. */
-object RelMore179 {
+object RelMore179 extends KeyModule {
 
   /** Milli-quantized lattice (the emb-family standard): integer
     * coordinates carried as doubles so dot_product folds are exact. */
@@ -310,15 +310,9 @@ object RelMore179 {
       |         AS ols_slope_kusd
       |FROM best CROSS JOIN mstats""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-matryoshka-recall" -> embMatryoshkaRecall,
-    "sample-hard-negative" -> sampleHardNegative,
-    "agg-isotonic-minimax" -> aggIsotonicMinimax,
-    "agg-ransac-line" -> aggRansacLine)
-
-  val oracles: Map[String, String] = Map(
-    "emb-matryoshka-recall" -> embMatryoshkaRecallSql,
-    "sample-hard-negative" -> sampleHardNegativeSql,
-    "agg-isotonic-minimax" -> aggIsotonicMinimaxSql,
-    "agg-ransac-line" -> aggRansacLineSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-matryoshka-recall", embMatryoshkaRecall, embMatryoshkaRecallSql),
+    Key("sample-hard-negative", sampleHardNegative, sampleHardNegativeSql),
+    Key("agg-isotonic-minimax", aggIsotonicMinimax, aggIsotonicMinimaxSql),
+    Key("agg-ransac-line", aggRansacLine, aggRansacLineSql))
 }

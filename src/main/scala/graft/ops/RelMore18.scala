@@ -11,7 +11,7 @@ import Tables._
   * three BI staples — day-of-week seasonality indexes, new-vs-
   * returning customer splits, cumulative unique-user curves.
   */
-object RelMore18 {
+object RelMore18 extends KeyModule {
 
   /** sql-pivot-clause — the SQL PIVOT syntax (not just DataFrame
     * .pivot()): explicit IN-list pivot columns, which is the only
@@ -230,19 +230,11 @@ object RelMore18 {
       |FROM hourly
       |ORDER BY h""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-pivot-clause" -> sqlPivotClause,
-    "sql-lateral-view" -> sqlLateralView,
-    "dedup-containment" -> dedupContainment,
-    "agg-dow-seasonality" -> aggDowSeasonality,
-    "agg-new-returning" -> aggNewReturning,
-    "agg-cumulative-uniques" -> aggCumulativeUniques)
-
-  val oracles: Map[String, String] = Map(
-    "sql-pivot-clause" -> sqlPivotClauseSql,
-    "sql-lateral-view" -> sqlLateralViewSql,
-    "dedup-containment" -> dedupContainmentSql,
-    "agg-dow-seasonality" -> aggDowSeasonalitySql,
-    "agg-new-returning" -> aggNewReturningSql,
-    "agg-cumulative-uniques" -> aggCumulativeUniquesSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-pivot-clause", sqlPivotClause, sqlPivotClauseSql),
+    Key("sql-lateral-view", sqlLateralView, sqlLateralViewSql),
+    Key("dedup-containment", dedupContainment, dedupContainmentSql),
+    Key("agg-dow-seasonality", aggDowSeasonality, aggDowSeasonalitySql),
+    Key("agg-new-returning", aggNewReturning, aggNewReturningSql),
+    Key("agg-cumulative-uniques", aggCumulativeUniques, aggCumulativeUniquesSql))
 }

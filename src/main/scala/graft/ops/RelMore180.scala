@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch P: Fisher LDA gate (exact linear decision), sharp
   * regression discontinuity, caliper matching on a banded-bucket join,
   * and exact integer DTW via the min-plus row recurrence. */
-object RelMore180 {
+object RelMore180 extends KeyModule {
 
   /** agg-fisher-lda — Fisher's linear discriminant as a Gaussian
     * naive-Bayes gate with POOLED per-feature variance and equal
@@ -382,15 +382,9 @@ object RelMore180 {
        |WHERE r12.j = 12""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-fisher-lda" -> aggFisherLda,
-    "agg-regression-discontinuity" -> aggRegressionDiscontinuity,
-    "sample-caliper-matching" -> sampleCaliperMatching,
-    "agg-dtw-monthly" -> aggDtwMonthly)
-
-  val oracles: Map[String, String] = Map(
-    "agg-fisher-lda" -> aggFisherLdaSql,
-    "agg-regression-discontinuity" -> aggRegressionDiscontinuitySql,
-    "sample-caliper-matching" -> sampleCaliperMatchingSql,
-    "agg-dtw-monthly" -> aggDtwMonthlySql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-fisher-lda", aggFisherLda, aggFisherLdaSql),
+    Key("agg-regression-discontinuity", aggRegressionDiscontinuity, aggRegressionDiscontinuitySql),
+    Key("sample-caliper-matching", sampleCaliperMatching, sampleCaliperMatchingSql),
+    Key("agg-dtw-monthly", aggDtwMonthly, aggDtwMonthlySql))
 }

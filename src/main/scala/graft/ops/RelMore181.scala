@@ -10,7 +10,7 @@ import Tables._
   * form, Box-Cox transform selection on a quantized-log grid,
   * Horvitz-Thompson design-effect comparison (PPS vs uniform),
   * Adamic-Adar link prediction with a degree-capped pair generator. */
-object RelMore181 {
+object RelMore181 extends KeyModule {
 
   /** agg-ridge-path — ridge regression shrinkage path for
     * standardized (quantity, discount) → extended price, via the
@@ -363,15 +363,9 @@ object RelMore181 {
       |FROM pairs GROUP BY 1, 2
       |ORDER BY sum(contrib) DESC, s1, s2 LIMIT 15""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-ridge-path" -> aggRidgePath,
-    "agg-box-cox-grid" -> aggBoxCoxGrid,
-    "sample-ht-design-effect" -> sampleHtDesignEffect,
-    "graph-adamic-adar" -> graphAdamicAdar)
-
-  val oracles: Map[String, String] = Map(
-    "agg-ridge-path" -> aggRidgePathSql,
-    "agg-box-cox-grid" -> aggBoxCoxGridSql,
-    "sample-ht-design-effect" -> sampleHtDesignEffectSql,
-    "graph-adamic-adar" -> graphAdamicAdarSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-ridge-path", aggRidgePath, aggRidgePathSql),
+    Key("agg-box-cox-grid", aggBoxCoxGrid, aggBoxCoxGridSql),
+    Key("sample-ht-design-effect", sampleHtDesignEffect, sampleHtDesignEffectSql),
+    Key("graph-adamic-adar", graphAdamicAdar, graphAdamicAdarSql))
 }

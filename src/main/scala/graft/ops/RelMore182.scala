@@ -10,7 +10,7 @@ import Tables._
   * frequency subsampling, competence-paced curriculum schedule,
   * the feature-hashing trick with collision accounting, and a
   * negative-binomial overdispersion fit. */
-object RelMore182 {
+object RelMore182 extends KeyModule {
 
   /** text-skipgram-pairs — the training-pair generator behind
     * word2vec/fastText: frequent-word SUBSAMPLING first (keep token
@@ -301,15 +301,9 @@ object RelMore182 {
       |       round(nd * exp(-m), 2) AS zeros_poisson_pred
       |FROM mom""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-skipgram-pairs" -> textSkipgramPairs,
-    "sample-curriculum-schedule" -> sampleCurriculumSchedule,
-    "text-hash-collision-audit" -> textFeatureHashing,
-    "agg-negative-binomial-fit" -> aggNegativeBinomialFit)
-
-  val oracles: Map[String, String] = Map(
-    "text-skipgram-pairs" -> textSkipgramPairsSql,
-    "sample-curriculum-schedule" -> sampleCurriculumScheduleSql,
-    "text-hash-collision-audit" -> textFeatureHashingSql,
-    "agg-negative-binomial-fit" -> aggNegativeBinomialFitSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-skipgram-pairs", textSkipgramPairs, textSkipgramPairsSql),
+    Key("sample-curriculum-schedule", sampleCurriculumSchedule, sampleCurriculumScheduleSql),
+    Key("text-hash-collision-audit", textFeatureHashing, textFeatureHashingSql),
+    Key("agg-negative-binomial-fit", aggNegativeBinomialFit, aggNegativeBinomialFitSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch S: RNG-rule kNN-graph diversification, sort-key
   * advisor from post-sort run bounds, letterbox crop detection on the
   * stub decode grid, Markov removal-effect attribution. */
-object RelMore183 {
+object RelMore183 extends KeyModule {
 
   /** ann-rng-diversify — the neighbor-diversification step that turns
     * a kNN list into a navigable graph (HNSW's SELECT-NEIGHBORS
@@ -373,15 +373,9 @@ object RelMore183 {
        |FROM re ORDER BY channel""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "ann-rng-diversify" -> annRngDiversify,
-    "layout-sort-key-advisor" -> layoutSortKeyAdvisor,
-    "mm-letterbox-detect" -> mmLetterboxDetect,
-    "agg-markov-attribution" -> aggMarkovAttribution)
-
-  val oracles: Map[String, String] = Map(
-    "ann-rng-diversify" -> annRngDiversifySql,
-    "layout-sort-key-advisor" -> layoutSortKeyAdvisorSql,
-    "mm-letterbox-detect" -> mmLetterboxDetectSql,
-    "agg-markov-attribution" -> aggMarkovAttributionSql)
+  val keys: Seq[Key] = Seq(
+    Key("ann-rng-diversify", annRngDiversify, annRngDiversifySql),
+    Key("layout-sort-key-advisor", layoutSortKeyAdvisor, layoutSortKeyAdvisorSql),
+    Key("mm-letterbox-detect", mmLetterboxDetect, mmLetterboxDetectSql),
+    Key("agg-markov-attribution", aggMarkovAttribution, aggMarkovAttributionSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch T: synthetic-control counterfactual, recurrent-event
   * mean cumulative function, Engle's ARCH-LM volatility-clustering
   * test, price-ending fingerprint. */
-object RelMore184 {
+object RelMore184 extends KeyModule {
 
   /** agg-synthetic-control — the counterfactual method for ONE treated
     * unit: nation 0's 1997 revenue is compared against a synthetic
@@ -339,15 +339,9 @@ object RelMore184 {
       |         CAST(n_orders AS DOUBLE), 4) AS mode_share
       |FROM chi CROSS JOIN mode""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-synthetic-control" -> aggSyntheticControl,
-    "agg-mcf-recurrent" -> aggMcfRecurrent,
-    "agg-arch-lm-test" -> aggArchLmTest,
-    "dq-price-ending-fingerprint" -> dqPriceEndingFingerprint)
-
-  val oracles: Map[String, String] = Map(
-    "agg-synthetic-control" -> aggSyntheticControlSql,
-    "agg-mcf-recurrent" -> aggMcfRecurrentSql,
-    "agg-arch-lm-test" -> aggArchLmTestSql,
-    "dq-price-ending-fingerprint" -> dqPriceEndingFingerprintSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-synthetic-control", aggSyntheticControl, aggSyntheticControlSql),
+    Key("agg-mcf-recurrent", aggMcfRecurrent, aggMcfRecurrentSql),
+    Key("agg-arch-lm-test", aggArchLmTest, aggArchLmTestSql),
+    Key("dq-price-ending-fingerprint", dqPriceEndingFingerprint, dqPriceEndingFingerprintSql))
 }

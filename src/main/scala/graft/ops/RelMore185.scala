@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch U: rolling-origin forecast cross-validation,
   * per-dimension embedding drift panel, pinball-loss quantile-forecast
   * evaluation, newsvendor critical-ratile stocking. */
-object RelMore185 {
+object RelMore185 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -299,15 +299,9 @@ object RelMore185 {
       |GROUP BY cu, co, qstar, mu
       |ORDER BY cu DESC, co""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sample-rolling-origin-cv" -> sampleRollingOriginCv,
-    "dq-embedding-drift" -> dqEmbeddingDrift,
-    "agg-pinball-loss-eval" -> aggPinballLossEval,
-    "agg-newsvendor-quantile" -> aggNewsvendorQuantile)
-
-  val oracles: Map[String, String] = Map(
-    "sample-rolling-origin-cv" -> sampleRollingOriginCvSql,
-    "dq-embedding-drift" -> dqEmbeddingDriftSql,
-    "agg-pinball-loss-eval" -> aggPinballLossEvalSql,
-    "agg-newsvendor-quantile" -> aggNewsvendorQuantileSql)
+  val keys: Seq[Key] = Seq(
+    Key("sample-rolling-origin-cv", sampleRollingOriginCv, sampleRollingOriginCvSql),
+    Key("dq-embedding-drift", dqEmbeddingDrift, dqEmbeddingDriftSql),
+    Key("agg-pinball-loss-eval", aggPinballLossEval, aggPinballLossEvalSql),
+    Key("agg-newsvendor-quantile", aggNewsvendorQuantile, aggNewsvendorQuantileSql))
 }

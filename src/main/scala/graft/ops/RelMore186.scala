@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch V: value-clipping detector, Huber M-estimator with
   * quantized IRLS weights, switchback experiment design audit,
   * balanced-interleaving ranker evaluation. */
-object RelMore186 {
+object RelMore186 extends KeyModule {
 
   /** dq-clipping-detect — was a column CAPPED upstream? Clipping
     * leaves two fingerprints on the value histogram: an atom at the
@@ -309,15 +309,9 @@ object RelMore186 {
       |            ELSE 'tie' END AS winner
       |FROM (SELECT * FROM inter WHERE pos <= 20) i LEFT JOIN truth USING (pk)""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-clipping-detect" -> dqClippingDetect,
-    "agg-huber-m-estimator" -> aggHuberMEstimator,
-    "sample-switchback-design" -> sampleSwitchbackDesign,
-    "agg-team-draft-interleaving" -> aggTeamDraftInterleaving)
-
-  val oracles: Map[String, String] = Map(
-    "dq-clipping-detect" -> dqClippingDetectSql,
-    "agg-huber-m-estimator" -> aggHuberMEstimatorSql,
-    "sample-switchback-design" -> sampleSwitchbackDesignSql,
-    "agg-team-draft-interleaving" -> aggTeamDraftInterleavingSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-clipping-detect", dqClippingDetect, dqClippingDetectSql),
+    Key("agg-huber-m-estimator", aggHuberMEstimator, aggHuberMEstimatorSql),
+    Key("sample-switchback-design", sampleSwitchbackDesign, sampleSwitchbackDesignSql),
+    Key("agg-team-draft-interleaving", aggTeamDraftInterleaving, aggTeamDraftInterleavingSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch W: Borda/Condorcet rank aggregation, Kelly staking
   * criterion, TOPSIS multi-criteria scorecard, Bradley-Terry strength
   * fitting by bounded MM iterations. */
-object RelMore187 {
+object RelMore187 extends KeyModule {
 
   private val priceCents =
     "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -382,15 +382,9 @@ object RelMore187 {
       |ORDER BY bt_strength DESC, priority""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-borda-condorcet" -> aggBordaCondorcet,
-    "agg-kelly-criterion" -> aggKellyCriterion,
-    "agg-topsis-scorecard" -> aggTopsisScorecard,
-    "agg-bradley-terry" -> aggBradleyTerry)
-
-  val oracles: Map[String, String] = Map(
-    "agg-borda-condorcet" -> aggBordaCondorcetSql,
-    "agg-kelly-criterion" -> aggKellyCriterionSql,
-    "agg-topsis-scorecard" -> aggTopsisScorecardSql,
-    "agg-bradley-terry" -> aggBradleyTerrySql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-borda-condorcet", aggBordaCondorcet, aggBordaCondorcetSql),
+    Key("agg-kelly-criterion", aggKellyCriterion, aggKellyCriterionSql),
+    Key("agg-topsis-scorecard", aggTopsisScorecard, aggTopsisScorecardSql),
+    Key("agg-bradley-terry", aggBradleyTerry, aggBradleyTerrySql))
 }

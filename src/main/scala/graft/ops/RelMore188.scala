@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch X: bimodality-based unit-mix detector, Box-Muller
   * hash-Gaussian generator with self-verification, CAPM beta panel,
   * out-of-vocabulary coverage curve. */
-object RelMore188 {
+object RelMore188 extends KeyModule {
 
   /** dq-bimodality-units — a column silently mixing units (cents next
     * to dollars, ms next to s) is bimodal in LOG-magnitude. The
@@ -331,15 +331,9 @@ object RelMore188 {
       |             (SELECT CAST(count(*) AS DOUBLE) FROM test), 4) AS oov_rate
       |FROM cov ORDER BY k_target""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-bimodality-units" -> dqBimodalityUnits,
-    "gen-gaussian-hash" -> genGaussianHash,
-    "agg-capm-beta" -> aggCapmBeta,
-    "text-oov-coverage" -> textOovCoverage)
-
-  val oracles: Map[String, String] = Map(
-    "dq-bimodality-units" -> dqBimodalityUnitsSql,
-    "gen-gaussian-hash" -> genGaussianHashSql,
-    "agg-capm-beta" -> aggCapmBetaSql,
-    "text-oov-coverage" -> textOovCoverageSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-bimodality-units", dqBimodalityUnits, dqBimodalityUnitsSql),
+    Key("gen-gaussian-hash", genGaussianHash, genGaussianHashSql),
+    Key("agg-capm-beta", aggCapmBeta, aggCapmBetaSql),
+    Key("text-oov-coverage", textOovCoverage, textOovCoverageSql))
 }

@@ -11,7 +11,7 @@ import Tables._
   * effect-size panel, Egger small-study bias regression. The 25
   * nations play the role of 25 independent "studies" estimating mean
   * order value; every op shares ONE exact per-nation moment scan. */
-object RelMore189 {
+object RelMore189 extends KeyModule {
 
   /** Per-nation study stats: n, mean (micro-USD exact), variance —
     * the one fact-scale scan the whole family reads. */
@@ -382,15 +382,9 @@ object RelMore189 {
        |         AS bias_suspected
        |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-meta-dersimonian-laird" -> aggMetaDersimonianLaird,
-    "agg-fishers-method" -> aggFishersMethod,
-    "agg-cohens-d-panel" -> aggCohensDPanel,
-    "agg-egger-regression" -> aggEggerRegression)
-
-  val oracles: Map[String, String] = Map(
-    "agg-meta-dersimonian-laird" -> aggMetaDersimonianLairdSql,
-    "agg-fishers-method" -> aggFishersMethodSql,
-    "agg-cohens-d-panel" -> aggCohensDPanelSql,
-    "agg-egger-regression" -> aggEggerRegressionSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-meta-dersimonian-laird", aggMetaDersimonianLaird, aggMetaDersimonianLairdSql),
+    Key("agg-fishers-method", aggFishersMethod, aggFishersMethodSql),
+    Key("agg-cohens-d-panel", aggCohensDPanel, aggCohensDPanelSql),
+    Key("agg-egger-regression", aggEggerRegression, aggEggerRegressionSql))
 }

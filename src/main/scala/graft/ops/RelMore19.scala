@@ -10,7 +10,7 @@ import Tables._
   * + MAE), ingestion freshness SLAs, and the near-dup threshold tuning
   * curve.
   */
-object RelMore19 {
+object RelMore19 extends KeyModule {
 
   /** agg-forecast-backtest — seasonal-naive forecast (predict each
     * day = same weekday last week) backtested on the days where both
@@ -118,13 +118,8 @@ object RelMore19 {
       |GROUP BY t.threshold_bp
       |ORDER BY t.threshold_bp""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-forecast-backtest" -> aggForecastBacktest,
-    "dq-freshness" -> dqFreshness,
-    "dedup-threshold-curve" -> dedupThresholdCurve)
-
-  val oracles: Map[String, String] = Map(
-    "agg-forecast-backtest" -> aggForecastBacktestSql,
-    "dq-freshness" -> dqFreshnessSql,
-    "dedup-threshold-curve" -> dedupThresholdCurveSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-forecast-backtest", aggForecastBacktest, aggForecastBacktestSql),
+    Key("dq-freshness", dqFreshness, dqFreshnessSql),
+    Key("dedup-threshold-curve", dedupThresholdCurve, dedupThresholdCurveSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-8 batch Z (part 1): the native quantize_lattice expression's
   * public contract — equivalence with the declarative fold it
   * replaces, proven on the real corpus. */
-object RelMore190 {
+object RelMore190 extends KeyModule {
 
   /** func-quantize-lattice — contract test for the codegen
     * [[graft.functions.QuantizeLattice]] expression: on every corpus
@@ -49,9 +49,6 @@ object RelMore190 {
       |            AS BIGINT) AS component_checksum
       |FROM embeddings""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "func-quantize-lattice" -> funcQuantizeLattice)
-
-  val oracles: Map[String, String] = Map(
-    "func-quantize-lattice" -> funcQuantizeLatticeSql)
+  val keys: Seq[Key] = Seq(
+    Key("func-quantize-lattice", funcQuantizeLattice, funcQuantizeLatticeSql))
 }

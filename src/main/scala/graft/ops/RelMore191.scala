@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch Z2: Littlewood's two-fare protection level, Wilson
   * vs Wald proportion intervals, Lincoln-Petersen mark-recapture
   * population estimate, Chao1 unseen-richness estimator. */
-object RelMore191 {
+object RelMore191 extends KeyModule {
 
   /** agg-littlewood-rule — the founding result of revenue management:
     * protect y* seats/units for the high fare where
@@ -269,15 +269,9 @@ object RelMore191 {
       |             CAST(sum(c * f) AS DOUBLE), 6) AS gt_coverage
       |FROM fof""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-littlewood-rule" -> aggLittlewoodRule,
-    "dq-proportion-ci-wilson" -> dqProportionCiWilson,
-    "agg-mark-recapture" -> aggMarkRecapture,
-    "text-chao1-ngram-richness" -> aggChao1Richness)
-
-  val oracles: Map[String, String] = Map(
-    "agg-littlewood-rule" -> aggLittlewoodRuleSql,
-    "dq-proportion-ci-wilson" -> dqProportionCiWilsonSql,
-    "agg-mark-recapture" -> aggMarkRecaptureSql,
-    "text-chao1-ngram-richness" -> aggChao1RichnessSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-littlewood-rule", aggLittlewoodRule, aggLittlewoodRuleSql),
+    Key("dq-proportion-ci-wilson", dqProportionCiWilson, dqProportionCiWilsonSql),
+    Key("agg-mark-recapture", aggMarkRecapture, aggMarkRecaptureSql),
+    Key("text-chao1-ngram-richness", aggChao1Richness, aggChao1RichnessSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-8 batch AA: German-tank serial estimation, survivorship-bias
   * quantifier, functional-dependency discovery, inclusion-dependency
   * (candidate foreign key) discovery. */
-object RelMore192 {
+object RelMore192 extends KeyModule {
 
   /** agg-german-tank — the serial-number estimator: from a 5%
     * hash-sample of order keys, the minimum-variance unbiased estimate
@@ -232,15 +232,9 @@ object RelMore192 {
       .mkString("", "\nUNION ALL\n", "\nORDER BY candidate")
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-german-tank" -> aggGermanTank,
-    "dq-survivorship-bias" -> dqSurvivorshipBias,
-    "dq-functional-dependency" -> dqFunctionalDependency,
-    "dq-inclusion-dependency" -> dqInclusionDependency)
-
-  val oracles: Map[String, String] = Map(
-    "agg-german-tank" -> aggGermanTankSql,
-    "dq-survivorship-bias" -> dqSurvivorshipBiasSql,
-    "dq-functional-dependency" -> dqFunctionalDependencySql,
-    "dq-inclusion-dependency" -> dqInclusionDependencySql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-german-tank", aggGermanTank, aggGermanTankSql),
+    Key("dq-survivorship-bias", dqSurvivorshipBias, dqSurvivorshipBiasSql),
+    Key("dq-functional-dependency", dqFunctionalDependency, dqFunctionalDependencySql),
+    Key("dq-inclusion-dependency", dqInclusionDependency, dqInclusionDependencySql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AB: bullwhip variance amplification, SAX time-series
   * symbolization with motif counting, gravity model of inter-nation
   * trade, Cobb-Douglas production fit. */
-object RelMore193 {
+object RelMore193 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -384,15 +384,9 @@ object RelMore193 {
        |       CAST(n AS BIGINT) AS n_months
        |FROM mm""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-bullwhip-effect" -> aggBullwhipEffect,
-    "agg-sax-motifs" -> aggSaxMotifs,
-    "agg-gravity-model" -> aggGravityModel,
-    "agg-cobb-douglas-fit" -> aggCobbDouglasFit)
-
-  val oracles: Map[String, String] = Map(
-    "agg-bullwhip-effect" -> aggBullwhipEffectSql,
-    "agg-sax-motifs" -> aggSaxMotifsSql,
-    "agg-gravity-model" -> aggGravityModelSql,
-    "agg-cobb-douglas-fit" -> aggCobbDouglasFitSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-bullwhip-effect", aggBullwhipEffect, aggBullwhipEffectSql),
+    Key("agg-sax-motifs", aggSaxMotifs, aggSaxMotifsSql),
+    Key("agg-gravity-model", aggGravityModel, aggGravityModelSql),
+    Key("agg-cobb-douglas-fit", aggCobbDouglasFit, aggCobbDouglasFitSql))
 }

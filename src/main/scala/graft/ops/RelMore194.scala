@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-8 batch AC: LMDI index decomposition, shift-share growth
   * accounting, location quotients, interrupted time series. */
-object RelMore194 {
+object RelMore194 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -286,15 +286,9 @@ object RelMore194 {
        |         AS level_change_usd
        |FROM seg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-lmdi-decomposition" -> aggLmdiDecomposition,
-    "agg-shift-share" -> aggShiftShare,
-    "agg-location-quotient" -> aggLocationQuotient,
-    "agg-interrupted-time-series" -> aggInterruptedTimeSeries)
-
-  val oracles: Map[String, String] = Map(
-    "agg-lmdi-decomposition" -> aggLmdiDecompositionSql,
-    "agg-shift-share" -> aggShiftShareSql,
-    "agg-location-quotient" -> aggLocationQuotientSql,
-    "agg-interrupted-time-series" -> aggInterruptedTimeSeriesSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-lmdi-decomposition", aggLmdiDecomposition, aggLmdiDecompositionSql),
+    Key("agg-shift-share", aggShiftShare, aggShiftShareSql),
+    Key("agg-location-quotient", aggLocationQuotient, aggLocationQuotientSql),
+    Key("agg-interrupted-time-series", aggInterruptedTimeSeries, aggInterruptedTimeSeriesSql))
 }

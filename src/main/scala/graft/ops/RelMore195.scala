@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AD: probability classics made measurable — the
   * secretary stopping rule, the inspection (length-biased) paradox,
   * regression to the mean, the friendship paradox. */
-object RelMore195 {
+object RelMore195 extends KeyModule {
 
   /** agg-secretary-rule — the 1/e stopping rule evaluated empirically:
     * over 32 hash-derived arrival orders of the suppliers, observe the
@@ -263,15 +263,9 @@ object RelMore195 {
       |  FROM (SELECT w, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY 1) t)
       |SELECT * FROM pside UNION ALL SELECT * FROM wside ORDER BY side""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-secretary-rule" -> aggSecretaryRule,
-    "agg-inspection-paradox" -> aggInspectionParadox,
-    "dq-regression-to-mean" -> dqRegressionToMean,
-    "agg-friendship-paradox" -> aggFriendshipParadox)
-
-  val oracles: Map[String, String] = Map(
-    "agg-secretary-rule" -> aggSecretaryRuleSql,
-    "agg-inspection-paradox" -> aggInspectionParadoxSql,
-    "dq-regression-to-mean" -> dqRegressionToMeanSql,
-    "agg-friendship-paradox" -> aggFriendshipParadoxSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-secretary-rule", aggSecretaryRule, aggSecretaryRuleSql),
+    Key("agg-inspection-paradox", aggInspectionParadox, aggInspectionParadoxSql),
+    Key("dq-regression-to-mean", dqRegressionToMean, dqRegressionToMeanSql),
+    Key("agg-friendship-paradox", aggFriendshipParadox, aggFriendshipParadoxSql))
 }

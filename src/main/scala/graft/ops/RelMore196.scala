@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-8 batch AE: Pollaczek-Khinchine queueing estimate, Berkson's
   * collider bias, Will Rogers stage migration, Metcalfe's-law fit. */
-object RelMore196 {
+object RelMore196 extends KeyModule {
 
   /** agg-pollaczek-khinchine — the M/G/1 waiting-time formula on the
     * order stream: arrivals at rate λ (orders/day), service times
@@ -287,15 +287,9 @@ object RelMore196 {
        |FROM mon""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-pollaczek-khinchine" -> aggPollaczekKhinchine,
-    "dq-berkson-bias" -> dqBerksonBias,
-    "dq-will-rogers" -> dqWillRogers,
-    "agg-metcalfe-fit" -> aggMetcalfeFit)
-
-  val oracles: Map[String, String] = Map(
-    "agg-pollaczek-khinchine" -> aggPollaczekKhinchineSql,
-    "dq-berkson-bias" -> dqBerksonBiasSql,
-    "dq-will-rogers" -> dqWillRogersSql,
-    "agg-metcalfe-fit" -> aggMetcalfeFitSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-pollaczek-khinchine", aggPollaczekKhinchine, aggPollaczekKhinchineSql),
+    Key("dq-berkson-bias", dqBerksonBias, dqBerksonBiasSql),
+    Key("dq-will-rogers", dqWillRogers, dqWillRogersSql),
+    Key("agg-metcalfe-fit", aggMetcalfeFit, aggMetcalfeFitSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AF: the empirical-law suite — Lotka productivity,
   * Bradford scattering zones, Gibrat growth independence, Engel
   * budget-share curve. */
-object RelMore197 {
+object RelMore197 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -254,15 +254,9 @@ object RelMore197 {
        |         AS low_priority_is_necessity
        |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-lotka-law" -> aggLotkaLaw,
-    "agg-bradford-zones" -> aggBradfordZones,
-    "agg-gibrat-law" -> aggGibratLaw,
-    "agg-engel-curve" -> aggEngelCurve)
-
-  val oracles: Map[String, String] = Map(
-    "agg-lotka-law" -> aggLotkaLawSql,
-    "agg-bradford-zones" -> aggBradfordZonesSql,
-    "agg-gibrat-law" -> aggGibratLawSql,
-    "agg-engel-curve" -> aggEngelCurveSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-lotka-law", aggLotkaLaw, aggLotkaLawSql),
+    Key("agg-bradford-zones", aggBradfordZones, aggBradfordZonesSql),
+    Key("agg-gibrat-law", aggGibratLaw, aggGibratLawSql),
+    Key("agg-engel-curve", aggEngelCurve, aggEngelCurveSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AG: the training-planning family — DPO preference
   * pairs, repeated-epoch value decay, Chinchilla compute-optimal
   * allocation, Wright's learning curve. */
-object RelMore198 {
+object RelMore198 extends KeyModule {
 
   /** sample-dpo-pairs — preference-pair construction for direct
     * preference optimization: within each (lang, source) cell the
@@ -233,15 +233,9 @@ object RelMore198 {
       |         AS learning_rate_per_doubling
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sample-dpo-pairs" -> sampleDpoPairs,
-    "sample-repeat-value-decay" -> sampleRepeatValueDecay,
-    "agg-chinchilla-allocation" -> aggChinchillaAllocation,
-    "agg-wright-learning-curve" -> aggWrightLearningCurve)
-
-  val oracles: Map[String, String] = Map(
-    "sample-dpo-pairs" -> sampleDpoPairsSql,
-    "sample-repeat-value-decay" -> sampleRepeatValueDecaySql,
-    "agg-chinchilla-allocation" -> aggChinchillaAllocationSql,
-    "agg-wright-learning-curve" -> aggWrightLearningCurveSql)
+  val keys: Seq[Key] = Seq(
+    Key("sample-dpo-pairs", sampleDpoPairs, sampleDpoPairsSql),
+    Key("sample-repeat-value-decay", sampleRepeatValueDecay, sampleRepeatValueDecaySql),
+    Key("agg-chinchilla-allocation", aggChinchillaAllocation, aggChinchillaAllocationSql),
+    Key("agg-wright-learning-curve", aggWrightLearningCurve, aggWrightLearningCurveSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AH: panel fixed-effects regression, RSI momentum
   * indicator, Almon polynomial distributed lag, freeze-frame run
   * detection. */
-object RelMore199 {
+object RelMore199 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -362,15 +362,9 @@ object RelMore199 {
       |             6) AS frozen_frame_share
       |FROM perdoc""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-panel-fixed-effects" -> aggPanelFixedEffects,
-    "win-rsi-indicator" -> winRsiIndicator,
-    "agg-almon-lag" -> aggAlmonLag,
-    "mm-freeze-frame-detect" -> mmFreezeFrameDetect)
-
-  val oracles: Map[String, String] = Map(
-    "agg-panel-fixed-effects" -> aggPanelFixedEffectsSql,
-    "win-rsi-indicator" -> winRsiIndicatorSql,
-    "agg-almon-lag" -> aggAlmonLagSql,
-    "mm-freeze-frame-detect" -> mmFreezeFrameDetectSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-panel-fixed-effects", aggPanelFixedEffects, aggPanelFixedEffectsSql),
+    Key("win-rsi-indicator", winRsiIndicator, winRsiIndicatorSql),
+    Key("agg-almon-lag", aggAlmonLag, aggAlmonLagSql),
+    Key("mm-freeze-frame-detect", mmFreezeFrameDetect, mmFreezeFrameDetectSql))
 }

@@ -13,7 +13,7 @@ import Tables._
   * (Schleimer et al., SIGMOD'03) upgrading text-fingerprint's global
   * min to position-robust sampling.
   */
-object RelMore2 {
+object RelMore2 extends KeyModule {
 
   /** join-lateral — LATERAL correlated subquery with ORDER BY + LIMIT:
     * top-2 orders per customer, spelled as one shared SQL string.
@@ -207,15 +207,9 @@ object RelMore2 {
       |FROM sel
       |ORDER BY doc_id, pos""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join-lateral" -> joinLateral,
-    "emb-cluster-stats" -> embClusterStats,
-    "emb-covariance" -> embCovariance,
-    "text-winnowing" -> textWinnowing)
-
-  val oracles: Map[String, String] = Map(
-    "join-lateral" -> joinLateralSql,
-    "emb-cluster-stats" -> embClusterStatsSql,
-    "emb-covariance" -> embCovarianceSql,
-    "text-winnowing" -> textWinnowingSql)
+  val keys: Seq[Key] = Seq(
+    Key("join-lateral", joinLateral, joinLateralSql),
+    Key("emb-cluster-stats", embClusterStats, embClusterStatsSql),
+    Key("emb-covariance", embCovariance, embCovarianceSql),
+    Key("text-winnowing", textWinnowing, textWinnowingSql))
 }

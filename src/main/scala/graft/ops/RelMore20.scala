@@ -10,7 +10,7 @@ import Tables._
   * WebDataset builder), functional-dependency and column profiling
   * audits, and market-concentration indexes.
   */
-object RelMore20 {
+object RelMore20 extends KeyModule {
 
   /** mm-shard-pack — WebDataset-style training-shard assignment: docs
     * in deterministic id order, each shard holding ~20 KB by START
@@ -176,15 +176,9 @@ object RelMore20 {
       |GROUP BY yr
       |ORDER BY yr""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "mm-shard-pack" -> mmShardPack,
-    "dq-fd-check" -> dqFdCheck,
-    "dq-profile-columns" -> dqProfileColumns,
-    "agg-hhi-concentration" -> aggHhiConcentration)
-
-  val oracles: Map[String, String] = Map(
-    "mm-shard-pack" -> mmShardPackSql,
-    "dq-fd-check" -> dqFdCheckSql,
-    "dq-profile-columns" -> dqProfileColumnsSql,
-    "agg-hhi-concentration" -> aggHhiConcentrationSql)
+  val keys: Seq[Key] = Seq(
+    Key("mm-shard-pack", mmShardPack, mmShardPackSql),
+    Key("dq-fd-check", dqFdCheck, dqFdCheckSql),
+    Key("dq-profile-columns", dqProfileColumns, dqProfileColumnsSql),
+    Key("agg-hhi-concentration", aggHhiConcentration, aggHhiConcentrationSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-8 batch AI: histogram binning advisor, Cox-Stuart trend sign
   * test, distribution-distance panel, exact 1-D Wasserstein. */
-object RelMore200 {
+object RelMore200 extends KeyModule {
 
   /** dq-binning-advisor — how many histogram bins? The three classic
     * rules computed from exact moments of l_quantity: Sturges
@@ -260,15 +260,9 @@ object RelMore200 {
       |             CAST(max(np * nq) AS DOUBLE), 6) AS wasserstein_1
       |FROM cum CROSS JOIN tot""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-binning-advisor" -> dqBinningAdvisor,
-    "agg-cox-stuart-trend" -> aggCoxStuartTrend,
-    "dq-distribution-distance-panel" -> dqDistributionDistancePanel,
-    "agg-wasserstein-1d" -> aggWasserstein1d)
-
-  val oracles: Map[String, String] = Map(
-    "dq-binning-advisor" -> dqBinningAdvisorSql,
-    "agg-cox-stuart-trend" -> aggCoxStuartTrendSql,
-    "dq-distribution-distance-panel" -> dqDistributionDistancePanelSql,
-    "agg-wasserstein-1d" -> aggWasserstein1dSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-binning-advisor", dqBinningAdvisor, dqBinningAdvisorSql),
+    Key("agg-cox-stuart-trend", aggCoxStuartTrend, aggCoxStuartTrendSql),
+    Key("dq-distribution-distance-panel", dqDistributionDistancePanel, dqDistributionDistancePanelSql),
+    Key("agg-wasserstein-1d", aggWasserstein1d, aggWasserstein1dSql))
 }

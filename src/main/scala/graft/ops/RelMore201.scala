@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AJ: the inference-side LLM metrics — self-BLEU
   * diversity, best-of-n reward scaling, MoE router load balance,
   * prefix-cache savings. */
-object RelMore201 {
+object RelMore201 extends KeyModule {
 
   /** text-self-bleu — generation-diversity measurement: each probe
     * document's modified 2-gram precision against the REST of the
@@ -290,15 +290,9 @@ object RelMore201 {
       |             CAST(sum(gtok) AS DOUBLE), 6) AS savings_share
       |FROM groups""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-self-bleu" -> textSelfBleu,
-    "sample-best-of-n-curve" -> sampleBestOfNCurve,
-    "emb-moe-router-balance" -> embMoeRouterBalance,
-    "text-kv-prefix-cache-savings" -> textKvPrefixCacheSavings)
-
-  val oracles: Map[String, String] = Map(
-    "text-self-bleu" -> textSelfBleuSql,
-    "sample-best-of-n-curve" -> sampleBestOfNCurveSql,
-    "emb-moe-router-balance" -> embMoeRouterBalanceSql,
-    "text-kv-prefix-cache-savings" -> textKvPrefixCacheSavingsSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-self-bleu", textSelfBleu, textSelfBleuSql),
+    Key("sample-best-of-n-curve", sampleBestOfNCurve, sampleBestOfNCurveSql),
+    Key("emb-moe-router-balance", embMoeRouterBalance, embMoeRouterBalanceSql),
+    Key("text-kv-prefix-cache-savings", textKvPrefixCacheSavings, textKvPrefixCacheSavingsSql))
 }

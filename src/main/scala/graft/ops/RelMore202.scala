@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AK: indirect standardization (SMR), actuarial life
   * table, k-anonymity/l-diversity audit, Kitagawa rate-vs-mix
   * decomposition. */
-object RelMore202 {
+object RelMore202 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -307,15 +307,9 @@ object RelMore202 {
        |          composition_effect_usd, 4) AS closure_gap_usd
        |FROM eff""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-indirect-standardization" -> aggIndirectStandardization,
-    "agg-life-table" -> aggLifeTable,
-    "dq-k-anonymity" -> dqKAnonymity,
-    "agg-kitagawa-decomposition" -> aggKitagawaDecomposition)
-
-  val oracles: Map[String, String] = Map(
-    "agg-indirect-standardization" -> aggIndirectStandardizationSql,
-    "agg-life-table" -> aggLifeTableSql,
-    "dq-k-anonymity" -> dqKAnonymitySql,
-    "agg-kitagawa-decomposition" -> aggKitagawaDecompositionSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-indirect-standardization", aggIndirectStandardization, aggIndirectStandardizationSql),
+    Key("agg-life-table", aggLifeTable, aggLifeTableSql),
+    Key("dq-k-anonymity", dqKAnonymity, dqKAnonymitySql),
+    Key("agg-kitagawa-decomposition", aggKitagawaDecomposition, aggKitagawaDecompositionSql))
 }

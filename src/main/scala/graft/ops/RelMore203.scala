@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-8 batch AL: cross-sectional momentum factor, winner's-curse
   * correction, tangency portfolio, Calmar ratio. */
-object RelMore203 {
+object RelMore203 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -321,15 +321,9 @@ object RelMore203 {
        |         AS calmar_ratio
        |FROM ends""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-momentum-factor" -> aggMomentumFactor,
-    "agg-winners-curse-correction" -> aggWinnersCurseCorrection,
-    "agg-tangency-portfolio" -> aggTangencyPortfolio,
-    "agg-calmar-ratio" -> aggCalmarRatio)
-
-  val oracles: Map[String, String] = Map(
-    "agg-momentum-factor" -> aggMomentumFactorSql,
-    "agg-winners-curse-correction" -> aggWinnersCurseCorrectionSql,
-    "agg-tangency-portfolio" -> aggTangencyPortfolioSql,
-    "agg-calmar-ratio" -> aggCalmarRatioSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-momentum-factor", aggMomentumFactor, aggMomentumFactorSql),
+    Key("agg-winners-curse-correction", aggWinnersCurseCorrection, aggWinnersCurseCorrectionSql),
+    Key("agg-tangency-portfolio", aggTangencyPortfolio, aggTangencyPortfolioSql),
+    Key("agg-calmar-ratio", aggCalmarRatio, aggCalmarRatioSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch AM: the forecast-evaluation family — combination
   * beats components, MSE decomposition, Diebold-Mariano comparison,
   * directional accuracy with the Pesaran-Timmermann test. */
-object RelMore204 {
+object RelMore204 extends KeyModule {
 
   private val centsExpr =
     "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -273,15 +273,9 @@ object RelMore204 {
        |         AS pt_z_stat
        |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-forecast-combination" -> aggForecastCombination,
-    "agg-forecast-mse-decomposition" -> aggForecastMseDecomposition,
-    "agg-diebold-mariano" -> aggDieboldMariano,
-    "agg-directional-accuracy" -> aggDirectionalAccuracy)
-
-  val oracles: Map[String, String] = Map(
-    "agg-forecast-combination" -> aggForecastCombinationSql,
-    "agg-forecast-mse-decomposition" -> aggForecastMseDecompositionSql,
-    "agg-diebold-mariano" -> aggDieboldMarianoSql,
-    "agg-directional-accuracy" -> aggDirectionalAccuracySql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-forecast-combination", aggForecastCombination, aggForecastCombinationSql),
+    Key("agg-forecast-mse-decomposition", aggForecastMseDecomposition, aggForecastMseDecompositionSql),
+    Key("agg-diebold-mariano", aggDieboldMariano, aggDieboldMarianoSql),
+    Key("agg-directional-accuracy", aggDirectionalAccuracy, aggDirectionalAccuracySql))
 }

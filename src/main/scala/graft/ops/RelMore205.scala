@@ -19,7 +19,7 @@ import Tables._
   * behavior fire at test SF; at 100 TB the defaults fire on the same
   * shapes unaided — the point of the small thresholds is that the
   * graded artifact exercises the real code path, not a simulation. */
-object RelMore205 {
+object RelMore205 extends KeyModule {
 
   /** join-aqe-skew-rescue — the adaptive answer to the power-law join
     * key. `join-salted-skew` (RelScale) is the DETERMINISTIC fix:
@@ -272,17 +272,10 @@ object RelMore205 {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join-runtime-bloom-filter" -> joinRuntimeBloomFilter,
-    "join-aqe-skew-rescue" -> joinAqeSkewRescue,
-    "join-aqe-runtime-broadcast" -> joinAqeRuntimeBroadcast,
-    "agg-aqe-coalesce-partitions" -> aggAqeCoalescePartitions,
-    "sink-rebalance-write" -> sinkRebalanceWrite)
-
-  val oracles: Map[String, String] = Map(
-    "join-runtime-bloom-filter" -> joinRuntimeBloomFilterSql,
-    "join-aqe-skew-rescue" -> joinAqeSkewRescueSql,
-    "join-aqe-runtime-broadcast" -> joinAqeRuntimeBroadcastSql,
-    "agg-aqe-coalesce-partitions" -> aggAqeCoalescePartitionsSql,
-    "sink-rebalance-write" -> sinkRebalanceWriteSql)
+  val keys: Seq[Key] = Seq(
+    Key("join-runtime-bloom-filter", joinRuntimeBloomFilter, joinRuntimeBloomFilterSql),
+    Key("join-aqe-skew-rescue", joinAqeSkewRescue, joinAqeSkewRescueSql),
+    Key("join-aqe-runtime-broadcast", joinAqeRuntimeBroadcast, joinAqeRuntimeBroadcastSql),
+    Key("agg-aqe-coalesce-partitions", aggAqeCoalescePartitions, aggAqeCoalescePartitionsSql),
+    Key("sink-rebalance-write", sinkRebalanceWrite, sinkRebalanceWriteSql))
 }

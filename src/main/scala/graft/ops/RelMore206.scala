@@ -11,7 +11,7 @@ import Tables._
   * ops (agg-rowcount-audit, sink-audit-append) pay a second pass.
   * At 100 TB a second pass is a second 100 TB scan; observe is the
   * accumulator-style free ride. */
-object RelMore206 {
+object RelMore206 extends KeyModule {
 
   /** dq-observe-metrics — one-pass audit counters. The per-status
     * rollup is the "real" query; `observe` plants row count, exact
@@ -99,11 +99,7 @@ object RelMore206 {
       |WHERE o_orderkey IN (1, 7, 32, 999999999)
       |ORDER BY o_orderkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-observe-metrics" -> dqObserveMetrics,
-    "layout-parquet-bloom-write" -> layoutParquetBloomWrite)
-
-  val oracles: Map[String, String] = Map(
-    "dq-observe-metrics" -> dqObserveMetricsSql,
-    "layout-parquet-bloom-write" -> layoutParquetBloomWriteSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-observe-metrics", dqObserveMetrics, dqObserveMetricsSql),
+    Key("layout-parquet-bloom-write", layoutParquetBloomWrite, layoutParquetBloomWriteSql))
 }

@@ -17,7 +17,7 @@ import Tables._
   * (expr-variant-json), try_* arithmetic (expr-try-arith), null-safe
   * join (join-null-safe), hash-collision budget
   * (dq-hash-collision-budget). */
-object RelMore207 {
+object RelMore207 extends KeyModule {
 
   /** dedup-semdedup — SemDeDup (Abbas et al. 2023): cluster the
     * embedding space, then prune near-duplicates ONLY within each
@@ -246,15 +246,9 @@ object RelMore207 {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "src-schema-evolution" -> srcSchemaEvolution,
-    "dedup-semdedup" -> dedupSemdedup,
-    "win-ewma-irregular" -> winEwmaIrregular,
-    "agg-sketch-intersection" -> aggSketchIntersection)
-
-  val oracles: Map[String, String] = Map(
-    "src-schema-evolution" -> srcSchemaEvolutionSql,
-    "dedup-semdedup" -> dedupSemdedupSql,
-    "win-ewma-irregular" -> winEwmaIrregularSql,
-    "agg-sketch-intersection" -> aggSketchIntersectionSql)
+  val keys: Seq[Key] = Seq(
+    Key("src-schema-evolution", srcSchemaEvolution, srcSchemaEvolutionSql),
+    Key("dedup-semdedup", dedupSemdedup, dedupSemdedupSql),
+    Key("win-ewma-irregular", winEwmaIrregular, winEwmaIrregularSql),
+    Key("agg-sketch-intersection", aggSketchIntersection, aggSketchIntersectionSql))
 }

@@ -7,7 +7,7 @@ import Tables._
 
 /** Driver-round-10 batch C: streaming observability — the
   * StreamingQueryProgress surface that operates a 100 TB backfill. */
-object RelMore209 {
+object RelMore209 extends KeyModule {
 
   /** stream-progress-metrics — per-micro-batch progress accounting
     * from `query.recentProgress`: numInputRows summed across batches
@@ -104,11 +104,7 @@ object RelMore209 {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "stream-progress-metrics" -> streamProgressMetrics,
-    "stream-state-reader" -> streamStateReader)
-
-  val oracles: Map[String, String] = Map(
-    "stream-progress-metrics" -> streamProgressMetricsSql,
-    "stream-state-reader" -> streamStateReaderSql)
+  val keys: Seq[Key] = Seq(
+    Key("stream-progress-metrics", streamProgressMetrics, streamProgressMetricsSql),
+    Key("stream-state-reader", streamStateReader, streamStateReaderSql))
 }

@@ -10,7 +10,7 @@ import Tables._
   * weighted medians, and the Gini inequality coefficient — completing
   * the concentration-stats family (pareto-point, HHI, Gini).
   */
-object RelMore21 {
+object RelMore21 extends KeyModule {
 
   /** sql-by-all — GROUP BY ALL + ORDER BY ALL (the DuckDB-invented
     * shorthand Spark 4 adopted): every non-aggregate select item
@@ -122,13 +122,8 @@ object RelMore21 {
       |                  (count(*) * sum(kd))) AS BIGINT) AS gini_ppm
       |FROM ranked""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-by-all" -> sqlByAll,
-    "agg-weighted-median" -> aggWeightedMedian,
-    "agg-gini" -> aggGini)
-
-  val oracles: Map[String, String] = Map(
-    "sql-by-all" -> sqlByAllSql,
-    "agg-weighted-median" -> aggWeightedMedianSql,
-    "agg-gini" -> aggGiniSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-by-all", sqlByAll, sqlByAllSql),
+    Key("agg-weighted-median", aggWeightedMedian, aggWeightedMedianSql),
+    Key("agg-gini", aggGini, aggGiniSql))
 }

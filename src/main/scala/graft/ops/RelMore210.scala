@@ -8,7 +8,7 @@ import Tables._
 /** Driver-round-10 batch D: two Spark-4 read/report surfaces —
   * `Dataset.transpose` (metrics-as-rows report pivoting) and the
   * `_metadata` hidden file columns (row-level file provenance). */
-object RelMore210 {
+object RelMore210 extends KeyModule {
 
   /** agg-transpose-report — `Dataset.transpose(indexColumn)`: the
     * Spark 4 first-class transpose. Unlike PIVOT (which aggregates),
@@ -81,11 +81,7 @@ object RelMore210 {
       |       CAST(4 AS BIGINT) AS n_dense_files
       |FROM orders""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-transpose-report" -> aggTransposeReport,
-    "src-file-metadata" -> srcFileMetadata)
-
-  val oracles: Map[String, String] = Map(
-    "agg-transpose-report" -> aggTransposeReportSql,
-    "src-file-metadata" -> srcFileMetadataSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-transpose-report", aggTransposeReport, aggTransposeReportSql),
+    Key("src-file-metadata", srcFileMetadata, srcFileMetadataSql))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Driver-round-10 batch E: the XPath scalar surface. */
-object RelMore211 {
+object RelMore211 extends KeyModule {
 
   /** func-xpath-suite — Spark's built-in xpath_* extractors
     * (xpath_string / xpath_long / xpath_boolean / xpath, the
@@ -71,9 +71,6 @@ object RelMore211 {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "func-xpath-suite" -> funcXpathSuite)
-
-  val oracles: Map[String, String] = Map(
-    "func-xpath-suite" -> funcXpathSuiteSql)
+  val keys: Seq[Key] = Seq(
+    Key("func-xpath-suite", funcXpathSuite, funcXpathSuiteSql))
 }

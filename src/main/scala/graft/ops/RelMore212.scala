@@ -16,7 +16,7 @@ import Tables._
   * over the raw table, so the driver's comparison is exactly the IVM /
   * sketch-merge correctness theorem, checked end to end.
   */
-object RelMore212 {
+object RelMore212 extends KeyModule {
 
   private def cents(c: String) =
     expr(s"CAST(CAST($c AS DECIMAL(18,2)) * 100 AS BIGINT)")
@@ -330,13 +330,8 @@ object RelMore212 {
       |ORDER BY n_nodes DESC, component
       |LIMIT 20""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-mv-delta-refresh" -> aggMvDeltaRefresh,
-    "agg-kmv-rolling-merge" -> aggKmvRollingMerge,
-    "graph-cc-incremental" -> graphCcIncremental)
-
-  val oracles: Map[String, String] = Map(
-    "agg-mv-delta-refresh" -> aggMvDeltaRefreshSql,
-    "agg-kmv-rolling-merge" -> aggKmvRollingMergeSql,
-    "graph-cc-incremental" -> graphCcIncrementalSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-mv-delta-refresh", aggMvDeltaRefresh, aggMvDeltaRefreshSql),
+    Key("agg-kmv-rolling-merge", aggKmvRollingMerge, aggKmvRollingMergeSql),
+    Key("graph-cc-incremental", graphCcIncremental, graphCcIncrementalSql))
 }

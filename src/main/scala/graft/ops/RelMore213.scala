@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Round-11 batch C: lake-metadata scaling — two-level stats pruning. */
-object RelMore213 {
+object RelMore213 extends KeyModule {
 
   private val FilesPerMonth = 8
 
@@ -135,9 +135,6 @@ object RelMore213 {
        |SELECT * FROM pm UNION ALL SELECT * FROM kr
        |ORDER BY kind, pk""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "layout-manifest-prune" -> layoutManifestPrune)
-
-  val oracles: Map[String, String] = Map(
-    "layout-manifest-prune" -> layoutManifestPruneSql)
+  val keys: Seq[Key] = Seq(
+    Key("layout-manifest-prune", layoutManifestPrune, layoutManifestPruneSql))
 }

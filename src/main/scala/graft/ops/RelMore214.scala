@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Round-11 batch D: network-identifier analytics. */
-object RelMore214 {
+object RelMore214 extends KeyModule {
 
   /** func-ip-cidr-suite — the weblog/network surface: dotted-quad
     * parsing, integer round-trip, and CIDR-block aggregation, all with
@@ -93,9 +93,6 @@ object RelMore214 {
       |GROUP BY ip_num // 65536
       |ORDER BY net16""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "func-ip-cidr-suite" -> funcIpCidrSuite)
-
-  val oracles: Map[String, String] = Map(
-    "func-ip-cidr-suite" -> funcIpCidrSuiteSql)
+  val keys: Seq[Key] = Seq(
+    Key("func-ip-cidr-suite", funcIpCidrSuite, funcIpCidrSuiteSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-11 batch E: mergeable-histogram quantiles — the third leg of
   * the materialized-layer trio (algebraic states: agg-mv-delta-refresh;
   * distinct sketches: agg-kmv-rolling-merge; rank statistics: here). */
-object RelMore215 {
+object RelMore215 extends KeyModule {
 
   private val W = 65536L // bucket width in cents; price domain ≲ 11.2M cents → ≤ ~172 buckets
 
@@ -154,9 +154,6 @@ object RelMore215 {
        |FROM est JOIN ranked r ON r.wm = est.wm AND r.rn = est.k
        |ORDER BY m, q""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-histogram-quantile-merge" -> aggHistogramQuantileMerge)
-
-  val oracles: Map[String, String] = Map(
-    "agg-histogram-quantile-merge" -> aggHistogramQuantileMergeSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-histogram-quantile-merge", aggHistogramQuantileMerge, aggHistogramQuantileMergeSql))
 }

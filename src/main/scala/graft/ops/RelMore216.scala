@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-11 batch F: the streaming face of the materialized-layer
   * family (agg-mv-delta-refresh's per-micro-batch twin). */
-object RelMore216 {
+object RelMore216 extends KeyModule {
 
   /** stream-mv-incremental — a per-key aggregate MV maintained BY THE
     * STREAM: each micro-batch is aggregated alone (counts, exact-cents
@@ -108,9 +108,6 @@ object RelMore216 {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "stream-mv-incremental" -> streamMvIncremental)
-
-  val oracles: Map[String, String] = Map(
-    "stream-mv-incremental" -> streamMvIncrementalSql)
+  val keys: Seq[Key] = Seq(
+    Key("stream-mv-incremental", streamMvIncremental, streamMvIncrementalSql))
 }

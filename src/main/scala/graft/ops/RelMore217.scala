@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-11 batch G: histogram width ladder — sizing the quantile
   * sketch layer before committing storage to it. */
-object RelMore217 {
+object RelMore217 extends KeyModule {
 
   private val W0 = 8192L // finest stored grain (cents)
 
@@ -119,9 +119,6 @@ object RelMore217 {
        |FROM est JOIN ranked r ON r.rn = est.k
        |ORDER BY w, q""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-histogram-width-curve" -> aggHistogramWidthCurve)
-
-  val oracles: Map[String, String] = Map(
-    "agg-histogram-width-curve" -> aggHistogramWidthCurveSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-histogram-width-curve", aggHistogramWidthCurve, aggHistogramWidthCurveSql))
 }

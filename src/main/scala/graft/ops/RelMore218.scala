@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-11 batch H: the MV read path (lambda view) and
   * longest-prefix-match IP enrichment. */
-object RelMore218 {
+object RelMore218 extends KeyModule {
 
   /** agg-mv-lambda-read — the READ-path complement of
     * agg-mv-delta-refresh: instead of refreshing the MV when a delta
@@ -157,11 +157,7 @@ object RelMore218 {
       |GROUP BY split_part(label, '-', 1), matched_len
       |ORDER BY label_class, matched_len""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-mv-lambda-read" -> aggMvLambdaRead,
-    "join-ip-longest-prefix" -> joinIpLongestPrefix)
-
-  val oracles: Map[String, String] = Map(
-    "agg-mv-lambda-read" -> aggMvLambdaReadSql,
-    "join-ip-longest-prefix" -> joinIpLongestPrefixSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-mv-lambda-read", aggMvLambdaRead, aggMvLambdaReadSql),
+    Key("join-ip-longest-prefix", joinIpLongestPrefix, joinIpLongestPrefixSql))
 }

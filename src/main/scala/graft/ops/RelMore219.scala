@@ -8,7 +8,7 @@ import Tables._
 /** Round-11 batch I: streaming sketch maintenance — the KMV partial
   * kept fresh per micro-batch (agg-kmv-rolling-merge's streaming twin,
   * stream-mv-incremental's holistic-aggregate sibling). */
-object RelMore219 {
+object RelMore219 extends KeyModule {
 
   private val K = 8
 
@@ -112,9 +112,6 @@ object RelMore219 {
        |WHERE r.rn = $K
        |ORDER BY r.event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "stream-kmv-incremental" -> streamKmvIncremental)
-
-  val oracles: Map[String, String] = Map(
-    "stream-kmv-incremental" -> streamKmvIncrementalSql)
+  val keys: Seq[Key] = Seq(
+    Key("stream-kmv-incremental", streamKmvIncremental, streamKmvIncrementalSql))
 }

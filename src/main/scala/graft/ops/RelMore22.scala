@@ -10,7 +10,7 @@ import Tables._
   * product-analytics rates every growth dashboard carries (churn,
   * DAU/MAU stickiness).
   */
-object RelMore22 {
+object RelMore22 extends KeyModule {
 
   /** sql-cluster-by — DISTRIBUTE BY + SORT BY (and their fusion
     * CLUSTER BY): the Hive-compat surface that controls PHYSICAL
@@ -154,15 +154,9 @@ object RelMore22 {
       |FROM dm JOIN mau ON mau.month = dm.month
       |ORDER BY dm.month""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-cluster-by" -> sqlClusterBy,
-    "agg-kpi-panel" -> aggKpiPanel,
-    "agg-churn" -> aggChurn,
-    "agg-stickiness" -> aggStickiness)
-
-  val oracles: Map[String, String] = Map(
-    "sql-cluster-by" -> sqlClusterBySql,
-    "agg-kpi-panel" -> aggKpiPanelSql,
-    "agg-churn" -> aggChurnSql,
-    "agg-stickiness" -> aggStickinessSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-cluster-by", sqlClusterBy, sqlClusterBySql),
+    Key("agg-kpi-panel", aggKpiPanel, aggKpiPanelSql),
+    Key("agg-churn", aggChurn, aggChurnSql),
+    Key("agg-stickiness", aggStickiness, aggStickinessSql))
 }

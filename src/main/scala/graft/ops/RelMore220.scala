@@ -43,7 +43,7 @@ import Tables._
   * 1.1-1.7 vs the 0.80 binomial floor), so K must be scaled to the
   * smallest overlap the analysis must resolve.
   */
-object RelMore220 {
+object RelMore220 extends KeyModule {
 
   private val K = 256
   private val Max = 1L << 52
@@ -295,13 +295,8 @@ object RelMore220 {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-theta-anotb" -> aggThetaAnotb,
-    "agg-theta-overlap-matrix" -> aggThetaOverlapMatrix,
-    "sink-bucket-prune" -> sinkBucketPrune)
-
-  val oracles: Map[String, String] = Map(
-    "agg-theta-anotb" -> aggThetaAnotbSql,
-    "agg-theta-overlap-matrix" -> aggThetaOverlapMatrixSql,
-    "sink-bucket-prune" -> sinkBucketPruneSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-theta-anotb", aggThetaAnotb, aggThetaAnotbSql),
+    Key("agg-theta-overlap-matrix", aggThetaOverlapMatrix, aggThetaOverlapMatrixSql),
+    Key("sink-bucket-prune", sinkBucketPrune, sinkBucketPruneSql))
 }

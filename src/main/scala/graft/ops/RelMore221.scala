@@ -9,7 +9,7 @@ import Tables._
   * O(log n) connected-components escape — two named-but-unshipped
   * scale paths from earlier rounds' docs, made real.
   */
-object RelMore221 {
+object RelMore221 extends KeyModule {
 
   /** agg-ddsketch-quantile — RELATIVE-error mergeable quantiles (the
     * DDSketch idea: Masson et al., "DDSketch: a fast and fully-
@@ -194,11 +194,7 @@ object RelMore221 {
       |ORDER BY n_nodes DESC, component
       |LIMIT 20""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-ddsketch-quantile" -> aggDdsketchQuantile,
-    "graph-cc-pointer-doubling" -> graphCcPointerDoubling)
-
-  val oracles: Map[String, String] = Map(
-    "agg-ddsketch-quantile" -> aggDdsketchQuantileSql,
-    "graph-cc-pointer-doubling" -> graphCcPointerDoublingSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-ddsketch-quantile", aggDdsketchQuantile, aggDdsketchQuantileSql),
+    Key("graph-cc-pointer-doubling", graphCcPointerDoubling, graphCcPointerDoublingSql))
 }

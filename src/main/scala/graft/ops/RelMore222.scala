@@ -12,7 +12,7 @@ import Tables._
   * stream-mv-incremental (contrast stream-kmv-incremental, whose
   * array merge is idempotent and carries the guard as belt and
   * braces). */
-object RelMore222 {
+object RelMore222 extends KeyModule {
 
   /** stream-ddsketch-incremental — p50/p90/p99 maintained BY THE
     * STREAM: each micro-batch log-buckets its values with the exact
@@ -101,9 +101,6 @@ object RelMore222 {
     * must equal the one-shot global sketch. */
   val streamDdsketchIncrementalSql: String = RelMore221.aggDdsketchQuantileSql
 
-  val queries: Map[String, Q] = Map(
-    "stream-ddsketch-incremental" -> streamDdsketchIncremental)
-
-  val oracles: Map[String, String] = Map(
-    "stream-ddsketch-incremental" -> streamDdsketchIncrementalSql)
+  val keys: Seq[Key] = Seq(
+    Key("stream-ddsketch-incremental", streamDdsketchIncremental, streamDdsketchIncrementalSql))
 }

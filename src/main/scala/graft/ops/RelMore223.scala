@@ -7,7 +7,7 @@ import Tables._
 /** Round-13 batch A: the quantile-sketch CROSSOVER — the graded
   * comparison that unifies the engine's two sketch layers (r12 verdict
   * item 4). */
-object RelMore223 {
+object RelMore223 extends KeyModule {
 
   /** Equi-width bucket width in cents: 2^19 ≈ $5.2k gives the
     * equi-width sketch ~105 buckets over the ~55M-cent order-value
@@ -153,9 +153,6 @@ object RelMore223 {
        |CROSS JOIN nbe CROSS JOIN nbd
        |ORDER BY e.q_pm""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-sketch-error-crossover" -> aggSketchErrorCrossover)
-
-  val oracles: Map[String, String] = Map(
-    "agg-sketch-error-crossover" -> aggSketchErrorCrossoverSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-sketch-error-crossover", aggSketchErrorCrossover, aggSketchErrorCrossoverSql))
 }

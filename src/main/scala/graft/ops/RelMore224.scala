@@ -8,7 +8,7 @@ import Tables._
 /** Round-14 batch A: second consumer of the density family's IVF scale
   * path (r13 verdict item 3) — mutual nearest neighbors re-derived
   * from IVF-probed candidates and graded against the exact answer. */
-object RelMore224 {
+object RelMore224 extends KeyModule {
 
   /** emb-mutual-nn-ivf — emb-mutual-nn-pairs' 100 TB path, graded:
     * reciprocal 1-NN where each side's nearest neighbor is searched
@@ -236,11 +236,7 @@ object RelMore224 {
       |FROM dx JOIN di USING (decile) CROSS JOIN cand cd
       |ORDER BY dx.decile""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-mutual-nn-ivf" -> embMutualNnIvf,
-    "emb-kdist-elbow-ivf" -> embKdistElbowIvf)
-
-  val oracles: Map[String, String] = Map(
-    "emb-mutual-nn-ivf" -> embMutualNnIvfSql,
-    "emb-kdist-elbow-ivf" -> embKdistElbowIvfSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-mutual-nn-ivf", embMutualNnIvf, embMutualNnIvfSql),
+    Key("emb-kdist-elbow-ivf", embKdistElbowIvf, embKdistElbowIvfSql))
 }

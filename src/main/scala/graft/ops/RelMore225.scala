@@ -13,7 +13,7 @@ import Tables._
   * sensitive value), and t (distributional skew vs the corpus — high-l
   * groups can still leak when their sensitive MIX differs sharply from
   * global, the homogeneity/skewness attack l-diversity misses). */
-object RelMore225 {
+object RelMore225 extends KeyModule {
 
   /** dq-l-diversity — ENTROPY l-diversity per quasi-identifier group
     * (nation × order-priority × year, the dq-k-anonymity QI), sensitive
@@ -169,11 +169,7 @@ object RelMore225 {
       |CROSS JOIN gstats
       |ORDER BY tv_pm DESC, nk, pri, y""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-l-diversity" -> dqLDiversity,
-    "dq-t-closeness" -> dqTCloseness)
-
-  val oracles: Map[String, String] = Map(
-    "dq-l-diversity" -> dqLDiversitySql,
-    "dq-t-closeness" -> dqTClosenessSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-l-diversity", dqLDiversity, dqLDiversitySql),
+    Key("dq-t-closeness", dqTCloseness, dqTClosenessSql))
 }

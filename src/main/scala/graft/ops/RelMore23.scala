@@ -10,7 +10,7 @@ import Tables._
   * view), winsorized robust means, and Kimball bridge-table weight
   * allocation.
   */
-object RelMore23 {
+object RelMore23 extends KeyModule {
 
   /** agg-lorenz-curve — the decile Lorenz curve behind agg-gini:
     * customers ranked by spend ascending, per decile the cumulative
@@ -152,13 +152,8 @@ object RelMore23 {
       |GROUP BY p.p_brand
       |ORDER BY p.p_brand""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-lorenz-curve" -> aggLorenzCurve,
-    "win-winsorize" -> winWinsorize,
-    "join-bridge-alloc" -> joinBridgeAlloc)
-
-  val oracles: Map[String, String] = Map(
-    "agg-lorenz-curve" -> aggLorenzCurveSql,
-    "win-winsorize" -> winWinsorizeSql,
-    "join-bridge-alloc" -> joinBridgeAllocSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-lorenz-curve", aggLorenzCurve, aggLorenzCurveSql),
+    Key("win-winsorize", winWinsorize, winWinsorizeSql),
+    Key("join-bridge-alloc", joinBridgeAlloc, joinBridgeAllocSql))
 }

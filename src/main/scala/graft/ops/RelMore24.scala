@@ -9,7 +9,7 @@ import Tables._
 /** Round-4 continuation batch Y: the CACHE TABLE surface and rolling
   * discrete medians.
   */
-object RelMore24 {
+object RelMore24 extends KeyModule {
 
   /** sql-cache-table — the SQL-level result-cache surface: CACHE TABLE
     * materializes a derived relation columnar-in-memory
@@ -86,11 +86,7 @@ object RelMore24 {
       |WHERE len(frame) = 7
       |ORDER BY user_id, event_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-cache-table" -> sqlCacheTable,
-    "win-moving-median" -> winMovingMedian)
-
-  val oracles: Map[String, String] = Map(
-    "sql-cache-table" -> sqlCacheTableSql,
-    "win-moving-median" -> winMovingMedianSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-cache-table", sqlCacheTable, sqlCacheTableSql),
+    Key("win-moving-median", winMovingMedian, winMovingMedianSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-4 continuation batch Z: cohort lifetime value, the explicit
   * SEMI/ANTI join SQL syntax, and overlapping-interval consolidation.
   */
-object RelMore25 {
+object RelMore25 extends KeyModule {
 
   /** agg-cohort-ltv — cohort lifetime-value triangle: customers
     * grouped by first-order month, revenue accumulated by cohort AGE
@@ -139,13 +139,8 @@ object RelMore25 {
       |GROUP BY o_custkey, ep
       |ORDER BY o_custkey, ep""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cohort-ltv" -> aggCohortLtv,
-    "sql-semi-anti" -> sqlSemiAnti,
-    "win-interval-merge" -> winIntervalMerge)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cohort-ltv" -> aggCohortLtvSql,
-    "sql-semi-anti" -> sqlSemiAntiSql,
-    "win-interval-merge" -> winIntervalMergeSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cohort-ltv", aggCohortLtv, aggCohortLtvSql),
+    Key("sql-semi-anti", sqlSemiAnti, sqlSemiAntiSql),
+    Key("win-interval-merge", winIntervalMerge, winIntervalMergeSql))
 }

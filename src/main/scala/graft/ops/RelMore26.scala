@@ -8,7 +8,7 @@ import Tables._
 /** Round-4 continuation batch AA: exact exponential-decay recency
   * scoring and per-source duplicate-rate reporting.
   */
-object RelMore26 {
+object RelMore26 extends KeyModule {
 
   /** agg-decay-score — recency-weighted engagement with a one-week
     * half-life, EXACT: age in whole weeks behind the corpus watermark,
@@ -85,11 +85,7 @@ object RelMore26 {
       |GROUP BY source
       |ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-decay-score" -> aggDecayScore,
-    "dq-duplicate-rate" -> dqDuplicateRate)
-
-  val oracles: Map[String, String] = Map(
-    "agg-decay-score" -> aggDecayScoreSql,
-    "dq-duplicate-rate" -> dqDuplicateRateSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-decay-score", aggDecayScore, aggDecayScoreSql),
+    Key("dq-duplicate-rate", dqDuplicateRate, dqDuplicateRateSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-5 batch A: the approximate-boundary sibling of the exact
   * equi-depth family — quantile bucketing with NO total order at all.
   */
-object RelMore27 {
+object RelMore27 extends KeyModule {
 
   /** agg-decile-approx — equi-depth decile report via approx_percentile
     * BOUNDARIES + comparison bucketing: one pass computes the 9 decile
@@ -55,9 +55,6 @@ object RelMore27 {
       |GROUP BY 1
       |ORDER BY bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-decile-approx" -> aggDecileApprox)
-
-  val oracles: Map[String, String] = Map(
-    "agg-decile-approx" -> aggDecileApproxSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-decile-approx", aggDecileApprox, aggDecileApproxSql))
 }

@@ -12,7 +12,7 @@ import Tables._
   * quality bucketing on approximate boundaries, per-dimension embedding
   * standardization, and an integer-exact share-drift monitor.
   */
-object RelMore28 {
+object RelMore28 extends KeyModule {
 
   private val NumQueries = 10 // vec_id < 10 are the query vectors
   private val Shortlist = 50  // ADC candidates per query before rerank (10× k)
@@ -411,19 +411,11 @@ object RelMore28 {
       |FROM bt, tot
       |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "ann-adc-rerank" -> annAdcRerank,
-    "dedup-semantic-ivf" -> dedupSemanticIvf,
-    "sample-reservoir-key" -> sampleReservoirKey,
-    "text-quality-buckets" -> textQualityBuckets,
-    "emb-dim-standardize" -> embDimStandardize,
-    "dq-drift-ppm" -> dqDriftPpm)
-
-  val oracles: Map[String, String] = Map(
-    "ann-adc-rerank" -> annAdcRerankSql,
-    "dedup-semantic-ivf" -> dedupSemanticIvfSql,
-    "sample-reservoir-key" -> sampleReservoirKeySql,
-    "text-quality-buckets" -> textQualityBucketsSql,
-    "emb-dim-standardize" -> embDimStandardizeSql,
-    "dq-drift-ppm" -> dqDriftPpmSql)
+  val keys: Seq[Key] = Seq(
+    Key("ann-adc-rerank", annAdcRerank, annAdcRerankSql),
+    Key("dedup-semantic-ivf", dedupSemanticIvf, dedupSemanticIvfSql),
+    Key("sample-reservoir-key", sampleReservoirKey, sampleReservoirKeySql),
+    Key("text-quality-buckets", textQualityBuckets, textQualityBucketsSql),
+    Key("emb-dim-standardize", embDimStandardize, embDimStandardizeSql),
+    Key("dq-drift-ppm", dqDriftPpm, dqDriftPpmSql))
 }

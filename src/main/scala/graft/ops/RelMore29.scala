@@ -11,7 +11,7 @@ import Tables._
   * remainder stratified allocation, a real iterative BPE merge trainer,
   * and the nearest-event generalization of the as-of join.
   */
-object RelMore29 {
+object RelMore29 extends KeyModule {
 
   /** win-ewma — exponentially weighted moving average of order value
     * per customer, half-life = 1 order, over a BOUNDED 8-row trailing
@@ -422,19 +422,11 @@ object RelMore29 {
       |  WHERE is_p = 1)
       |ORDER BY purchase_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-ewma" -> winEwma,
-    "graph-label-propagation" -> graphLabelPropagation,
-    "sql-hints" -> sqlHints,
-    "sample-weighted-alloc" -> sampleWeightedAlloc,
-    "text-bpe-merge" -> textBpeMerge,
-    "join-asof-nearest" -> joinAsofNearest)
-
-  val oracles: Map[String, String] = Map(
-    "win-ewma" -> winEwmaSql,
-    "graph-label-propagation" -> graphLabelPropagationSql,
-    "sql-hints" -> sqlHintsSql,
-    "sample-weighted-alloc" -> sampleWeightedAllocSql,
-    "text-bpe-merge" -> textBpeMergeSql,
-    "join-asof-nearest" -> joinAsofNearestSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-ewma", winEwma, winEwmaSql),
+    Key("graph-label-propagation", graphLabelPropagation, graphLabelPropagationSql),
+    Key("sql-hints", sqlHints, sqlHintsSql),
+    Key("sample-weighted-alloc", sampleWeightedAlloc, sampleWeightedAllocSql),
+    Key("text-bpe-merge", textBpeMerge, textBpeMergeSql),
+    Key("join-asof-nearest", joinAsofNearest, joinAsofNearestSql))
 }

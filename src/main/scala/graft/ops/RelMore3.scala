@@ -11,7 +11,7 @@ import Tables._
   * perceptual-hash (blockhash) near-dup pass over the multimodal
   * payload plumbing.
   */
-object RelMore3 {
+object RelMore3 extends KeyModule {
 
   /** agg-ohlc-bars — OHLC downsampling of the event stream into 6-hour
     * bars per event type: open/close resolved by explicit first/last
@@ -247,15 +247,9 @@ object RelMore3 {
        |WHERE mismatches(pa.phash, pb.phash) <= 6
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-ohlc-bars" -> aggOhlcBars,
-    "func-hash-suite" -> funcHashSuite,
-    "func-interval-suite" -> funcIntervalSuite,
-    "mm-blockhash-dedup" -> mmBlockhashDedup)
-
-  val oracles: Map[String, String] = Map(
-    "agg-ohlc-bars" -> aggOhlcBarsSql,
-    "func-hash-suite" -> funcHashSuiteSql,
-    "func-interval-suite" -> funcIntervalSuiteSql,
-    "mm-blockhash-dedup" -> mmBlockhashDedupSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-ohlc-bars", aggOhlcBars, aggOhlcBarsSql),
+    Key("func-hash-suite", funcHashSuite, funcHashSuiteSql),
+    Key("func-interval-suite", funcIntervalSuite, funcIntervalSuiteSql),
+    Key("mm-blockhash-dedup", mmBlockhashDedup, mmBlockhashDedupSql))
 }

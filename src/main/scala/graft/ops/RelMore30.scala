@@ -9,7 +9,7 @@ import Tables._
 /** Round-5 batch D: the fully-composed IVFADC retrieval index, the
   * inference half of the BPE trainer, and a row-hash table diff.
   */
-object RelMore30 {
+object RelMore30 extends KeyModule {
 
   private val NumQueries = 10
   private val NumCells = 8
@@ -348,13 +348,8 @@ object RelMore30 {
       |GROUP BY status
       |ORDER BY status""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "ann-ivf-adc" -> annIvfAdc,
-    "text-tokenizer-apply" -> textTokenizerApply,
-    "dq-table-diff" -> dqTableDiff)
-
-  val oracles: Map[String, String] = Map(
-    "ann-ivf-adc" -> annIvfAdcSql,
-    "text-tokenizer-apply" -> textTokenizerApplySql,
-    "dq-table-diff" -> dqTableDiffSql)
+  val keys: Seq[Key] = Seq(
+    Key("ann-ivf-adc", annIvfAdc, annIvfAdcSql),
+    Key("text-tokenizer-apply", textTokenizerApply, textTokenizerApplySql),
+    Key("dq-table-diff", dqTableDiff, dqTableDiffSql))
 }

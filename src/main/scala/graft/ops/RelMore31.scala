@@ -9,7 +9,7 @@ import Tables._
 /** Round-5 batch E: dynamic partition overwrite, the named-WINDOW SQL
   * surface, and a scale-safe 2-D skyline.
   */
-object RelMore31 {
+object RelMore31 extends KeyModule {
 
   /** sink-dynamic-overwrite — partition-scoped replacement: with
     * partitionOverwriteMode=dynamic, an Overwrite write replaces ONLY
@@ -156,13 +156,8 @@ object RelMore31 {
       |FROM per p JOIN frontier f ON f.n_orders = p.n_orders AND f.gmax = p.cents
       |ORDER BY p.n_orders DESC, p.o_custkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sink-dynamic-overwrite" -> sinkDynamicOverwrite,
-    "sql-window-clause" -> sqlWindowClause,
-    "agg-skyline-2d" -> aggSkyline2d)
-
-  val oracles: Map[String, String] = Map(
-    "sink-dynamic-overwrite" -> sinkDynamicOverwriteSql,
-    "sql-window-clause" -> sqlWindowClauseSql,
-    "agg-skyline-2d" -> aggSkyline2dSql)
+  val keys: Seq[Key] = Seq(
+    Key("sink-dynamic-overwrite", sinkDynamicOverwrite, sinkDynamicOverwriteSql),
+    Key("sql-window-clause", sqlWindowClause, sqlWindowClauseSql),
+    Key("agg-skyline-2d", aggSkyline2d, aggSkyline2dSql))
 }

@@ -10,7 +10,7 @@ import Tables._
   * Jaccard similarity for link prediction, and AQE's runtime join
   * re-plan demonstrated as a graded contract.
   */
-object RelMore32 {
+object RelMore32 extends KeyModule {
 
   /** emb-kmeans-update — the M-step emb-kmeans-assign stops short of:
     * re-assign every vector to its nearest label-seeded centroid (the
@@ -199,13 +199,8 @@ object RelMore32 {
       |GROUP BY c.c_custkey, c.c_name
       |ORDER BY c.c_custkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-kmeans-update" -> embKmeansUpdate,
-    "graph-jaccard-similarity" -> graphJaccardSimilarity,
-    "join-aqe-replan" -> joinAqeReplan)
-
-  val oracles: Map[String, String] = Map(
-    "emb-kmeans-update" -> embKmeansUpdateSql,
-    "graph-jaccard-similarity" -> graphJaccardSimilaritySql,
-    "join-aqe-replan" -> joinAqeReplanSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-kmeans-update", embKmeansUpdate, embKmeansUpdateSql),
+    Key("graph-jaccard-similarity", graphJaccardSimilarity, graphJaccardSimilaritySql),
+    Key("join-aqe-replan", joinAqeReplan, joinAqeReplanSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-5 batch G (non-streaming half): parameterized SQL and the
   * crypto-function round-trip.
   */
-object RelMore33 {
+object RelMore33 extends KeyModule {
 
   /** sql-parameterized — Spark's parameterized SQL API: named parameter
     * markers (`:status`, `:floor_cents`) bound through the sql(query,
@@ -73,11 +73,7 @@ object RelMore33 {
       |WHERE c_custkey % 211 = 0
       |ORDER BY c_custkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-parameterized" -> sqlParameterized,
-    "func-crypto-roundtrip" -> funcCryptoRoundtrip)
-
-  val oracles: Map[String, String] = Map(
-    "sql-parameterized" -> sqlParameterizedSql,
-    "func-crypto-roundtrip" -> funcCryptoRoundtripSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-parameterized", sqlParameterized, sqlParameterizedSql),
+    Key("func-crypto-roundtrip", funcCryptoRoundtrip, funcCryptoRoundtripSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-5 batch H: the mergeable top-k contract and the measured
   * accuracy of IVF-bucketed semantic dedup.
   */
-object RelMore34 {
+object RelMore34 extends KeyModule {
 
   /** agg-topk-merge — top-k as a MERGEABLE summary: each of 4 shards
     * (orderkey mod 4 — standing in for 4 ingest regions or 4 daily
@@ -156,11 +156,7 @@ object RelMore34 {
        |FROM truth LEFT JOIN fnd USING (va, vb)
        |ORDER BY rk""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-topk-merge" -> aggTopkMerge,
-    "dedup-ivf-recall" -> dedupIvfRecall)
-
-  val oracles: Map[String, String] = Map(
-    "agg-topk-merge" -> aggTopkMergeSql,
-    "dedup-ivf-recall" -> dedupIvfRecallSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-topk-merge", aggTopkMerge, aggTopkMergeSql),
+    Key("dedup-ivf-recall", dedupIvfRecall, dedupIvfRecallSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-5 batch I: exact audience overlap from mergeable bitmap
   * artifacts.
   */
-object RelMore35 {
+object RelMore35 extends KeyModule {
 
   /** agg-bitmap-intersect — exact audience OVERLAP between every pair
     * of event types, computed from the same persistable bitmap shards
@@ -81,9 +81,6 @@ object RelMore35 {
       |LEFT JOIN ovl o ON o.t1 = p.t1 AND o.t2 = p.t2
       |ORDER BY p.t1, p.t2""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-bitmap-intersect" -> aggBitmapIntersect)
-
-  val oracles: Map[String, String] = Map(
-    "agg-bitmap-intersect" -> aggBitmapIntersectSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-bitmap-intersect", aggBitmapIntersect, aggBitmapIntersectSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-5 batch J: the SQL-standard PERCENTILE_CONT/DISC surface and
   * payload chunking for oversized binary columns.
   */
-object RelMore36 {
+object RelMore36 extends KeyModule {
 
   /** sql-percentile-cont — the SQL-standard inverse-distribution
     * functions PERCENTILE_CONT / PERCENTILE_DISC (WITHIN GROUP ORDER
@@ -112,11 +112,7 @@ object RelMore36 {
        |GROUP BY source
        |ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-percentile-cont" -> sqlPercentileCont,
-    "mm-payload-chunking" -> mmPayloadChunking)
-
-  val oracles: Map[String, String] = Map(
-    "sql-percentile-cont" -> sqlPercentileContSql,
-    "mm-payload-chunking" -> mmPayloadChunkingSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-percentile-cont", sqlPercentileCont, sqlPercentileContSql),
+    Key("mm-payload-chunking", mmPayloadChunking, mmPayloadChunkingSql))
 }

@@ -9,7 +9,7 @@ import Tables._
   * estimate HLL cannot give), and Z-order multi-column clustering with
   * measured per-file pruning spans.
   */
-object RelMore37 {
+object RelMore37 extends KeyModule {
 
   private val K = 128
 
@@ -203,11 +203,7 @@ object RelMore37 {
        |GROUP BY layout, file_id
        |ORDER BY layout, file_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-kmv-intersect" -> aggKmvIntersect,
-    "sink-zorder-layout" -> sinkZorderLayout)
-
-  val oracles: Map[String, String] = Map(
-    "agg-kmv-intersect" -> aggKmvIntersectSql,
-    "sink-zorder-layout" -> sinkZorderLayoutSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-kmv-intersect", aggKmvIntersect, aggKmvIntersectSql),
+    Key("sink-zorder-layout", sinkZorderLayout, sinkZorderLayoutSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-5 batch L: the count-min width/accuracy curve and a Zipf
   * power-law fit over token frequencies.
   */
-object RelMore38 {
+object RelMore38 extends KeyModule {
 
   private val Depth = 3
   private val HashA = Seq(40087L, 55579L, 70001L)
@@ -152,11 +152,7 @@ object RelMore38 {
        |            ((rank * sxx - sx * sx) * (rank * syy - sy * sy)) + 0.5) AS BIGINT) AS r2_milli
        |FROM fit, totals""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cms-width-curve" -> aggCmsWidthCurve,
-    "text-zipf-fit" -> textZipfFit)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cms-width-curve" -> aggCmsWidthCurveSql,
-    "text-zipf-fit" -> textZipfFitSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cms-width-curve", aggCmsWidthCurve, aggCmsWidthCurveSql),
+    Key("text-zipf-fit", textZipfFit, textZipfFitSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-5 batch M: directed strongly-connected components, reciprocal-
   * rank retrieval fusion, and the Mann-Kendall trend test.
   */
-object RelMore39 {
+object RelMore39 extends KeyModule {
 
   /** graph-scc — strongly connected components of a DIRECTED graph,
     * completing the connectivity family (graph-cc-hashmin is the
@@ -248,13 +248,8 @@ object RelMore39 {
       |       CASE WHEN z_milli >= 1960 THEN 'up' WHEN z_milli <= -1960 THEN 'down' ELSE 'flat' END AS trend
       |FROM zed ORDER BY r_name""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "graph-scc" -> graphScc,
-    "ann-rrf-fusion" -> annRrfFusion,
-    "dq-trend-mk" -> dqTrendMk)
-
-  val oracles: Map[String, String] = Map(
-    "graph-scc" -> graphSccSql,
-    "ann-rrf-fusion" -> annRrfFusionSql,
-    "dq-trend-mk" -> dqTrendMkSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-scc", graphScc, graphSccSql),
+    Key("ann-rrf-fusion", annRrfFusion, annRrfFusionSql),
+    Key("dq-trend-mk", dqTrendMk, dqTrendMkSql))
 }

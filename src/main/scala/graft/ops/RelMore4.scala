@@ -10,7 +10,7 @@ import Tables._
   * single-pass higher moments (skewness/kurtosis from raw power sums),
   * and the unpivot/melt reshape.
   */
-object RelMore4 {
+object RelMore4 extends KeyModule {
 
   /** sql-tpch-q3 — third SQL-front-door query (with q1, q6): the
     * shipping-priority 3-table join + group + top-10, one SQL string
@@ -188,17 +188,10 @@ object RelMore4 {
       |SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM src
       |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-tpch-q3" -> sqlTpchQ3,
-    "join-null-safe" -> joinNullSafe,
-    "expr-try-arith" -> exprTryArith,
-    "agg-moments-suite" -> aggMomentsSuite,
-    "agg-unpivot" -> aggUnpivot)
-
-  val oracles: Map[String, String] = Map(
-    "sql-tpch-q3" -> sqlTpchQ3Sql,
-    "join-null-safe" -> joinNullSafeSql,
-    "expr-try-arith" -> exprTryArithSql,
-    "agg-moments-suite" -> aggMomentsSuiteSql,
-    "agg-unpivot" -> aggUnpivotSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-tpch-q3", sqlTpchQ3, sqlTpchQ3Sql),
+    Key("join-null-safe", joinNullSafe, joinNullSafeSql),
+    Key("expr-try-arith", exprTryArith, exprTryArithSql),
+    Key("agg-moments-suite", aggMomentsSuite, aggMomentsSuiteSql),
+    Key("agg-unpivot", aggUnpivot, aggUnpivotSql))
 }

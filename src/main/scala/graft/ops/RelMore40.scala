@@ -38,7 +38,7 @@ import Tables._
   * plans hold when the generated corpus is replaced by a real 100 TB
   * embedding table.
   */
-object RelMore40 {
+object RelMore40 extends KeyModule {
 
   private val NVecs = 512
   private val Dims = 8
@@ -273,11 +273,7 @@ object RelMore40 {
        |GROUP BY pp.nprobe
        |ORDER BY pp.nprobe""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-clustered-separation" -> embClusteredSeparation,
-    "ann-clustered-recall" -> annClusteredRecall)
-
-  val oracles: Map[String, String] = Map(
-    "emb-clustered-separation" -> embClusteredSeparationSql,
-    "ann-clustered-recall" -> annClusteredRecallSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-clustered-separation", embClusteredSeparation, embClusteredSeparationSql),
+    Key("ann-clustered-recall", annClusteredRecall, annClusteredRecallSql))
 }

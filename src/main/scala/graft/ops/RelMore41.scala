@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-6 batch B: the optimizer-rule-exercising projection query and
   * the audit-log compaction job. */
-object RelMore41 {
+object RelMore41 extends KeyModule {
 
   /** emb-plane-projection — sign-LSH plane projections written in the
     * DECLARATIVE higher-order-function form:
@@ -137,11 +137,7 @@ object RelMore41 {
       |       CAST(n_events - 1 AS BIGINT) AS n_events_compacted
       |FROM ranked WHERE rn = 1 ORDER BY table_name""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-plane-projection" -> embPlaneProjection,
-    "sink-audit-compact" -> sinkAuditCompact)
-
-  val oracles: Map[String, String] = Map(
-    "emb-plane-projection" -> embPlaneProjectionSql,
-    "sink-audit-compact" -> sinkAuditCompactSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-plane-projection", embPlaneProjection, embPlaneProjectionSql),
+    Key("sink-audit-compact", sinkAuditCompact, sinkAuditCompactSql))
 }

@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-6 batch C: matrix-free PCA power iteration, the corpus dataset
   * card, and the partition-layout advisor. */
-object RelMore42 {
+object RelMore42 extends KeyModule {
 
   /** emb-power-iteration — top right-singular-vector of the embedding
     * matrix by matrix-free power iteration: v ← Xᵀ(Xv), L∞-normalized,
@@ -190,13 +190,8 @@ object RelMore42 {
        |) ORDER BY candidate""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "emb-power-iteration" -> embPowerIteration,
-    "text-dataset-card" -> textDatasetCard,
-    "layout-partition-advisor" -> layoutPartitionAdvisor)
-
-  val oracles: Map[String, String] = Map(
-    "emb-power-iteration" -> embPowerIterationSql,
-    "text-dataset-card" -> textDatasetCardSql,
-    "layout-partition-advisor" -> layoutPartitionAdvisorSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-power-iteration", embPowerIteration, embPowerIterationSql),
+    Key("text-dataset-card", textDatasetCard, textDatasetCardSql),
+    Key("layout-partition-advisor", layoutPartitionAdvisor, layoutPartitionAdvisorSql))
 }

@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-6 batch D: the LSH banding S-curve, manifest time travel, and
   * the EXECUTE IMMEDIATE scripting surface. */
-object RelMore43 {
+object RelMore43 extends KeyModule {
 
   private val Seeds = 12
   /** (bands, rowsPerBand) sweep — every divisor split of the 12-slot
@@ -168,13 +168,8 @@ object RelMore43 {
       |FROM orders WHERE o_orderstatus = 'O'
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dedup-banding-curve" -> dedupBandingCurve,
-    "sink-time-travel" -> sinkTimeTravel,
-    "sql-execute-immediate" -> sqlExecuteImmediate)
-
-  val oracles: Map[String, String] = Map(
-    "dedup-banding-curve" -> dedupBandingCurveSql,
-    "sink-time-travel" -> sinkTimeTravelSql,
-    "sql-execute-immediate" -> sqlExecuteImmediateSql)
+  val keys: Seq[Key] = Seq(
+    Key("dedup-banding-curve", dedupBandingCurve, dedupBandingCurveSql),
+    Key("sink-time-travel", sinkTimeTravel, sinkTimeTravelSql),
+    Key("sql-execute-immediate", sqlExecuteImmediate, sqlExecuteImmediateSql))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Round-6 batch E: k-center coreset selection, HITS, SQL pipe syntax. */
-object RelMore44 {
+object RelMore44 extends KeyModule {
 
   private val CoresetK = 8
 
@@ -202,13 +202,8 @@ object RelMore44 {
       |FROM orders WHERE o_orderstatus = 'F'
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sample-coreset-kcenter" -> sampleCoresetKcenter,
-    "graph-hits" -> graphHits,
-    "sql-pipe-syntax" -> sqlPipeSyntax)
-
-  val oracles: Map[String, String] = Map(
-    "sample-coreset-kcenter" -> sampleCoresetKcenterSql,
-    "graph-hits" -> graphHitsSql,
-    "sql-pipe-syntax" -> sqlPipeSyntaxSql)
+  val keys: Seq[Key] = Seq(
+    Key("sample-coreset-kcenter", sampleCoresetKcenter, sampleCoresetKcenterSql),
+    Key("graph-hits", graphHits, graphHitsSql),
+    Key("sql-pipe-syntax", sqlPipeSyntax, sqlPipeSyntaxSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-6 batch F: temperature-scaled mixing, binary-embedding
   * retrieval, and the shard random-access index. */
-object RelMore45 {
+object RelMore45 extends KeyModule {
 
   private val MixBudget = 100000L
 
@@ -232,13 +232,8 @@ object RelMore45 {
       |FROM probes p JOIN payloads y USING (shard_id)
       |ORDER BY p.doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-temperature-mix" -> textTemperatureMix,
-    "emb-binary-retrieval" -> embBinaryRetrieval,
-    "mm-shard-index" -> mmShardIndex)
-
-  val oracles: Map[String, String] = Map(
-    "text-temperature-mix" -> textTemperatureMixSql,
-    "emb-binary-retrieval" -> embBinaryRetrievalSql,
-    "mm-shard-index" -> mmShardIndexSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-temperature-mix", textTemperatureMix, textTemperatureMixSql),
+    Key("emb-binary-retrieval", embBinaryRetrieval, embBinaryRetrievalSql),
+    Key("mm-shard-index", mmShardIndex, mmShardIndexSql))
 }

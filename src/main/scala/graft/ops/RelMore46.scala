@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-6 batch G: modularity scoring, the dedup pipeline funnel, and
   * hash-width sizing. */
-object RelMore46 {
+object RelMore46 extends KeyModule {
 
   /** graph-modularity — Newman modularity Q = Σ_c (m_c/m − (d_c/2m)²)
     * for two candidate partitions of the co-purchase part graph
@@ -277,13 +277,8 @@ object RelMore46 {
        |FROM grouped GROUP BY width ORDER BY width""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "graph-modularity" -> graphModularity,
-    "dedup-pipeline-funnel" -> dedupPipelineFunnel,
-    "dq-hash-width" -> dqHashWidth)
-
-  val oracles: Map[String, String] = Map(
-    "graph-modularity" -> graphModularitySql,
-    "dedup-pipeline-funnel" -> dedupPipelineFunnelSql,
-    "dq-hash-width" -> dqHashWidthSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-modularity", graphModularity, graphModularitySql),
+    Key("dedup-pipeline-funnel", dedupPipelineFunnel, dedupPipelineFunnelSql),
+    Key("dq-hash-width", dqHashWidth, dqHashWidthSql))
 }

@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-6 batch H: SCD2 as-of joins, write-audit-publish, tokenizer
   * fertility. */
-object RelMore47 {
+object RelMore47 extends KeyModule {
 
   /** join-scd2-asof — the point-in-time fact→dimension join that SCD2
     * history exists FOR: every order resolves the customer-segment
@@ -160,13 +160,8 @@ object RelMore47 {
       |       (CAST(sum(c) AS BIGINT) * 1000) // CAST(sum(t) AS BIGINT) AS chars_per_token_milli
       |FROM per GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join-scd2-asof" -> joinScd2Asof,
-    "sink-write-audit-publish" -> sinkWriteAuditPublish,
-    "text-tokenizer-fertility" -> textTokenizerFertility)
-
-  val oracles: Map[String, String] = Map(
-    "join-scd2-asof" -> joinScd2AsofSql,
-    "sink-write-audit-publish" -> sinkWriteAuditPublishSql,
-    "text-tokenizer-fertility" -> textTokenizerFertilitySql)
+  val keys: Seq[Key] = Seq(
+    Key("join-scd2-asof", joinScd2Asof, joinScd2AsofSql),
+    Key("sink-write-audit-publish", sinkWriteAuditPublish, sinkWriteAuditPublishSql),
+    Key("text-tokenizer-fertility", textTokenizerFertility, textTokenizerFertilitySql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-6 batch I: collocation mining, the kNN graph, role-playing
   * date dims. */
-object RelMore48 {
+object RelMore48 extends KeyModule {
 
   /** text-collocation-pmi — collocation mining by PMI ORDER without
     * computing a single log: PMI = log(P(ab)/(P(a)P(b))) is monotone in
@@ -177,13 +177,8 @@ object RelMore48 {
       |GROUP BY 1, 2
       |ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-collocation-pmi" -> textCollocationPmi,
-    "ann-knn-graph" -> annKnnGraph,
-    "join-role-playing-dates" -> joinRolePlayingDates)
-
-  val oracles: Map[String, String] = Map(
-    "text-collocation-pmi" -> textCollocationPmiSql,
-    "ann-knn-graph" -> annKnnGraphSql,
-    "join-role-playing-dates" -> joinRolePlayingDatesSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-collocation-pmi", textCollocationPmi, textCollocationPmiSql),
+    Key("ann-knn-graph", annKnnGraph, annKnnGraphSql),
+    Key("join-role-playing-dates", joinRolePlayingDates, joinRolePlayingDatesSql))
 }

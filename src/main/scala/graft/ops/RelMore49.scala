@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-6 batch J: Hilbert-vs-Z-order layout, KS drift, partition
   * evolution. */
-object RelMore49 {
+object RelMore49 extends KeyModule {
 
   private val GridN = 16 // 16×16 cells, 4 bits per axis
 
@@ -253,13 +253,8 @@ object RelMore49 {
       |  FROM (SELECT od FROM e1 UNION ALL SELECT od FROM e2)
       |) ORDER BY epoch""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sort-hilbert-vs-zorder" -> sortHilbertVsZorder,
-    "dq-ks-drift" -> dqKsDrift,
-    "sink-partition-evolution" -> sinkPartitionEvolution)
-
-  val oracles: Map[String, String] = Map(
-    "sort-hilbert-vs-zorder" -> sortHilbertVsZorderSql,
-    "dq-ks-drift" -> dqKsDriftSql,
-    "sink-partition-evolution" -> sinkPartitionEvolutionSql)
+  val keys: Seq[Key] = Seq(
+    Key("sort-hilbert-vs-zorder", sortHilbertVsZorder, sortHilbertVsZorderSql),
+    Key("dq-ks-drift", dqKsDrift, dqKsDriftSql),
+    Key("sink-partition-evolution", sinkPartitionEvolution, sinkPartitionEvolutionSql))
 }

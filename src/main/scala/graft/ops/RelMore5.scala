@@ -10,7 +10,7 @@ import Tables._
   * struct round-trip, integer-exact TF-IDF term ranking, and product
   * quantization — the 100 TB embedding-store compression step.
   */
-object RelMore5 {
+object RelMore5 extends KeyModule {
 
   /** win-share-suite — ratio-to-report analytics: each order's share of
     * its status group, the cumulative share in price order, and
@@ -227,15 +227,9 @@ object RelMore5 {
       |GROUP BY vec_id
       |ORDER BY vec_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-share-suite" -> winShareSuite,
-    "expr-json-struct" -> exprJsonStruct,
-    "text-tfidf-topterms" -> textTfidfTopterms,
-    "emb-pq-assign" -> embPqAssign)
-
-  val oracles: Map[String, String] = Map(
-    "win-share-suite" -> winShareSuiteSql,
-    "expr-json-struct" -> exprJsonStructSql,
-    "text-tfidf-topterms" -> textTfidfToptermsSql,
-    "emb-pq-assign" -> embPqAssignSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-share-suite", winShareSuite, winShareSuiteSql),
+    Key("expr-json-struct", exprJsonStruct, exprJsonStructSql),
+    Key("text-tfidf-topterms", textTfidfTopterms, textTfidfToptermsSql),
+    Key("emb-pq-assign", embPqAssign, embPqAssignSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-6 batch K: MRL truncation curve on clusterable data, vacuum
   * after compaction, optimistic commit fencing. */
-object RelMore50 {
+object RelMore50 extends KeyModule {
 
   /** emb-mrl-curve-clustered — the Matryoshka truncation CURVE on the
     * clustered fixture (RelMore40): recall@3 of prefix-dims ∈ {2,4,8}
@@ -226,13 +226,8 @@ object RelMore50 {
       |  SELECT 'w2', 2, 'v1', 'COMMITTED_v2', tot.t FROM tot
       |) ORDER BY writer, attempt""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-mrl-curve-clustered" -> embMrlCurveClustered,
-    "sink-vacuum-expire" -> sinkVacuumExpire,
-    "sink-commit-fence" -> sinkCommitFence)
-
-  val oracles: Map[String, String] = Map(
-    "emb-mrl-curve-clustered" -> embMrlCurveClusteredSql,
-    "sink-vacuum-expire" -> sinkVacuumExpireSql,
-    "sink-commit-fence" -> sinkCommitFenceSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-mrl-curve-clustered", embMrlCurveClustered, embMrlCurveClusteredSql),
+    Key("sink-vacuum-expire", sinkVacuumExpire, sinkVacuumExpireSql),
+    Key("sink-commit-fence", sinkCommitFence, sinkCommitFenceSql))
 }

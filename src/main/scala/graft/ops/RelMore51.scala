@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-6 batch L: deterministic random walks, drill-across facts,
   * language-ID confusion matrix. */
-object RelMore51 {
+object RelMore51 extends KeyModule {
 
   /** graph-hash-walk — node2vec-style random-walk sampling made
     * DETERMINISTIC: from 5 seed suppliers, 4 steps on the
@@ -205,13 +205,8 @@ object RelMore51 {
        |ORDER BY true_lang, pred_lang""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "graph-hash-walk" -> graphHashWalk,
-    "join-drill-across" -> joinDrillAcross,
-    "text-langid-confusion" -> textLangidConfusion)
-
-  val oracles: Map[String, String] = Map(
-    "graph-hash-walk" -> graphHashWalkSql,
-    "join-drill-across" -> joinDrillAcrossSql,
-    "text-langid-confusion" -> textLangidConfusionSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-hash-walk", graphHashWalk, graphHashWalkSql),
+    Key("join-drill-across", joinDrillAcross, joinDrillAcrossSql),
+    Key("text-langid-confusion", textLangidConfusion, textLangidConfusionSql))
 }

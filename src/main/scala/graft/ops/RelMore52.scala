@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-6 batch M: energy distance for embedding drift, dedup
   * precision/recall. */
-object RelMore52 {
+object RelMore52 extends KeyModule {
 
   /** emb-energy-distance — the two-sample test for VECTOR spaces
     * (dq-ks-drift's sibling one abstraction up): energy distance
@@ -244,11 +244,7 @@ object RelMore52 {
        |FROM pr""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "emb-energy-distance" -> embEnergyDistance,
-    "dedup-eval-prf" -> dedupEvalPrf)
-
-  val oracles: Map[String, String] = Map(
-    "emb-energy-distance" -> embEnergyDistanceSql,
-    "dedup-eval-prf" -> dedupEvalPrfSql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-energy-distance", embEnergyDistance, embEnergyDistanceSql),
+    Key("dedup-eval-prf", dedupEvalPrf, dedupEvalPrfSql))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Round-6 batch N: CUPED variance reduction, SQL scalar UDFs. */
-object RelMore53 {
+object RelMore53 extends KeyModule {
 
   /** agg-cuped-adjust — CUPED, the experimentation-platform variance
     * trick: using each unit's PRE-period metric X as a covariate,
@@ -113,11 +113,7 @@ object RelMore53 {
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cuped-adjust" -> aggCupedAdjust,
-    "sql-scalar-udf" -> sqlScalarUdf)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cuped-adjust" -> aggCupedAdjustSql,
-    "sql-scalar-udf" -> sqlScalarUdfSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cuped-adjust", aggCupedAdjust, aggCupedAdjustSql),
+    Key("sql-scalar-udf", sqlScalarUdf, sqlScalarUdfSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-6 batch O: deletion-vector merge-on-read, Mann-Whitney rank-sum
   * drift test, pps Poisson sampling with Horvitz-Thompson estimation. */
-object RelMore54 {
+object RelMore54 extends KeyModule {
 
   /** sink-deletion-vectors — merge-on-read position deletes, the
     * lakehouse DELETE that never rewrites data files: a DELETE compiles
@@ -241,13 +241,8 @@ object RelMore54 {
        |FROM p""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "sink-deletion-vectors" -> sinkDeletionVectors,
-    "dq-mann-whitney" -> dqMannWhitney,
-    "sample-poisson-ht" -> samplePoissonHt)
-
-  val oracles: Map[String, String] = Map(
-    "sink-deletion-vectors" -> sinkDeletionVectorsSql,
-    "dq-mann-whitney" -> dqMannWhitneySql,
-    "sample-poisson-ht" -> samplePoissonHtSql)
+  val keys: Seq[Key] = Seq(
+    Key("sink-deletion-vectors", sinkDeletionVectors, sinkDeletionVectorsSql),
+    Key("dq-mann-whitney", dqMannWhitney, dqMannWhitneySql),
+    Key("sample-poisson-ht", samplePoissonHt, samplePoissonHtSql))
 }

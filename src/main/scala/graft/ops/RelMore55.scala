@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-7 batch A: zone-map skipping measurement, join fan-out
   * pre-flight. */
-object RelMore55 {
+object RelMore55 extends KeyModule {
 
   private val ZmFiles = 32
 
@@ -150,11 +150,7 @@ object RelMore55 {
       |FROM unioned
       |ORDER BY rank""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "layout-zonemap-skipping" -> layoutZonemapSkipping,
-    "dq-join-fanout-preflight" -> dqJoinFanoutPreflight)
-
-  val oracles: Map[String, String] = Map(
-    "layout-zonemap-skipping" -> layoutZonemapSkippingSql,
-    "dq-join-fanout-preflight" -> dqJoinFanoutPreflightSql)
+  val keys: Seq[Key] = Seq(
+    Key("layout-zonemap-skipping", layoutZonemapSkipping, layoutZonemapSkippingSql),
+    Key("dq-join-fanout-preflight", dqJoinFanoutPreflight, dqJoinFanoutPreflightSql))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import Tables._
 
 /** Round-7 batch B: engine-neutral HyperLogLog precision curve. */
-object RelMore56 {
+object RelMore56 extends KeyModule {
 
   private val HllPs = Seq(6, 9, 12)
 
@@ -117,9 +117,6 @@ object RelMore56 {
        |ORDER BY p""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-hll-precision-curve" -> aggHllPrecisionCurve)
-
-  val oracles: Map[String, String] = Map(
-    "agg-hll-precision-curve" -> aggHllPrecisionCurveSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-hll-precision-curve", aggHllPrecisionCurve, aggHllPrecisionCurveSql))
 }

@@ -11,7 +11,7 @@ import Tables._
   * chi-square categorical drift, local clustering coefficient,
   * assignment-margin curation gate, systematic sampling, RAKE keyword
   * extraction. */
-object RelMore57 {
+object RelMore57 extends KeyModule {
 
   /** agg-survival-km — Kaplan-Meier survival over customer order
     * lifetimes: per customer, lifetime = whole days between first and
@@ -507,25 +507,14 @@ object RelMore57 {
        |LIMIT 20""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "agg-survival-km" -> aggSurvivalKm,
-    "agg-autocorrelation" -> aggAutocorrelation,
-    "agg-changepoint-cusum" -> aggChangepointCusum,
-    "agg-correlation-matrix" -> aggCorrelationMatrix,
-    "dq-chi-square" -> dqChiSquare,
-    "graph-clustering-coeff" -> graphClusteringCoeff,
-    "emb-assign-margin" -> embAssignMargin,
-    "sample-systematic" -> sampleSystematic,
-    "text-keyword-rake" -> textKeywordRake)
-
-  val oracles: Map[String, String] = Map(
-    "agg-survival-km" -> aggSurvivalKmSql,
-    "agg-autocorrelation" -> aggAutocorrelationSql,
-    "agg-changepoint-cusum" -> aggChangepointCusumSql,
-    "agg-correlation-matrix" -> aggCorrelationMatrixSql,
-    "dq-chi-square" -> dqChiSquareSql,
-    "graph-clustering-coeff" -> graphClusteringCoeffSql,
-    "emb-assign-margin" -> embAssignMarginSql,
-    "sample-systematic" -> sampleSystematicSql,
-    "text-keyword-rake" -> textKeywordRakeSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-survival-km", aggSurvivalKm, aggSurvivalKmSql),
+    Key("agg-autocorrelation", aggAutocorrelation, aggAutocorrelationSql),
+    Key("agg-changepoint-cusum", aggChangepointCusum, aggChangepointCusumSql),
+    Key("agg-correlation-matrix", aggCorrelationMatrix, aggCorrelationMatrixSql),
+    Key("dq-chi-square", dqChiSquare, dqChiSquareSql),
+    Key("graph-clustering-coeff", graphClusteringCoeff, graphClusteringCoeffSql),
+    Key("emb-assign-margin", embAssignMargin, embAssignMarginSql),
+    Key("sample-systematic", sampleSystematic, sampleSystematicSql),
+    Key("text-keyword-rake", textKeywordRake, textKeywordRakeSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch B: seasonal decomposition, calendar-aware growth,
   * drawdown, series-completeness gaps, rolling anomaly z-score,
   * kNN out-of-distribution scoring. */
-object RelMore58 {
+object RelMore58 extends KeyModule {
 
   /** Daily order counts with exact n-scaled machinery shared by the
     * decomposition ops. */
@@ -288,19 +288,11 @@ object RelMore58 {
       |ORDER BY knn5_dist_q DESC, vec_id
       |LIMIT 20""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-seasonal-decompose" -> winSeasonalDecompose,
-    "agg-yoy-growth" -> aggYoyGrowth,
-    "win-drawdown" -> winDrawdown,
-    "dq-calendar-gaps" -> dqCalendarGaps,
-    "win-rolling-zscore" -> winRollingZscore,
-    "emb-knn-ood" -> embKnnOod)
-
-  val oracles: Map[String, String] = Map(
-    "win-seasonal-decompose" -> winSeasonalDecomposeSql,
-    "agg-yoy-growth" -> aggYoyGrowthSql,
-    "win-drawdown" -> winDrawdownSql,
-    "dq-calendar-gaps" -> dqCalendarGapsSql,
-    "win-rolling-zscore" -> winRollingZscoreSql,
-    "emb-knn-ood" -> embKnnOodSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-seasonal-decompose", winSeasonalDecompose, winSeasonalDecomposeSql),
+    Key("agg-yoy-growth", aggYoyGrowth, aggYoyGrowthSql),
+    Key("win-drawdown", winDrawdown, winDrawdownSql),
+    Key("dq-calendar-gaps", dqCalendarGaps, dqCalendarGapsSql),
+    Key("win-rolling-zscore", winRollingZscore, winRollingZscoreSql),
+    Key("emb-knn-ood", embKnnOod, embKnnOodSql))
 }

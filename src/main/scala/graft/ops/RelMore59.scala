@@ -9,7 +9,7 @@ import Tables._
 /** Round-8 batch C: SQL UNPIVOT surface, semi-additive balance rollup,
   * corpus novelty curve, delta-method ratio variance, degree
   * assortativity, jackknife standard errors. */
-object RelMore59 {
+object RelMore59 extends KeyModule {
 
   /** sql-unpivot-clause — the SQL-level UNPIVOT clause (Spark 3.4+
     * syntax, ANSI-adjacent), the declarative twin of agg-unpivot's
@@ -317,19 +317,11 @@ object RelMore59 {
        |         * (sum_t2 - sum_t * sum_t / CAST(k AS DOUBLE))), 4) AS jk_se_cents
        |FROM agg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-unpivot-clause" -> sqlUnpivotClause,
-    "agg-semi-additive-balance" -> aggSemiAdditiveBalance,
-    "text-novelty-curve" -> textNoveltyCurve,
-    "agg-delta-method-var" -> aggDeltaMethodVar,
-    "graph-assortativity" -> graphAssortativity,
-    "agg-jackknife-se" -> aggJackknifeSe)
-
-  val oracles: Map[String, String] = Map(
-    "sql-unpivot-clause" -> sqlUnpivotClauseSql,
-    "agg-semi-additive-balance" -> aggSemiAdditiveBalanceSql,
-    "text-novelty-curve" -> textNoveltyCurveSql,
-    "agg-delta-method-var" -> aggDeltaMethodVarSql,
-    "graph-assortativity" -> graphAssortativitySql,
-    "agg-jackknife-se" -> aggJackknifeSeSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-unpivot-clause", sqlUnpivotClause, sqlUnpivotClauseSql),
+    Key("agg-semi-additive-balance", aggSemiAdditiveBalance, aggSemiAdditiveBalanceSql),
+    Key("text-novelty-curve", textNoveltyCurve, textNoveltyCurveSql),
+    Key("agg-delta-method-var", aggDeltaMethodVar, aggDeltaMethodVarSql),
+    Key("graph-assortativity", graphAssortativity, graphAssortativitySql),
+    Key("agg-jackknife-se", aggJackknifeSe, aggJackknifeSeSql))
 }

@@ -10,7 +10,7 @@ import Tables._
   * ordered string aggregation, the boolean/conditional aggregate
   * family, and sentence-level text statistics.
   */
-object RelMore6 {
+object RelMore6 extends KeyModule {
 
   /** graph-bfs — breadth-first traversal with level labels over the
     * part↔supplier bipartite graph (distinct lineitem co-occurrence
@@ -239,19 +239,11 @@ object RelMore6 {
       |FROM base
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "graph-bfs" -> graphBfs,
-    "src-csv-corrupt-recovery" -> srcCsvCorruptRecovery,
-    "join-dpp" -> joinDpp,
-    "agg-string-concat" -> aggStringConcat,
-    "agg-boolean-suite" -> aggBooleanSuite,
-    "text-sentence-split" -> textSentenceSplit)
-
-  val oracles: Map[String, String] = Map(
-    "graph-bfs" -> graphBfsSql,
-    "src-csv-corrupt-recovery" -> srcCsvCorruptRecoverySql,
-    "join-dpp" -> joinDppSql,
-    "agg-string-concat" -> aggStringConcatSql,
-    "agg-boolean-suite" -> aggBooleanSuiteSql,
-    "text-sentence-split" -> textSentenceSplitSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-bfs", graphBfs, graphBfsSql),
+    Key("src-csv-corrupt-recovery", srcCsvCorruptRecovery, srcCsvCorruptRecoverySql),
+    Key("join-dpp", joinDpp, joinDppSql),
+    Key("agg-string-concat", aggStringConcat, aggStringConcatSql),
+    Key("agg-boolean-suite", aggBooleanSuite, aggBooleanSuiteSql),
+    Key("text-sentence-split", textSentenceSplit, textSentenceSplitSql))
 }

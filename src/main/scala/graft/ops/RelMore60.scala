@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-8 batch D: SELECT * EXCEPT surface, log-scale histograms,
   * exact Markov stationary iteration, embedding centroid drift. */
-object RelMore60 {
+object RelMore60 extends KeyModule {
 
   /** sql-select-except — the SELECT * EXCEPT projection (Spark 3.4+,
     * BigQuery/DuckDB lineage): project everything BUT the named
@@ -187,15 +187,9 @@ object RelMore60 {
       |WHERE a.first_half
       |ORDER BY a.label""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-select-except" -> sqlSelectExcept,
-    "agg-log2-histogram" -> aggLog2Histogram,
-    "agg-markov-stationary" -> aggMarkovStationary,
-    "emb-centroid-drift" -> embCentroidDrift)
-
-  val oracles: Map[String, String] = Map(
-    "sql-select-except" -> sqlSelectExceptSql,
-    "agg-log2-histogram" -> aggLog2HistogramSql,
-    "agg-markov-stationary" -> aggMarkovStationarySql,
-    "emb-centroid-drift" -> embCentroidDriftSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-select-except", sqlSelectExcept, sqlSelectExceptSql),
+    Key("agg-log2-histogram", aggLog2Histogram, aggLog2HistogramSql),
+    Key("agg-markov-stationary", aggMarkovStationary, aggMarkovStationarySql),
+    Key("emb-centroid-drift", embCentroidDrift, embCentroidDriftSql))
 }

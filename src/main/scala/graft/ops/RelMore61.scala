@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-8 batch E: whole-file text ingestion, recursive glob
   * discovery, period-to-date rollups, class-balanced sampling. */
-object RelMore61 {
+object RelMore61 extends KeyModule {
 
   /** src-text-wholetext — whole-file text ingestion (wholetext=true:
     * one row per FILE, not per line), the raw-corpus landing pattern:
@@ -172,15 +172,9 @@ object RelMore61 {
       |GROUP BY lang
       |ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "src-text-wholetext" -> srcTextWholetext,
-    "src-recursive-glob" -> srcRecursiveGlob,
-    "agg-ytd-mtd" -> aggYtdMtd,
-    "sample-class-balance" -> sampleClassBalance)
-
-  val oracles: Map[String, String] = Map(
-    "src-text-wholetext" -> srcTextWholetextSql,
-    "src-recursive-glob" -> srcRecursiveGlobSql,
-    "agg-ytd-mtd" -> aggYtdMtdSql,
-    "sample-class-balance" -> sampleClassBalanceSql)
+  val keys: Seq[Key] = Seq(
+    Key("src-text-wholetext", srcTextWholetext, srcTextWholetextSql),
+    Key("src-recursive-glob", srcRecursiveGlob, srcRecursiveGlobSql),
+    Key("agg-ytd-mtd", aggYtdMtd, aggYtdMtdSql),
+    Key("sample-class-balance", sampleClassBalance, sampleClassBalanceSql))
 }

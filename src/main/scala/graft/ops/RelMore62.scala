@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-8 batch F: SFT packing with loss masks, 2-hop neighborhoods,
   * pairwise-distance histogram. */
-object RelMore62 {
+object RelMore62 extends KeyModule {
 
   private val CtxTokens = 512
   private val PackShards = 8
@@ -167,13 +167,8 @@ object RelMore62 {
       |GROUP BY 1
       |ORDER BY bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-sft-pack" -> textSftPack,
-    "graph-neighborhood-size" -> graphNeighborhoodSize,
-    "emb-dist-histogram" -> embDistHistogram)
-
-  val oracles: Map[String, String] = Map(
-    "text-sft-pack" -> textSftPackSql,
-    "graph-neighborhood-size" -> graphNeighborhoodSizeSql,
-    "emb-dist-histogram" -> embDistHistogramSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-sft-pack", textSftPack, textSftPackSql),
+    Key("graph-neighborhood-size", graphNeighborhoodSize, graphNeighborhoodSizeSql),
+    Key("emb-dist-histogram", embDistHistogram, embDistHistogramSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch A: leakage-safe group split, multi-feature
   * point-in-time join, inter-rater agreement, filter threshold sweep. */
-object RelMore63 {
+object RelMore63 extends KeyModule {
 
   /** sample-group-split — leakage-safe train/val/test split: the split
     * is assigned to the GROUP (documents.source), not the document, so
@@ -213,15 +213,9 @@ object RelMore63 {
        |ORDER BY min_tokens""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "sample-group-split" -> sampleGroupSplit,
-    "join-pit-multifeature" -> joinPitMultifeature,
-    "dq-cohens-kappa" -> dqCohensKappa,
-    "text-filter-sweep" -> textFilterSweep)
-
-  val oracles: Map[String, String] = Map(
-    "sample-group-split" -> sampleGroupSplitSql,
-    "join-pit-multifeature" -> joinPitMultifeatureSql,
-    "dq-cohens-kappa" -> dqCohensKappaSql,
-    "text-filter-sweep" -> textFilterSweepSql)
+  val keys: Seq[Key] = Seq(
+    Key("sample-group-split", sampleGroupSplit, sampleGroupSplitSql),
+    Key("join-pit-multifeature", joinPitMultifeature, joinPitMultifeatureSql),
+    Key("dq-cohens-kappa", dqCohensKappa, dqCohensKappaSql),
+    Key("text-filter-sweep", textFilterSweep, textFilterSweepSql))
 }

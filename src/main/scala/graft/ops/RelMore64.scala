@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch B: weighted bipartite projection, multimodal shard
   * mix audit, fixed-width legacy ingestion, path trigram mining. */
-object RelMore64 {
+object RelMore64 extends KeyModule {
 
   /** graph-bipartite-weight — the WEIGHTED co-purchase projection: the
     * graph family's edge lists throw the multiplicity away, but the
@@ -169,15 +169,9 @@ object RelMore64 {
       |ORDER BY n DESC, path
       |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "graph-bipartite-weight" -> graphBipartiteWeight,
-    "mm-modality-balance" -> mmModalityBalance,
-    "src-fixed-width" -> srcFixedWidth,
-    "agg-path-trigrams" -> aggPathTrigrams)
-
-  val oracles: Map[String, String] = Map(
-    "graph-bipartite-weight" -> graphBipartiteWeightSql,
-    "mm-modality-balance" -> mmModalityBalanceSql,
-    "src-fixed-width" -> srcFixedWidthSql,
-    "agg-path-trigrams" -> aggPathTrigramsSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-bipartite-weight", graphBipartiteWeight, graphBipartiteWeightSql),
+    Key("mm-modality-balance", mmModalityBalance, mmModalityBalanceSql),
+    Key("src-fixed-width", srcFixedWidth, srcFixedWidthSql),
+    Key("agg-path-trigrams", aggPathTrigrams, aggPathTrigramsSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch C: gaps-and-islands, Welch's t on a continuous
   * metric, b-bit minhash, compressed-text staging. */
-object RelMore65 {
+object RelMore65 extends KeyModule {
 
   /** win-islands — the gaps-and-islands pattern: per-user runs of
     * CONSECUTIVE activity dates, found with the classic date − rank
@@ -236,15 +236,9 @@ object RelMore65 {
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-islands" -> winIslands,
-    "agg-welch-ttest" -> aggWelchTtest,
-    "dedup-bbit-minhash" -> dedupBbitMinhash,
-    "src-csv-gzip" -> srcCsvGzip)
-
-  val oracles: Map[String, String] = Map(
-    "win-islands" -> winIslandsSql,
-    "agg-welch-ttest" -> aggWelchTtestSql,
-    "dedup-bbit-minhash" -> dedupBbitMinhashSql,
-    "src-csv-gzip" -> srcCsvGzipSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-islands", winIslands, winIslandsSql),
+    Key("agg-welch-ttest", aggWelchTtest, aggWelchTtestSql),
+    Key("dedup-bbit-minhash", dedupBbitMinhash, dedupBbitMinhashSql),
+    Key("src-csv-gzip", srcCsvGzip, srcCsvGzipSql))
 }

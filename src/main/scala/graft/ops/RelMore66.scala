@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch D: epoch-capped mix budget, staleness-gated as-of,
   * aspect-ratio bucketing, empirical-Bayes rate smoothing. */
-object RelMore66 {
+object RelMore66 extends KeyModule {
 
   /** text-mix-budget — the epoch-capped token-budget allocator: given a
     * training budget (50% of corpus tokens here) and a hard repeat cap
@@ -232,15 +232,9 @@ object RelMore66 {
       |FROM per, g
       |ORDER BY p_brand""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-mix-budget" -> textMixBudget,
-    "join-asof-tolerance" -> joinAsofTolerance,
-    "mm-aspect-bucket" -> mmAspectBucket,
-    "agg-bayes-smooth" -> aggBayesSmooth)
-
-  val oracles: Map[String, String] = Map(
-    "text-mix-budget" -> textMixBudgetSql,
-    "join-asof-tolerance" -> joinAsofToleranceSql,
-    "mm-aspect-bucket" -> mmAspectBucketSql,
-    "agg-bayes-smooth" -> aggBayesSmoothSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-mix-budget", textMixBudget, textMixBudgetSql),
+    Key("join-asof-tolerance", joinAsofTolerance, joinAsofToleranceSql),
+    Key("mm-aspect-bucket", mmAspectBucket, mmAspectBucketSql),
+    Key("agg-bayes-smooth", aggBayesSmooth, aggBayesSmoothSql))
 }

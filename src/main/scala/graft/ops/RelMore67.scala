@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch E: sweep-line concurrency, sliding distinct counts,
   * slice metrics. */
-object RelMore67 {
+object RelMore67 extends KeyModule {
 
   /** win-sweepline-concurrency — peak interval concurrency by the
     * sweep-line: each order is "in flight" over the half-open interval
@@ -144,13 +144,8 @@ object RelMore67 {
       |FROM slices, g
       |ORDER BY lang, len_bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-sweepline-concurrency" -> winSweeplineConcurrency,
-    "win-sliding-distinct" -> winSlidingDistinct,
-    "dq-slice-metrics" -> dqSliceMetrics)
-
-  val oracles: Map[String, String] = Map(
-    "win-sweepline-concurrency" -> winSweeplineConcurrencySql,
-    "win-sliding-distinct" -> winSlidingDistinctSql,
-    "dq-slice-metrics" -> dqSliceMetricsSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-sweepline-concurrency", winSweeplineConcurrency, winSweeplineConcurrencySql),
+    Key("win-sliding-distinct", winSlidingDistinct, winSlidingDistinctSql),
+    Key("dq-slice-metrics", dqSliceMetrics, dqSliceMetricsSql))
 }

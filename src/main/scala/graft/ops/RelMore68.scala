@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-9 batch F: AMS F2 sketch, exact 2-feature OLS, inferred
   * dimension members, crypto-shredding erasure. */
-object RelMore68 {
+object RelMore68 extends KeyModule {
 
   private val AmsK = 16
 
@@ -246,15 +246,9 @@ object RelMore68 {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-ams-f2" -> aggAmsF2,
-    "agg-ols-normal-eq" -> aggOlsNormalEq,
-    "sink-inferred-member" -> sinkInferredMember,
-    "sink-crypto-shred" -> sinkCryptoShred)
-
-  val oracles: Map[String, String] = Map(
-    "agg-ams-f2" -> aggAmsF2Sql,
-    "agg-ols-normal-eq" -> aggOlsNormalEqSql,
-    "sink-inferred-member" -> sinkInferredMemberSql,
-    "sink-crypto-shred" -> sinkCryptoShredSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-ams-f2", aggAmsF2, aggAmsF2Sql),
+    Key("agg-ols-normal-eq", aggOlsNormalEq, aggOlsNormalEqSql),
+    Key("sink-inferred-member", sinkInferredMember, sinkInferredMemberSql),
+    Key("sink-crypto-shred", sinkCryptoShred, sinkCryptoShredSql))
 }

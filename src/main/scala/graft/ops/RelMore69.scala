@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-9 batch G: entity-resolution blocking, multiline JSON,
   * MMR reranking, offset-gap loss detection. */
-object RelMore69 {
+object RelMore69 extends KeyModule {
 
   /** join-fuzzy-block — entity-resolution by BLOCKED fuzzy matching:
     * candidate pairs are generated only WITHIN a blocking key (here:
@@ -251,15 +251,9 @@ object RelMore69 {
       |FROM edges e JOIN inner_g i ON e.part = i.part JOIN bounds b ON e.part = b.part
       |ORDER BY e.part""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join-fuzzy-block" -> joinFuzzyBlock,
-    "src-json-multiline" -> srcJsonMultiline,
-    "emb-mmr-rerank" -> embMmrRerank,
-    "dq-offset-gaps" -> dqOffsetGaps)
-
-  val oracles: Map[String, String] = Map(
-    "join-fuzzy-block" -> joinFuzzyBlockSql,
-    "src-json-multiline" -> srcJsonMultilineSql,
-    "emb-mmr-rerank" -> embMmrRerankSql,
-    "dq-offset-gaps" -> dqOffsetGapsSql)
+  val keys: Seq[Key] = Seq(
+    Key("join-fuzzy-block", joinFuzzyBlock, joinFuzzyBlockSql),
+    Key("src-json-multiline", srcJsonMultiline, srcJsonMultilineSql),
+    Key("emb-mmr-rerank", embMmrRerank, embMmrRerankSql),
+    Key("dq-offset-gaps", dqOffsetGaps, dqOffsetGapsSql))
 }

@@ -9,7 +9,7 @@ import Tables._
   * SQL front door, FILTER-clause aggregates, and Spark 4 collation
   * semantics.
   */
-object RelMore7 {
+object RelMore7 extends KeyModule {
 
   /** sql-tpch-q5 — the local-supplier-volume query: a SIX-table join
     * (customer→orders→lineitem→supplier⋈nation⋈region) with the
@@ -97,13 +97,8 @@ object RelMore7 {
       |GROUP BY lower(seg)
       |ORDER BY segment""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-tpch-q5" -> sqlTpchQ5,
-    "agg-filter-where" -> aggFilterWhere,
-    "func-collation" -> funcCollation)
-
-  val oracles: Map[String, String] = Map(
-    "sql-tpch-q5" -> sqlTpchQ5Sql,
-    "agg-filter-where" -> aggFilterWhereSql,
-    "func-collation" -> funcCollationSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-tpch-q5", sqlTpchQ5, sqlTpchQ5Sql),
+    Key("agg-filter-where", aggFilterWhere, aggFilterWhereSql),
+    Key("func-collation", funcCollation, funcCollationSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch H: power analysis, sorted-write file contract,
   * unit-suffix parsing, rolling correlation. */
-object RelMore70 {
+object RelMore70 extends KeyModule {
 
   /** agg-power-analysis — experiment sizing from observed variance:
     * required per-arm n to detect an absolute effect δ at α=0.05,
@@ -221,15 +221,9 @@ object RelMore70 {
       |ORDER BY corr2_signed_micro DESC, dt
       |LIMIT 15""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-power-analysis" -> aggPowerAnalysis,
-    "sink-sorted-write" -> sinkSortedWrite,
-    "cast-unit-suffix" -> castUnitSuffix,
-    "win-rolling-corr" -> winRollingCorr)
-
-  val oracles: Map[String, String] = Map(
-    "agg-power-analysis" -> aggPowerAnalysisSql,
-    "sink-sorted-write" -> sinkSortedWriteSql,
-    "cast-unit-suffix" -> castUnitSuffixSql,
-    "win-rolling-corr" -> winRollingCorrSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-power-analysis", aggPowerAnalysis, aggPowerAnalysisSql),
+    Key("sink-sorted-write", sinkSortedWrite, sinkSortedWriteSql),
+    Key("cast-unit-suffix", castUnitSuffix, castUnitSuffixSql),
+    Key("win-rolling-corr", winRollingCorr, winRollingCorrSql))
 }

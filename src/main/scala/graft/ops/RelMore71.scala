@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-9 batch I: vocabulary overlap, column-level diff, temporal
   * split, column masking. */
-object RelMore71 {
+object RelMore71 extends KeyModule {
 
   /** text-vocab-overlap — pairwise vocabulary Jaccard between SOURCES
     * (which crawls speak the same language?), the corpus-curation view
@@ -194,15 +194,9 @@ object RelMore71 {
       |FROM customer
       |ORDER BY role""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-vocab-overlap" -> textVocabOverlap,
-    "dq-column-diff" -> dqColumnDiff,
-    "sample-time-split" -> sampleTimeSplit,
-    "sink-column-mask" -> sinkColumnMask)
-
-  val oracles: Map[String, String] = Map(
-    "text-vocab-overlap" -> textVocabOverlapSql,
-    "dq-column-diff" -> dqColumnDiffSql,
-    "sample-time-split" -> sampleTimeSplitSql,
-    "sink-column-mask" -> sinkColumnMaskSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-vocab-overlap", textVocabOverlap, textVocabOverlapSql),
+    Key("dq-column-diff", dqColumnDiff, dqColumnDiffSql),
+    Key("sample-time-split", sampleTimeSplit, sampleTimeSplitSql),
+    Key("sink-column-mask", sinkColumnMask, sinkColumnMaskSql))
 }

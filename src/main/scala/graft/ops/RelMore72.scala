@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch J: span-offset alignment, uplift deciles,
   * contrastive pairs, fixed-offset timezone suite. */
-object RelMore72 {
+object RelMore72 extends KeyModule {
 
   /** text-offset-align — the token↔char offset-mapping audit every
     * span-annotation pipeline needs (NER labels live in char space,
@@ -221,15 +221,9 @@ object RelMore72 {
       |       max(ist_str) AS max_ist
       |FROM s""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-offset-align" -> textOffsetAlign,
-    "agg-uplift-deciles" -> aggUpliftDeciles,
-    "sample-contrastive-pairs" -> sampleContrastivePairs,
-    "func-timezone-suite" -> funcTimezoneSuite)
-
-  val oracles: Map[String, String] = Map(
-    "text-offset-align" -> textOffsetAlignSql,
-    "agg-uplift-deciles" -> aggUpliftDecilesSql,
-    "sample-contrastive-pairs" -> sampleContrastivePairsSql,
-    "func-timezone-suite" -> funcTimezoneSuiteSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-offset-align", textOffsetAlign, textOffsetAlignSql),
+    Key("agg-uplift-deciles", aggUpliftDeciles, aggUpliftDecilesSql),
+    Key("sample-contrastive-pairs", sampleContrastivePairs, sampleContrastivePairsSql),
+    Key("func-timezone-suite", funcTimezoneSuite, funcTimezoneSuiteSql))
 }

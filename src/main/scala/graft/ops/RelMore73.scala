@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch K: difference-in-differences, LOO target encoding,
   * hard-negative mining, post-stratified estimation. */
-object RelMore73 {
+object RelMore73 extends KeyModule {
 
   /** agg-diff-in-diff — the 2×2 difference-in-differences estimator:
     * treated (odd users) vs control, pre vs post (cutoff = last week
@@ -224,15 +224,9 @@ object RelMore73 {
       |FROM pop JOIN samp ON pop.c_nationkey = samp.c_nationkey
       |ORDER BY pop.c_nationkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-diff-in-diff" -> aggDiffInDiff,
-    "agg-target-encode-loo" -> aggTargetEncodeLoo,
-    "emb-hard-negatives" -> embHardNegatives,
-    "sample-post-stratify" -> samplePostStratify)
-
-  val oracles: Map[String, String] = Map(
-    "agg-diff-in-diff" -> aggDiffInDiffSql,
-    "agg-target-encode-loo" -> aggTargetEncodeLooSql,
-    "emb-hard-negatives" -> embHardNegativesSql,
-    "sample-post-stratify" -> samplePostStratifySql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-diff-in-diff", aggDiffInDiff, aggDiffInDiffSql),
+    Key("agg-target-encode-loo", aggTargetEncodeLoo, aggTargetEncodeLooSql),
+    Key("emb-hard-negatives", embHardNegatives, embHardNegativesSql),
+    Key("sample-post-stratify", samplePostStratify, samplePostStratifySql))
 }

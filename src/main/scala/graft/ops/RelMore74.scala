@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch L: score-axis matching, chunk stitching, mutual
   * information, JSON schema inference. */
-object RelMore74 {
+object RelMore74 extends KeyModule {
 
   /** agg-psm-match — observational causal estimate by nearest-neighbor
     * matching on a covariate score: every treated user (odd id) is
@@ -225,15 +225,9 @@ object RelMore74 {
       |       CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
       |FROM events""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-psm-match" -> aggPsmMatch,
-    "dedup-chunk-stitch" -> dedupChunkStitch,
-    "agg-mutual-info" -> aggMutualInfo,
-    "expr-json-schema-infer" -> exprJsonSchemaInfer)
-
-  val oracles: Map[String, String] = Map(
-    "agg-psm-match" -> aggPsmMatchSql,
-    "dedup-chunk-stitch" -> dedupChunkStitchSql,
-    "agg-mutual-info" -> aggMutualInfoSql,
-    "expr-json-schema-infer" -> exprJsonSchemaInferSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-psm-match", aggPsmMatch, aggPsmMatchSql),
+    Key("dedup-chunk-stitch", dedupChunkStitch, dedupChunkStitchSql),
+    Key("agg-mutual-info", aggMutualInfo, aggMutualInfoSql),
+    Key("expr-json-schema-infer", exprJsonSchemaInfer, exprJsonSchemaInferSql))
 }

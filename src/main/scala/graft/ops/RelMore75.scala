@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch M: Shapley attribution, Hampel despiking,
   * multi-table snapshot, golden-record survivorship. */
-object RelMore75 {
+object RelMore75 extends KeyModule {
 
   /** agg-shapley-attribution — game-theoretic channel attribution:
     * with two touch channels (view, click), each user's coalition is
@@ -223,15 +223,9 @@ object RelMore75 {
       |ORDER BY g.n_members DESC, g.blk
       |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-shapley-attribution" -> aggShapleyAttribution,
-    "win-hampel-filter" -> winHampelFilter,
-    "sink-multi-table-snapshot" -> sinkMultiTableSnapshot,
-    "dq-golden-record" -> dqGoldenRecord)
-
-  val oracles: Map[String, String] = Map(
-    "agg-shapley-attribution" -> aggShapleyAttributionSql,
-    "win-hampel-filter" -> winHampelFilterSql,
-    "sink-multi-table-snapshot" -> sinkMultiTableSnapshotSql,
-    "dq-golden-record" -> dqGoldenRecordSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-shapley-attribution", aggShapleyAttribution, aggShapleyAttributionSql),
+    Key("win-hampel-filter", winHampelFilter, winHampelFilterSql),
+    Key("sink-multi-table-snapshot", sinkMultiTableSnapshot, sinkMultiTableSnapshotSql),
+    Key("dq-golden-record", dqGoldenRecord, dqGoldenRecordSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch N: Spearman rank correlation, PSI drift gate,
   * Theil–Sen robust slope, Cramér's V association strength. */
-object RelMore76 {
+object RelMore76 extends KeyModule {
 
   /** agg-spearman-corr — Spearman rank correlation between quantity and
     * discount, the robust complement of agg-correlation-matrix's
@@ -256,15 +256,9 @@ object RelMore76 {
       |FROM terms
       |GROUP BY n, nseg, nprio""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-spearman-corr" -> aggSpearmanCorr,
-    "dq-psi-drift" -> dqPsiDrift,
-    "win-theil-sen" -> winTheilSen,
-    "dq-cramers-v" -> dqCramersV)
-
-  val oracles: Map[String, String] = Map(
-    "agg-spearman-corr" -> aggSpearmanCorrSql,
-    "dq-psi-drift" -> dqPsiDriftSql,
-    "win-theil-sen" -> winTheilSenSql,
-    "dq-cramers-v" -> dqCramersVSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-spearman-corr", aggSpearmanCorr, aggSpearmanCorrSql),
+    Key("dq-psi-drift", dqPsiDrift, dqPsiDriftSql),
+    Key("win-theil-sen", winTheilSen, winTheilSenSql),
+    Key("dq-cramers-v", dqCramersV, dqCramersVSql))
 }

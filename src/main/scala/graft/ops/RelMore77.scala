@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch O: Poisson bootstrap CI, TwoNN intrinsic dimension,
   * CSV codec function suite, exact trimmed/winsorized means. */
-object RelMore77 {
+object RelMore77 extends KeyModule {
 
   private val BootReps = 32
   /** Poisson(1) CDF × 2^20, floored — the inverse-CDF table for the
@@ -308,15 +308,9 @@ object RelMore77 {
       |              + CAST(b_hi AS DOUBLE) * (n - (n - n // 10))) / n / 100, 4) AS mean_winsor10
       |FROM b CROSS JOIN f""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sample-bootstrap-ci" -> sampleBootstrapCi,
-    "emb-intrinsic-dim" -> embIntrinsicDim,
-    "func-csv-suite" -> funcCsvSuite,
-    "agg-trimmed-mean" -> aggTrimmedMean)
-
-  val oracles: Map[String, String] = Map(
-    "sample-bootstrap-ci" -> sampleBootstrapCiSql,
-    "emb-intrinsic-dim" -> embIntrinsicDimSql,
-    "func-csv-suite" -> funcCsvSuiteSql,
-    "agg-trimmed-mean" -> aggTrimmedMeanSql)
+  val keys: Seq[Key] = Seq(
+    Key("sample-bootstrap-ci", sampleBootstrapCi, sampleBootstrapCiSql),
+    Key("emb-intrinsic-dim", embIntrinsicDim, embIntrinsicDimSql),
+    Key("func-csv-suite", funcCsvSuite, funcCsvSuiteSql),
+    Key("agg-trimmed-mean", aggTrimmedMean, aggTrimmedMeanSql))
 }

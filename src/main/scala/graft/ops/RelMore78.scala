@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-9 batch P: readability scoring, missingness correlation,
   * branch-and-merge table versioning, harmonic closeness centrality. */
-object RelMore78 {
+object RelMore78 extends KeyModule {
 
   /** text-readability — Flesch reading-ease per source: syllables are
     * counted as VOWEL GROUPS ('[aeiouy]+' runs — the standard cheap
@@ -284,15 +284,9 @@ object RelMore78 {
        |ORDER BY seed""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "text-readability" -> textReadability,
-    "dq-null-correlation" -> dqNullCorrelation,
-    "sink-branch-merge" -> sinkBranchMerge,
-    "graph-closeness-centrality" -> graphClosenessCentrality)
-
-  val oracles: Map[String, String] = Map(
-    "text-readability" -> textReadabilitySql,
-    "dq-null-correlation" -> dqNullCorrelationSql,
-    "sink-branch-merge" -> sinkBranchMergeSql,
-    "graph-closeness-centrality" -> graphClosenessCentralitySql)
+  val keys: Seq[Key] = Seq(
+    Key("text-readability", textReadability, textReadabilitySql),
+    Key("dq-null-correlation", dqNullCorrelation, dqNullCorrelationSql),
+    Key("sink-branch-merge", sinkBranchMerge, sinkBranchMergeSql),
+    Key("graph-closeness-centrality", graphClosenessCentrality, graphClosenessCentralitySql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch Q: exact AUC-ROC, expected calibration error,
   * Hodges–Lehmann location, video scene-cut detection. */
-object RelMore79 {
+object RelMore79 extends KeyModule {
 
   /** agg-auc-exact — EXACT AUC-ROC of the event value as a purchase
     * classifier, including the tie term: AUC = [Σ_v pos(v)·(2·negs
@@ -248,15 +248,9 @@ object RelMore79 {
        |GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-auc-exact" -> aggAucExact,
-    "agg-calibration-ece" -> aggCalibrationEce,
-    "agg-hodges-lehmann" -> aggHodgesLehmann,
-    "mm-scene-cut" -> mmSceneCut)
-
-  val oracles: Map[String, String] = Map(
-    "agg-auc-exact" -> aggAucExactSql,
-    "agg-calibration-ece" -> aggCalibrationEceSql,
-    "agg-hodges-lehmann" -> aggHodgesLehmannSql,
-    "mm-scene-cut" -> mmSceneCutSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-auc-exact", aggAucExact, aggAucExactSql),
+    Key("agg-calibration-ece", aggCalibrationEce, aggCalibrationEceSql),
+    Key("agg-hodges-lehmann", aggHodgesLehmann, aggHodgesLehmannSql),
+    Key("mm-scene-cut", mmSceneCut, mmSceneCutSql))
 }

@@ -10,7 +10,7 @@ import Tables._
   * decile reporting, URL parsing, weighted shortest paths, and
   * funnel time-to-convert statistics.
   */
-object RelMore8 {
+object RelMore8 extends KeyModule {
 
   /** sql-tpch-q18 — large-volume customers: IN over a HAVING-filtered
     * aggregate subquery, a 3-table join, top-k — SQL front door #5.
@@ -263,17 +263,10 @@ object RelMore8 {
       |GROUP BY view_hour
       |ORDER BY view_hour""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sql-tpch-q18" -> sqlTpchQ18,
-    "agg-decile-report" -> aggDecileReport,
-    "func-url-suite" -> funcUrlSuite,
-    "graph-shortest-path" -> graphShortestPath,
-    "agg-time-to-convert" -> aggTimeToConvert)
-
-  val oracles: Map[String, String] = Map(
-    "sql-tpch-q18" -> sqlTpchQ18Sql,
-    "agg-decile-report" -> aggDecileReportSql,
-    "func-url-suite" -> funcUrlSuiteSql,
-    "graph-shortest-path" -> graphShortestPathSql,
-    "agg-time-to-convert" -> aggTimeToConvertSql)
+  val keys: Seq[Key] = Seq(
+    Key("sql-tpch-q18", sqlTpchQ18, sqlTpchQ18Sql),
+    Key("agg-decile-report", aggDecileReport, aggDecileReportSql),
+    Key("func-url-suite", funcUrlSuite, funcUrlSuiteSql),
+    Key("graph-shortest-path", graphShortestPath, graphShortestPathSql),
+    Key("agg-time-to-convert", aggTimeToConvert, aggTimeToConvertSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch R: SPRT sequential monitor, Otsu threshold,
   * personalized PageRank, CSV header-drift ingestion. */
-object RelMore80 {
+object RelMore80 extends KeyModule {
 
   private val SprtP0 = 0.20 // H0: purchase share (the fixture's truth)
   private val SprtP1 = 0.25 // H1: elevated share
@@ -253,15 +253,9 @@ object RelMore80 {
       |GROUP BY 1
       |ORDER BY batch""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-sprt-boundary" -> aggSprtBoundary,
-    "agg-otsu-threshold" -> aggOtsuThreshold,
-    "graph-ppr-seed" -> graphPprSeed,
-    "src-csv-header-drift" -> srcCsvHeaderDrift)
-
-  val oracles: Map[String, String] = Map(
-    "agg-sprt-boundary" -> aggSprtBoundarySql,
-    "agg-otsu-threshold" -> aggOtsuThresholdSql,
-    "graph-ppr-seed" -> graphPprSeedSql,
-    "src-csv-header-drift" -> srcCsvHeaderDriftSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-sprt-boundary", aggSprtBoundary, aggSprtBoundarySql),
+    Key("agg-otsu-threshold", aggOtsuThreshold, aggOtsuThresholdSql),
+    Key("graph-ppr-seed", graphPprSeed, graphPprSeedSql),
+    Key("src-csv-header-drift", srcCsvHeaderDrift, srcCsvHeaderDriftSql))
 }

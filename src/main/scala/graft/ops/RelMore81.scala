@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-9 batch S: changed-partition incremental export, clustering
   * NMI, schema-contract enforcement, geometric growth rate. */
-object RelMore81 {
+object RelMore81 extends KeyModule {
 
   /** sink-changed-partition-export — incremental export by PARTITION
     * CHECKSUM: v1 and v2 snapshots land partitioned by year, each
@@ -231,15 +231,9 @@ object RelMore81 {
       |WHERE g IS NOT NULL
       |GROUP BY n_days, y_first, y_last""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sink-changed-partition-export" -> sinkChangedPartitionExport,
-    "emb-cluster-nmi" -> embClusterNmi,
-    "dq-schema-contract-enforce" -> dqSchemaContractEnforce,
-    "agg-geo-mean-rate" -> aggGeoMeanRate)
-
-  val oracles: Map[String, String] = Map(
-    "sink-changed-partition-export" -> sinkChangedPartitionExportSql,
-    "emb-cluster-nmi" -> embClusterNmiSql,
-    "dq-schema-contract-enforce" -> dqSchemaContractEnforceSql,
-    "agg-geo-mean-rate" -> aggGeoMeanRateSql)
+  val keys: Seq[Key] = Seq(
+    Key("sink-changed-partition-export", sinkChangedPartitionExport, sinkChangedPartitionExportSql),
+    Key("emb-cluster-nmi", embClusterNmi, embClusterNmiSql),
+    Key("dq-schema-contract-enforce", dqSchemaContractEnforce, dqSchemaContractEnforceSql),
+    Key("agg-geo-mean-rate", aggGeoMeanRate, aggGeoMeanRateSql))
 }

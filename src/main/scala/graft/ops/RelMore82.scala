@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-9 batch T: rank movers, dispersion index, shallow/deep table
   * clones, median-of-means robust estimation. */
-object RelMore82 {
+object RelMore82 extends KeyModule {
 
   /** win-rank-movers — biggest leaderboard movers between two eras:
     * parts ranked by revenue in the early period (ship year ≤ 1997)
@@ -210,15 +210,9 @@ object RelMore82 {
        |FROM ranked CROSS JOIN st CROSS JOIN o
        |WHERE rk = ${(MomBuckets + 1) / 2}""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-rank-movers" -> winRankMovers,
-    "agg-dispersion-index" -> aggDispersionIndex,
-    "sink-clone-shallow-deep" -> sinkCloneShallowDeep,
-    "agg-median-of-means" -> aggMedianOfMeans)
-
-  val oracles: Map[String, String] = Map(
-    "win-rank-movers" -> winRankMoversSql,
-    "agg-dispersion-index" -> aggDispersionIndexSql,
-    "sink-clone-shallow-deep" -> sinkCloneShallowDeepSql,
-    "agg-median-of-means" -> aggMedianOfMeansSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-rank-movers", winRankMovers, winRankMoversSql),
+    Key("agg-dispersion-index", aggDispersionIndex, aggDispersionIndexSql),
+    Key("sink-clone-shallow-deep", sinkCloneShallowDeep, sinkCloneShallowDeepSql),
+    Key("agg-median-of-means", aggMedianOfMeans, aggMedianOfMeansSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-10 batch A: tail-risk (VaR + expected shortfall), exact Kendall
   * rank correlation, rolling skewness from integer moments, and
   * local-maxima peak detection. */
-object RelMore83 {
+object RelMore83 extends KeyModule {
 
   /** agg-cvar-es — 95% Value-at-Risk and expected shortfall (CVaR) of
     * order value per priority class, EXACT: VaR is the k-th smallest
@@ -222,15 +222,9 @@ object RelMore83 {
       |WHERE lcnt = 3 AND rcnt = 3 AND y > lmax AND y > rmax
       |ORDER BY dt""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-cvar-es" -> aggCvarEs,
-    "agg-kendall-tau" -> aggKendallTau,
-    "win-rolling-skew" -> winRollingSkew,
-    "win-peak-detect" -> winPeakDetect)
-
-  val oracles: Map[String, String] = Map(
-    "agg-cvar-es" -> aggCvarEsSql,
-    "agg-kendall-tau" -> aggKendallTauSql,
-    "win-rolling-skew" -> winRollingSkewSql,
-    "win-peak-detect" -> winPeakDetectSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-cvar-es", aggCvarEs, aggCvarEsSql),
+    Key("agg-kendall-tau", aggKendallTau, aggKendallTauSql),
+    Key("win-rolling-skew", winRollingSkew, winRollingSkewSql),
+    Key("win-peak-detect", winPeakDetect, winPeakDetectSql))
 }

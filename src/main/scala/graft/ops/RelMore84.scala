@@ -9,7 +9,7 @@ import Tables._
 /** Round-10 batch B: maximum-surplus date window (Kadane via prefix
   * mins), inter-arrival burstiness, Luhn check digits, merge-on-read
   * sink reconciliation. */
-object RelMore84 {
+object RelMore84 extends KeyModule {
 
   /** win-max-subarray — the contiguous date range with maximum revenue
     * surplus over the global daily mean (the classic maximum-subarray
@@ -258,15 +258,9 @@ object RelMore84 {
       |       (SELECT count(*) FROM base WHERE o_orderkey % 37 = 0) AS n_deletes,
       |       (SELECT count(*) FROM base WHERE o_orderkey % 29 = 0 AND o_orderkey % 37 <> 0) AS n_upserts""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-max-subarray" -> winMaxSubarray,
-    "dq-interarrival-burstiness" -> dqInterarrivalBurstiness,
-    "func-luhn-checksum" -> funcLuhnChecksum,
-    "sink-mor-read" -> sinkMorRead)
-
-  val oracles: Map[String, String] = Map(
-    "win-max-subarray" -> winMaxSubarraySql,
-    "dq-interarrival-burstiness" -> dqInterarrivalBurstinessSql,
-    "func-luhn-checksum" -> funcLuhnChecksumSql,
-    "sink-mor-read" -> sinkMorReadSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-max-subarray", winMaxSubarray, winMaxSubarraySql),
+    Key("dq-interarrival-burstiness", dqInterarrivalBurstiness, dqInterarrivalBurstinessSql),
+    Key("func-luhn-checksum", funcLuhnChecksum, funcLuhnChecksumSql),
+    Key("sink-mor-read", sinkMorRead, sinkMorReadSql))
 }

@@ -12,7 +12,7 @@ import Tables._
   * micro-units FIRST, so every sum/dot-product is exact integer
   * arithmetic (in double — magnitudes stay < 2^53), with at most one
   * sqrt/divide per OUTPUT value, floor-quantized before compare. */
-object RelMore85 {
+object RelMore85 extends KeyModule {
 
   private val Dim = 64  // fixture contract: every embedding is 64-dim
   private val JlK = 8   // projection target dimensionality
@@ -298,15 +298,9 @@ object RelMore85 {
        |       ${ratioFloorSql("sum(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)", "count(*)", 4)} AS accuracy
        |FROM pred GROUP BY true_label ORDER BY true_label""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "emb-jl-projection" -> embJlProjection,
-    "emb-residual-quantize" -> embResidualQuantize,
-    "emb-silhouette" -> embSilhouette,
-    "emb-knn-classify" -> embKnnClassify)
-
-  val oracles: Map[String, String] = Map(
-    "emb-jl-projection" -> embJlProjectionSql,
-    "emb-residual-quantize" -> embResidualQuantizeSql,
-    "emb-silhouette" -> embSilhouetteSql,
-    "emb-knn-classify" -> embKnnClassifySql)
+  val keys: Seq[Key] = Seq(
+    Key("emb-jl-projection", embJlProjection, embJlProjectionSql),
+    Key("emb-residual-quantize", embResidualQuantize, embResidualQuantizeSql),
+    Key("emb-silhouette", embSilhouette, embSilhouetteSql),
+    Key("emb-knn-classify", embKnnClassify, embKnnClassifySql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-10 batch D: phrase mining (trigram top-k), stride chunking for
   * context windows, n-gram coverage curve, shared-prefix template
   * clustering — the text-side prep steps of an LLM data pipeline. */
-object RelMore86 {
+object RelMore86 extends KeyModule {
 
   /** text-trigram-topk — corpus-level phrase mining: the 20 most
     * frequent word trigrams, from per-doc lead windows (PARTITION BY
@@ -190,15 +190,9 @@ object RelMore86 {
       |GROUP BY prefix HAVING count(*) > 1
       |ORDER BY n_docs DESC, prefix""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-trigram-topk" -> textTrigramTopk,
-    "text-stride-chunks" -> textStrideChunks,
-    "text-ngram-coverage" -> textNgramCoverage,
-    "text-prefix-cluster" -> textPrefixCluster)
-
-  val oracles: Map[String, String] = Map(
-    "text-trigram-topk" -> textTrigramTopkSql,
-    "text-stride-chunks" -> textStrideChunksSql,
-    "text-ngram-coverage" -> textNgramCoverageSql,
-    "text-prefix-cluster" -> textPrefixClusterSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-trigram-topk", textTrigramTopk, textTrigramTopkSql),
+    Key("text-stride-chunks", textStrideChunks, textStrideChunksSql),
+    Key("text-ngram-coverage", textNgramCoverage, textNgramCoverageSql),
+    Key("text-prefix-cluster", textPrefixCluster, textPrefixClusterSql))
 }

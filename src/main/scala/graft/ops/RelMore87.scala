@@ -8,7 +8,7 @@ import Tables._
 /** Round-10 batch E: resource-allocation link prediction, truncated
   * Katz centrality, hour-of-day variance decomposition (η²), last-digit
   * heaping detection. */
-object RelMore87 {
+object RelMore87 extends KeyModule {
 
   /** Shared bipartite edge list: distinct (part, supplier) pairs from
     * lineitem — the same graph GraphOps iterates over. r14 opt: served
@@ -216,15 +216,9 @@ object RelMore87 {
        |FROM counts CROSS JOIN chi
        |ORDER BY digit""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "graph-resource-alloc" -> graphResourceAlloc,
-    "graph-katz-centrality" -> graphKatzCentrality,
-    "agg-eta-squared" -> aggEtaSquared,
-    "dq-last-digit-heaping" -> dqLastDigitHeaping)
-
-  val oracles: Map[String, String] = Map(
-    "graph-resource-alloc" -> graphResourceAllocSql,
-    "graph-katz-centrality" -> graphKatzCentralitySql,
-    "agg-eta-squared" -> aggEtaSquaredSql,
-    "dq-last-digit-heaping" -> dqLastDigitHeapingSql)
+  val keys: Seq[Key] = Seq(
+    Key("graph-resource-alloc", graphResourceAlloc, graphResourceAllocSql),
+    Key("graph-katz-centrality", graphKatzCentrality, graphKatzCentralitySql),
+    Key("agg-eta-squared", aggEtaSquared, aggEtaSquaredSql),
+    Key("dq-last-digit-heaping", dqLastDigitHeaping, dqLastDigitHeapingSql))
 }

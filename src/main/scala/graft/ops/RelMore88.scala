@@ -8,7 +8,7 @@ import Tables._
 /** Round-10 batch F: survey-sampling estimators (two-stage cluster
   * sampling, capture–recapture), robust quartile skewness, and
   * experiment sample-ratio-mismatch detection. */
-object RelMore88 {
+object RelMore88 extends KeyModule {
 
   /** sample-cluster-stage — two-stage CLUSTER sampling: stage 1 samples
     * whole users (md5-nibble < 2 ⇒ p = 1/8 — the deterministic,
@@ -216,15 +216,9 @@ object RelMore88 {
        |ORDER BY chi2 DESC, dt
        |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sample-cluster-stage" -> sampleClusterStage,
-    "agg-capture-recapture" -> aggCaptureRecapture,
-    "agg-bowley-skew" -> aggBowleySkew,
-    "dq-srm-check" -> dqSrmCheck)
-
-  val oracles: Map[String, String] = Map(
-    "sample-cluster-stage" -> sampleClusterStageSql,
-    "agg-capture-recapture" -> aggCaptureRecaptureSql,
-    "agg-bowley-skew" -> aggBowleySkewSql,
-    "dq-srm-check" -> dqSrmCheckSql)
+  val keys: Seq[Key] = Seq(
+    Key("sample-cluster-stage", sampleClusterStage, sampleClusterStageSql),
+    Key("agg-capture-recapture", aggCaptureRecapture, aggCaptureRecaptureSql),
+    Key("agg-bowley-skew", aggBowleySkew, aggBowleySkewSql),
+    Key("dq-srm-check", dqSrmCheck, dqSrmCheckSql))
 }

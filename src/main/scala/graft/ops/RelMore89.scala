@@ -9,7 +9,7 @@ import Tables._
 /** Round-10 batch G: gap-limited LOCF imputation, GFS-style snapshot
   * retention tiers, multi-character CSV delimiters, Hill tail-index
   * estimation. */
-object RelMore89 {
+object RelMore89 extends KeyModule {
 
   /** win-locf-gap-limit — last-observation-carried-forward with a
     * BOUNDED carry: a sensor value may only fill forward across ≤2
@@ -208,15 +208,9 @@ object RelMore89 {
        |       ${ratioFloorSql("(count(*) * 1000000)", "sum(lnq)", 4)} AS hill_alpha
        |FROM terms""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-locf-gap-limit" -> winLocfGapLimit,
-    "sink-retention-tiers" -> sinkRetentionTiers,
-    "src-csv-multichar-delim" -> srcCsvMulticharDelim,
-    "agg-hill-tail-index" -> aggHillTailIndex)
-
-  val oracles: Map[String, String] = Map(
-    "win-locf-gap-limit" -> winLocfGapLimitSql,
-    "sink-retention-tiers" -> sinkRetentionTiersSql,
-    "src-csv-multichar-delim" -> srcCsvMulticharDelimSql,
-    "agg-hill-tail-index" -> aggHillTailIndexSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-locf-gap-limit", winLocfGapLimit, winLocfGapLimitSql),
+    Key("sink-retention-tiers", sinkRetentionTiers, sinkRetentionTiersSql),
+    Key("src-csv-multichar-delim", srcCsvMulticharDelim, srcCsvMulticharDelimSql),
+    Key("agg-hill-tail-index", aggHillTailIndex, aggHillTailIndexSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-4 continuation batch I (relational part): FULL OUTER join,
   * unionByName schema-evolution union, and code-vs-prose text signals.
   */
-object RelMore9 {
+object RelMore9 extends KeyModule {
 
   /** join-full-outer — FULL OUTER completes the join-type family
     * (inner/left/semi/anti/range/asof/lateral are already covered):
@@ -116,13 +116,8 @@ object RelMore9 {
       |FROM sig
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join-full-outer" -> joinFullOuter,
-    "set-union-by-name" -> setUnionByName,
-    "text-code-detect" -> textCodeDetect)
-
-  val oracles: Map[String, String] = Map(
-    "join-full-outer" -> joinFullOuterSql,
-    "set-union-by-name" -> setUnionByNameSql,
-    "text-code-detect" -> textCodeDetectSql)
+  val keys: Seq[Key] = Seq(
+    Key("join-full-outer", joinFullOuter, joinFullOuterSql),
+    Key("set-union-by-name", setUnionByName, setUnionByNameSql),
+    Key("text-code-detect", textCodeDetect, textCodeDetectSql))
 }

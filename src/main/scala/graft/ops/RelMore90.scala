@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-10 batch H: accumulating-snapshot fact, categorical domain
   * churn, phonetic (soundex-like) blocking, Markov absorption time. */
-object RelMore90 {
+object RelMore90 extends KeyModule {
 
   /** join-accumulating-snapshot — the Kimball ACCUMULATING SNAPSHOT
     * fact: one row per order carrying every milestone (order placed,
@@ -258,15 +258,9 @@ object RelMore90 {
        |ORDER BY event_type""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "join-accumulating-snapshot" -> joinAccumulatingSnapshot,
-    "dq-domain-churn" -> dqDomainChurn,
-    "dedup-phonetic-block" -> dedupPhoneticBlock,
-    "agg-markov-absorption" -> aggMarkovAbsorption)
-
-  val oracles: Map[String, String] = Map(
-    "join-accumulating-snapshot" -> joinAccumulatingSnapshotSql,
-    "dq-domain-churn" -> dqDomainChurnSql,
-    "dedup-phonetic-block" -> dedupPhoneticBlockSql,
-    "agg-markov-absorption" -> aggMarkovAbsorptionSql)
+  val keys: Seq[Key] = Seq(
+    Key("join-accumulating-snapshot", joinAccumulatingSnapshot, joinAccumulatingSnapshotSql),
+    Key("dq-domain-churn", dqDomainChurn, dqDomainChurnSql),
+    Key("dedup-phonetic-block", dedupPhoneticBlock, dedupPhoneticBlockSql),
+    Key("agg-markov-absorption", aggMarkovAbsorption, aggMarkovAbsorptionSql))
 }

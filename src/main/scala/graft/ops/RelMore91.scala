@@ -9,7 +9,7 @@ import Tables._
 /** Round-10 batch I: Tukey-fence outlier gate, Cochran–Mantel–Haenszel
   * stratified odds ratio, a portable file-level bloom index with
   * measured FPR, and the Friedman rank test. */
-object RelMore91 {
+object RelMore91 extends KeyModule {
 
   /** dq-tukey-fences — the boxplot outlier gate per priority class:
     * mild (beyond Q∓1.5·IQR) and extreme (beyond Q∓3·IQR) counts,
@@ -284,15 +284,9 @@ object RelMore91 {
        |FROM rsums CROSS JOIN stat
        |ORDER BY prio""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-tukey-fences" -> dqTukeyFences,
-    "agg-cmh-pooled-or" -> aggCmhPooledOr,
-    "sink-bloom-index" -> sinkBloomIndex,
-    "agg-friedman-test" -> aggFriedmanTest)
-
-  val oracles: Map[String, String] = Map(
-    "dq-tukey-fences" -> dqTukeyFencesSql,
-    "agg-cmh-pooled-or" -> aggCmhPooledOrSql,
-    "sink-bloom-index" -> sinkBloomIndexSql,
-    "agg-friedman-test" -> aggFriedmanTestSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-tukey-fences", dqTukeyFences, dqTukeyFencesSql),
+    Key("agg-cmh-pooled-or", aggCmhPooledOr, aggCmhPooledOrSql),
+    Key("sink-bloom-index", sinkBloomIndex, sinkBloomIndexSql),
+    Key("agg-friedman-test", aggFriedmanTest, aggFriedmanTestSql))
 }

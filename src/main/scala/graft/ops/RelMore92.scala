@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-10 batch J: second-digit Benford forensics, hash-derived
   * permutation testing, Wilson score intervals, growth accounting. */
-object RelMore92 {
+object RelMore92 extends KeyModule {
 
   /** Second-digit Benford expected shares, precomputed ONCE in Scala
     * (e_d = Σ_{k=1..9} log10(1 + 1/(10k+d))) and inlined as 12-dp
@@ -268,15 +268,9 @@ object RelMore92 {
       |WHERE midx <= maxm
       |ORDER BY midx""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dq-benford-second-digit" -> dqBenfordSecondDigit,
-    "emb-permutation-test" -> embPermutationTest,
-    "agg-wilson-ci" -> aggWilsonCi,
-    "agg-growth-accounting" -> aggGrowthAccounting)
-
-  val oracles: Map[String, String] = Map(
-    "dq-benford-second-digit" -> dqBenfordSecondDigitSql,
-    "emb-permutation-test" -> embPermutationTestSql,
-    "agg-wilson-ci" -> aggWilsonCiSql,
-    "agg-growth-accounting" -> aggGrowthAccountingSql)
+  val keys: Seq[Key] = Seq(
+    Key("dq-benford-second-digit", dqBenfordSecondDigit, dqBenfordSecondDigitSql),
+    Key("emb-permutation-test", embPermutationTest, embPermutationTestSql),
+    Key("agg-wilson-ci", aggWilsonCi, aggWilsonCiSql),
+    Key("agg-growth-accounting", aggGrowthAccounting, aggGrowthAccountingSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-10 batch K: vocabulary typo mining, ABC classification,
   * level-shift detection, Chao1 richness estimation. */
-object RelMore93 {
+object RelMore93 extends KeyModule {
 
   /** text-vocab-typo-pairs — spell-variant candidates from the VOCAB,
     * not the corpus: distinct words (with frequencies) all-pairs
@@ -194,15 +194,9 @@ object RelMore93 {
        |FROM pf
        |ORDER BY population""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-vocab-typo-pairs" -> textVocabTypoPairs,
-    "agg-abc-classes" -> aggAbcClasses,
-    "win-level-shift" -> winLevelShift,
-    "agg-chao1-richness" -> aggChao1Richness)
-
-  val oracles: Map[String, String] = Map(
-    "text-vocab-typo-pairs" -> textVocabTypoPairsSql,
-    "agg-abc-classes" -> aggAbcClassesSql,
-    "win-level-shift" -> winLevelShiftSql,
-    "agg-chao1-richness" -> aggChao1RichnessSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-vocab-typo-pairs", textVocabTypoPairs, textVocabTypoPairsSql),
+    Key("agg-abc-classes", aggAbcClasses, aggAbcClassesSql),
+    Key("win-level-shift", winLevelShift, winLevelShiftSql),
+    Key("agg-chao1-richness", aggChao1Richness, aggChao1RichnessSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 /** Round-10 batch L: hour×weekday independence heatmap, corpus keyness
   * ratios, Feistel ID permutation. (stream-windowed-topk ships in
   * StreamingOps with the rest of the streaming choreography.) */
-object RelMore94 {
+object RelMore94 extends KeyModule {
 
   /** agg-hour-dow-heatmap — the 24×7 traffic heatmap with an
     * INDEPENDENCE decomposition: each cell carries its count, the
@@ -166,13 +166,8 @@ object RelMore94 {
        |       min(y) AS min_permuted, max(y) AS max_permuted
        |FROM inv0""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-hour-dow-heatmap" -> aggHourDowHeatmap,
-    "text-keyness-ratio" -> textKeynessRatio,
-    "func-feistel-permute" -> funcFeistelPermute)
-
-  val oracles: Map[String, String] = Map(
-    "agg-hour-dow-heatmap" -> aggHourDowHeatmapSql,
-    "text-keyness-ratio" -> textKeynessRatioSql,
-    "func-feistel-permute" -> funcFeistelPermuteSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-hour-dow-heatmap", aggHourDowHeatmap, aggHourDowHeatmapSql),
+    Key("text-keyness-ratio", textKeynessRatio, textKeynessRatioSql),
+    Key("func-feistel-permute", funcFeistelPermute, funcFeistelPermuteSql))
 }

@@ -9,7 +9,7 @@ import Tables._
 /** Round-10 batch M: business-day rates, Jensen–Shannon divergence
   * between sources, a distributed Merkle-root integrity ledger, and
   * record-high tracking. */
-object RelMore95 {
+object RelMore95 extends KeyModule {
 
   /** agg-business-day-rate — revenue per BUSINESS day vs per calendar
     * day, monthly: the denominator correction every "daily run rate"
@@ -255,15 +255,9 @@ object RelMore95 {
       |GROUP BY year(dt)
       |ORDER BY yr""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-business-day-rate" -> aggBusinessDayRate,
-    "text-js-divergence" -> textJsDivergence,
-    "sink-merkle-root" -> sinkMerkleRoot,
-    "win-record-highs" -> winRecordHighs)
-
-  val oracles: Map[String, String] = Map(
-    "agg-business-day-rate" -> aggBusinessDayRateSql,
-    "text-js-divergence" -> textJsDivergenceSql,
-    "sink-merkle-root" -> sinkMerkleRootSql,
-    "win-record-highs" -> winRecordHighsSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-business-day-rate", aggBusinessDayRate, aggBusinessDayRateSql),
+    Key("text-js-divergence", textJsDivergence, textJsDivergenceSql),
+    Key("sink-merkle-root", sinkMerkleRoot, sinkMerkleRootSql),
+    Key("win-record-highs", winRecordHighs, winRecordHighsSql))
 }

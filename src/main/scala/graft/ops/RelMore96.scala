@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-10 batch N: realized volatility, X̄-R control chart, open-
   * balance sweepline, row-level-security policy audit. */
-object RelMore96 {
+object RelMore96 extends KeyModule {
 
   /** agg-realized-vol — monthly realized volatility of daily revenue:
     * daily log returns ln(y_t/y_{t-1}) floor-quantized to 1e-9 (one
@@ -251,15 +251,9 @@ object RelMore96 {
        |FROM vis CROSS JOIN tot
        |ORDER BY role""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-realized-vol" -> aggRealizedVol,
-    "agg-xbar-r-chart" -> aggXbarRChart,
-    "win-open-balance" -> winOpenBalance,
-    "sink-rls-policy-audit" -> sinkRlsPolicyAudit)
-
-  val oracles: Map[String, String] = Map(
-    "agg-realized-vol" -> aggRealizedVolSql,
-    "agg-xbar-r-chart" -> aggXbarRChartSql,
-    "win-open-balance" -> winOpenBalanceSql,
-    "sink-rls-policy-audit" -> sinkRlsPolicyAuditSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-realized-vol", aggRealizedVol, aggRealizedVolSql),
+    Key("agg-xbar-r-chart", aggXbarRChart, aggXbarRChartSql),
+    Key("win-open-balance", winOpenBalance, winOpenBalanceSql),
+    Key("sink-rls-policy-audit", sinkRlsPolicyAudit, sinkRlsPolicyAuditSql))
 }

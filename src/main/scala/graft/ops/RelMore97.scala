@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-10 batch O: upper-tail dependence, hash-cut conductance,
   * successive-halving screening, price/volume growth decomposition. */
-object RelMore97 {
+object RelMore97 extends KeyModule {
 
   /** agg-tail-dependence — the upper-tail dependence coefficient
     * λ_U ≈ P(Y > q95_Y | X > q95_X) between daily order COUNT and
@@ -269,15 +269,9 @@ object RelMore97 {
       |ORDER BY abs(CAST(rev1 - rev0 AS DOUBLE) / 100) DESC, p_brand
       |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "agg-tail-dependence" -> aggTailDependence,
-    "graph-conductance" -> graphConductance,
-    "sample-successive-halving" -> sampleSuccessiveHalving,
-    "agg-growth-decomposition" -> aggGrowthDecomposition)
-
-  val oracles: Map[String, String] = Map(
-    "agg-tail-dependence" -> aggTailDependenceSql,
-    "graph-conductance" -> graphConductanceSql,
-    "sample-successive-halving" -> sampleSuccessiveHalvingSql,
-    "agg-growth-decomposition" -> aggGrowthDecompositionSql)
+  val keys: Seq[Key] = Seq(
+    Key("agg-tail-dependence", aggTailDependence, aggTailDependenceSql),
+    Key("graph-conductance", graphConductance, graphConductanceSql),
+    Key("sample-successive-halving", sampleSuccessiveHalving, sampleSuccessiveHalvingSql),
+    Key("agg-growth-decomposition", aggGrowthDecomposition, aggGrowthDecompositionSql))
 }

@@ -8,7 +8,7 @@ import Tables._
 
 /** Round-10 batch P: 4-4-5 fiscal calendar, bitemporal as-of join,
   * two-way fixed-effects slope, duplicate-charge detection. */
-object RelMore98 {
+object RelMore98 extends KeyModule {
 
   /** Shared CASE ladder mapping a 0-based week-of-fiscal-year to its
     * 4-4-5 period (quarters of 4+4+5 weeks; periods 1..12). One text,
@@ -281,15 +281,9 @@ object RelMore98 {
       |FROM flagged
       |GROUP BY 1, 2 ORDER BY yr, mo""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "gen-fiscal-445" -> genFiscal445,
-    "join-bitemporal-asof" -> joinBitemporalAsof,
-    "agg-panel-fe-slope" -> aggPanelFeSlope,
-    "dq-double-charge" -> dqDoubleCharge)
-
-  val oracles: Map[String, String] = Map(
-    "gen-fiscal-445" -> genFiscal445Sql,
-    "join-bitemporal-asof" -> joinBitemporalAsofSql,
-    "agg-panel-fe-slope" -> aggPanelFeSlopeSql,
-    "dq-double-charge" -> dqDoubleChargeSql)
+  val keys: Seq[Key] = Seq(
+    Key("gen-fiscal-445", genFiscal445, genFiscal445Sql),
+    Key("join-bitemporal-asof", joinBitemporalAsof, joinBitemporalAsofSql),
+    Key("agg-panel-fe-slope", aggPanelFeSlope, aggPanelFeSlopeSql),
+    Key("dq-double-charge", dqDoubleCharge, dqDoubleChargeSql))
 }

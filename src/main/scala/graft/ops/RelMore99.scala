@@ -7,7 +7,7 @@ import Tables._
 
 /** Round-10 batch Q: multiprobe SimHash blocking, Markov entropy rate,
   * negative-binomial fit, Youden optimal threshold. */
-object RelMore99 {
+object RelMore99 extends KeyModule {
 
   private val ChunkBits = 16
   private val NChunks = 4
@@ -264,15 +264,9 @@ object RelMore99 {
        |ORDER BY round(tpr - fpr, 6) DESC, ventile
        |LIMIT 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dedup-simhash-multiprobe" -> dedupSimhashMultiprobe,
-    "agg-entropy-rate" -> aggEntropyRate,
-    "agg-negbin-fit" -> aggNegbinFit,
-    "agg-youden-threshold" -> aggYoudenThreshold)
-
-  val oracles: Map[String, String] = Map(
-    "dedup-simhash-multiprobe" -> dedupSimhashMultiprobeSql,
-    "agg-entropy-rate" -> aggEntropyRateSql,
-    "agg-negbin-fit" -> aggNegbinFitSql,
-    "agg-youden-threshold" -> aggYoudenThresholdSql)
+  val keys: Seq[Key] = Seq(
+    Key("dedup-simhash-multiprobe", dedupSimhashMultiprobe, dedupSimhashMultiprobeSql),
+    Key("agg-entropy-rate", aggEntropyRate, aggEntropyRateSql),
+    Key("agg-negbin-fit", aggNegbinFit, aggNegbinFitSql),
+    Key("agg-youden-threshold", aggYoudenThreshold, aggYoudenThresholdSql))
 }

@@ -11,7 +11,7 @@ import Tables._
   * ReadSchema. try_* family is used everywhere the reference uses TRY_*
   * (Spark 4 ANSI mode is on; plain cast would throw — SURVEY §4 caveat).
   */
-object RelProjCast {
+object RelProjCast extends KeyModule {
 
   /** proj-standardize — reference `sp_load_silver_customers.sql:34-41`
     * (TRIM / UPPER(LEFT(..,2)) / LOWER cleansing projection). */
@@ -218,31 +218,17 @@ object RelProjCast {
       |FROM documents
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "expr-array-funcs" -> exprArrayFuncs,
-    "proj-standardize" -> projStandardize,
-    "filt-notnull" -> filtNotnull,
-    "filt-nonempty" -> filtNonempty,
-    "filt-range" -> filtRange,
-    "expr-nullif-empty" -> exprNullifEmpty,
-    "expr-coalesce-default" -> exprCoalesceDefault,
-    "expr-case-flag" -> exprCaseFlag,
-    "expr-computed-col" -> exprComputedCol,
-    "cast-try-int" -> castTryInt,
-    "cast-decimal-comma" -> castDecimalComma,
-    "cast-try-timestamp" -> castTryTimestamp)
-
-  val oracles: Map[String, String] = Map(
-    "expr-array-funcs" -> exprArrayFuncsSql,
-    "proj-standardize" -> projStandardizeSql,
-    "filt-notnull" -> filtNotnullSql,
-    "filt-nonempty" -> filtNonemptySql,
-    "filt-range" -> filtRangeSql,
-    "expr-nullif-empty" -> exprNullifEmptySql,
-    "expr-coalesce-default" -> exprCoalesceDefaultSql,
-    "expr-case-flag" -> exprCaseFlagSql,
-    "expr-computed-col" -> exprComputedColSql,
-    "cast-try-int" -> castTryIntSql,
-    "cast-decimal-comma" -> castDecimalCommaSql,
-    "cast-try-timestamp" -> castTryTimestampSql)
+  val keys: Seq[Key] = Seq(
+    Key("expr-array-funcs", exprArrayFuncs, exprArrayFuncsSql),
+    Key("proj-standardize", projStandardize, projStandardizeSql),
+    Key("filt-notnull", filtNotnull, filtNotnullSql),
+    Key("filt-nonempty", filtNonempty, filtNonemptySql),
+    Key("filt-range", filtRange, filtRangeSql),
+    Key("expr-nullif-empty", exprNullifEmpty, exprNullifEmptySql),
+    Key("expr-coalesce-default", exprCoalesceDefault, exprCoalesceDefaultSql),
+    Key("expr-case-flag", exprCaseFlag, exprCaseFlagSql),
+    Key("expr-computed-col", exprComputedCol, exprComputedColSql),
+    Key("cast-try-int", castTryInt, castTryIntSql),
+    Key("cast-decimal-comma", castDecimalComma, castDecimalCommaSql),
+    Key("cast-try-timestamp", castTryTimestamp, castTryTimestampSql))
 }

@@ -11,7 +11,7 @@ import Tables._
   * other operator: the oracle checks the *logical* result; the physical
   * win (pruned files, absent exchanges) is verified via ExplainAudit.
   */
-object RelScale {
+object RelScale extends KeyModule {
 
   /** src-json-lines — JSON-lines source with explicit schema (never
     * inferred, same bronze discipline as CSV): write→read round trip
@@ -286,29 +286,16 @@ object RelScale {
       |FROM events
       |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "src-json-lines" -> srcJsonLines,
-    "src-orc-roundtrip" -> srcOrcRoundtrip,
-    "src-xml-roundtrip" -> srcXmlRoundtrip,
-    "src-mergeschema" -> srcMergeSchema,
-    "sql-tpch-q1" -> sqlTpchQ1,
-    "sink-partitioned-prune" -> sinkPartitionedPrune,
-    "sink-bucketed-join" -> sinkBucketedJoin,
-    "agg-salted-skew" -> aggSaltedSkew,
-    "join-salted-skew" -> joinSaltedSkew,
-    "sink-compaction" -> sinkCompaction,
-    "expr-json-extract" -> exprJsonExtract)
-
-  val oracles: Map[String, String] = Map(
-    "src-json-lines" -> srcJsonLinesSql,
-    "src-orc-roundtrip" -> srcOrcRoundtripSql,
-    "src-xml-roundtrip" -> srcXmlRoundtripSql,
-    "src-mergeschema" -> srcMergeSchemaSql,
-    "sql-tpch-q1" -> sqlTpchQ1Sql,
-    "sink-partitioned-prune" -> sinkPartitionedPruneSql,
-    "sink-bucketed-join" -> sinkBucketedJoinSql,
-    "agg-salted-skew" -> aggSaltedSkewSql,
-    "join-salted-skew" -> joinSaltedSkewSql,
-    "sink-compaction" -> sinkCompactionSql,
-    "expr-json-extract" -> exprJsonExtractSql)
+  val keys: Seq[Key] = Seq(
+    Key("src-json-lines", srcJsonLines, srcJsonLinesSql),
+    Key("src-orc-roundtrip", srcOrcRoundtrip, srcOrcRoundtripSql),
+    Key("src-xml-roundtrip", srcXmlRoundtrip, srcXmlRoundtripSql),
+    Key("src-mergeschema", srcMergeSchema, srcMergeSchemaSql),
+    Key("sql-tpch-q1", sqlTpchQ1, sqlTpchQ1Sql),
+    Key("sink-partitioned-prune", sinkPartitionedPrune, sinkPartitionedPruneSql),
+    Key("sink-bucketed-join", sinkBucketedJoin, sinkBucketedJoinSql),
+    Key("agg-salted-skew", aggSaltedSkew, aggSaltedSkewSql),
+    Key("join-salted-skew", joinSaltedSkew, joinSaltedSkewSql),
+    Key("sink-compaction", sinkCompaction, sinkCompactionSql),
+    Key("expr-json-extract", exprJsonExtract, exprJsonExtractSql))
 }

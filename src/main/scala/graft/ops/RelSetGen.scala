@@ -12,7 +12,7 @@ import Tables._
   * recursion) is replaced by the set-based sequence()+explode generator —
   * one task generates the whole range; no iteration, no driver loop.
   */
-object RelSetGen {
+object RelSetGen extends KeyModule {
 
   /** set-union-all — reference `07_etl_silver_to_gold.sql:32-49` (sentinel
     * row UNION ALL seed inside the calendar CTE). Two branch plans
@@ -195,21 +195,12 @@ object RelSetGen {
       |FROM ex FULL JOIN inx USING (o_orderstatus)
       |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "set-except-all" -> setExceptAll,
-    "set-union-all" -> setUnionAll,
-    "gen-date-series" -> genDateSeries,
-    "gen-calendar-attrs" -> genCalendarAttrs,
-    "sk-identity" -> skIdentity,
-    "pk-enforced" -> pkEnforced,
-    "fk-notnull-check" -> fkNotnullCheck)
-
-  val oracles: Map[String, String] = Map(
-    "set-except-all" -> setExceptAllSql,
-    "set-union-all" -> setUnionAllSql,
-    "gen-date-series" -> genDateSeriesSql,
-    "gen-calendar-attrs" -> genCalendarAttrsSql,
-    "sk-identity" -> skIdentitySql,
-    "pk-enforced" -> pkEnforcedSql,
-    "fk-notnull-check" -> fkNotnullCheckSql)
+  val keys: Seq[Key] = Seq(
+    Key("set-except-all", setExceptAll, setExceptAllSql),
+    Key("set-union-all", setUnionAll, setUnionAllSql),
+    Key("gen-date-series", genDateSeries, genDateSeriesSql),
+    Key("gen-calendar-attrs", genCalendarAttrs, genCalendarAttrsSql),
+    Key("sk-identity", skIdentity, skIdentitySql),
+    Key("pk-enforced", pkEnforced, pkEnforcedSql),
+    Key("fk-notnull-check", fkNotnullCheck, fkNotnullCheckSql))
 }

@@ -13,7 +13,7 @@ import Tables._
   * config fans out over file splits — there is no single-writer TABLOCK
   * equivalent to emulate (SURVEY §4).
   */
-object RelSources {
+object RelSources extends KeyModule {
 
   /** src-csv-quoted — reference `03_load_csv_to_bronze.sql:15-55`
     * (BULK INSERT FORMAT='CSV', FIELDQUOTE='"', FIRSTROW=2,
@@ -252,25 +252,14 @@ object RelSources {
       |GROUP BY 1
       |ORDER BY bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "src-datasourcev2" -> srcDatasourceV2,
-    "src-csv-quoted" -> srcCsvQuoted,
-    "src-csv-pipe" -> srcCsvPipe,
-    "src-preclean-newlines" -> srcPrecleanNewlines,
-    "sink-truncate-insert" -> sinkTruncateInsert,
-    "sink-delete-insert" -> sinkDeleteInsert,
-    "guard-already-loaded" -> guardAlreadyLoaded,
-    "sink-audit-append" -> sinkAuditAppend,
-    "ddl-catalog" -> ddlCatalog)
-
-  val oracles: Map[String, String] = Map(
-    "src-datasourcev2" -> srcDatasourceV2Sql,
-    "src-csv-quoted" -> srcCsvQuotedSql,
-    "src-csv-pipe" -> srcCsvPipeSql,
-    "src-preclean-newlines" -> srcPrecleanNewlinesSql,
-    "sink-truncate-insert" -> sinkTruncateInsertSql,
-    "sink-delete-insert" -> sinkDeleteInsertSql,
-    "guard-already-loaded" -> guardAlreadyLoadedSql,
-    "sink-audit-append" -> sinkAuditAppendSql,
-    "ddl-catalog" -> ddlCatalogSql)
+  val keys: Seq[Key] = Seq(
+    Key("src-datasourcev2", srcDatasourceV2, srcDatasourceV2Sql),
+    Key("src-csv-quoted", srcCsvQuoted, srcCsvQuotedSql),
+    Key("src-csv-pipe", srcCsvPipe, srcCsvPipeSql),
+    Key("src-preclean-newlines", srcPrecleanNewlines, srcPrecleanNewlinesSql),
+    Key("sink-truncate-insert", sinkTruncateInsert, sinkTruncateInsertSql),
+    Key("sink-delete-insert", sinkDeleteInsert, sinkDeleteInsertSql),
+    Key("guard-already-loaded", guardAlreadyLoaded, guardAlreadyLoadedSql),
+    Key("sink-audit-append", sinkAuditAppend, sinkAuditAppendSql),
+    Key("ddl-catalog", ddlCatalog, ddlCatalogSql))
 }

@@ -15,7 +15,7 @@ import Tables._
   * (the order-lifecycle analysis `08_validacionsql.sql:16-27` asks of
   * order statuses, re-expressed over the event stream).
   */
-object RelWarehouse {
+object RelWarehouse extends KeyModule {
 
   /** sink-scd2 — slowly-changing-dimension type 2 merge: an incoming
     * batch of changed customer rows (simulated deterministically:
@@ -202,13 +202,8 @@ object RelWarehouse {
       |GROUP BY stage
       |ORDER BY stage""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "sink-scd2" -> sinkScd2,
-    "join-bloom-prefilter" -> joinBloomPrefilter,
-    "agg-funnel" -> aggFunnel)
-
-  val oracles: Map[String, String] = Map(
-    "sink-scd2" -> sinkScd2Sql,
-    "join-bloom-prefilter" -> joinBloomPrefilterSql,
-    "agg-funnel" -> aggFunnelSql)
+  val keys: Seq[Key] = Seq(
+    Key("sink-scd2", sinkScd2, sinkScd2Sql),
+    Key("join-bloom-prefilter", joinBloomPrefilter, joinBloomPrefilterSql),
+    Key("agg-funnel", aggFunnel, aggFunnelSql))
 }

@@ -11,7 +11,7 @@ import Tables._
   * and per-partition sorting — no global sort. Global sorts appear only
   * where the reference semantics require them (ordered reports).
   */
-object RelWindowSort {
+object RelWindowSort extends KeyModule {
 
   /** win-dedup-latest — reference `sp_load_silver_order_reviews.sql:22-67`
     * (keep-latest dedup: ROW_NUMBER PARTITION BY id ORDER BY ts DESC,
@@ -356,31 +356,17 @@ object RelWindowSort {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "win-streaks" -> winStreaks,
-    "sort-zorder" -> sortZorder,
-    "win-distinct-running" -> winDistinctRunning,
-    "win-first-last" -> winFirstLast,
-    "win-topk-per-key" -> winTopkPerKey,
-    "win-percent-rank" -> winPercentRank,
-    "win-dedup-latest" -> winDedupLatest,
-    "win-running-total" -> winRunningTotal,
-    "win-lag-lead" -> winLagLead,
-    "win-range-frame" -> winRangeFrame,
-    "sort-desc" -> sortDesc,
-    "limit-topk" -> limitTopk)
-
-  val oracles: Map[String, String] = Map(
-    "win-streaks" -> winStreaksSql,
-    "sort-zorder" -> sortZorderSql,
-    "win-distinct-running" -> winDistinctRunningSql,
-    "win-first-last" -> winFirstLastSql,
-    "win-topk-per-key" -> winTopkPerKeySql,
-    "win-percent-rank" -> winPercentRankSql,
-    "win-dedup-latest" -> winDedupLatestSql,
-    "win-running-total" -> winRunningTotalSql,
-    "win-lag-lead" -> winLagLeadSql,
-    "win-range-frame" -> winRangeFrameSql,
-    "sort-desc" -> sortDescSql,
-    "limit-topk" -> limitTopkSql)
+  val keys: Seq[Key] = Seq(
+    Key("win-streaks", winStreaks, winStreaksSql),
+    Key("sort-zorder", sortZorder, sortZorderSql),
+    Key("win-distinct-running", winDistinctRunning, winDistinctRunningSql),
+    Key("win-first-last", winFirstLast, winFirstLastSql),
+    Key("win-topk-per-key", winTopkPerKey, winTopkPerKeySql),
+    Key("win-percent-rank", winPercentRank, winPercentRankSql),
+    Key("win-dedup-latest", winDedupLatest, winDedupLatestSql),
+    Key("win-running-total", winRunningTotal, winRunningTotalSql),
+    Key("win-lag-lead", winLagLead, winLagLeadSql),
+    Key("win-range-frame", winRangeFrame, winRangeFrameSql),
+    Key("sort-desc", sortDesc, sortDescSql),
+    Key("limit-topk", limitTopk, limitTopkSql))
 }

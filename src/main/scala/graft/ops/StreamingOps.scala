@@ -14,7 +14,7 @@ import Tables._
   * is the production deployment; AvailableNow makes it deterministic and
   * batch-equivalent, which is what the oracle checks.
   */
-object StreamingOps {
+object StreamingOps extends KeyModule {
 
   /** Copy-to-temp + atomic rename: a plain REPLACE_EXISTING copy is a
     * truncate-then-write, so a concurrent reader of the same staged
@@ -1412,55 +1412,29 @@ object StreamingOps {
       |FROM ranked WHERE rk <= 2
       |ORDER BY window_start, rk""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "stream-dead-letter" -> streamDeadLetter,
-    "stream-incremental-etl" -> streamIncrementalEtl,
-    "stream-dedup-within-watermark" -> streamDedupWithinWatermark,
-    "stream-multi-batch" -> streamMultiBatch,
-    "stream-transform-with-state" -> streamTransformWithState,
-    "stream-state-timeout" -> streamStateTimeout,
-    "stream-initial-state" -> streamInitialState,
-    "stream-tws-timers" -> streamTwsTimers,
-    "stream-tws-list-state" -> streamTwsListState,
-    "stream-windowed-rollup" -> streamWindowedRollup,
-    "stream-left-outer-join" -> streamLeftOuterJoin,
-    "stream-flatmap-state" -> streamFlatmapState,
-    "stream-stream-join" -> streamStreamJoin,
-    "stream-late-drop" -> streamLateDrop,
-    "stream-session-window" -> streamSessionWindow,
-    "stream-foreachbatch-upsert" -> streamForeachUpsert,
-    "stream-sink-files" -> streamSinkFiles,
-    "stream-agg-counts" -> streamAggCounts,
-    "stream-window-hourly" -> streamWindowHourly,
-    "stream-sliding-window" -> streamSlidingWindow,
-    "stream-stateful-count" -> streamStatefulCount,
-    "stream-dedup-ids" -> streamDedupIds,
-    "stream-join-static" -> streamJoinStatic,
-    "stream-windowed-topk" -> streamWindowedTopk)
-
-  val oracles: Map[String, String] = Map(
-    "stream-dead-letter" -> streamDeadLetterSql,
-    "stream-incremental-etl" -> streamIncrementalEtlSql,
-    "stream-dedup-within-watermark" -> streamDedupWithinWatermarkSql,
-    "stream-multi-batch" -> streamMultiBatchSql,
-    "stream-transform-with-state" -> streamTransformWithStateSql,
-    "stream-state-timeout" -> streamStateTimeoutSql,
-    "stream-initial-state" -> streamInitialStateSql,
-    "stream-tws-timers" -> streamTwsTimersSql,
-    "stream-tws-list-state" -> streamTwsListStateSql,
-    "stream-windowed-rollup" -> streamWindowedRollupSql,
-    "stream-left-outer-join" -> streamLeftOuterJoinSql,
-    "stream-flatmap-state" -> streamFlatmapStateSql,
-    "stream-stream-join" -> streamStreamJoinSql,
-    "stream-late-drop" -> streamLateDropSql,
-    "stream-session-window" -> streamSessionWindowSql,
-    "stream-foreachbatch-upsert" -> streamForeachUpsertSql,
-    "stream-sink-files" -> streamSinkFilesSql,
-    "stream-agg-counts" -> streamAggCountsSql,
-    "stream-window-hourly" -> streamWindowHourlySql,
-    "stream-sliding-window" -> streamSlidingWindowSql,
-    "stream-stateful-count" -> streamStatefulCountSql,
-    "stream-dedup-ids" -> streamDedupIdsSql,
-    "stream-join-static" -> streamJoinStaticSql,
-    "stream-windowed-topk" -> streamWindowedTopkSql)
+  val keys: Seq[Key] = Seq(
+    Key("stream-dead-letter", streamDeadLetter, streamDeadLetterSql),
+    Key("stream-incremental-etl", streamIncrementalEtl, streamIncrementalEtlSql),
+    Key("stream-dedup-within-watermark", streamDedupWithinWatermark, streamDedupWithinWatermarkSql),
+    Key("stream-multi-batch", streamMultiBatch, streamMultiBatchSql),
+    Key("stream-transform-with-state", streamTransformWithState, streamTransformWithStateSql),
+    Key("stream-state-timeout", streamStateTimeout, streamStateTimeoutSql),
+    Key("stream-initial-state", streamInitialState, streamInitialStateSql),
+    Key("stream-tws-timers", streamTwsTimers, streamTwsTimersSql),
+    Key("stream-tws-list-state", streamTwsListState, streamTwsListStateSql),
+    Key("stream-windowed-rollup", streamWindowedRollup, streamWindowedRollupSql),
+    Key("stream-left-outer-join", streamLeftOuterJoin, streamLeftOuterJoinSql),
+    Key("stream-flatmap-state", streamFlatmapState, streamFlatmapStateSql),
+    Key("stream-stream-join", streamStreamJoin, streamStreamJoinSql),
+    Key("stream-late-drop", streamLateDrop, streamLateDropSql),
+    Key("stream-session-window", streamSessionWindow, streamSessionWindowSql),
+    Key("stream-foreachbatch-upsert", streamForeachUpsert, streamForeachUpsertSql),
+    Key("stream-sink-files", streamSinkFiles, streamSinkFilesSql),
+    Key("stream-agg-counts", streamAggCounts, streamAggCountsSql),
+    Key("stream-window-hourly", streamWindowHourly, streamWindowHourlySql),
+    Key("stream-sliding-window", streamSlidingWindow, streamSlidingWindowSql),
+    Key("stream-stateful-count", streamStatefulCount, streamStatefulCountSql),
+    Key("stream-dedup-ids", streamDedupIds, streamDedupIdsSql),
+    Key("stream-join-static", streamJoinStatic, streamJoinStaticSql),
+    Key("stream-windowed-topk", streamWindowedTopk, streamWindowedTopkSql))
 }

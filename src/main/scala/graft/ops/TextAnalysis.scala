@@ -14,7 +14,7 @@ import Tables._
   * the langid argmax window keyed by doc) — they stream through the
   * corpus at scan speed, which is what a 100 TB curation pass needs.
   */
-object TextAnalysis {
+object TextAnalysis extends KeyModule {
 
   /** Marker words per language, scored by exact-word hit count. The
     * real-world version swaps in character-n-gram frequency profiles;
@@ -926,53 +926,28 @@ object TextAnalysis {
       |ORDER BY cnt DESC, a, b
       |LIMIT 20""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text-mix-sample" -> textMixSample,
-    "text-bigram-lm" -> textBigramLm,
-    "text-perplexity-proxy" -> textPerplexityProxy,
-    "text-substring-dedup" -> textSubstringDedup,
-    "agg-entropy" -> aggEntropy,
-    "text-pack-sequences" -> textPackSequences,
-    "text-bpe-pairs" -> textBpePairs,
-    "text-line-dedup" -> textLineDedup,
-    "text-domain-mix" -> textDomainMix,
-    "sample-stratified" -> sampleStratified,
-    "text-idf-rarity" -> textIdfRarity,
-    "text-html-strip" -> textHtmlStrip,
-    "text-pii-mask" -> textPiiMask,
-    "dedup-url" -> dedupUrl,
-    "text-vocab-stats" -> textVocabStats,
-    "text-hash-split" -> textHashSplit,
-    "text-normalize" -> textNormalize,
-    "text-langid" -> textLangid,
-    "text-quality" -> textQuality,
-    "text-tokencount" -> textTokencount,
-    "text-fingerprint" -> textFingerprint,
-    "text-repetition" -> textRepetition,
-    "text-contamination" -> textContamination)
-
-  val oracles: Map[String, String] = Map(
-    "text-mix-sample" -> textMixSampleSql,
-    "text-bigram-lm" -> textBigramLmSql,
-    "text-perplexity-proxy" -> textPerplexityProxySql,
-    "text-substring-dedup" -> textSubstringDedupSql,
-    "agg-entropy" -> aggEntropySql,
-    "text-pack-sequences" -> textPackSequencesSql,
-    "text-bpe-pairs" -> textBpePairsSql,
-    "text-line-dedup" -> textLineDedupSql,
-    "text-domain-mix" -> textDomainMixSql,
-    "sample-stratified" -> sampleStratifiedSql,
-    "text-idf-rarity" -> textIdfRaritySql,
-    "text-html-strip" -> textHtmlStripSql,
-    "text-pii-mask" -> textPiiMaskSql,
-    "dedup-url" -> dedupUrlSql,
-    "text-vocab-stats" -> textVocabStatsSql,
-    "text-hash-split" -> textHashSplitSql,
-    "text-normalize" -> textNormalizeSql,
-    "text-langid" -> textLangidSql,
-    "text-quality" -> textQualitySql,
-    "text-tokencount" -> textTokencountSql,
-    "text-fingerprint" -> textFingerprintSql,
-    "text-repetition" -> textRepetitionSql,
-    "text-contamination" -> textContaminationSql)
+  val keys: Seq[Key] = Seq(
+    Key("text-mix-sample", textMixSample, textMixSampleSql),
+    Key("text-bigram-lm", textBigramLm, textBigramLmSql),
+    Key("text-perplexity-proxy", textPerplexityProxy, textPerplexityProxySql),
+    Key("text-substring-dedup", textSubstringDedup, textSubstringDedupSql),
+    Key("agg-entropy", aggEntropy, aggEntropySql),
+    Key("text-pack-sequences", textPackSequences, textPackSequencesSql),
+    Key("text-bpe-pairs", textBpePairs, textBpePairsSql),
+    Key("text-line-dedup", textLineDedup, textLineDedupSql),
+    Key("text-domain-mix", textDomainMix, textDomainMixSql),
+    Key("sample-stratified", sampleStratified, sampleStratifiedSql),
+    Key("text-idf-rarity", textIdfRarity, textIdfRaritySql),
+    Key("text-html-strip", textHtmlStrip, textHtmlStripSql),
+    Key("text-pii-mask", textPiiMask, textPiiMaskSql),
+    Key("dedup-url", dedupUrl, dedupUrlSql),
+    Key("text-vocab-stats", textVocabStats, textVocabStatsSql),
+    Key("text-hash-split", textHashSplit, textHashSplitSql),
+    Key("text-normalize", textNormalize, textNormalizeSql),
+    Key("text-langid", textLangid, textLangidSql),
+    Key("text-quality", textQuality, textQualitySql),
+    Key("text-tokencount", textTokencount, textTokencountSql),
+    Key("text-fingerprint", textFingerprint, textFingerprintSql),
+    Key("text-repetition", textRepetition, textRepetitionSql),
+    Key("text-contamination", textContamination, textContaminationSql))
 }

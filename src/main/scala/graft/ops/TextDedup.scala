@@ -19,7 +19,7 @@ import Tables._
   * a shingle appearing in more than MAX_DF docs is dropped as a
   * stop-shingle exactly the way web-dedup pipelines drop stop-grams.
   */
-object TextDedup {
+object TextDedup extends KeyModule {
 
   private val Seeds = 12    // minhash permutations
   private val BandSize = 3  // rows per LSH band → 4 bands
@@ -801,27 +801,15 @@ object TextDedup {
        |WHERE edit_dist * 5 <= max_len
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "dedup-edit-distance" -> dedupEditDistance,
-    "dedup-exact" -> dedupExact,
-    "dedup-minhash-lsh" -> dedupMinhashLsh,
-    "dedup-minhash-estimate" -> dedupMinhashEstimate,
-    "dedup-incremental" -> dedupIncremental,
-    "dedup-cluster" -> dedupCluster,
-    "dedup-simhash" -> dedupSimhash,
-    "dedup-simhash-pairs" -> dedupSimhashPairs,
-    "dedup-ngram-jaccard" -> dedupNgramJaccard,
-    "dedup-embedding-cosine" -> dedupEmbeddingCosine)
-
-  val oracles: Map[String, String] = Map(
-    "dedup-edit-distance" -> dedupEditDistanceSql,
-    "dedup-exact" -> dedupExactSql,
-    "dedup-minhash-lsh" -> dedupMinhashLshSql,
-    "dedup-minhash-estimate" -> dedupMinhashEstimateSql,
-    "dedup-incremental" -> dedupIncrementalSql,
-    "dedup-cluster" -> dedupClusterSql,
-    "dedup-simhash" -> dedupSimhashSql,
-    "dedup-simhash-pairs" -> dedupSimhashPairsSql,
-    "dedup-ngram-jaccard" -> dedupNgramJaccardSql,
-    "dedup-embedding-cosine" -> dedupEmbeddingCosineSql)
+  val keys: Seq[Key] = Seq(
+    Key("dedup-edit-distance", dedupEditDistance, dedupEditDistanceSql),
+    Key("dedup-exact", dedupExact, dedupExactSql),
+    Key("dedup-minhash-lsh", dedupMinhashLsh, dedupMinhashLshSql),
+    Key("dedup-minhash-estimate", dedupMinhashEstimate, dedupMinhashEstimateSql),
+    Key("dedup-incremental", dedupIncremental, dedupIncrementalSql),
+    Key("dedup-cluster", dedupCluster, dedupClusterSql),
+    Key("dedup-simhash", dedupSimhash, dedupSimhashSql),
+    Key("dedup-simhash-pairs", dedupSimhashPairs, dedupSimhashPairsSql),
+    Key("dedup-ngram-jaccard", dedupNgramJaccard, dedupNgramJaccardSql),
+    Key("dedup-embedding-cosine", dedupEmbeddingCosine, dedupEmbeddingCosineSql))
 }

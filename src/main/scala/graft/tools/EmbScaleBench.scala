@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Volume bench for the embedding/ANN family: synthesizes a vector
@@ -25,14 +26,7 @@ object EmbScaleBench {
     val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val work = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("emb-scale").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     graft.functions.DotProduct.register(spark)
     graft.functions.QuantizeLattice.register(spark)
 

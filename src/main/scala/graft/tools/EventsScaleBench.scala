@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Volume bench for the event-time operator family: synthesizes an
@@ -19,15 +20,7 @@ object EventsScaleBench {
     val nEvents = args.headOption.map(_.toLong).getOrElse(10000000L)
     val work = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("events-scale").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Physical-plan audit: prints each query's formatted plan and greps it
   * for the scale hazards SURVEY §4 calls out — missing parquet filter
@@ -15,13 +14,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val wanted = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Volume probe for the round-11 materialized-layer family
@@ -23,15 +24,7 @@ object IvmScaleBench {
     val work = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("ivm-scale").toString)
     val nKeysArg = args.lift(2).map(_.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

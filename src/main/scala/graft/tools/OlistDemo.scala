@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.olist.{Fixtures, Orchestrator, Gold}
 
 /** Drives the full medallion pipeline end-to-end through the public
@@ -10,14 +10,7 @@ import graft.olist.{Fixtures, Orchestrator, Gold}
   * (defaults to fresh temp dirs with the bundled fixture data). */
 object OlistDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("olist-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val csvDir = args.headOption.getOrElse {
       val d = java.nio.file.Files.createTempDirectory("olist-csv").toString

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.olist.{Audit, Orchestrator}
@@ -148,14 +149,7 @@ object OlistScaleGen {
     val nOrders = args.headOption.map(_.toLong).getOrElse(300000L)
     val work = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("olist-scale").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

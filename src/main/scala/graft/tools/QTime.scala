@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Time named queries with repeats: runMain graft.tools.QTime <sfDir> <reps> <name...> */
 object QTime {
@@ -8,15 +8,7 @@ object QTime {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).flatMap(_.split(",")).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().count()
     // Same noise canary as Bench.scala: a fixed micro-op timed before each
     // query's reps, so a QTime sample carries its own quiet-evidence

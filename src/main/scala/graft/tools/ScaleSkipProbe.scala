@@ -1,11 +1,11 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -31,12 +31,7 @@ object ScaleSkipProbe {
     val warehouse = args.headOption.getOrElse(
       sys.error("usage: ScaleSkipProbe <warehouseDir> [nProbes]"))
     val nProbes = args.lift(1).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val factDir = s"$warehouse/gold/fact_orders"

@@ -1,18 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Local smoke runner mirroring the driver's t1 check: entry() on
   * sf0.001 must return rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val df = graft.SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-stage profile of named queries at bench conditions — the §1
@@ -19,15 +19,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).flatMap(_.split(",")).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().count()
 
     case class St(id: Int, name: String, sub: Long, done: Long, nTask: Int,

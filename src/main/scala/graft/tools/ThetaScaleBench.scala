@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,15 +25,7 @@ object ThetaScaleBench {
     val nRows = args.headOption.map(_.toLong).getOrElse(30000000L)
     val nShards = args.lift(1).map(_.toInt).getOrElse(8)
     val k = args.lift(2).map(_.toInt).getOrElse(1024)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Diagnostic sweep: run every SparkEntry query once, announcing each
   * name to stderr first, so log WARNs (block-put races, unpartitioned
@@ -14,15 +14,7 @@ object WarnProbe {
     // the r12 lesson is that the gate must cover every key, including ones
     // landed after a sweep, so the full run is the default, not the subset)
     val subset = args.lift(1).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => subset.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

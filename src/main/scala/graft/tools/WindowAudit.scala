@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
@@ -149,12 +150,7 @@ object WindowAudit {
   def main(args: Array[String]): Unit = {
     val d = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val only = args.lift(1).map(_.split(",").toSet)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val names = auditNames(only)
     val (rows, errors) = census(spark, d, names)

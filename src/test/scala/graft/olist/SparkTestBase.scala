@@ -9,14 +9,7 @@ import java.util.concurrent.atomic.AtomicInteger
 /** Shared local session for all specs (one JVM-wide session — Spark
   * getOrCreate dedupes). */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
 
   def tempDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix)

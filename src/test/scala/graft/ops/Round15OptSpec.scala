@@ -81,7 +81,7 @@ class Round15OptSpec extends SparkTestBase {
   }
 
   test("dedup-keep-best equals the original row_number-window implementation") {
-    val labels = TextDedup.queries("dedup-cluster")(spark, sf)
+    val labels = TextDedup.dedupCluster(spark, sf)
       .select("doc_id", "cluster_id")
     val sized = labels.join(
       Tables.documents(spark, sf).select(col("doc_id"), col("n_chars")), Seq("doc_id"))

@@ -61,7 +61,7 @@ class Round4uOpsSpec extends SparkTestBase {
     val got = run("dedup-keep-best").cache()
     got.collect().foreach(r => assert(r.getLong(1) >= 2)) // only multi-doc clusters
     // kept doc must belong to the cluster and have max n_chars among members
-    val labels = TextDedup.queries("dedup-cluster")(spark, sf).select("doc_id", "cluster_id")
+    val labels = TextDedup.dedupCluster(spark, sf).select("doc_id", "cluster_id")
     val chars = Tables.documents(spark, sf).select("doc_id", "n_chars")
     val best = labels.join(chars, "doc_id")
       .groupBy("cluster_id").agg(max("n_chars").as("max_chars"))
