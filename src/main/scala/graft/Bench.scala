@@ -1,5 +1,7 @@
 package graft
 
+import graft.KeyRunner.KeyRun
+
 /** Per-round benchmark harness. Prints ONE compact JSON line as the
   * final stdout line; the driver recovers it from a bounded (2000-char)
   * stdout tail, so the line is built to FIT: `value` is the grand total
@@ -13,71 +15,29 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
-    // Warm up the session (codegen compiler, shuffle machinery, parquet
-    // reader) so the first measured query doesn't absorb ~4s of one-time
-    // JVM initialization that no steady-state deployment pays per query.
-    spark.range(1000).selectExpr("id % 7 AS k", "id AS v")
-      .groupBy("k").count().count()
-    // Noise canary: a FIXED micro-op (same work every time, all codegen
-    // warm after the first call) timed immediately before each query's
-    // reps. On a quiet host it is flat; concurrent host load inflates it
-    // in lockstep with the query timings it brackets — so a reader (or
-    // the judge) can mechanically discard a contaminated window instead
-    // of re-measuring by hand (round-5 BENCH_r05 adjudication cost).
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000).selectExpr("id % 97 AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v")).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    canary() // compile the canary's codegen outside any measured window
-    // Two reps per query: `first` is comparable with r01-r04 single-rep
-    // history; `steady` (second rep, codegen compiled, OS page cache
-    // warm) is the regression-adjudication column — BENCH_HISTORY.md
-    // shows single-rep totals swing ±20-25% with host load, most of it
+    // Two noop-sink reps per key: `first` carries the one-time costs
+    // (codegen, page cache, stored fixtures); `steady` (the second rep)
+    // is the regression-adjudication column — BENCH_HISTORY.md shows
+    // single-rep totals swing ±20-25% with host load, most of it
     // first-run noise.
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      // announce to stderr (log-only, unmeasured) so a WARN in the bench
-      // tail is attributable to its query by position — r13: the bench
-      // log was the one surface WarnProbe's discipline didn't cover
-      System.err.println(s"[bench] $name")
-      System.err.flush()
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // release every cache entry the query pinned (LSH signatures,
-        // shingle sets, SK inputs): persists must not leak across the
-        // session, and a later rep/query must not silently reuse a
-        // cached sub-plan — each timing pays its own cost
-        spark.catalog.clearCache()
-        if (ok) dt else -1.0
-      }
-      val cn = canary()
-      val first = rep()
-      val steady = rep()
-      name -> (first, steady, cn)
-    }
+    val runs = KeyRunner.run(spark, sfDir, KeyRunner.Noop, reps = 2)
     // Locale.ROOT formatting: the f interpolator uses the JVM default
     // locale, and a comma-decimal locale would emit invalid JSON.
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def entries(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
-    val firsts = results.map { case (k, (f, _, _)) => k -> f }
-    val steadies = results.map { case (k, (_, st, _)) => k -> st }
-    val canaries = results.map { case (k, (_, _, c)) => k -> c }
-    // a failed rep records -1.0; its key stays out of both totals, so a
-    // key that throws can never lower them
-    val failed = results.collect { case (k, (f, st, _)) if f < 0 || st < 0 => k }.toSet
-    def okSum(m: Map[String, Double]): Double =
-      m.collect { case (k, v) if !failed(k) => v }.sum
-    val total = okSum(firsts)
-    val totalSteady = okSum(steadies)
-    val fullQs = entries(firsts.toSeq.sortBy(_._1))
-    val fullSteady = entries(steadies.toSeq.sortBy(_._1))
-    val fullCanary = entries(canaries.toSeq.sortBy(_._1))
-    val cSorted = canaries.values.toSeq.sorted
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def entries(rs: Seq[(String, Double)]): String = obj(rs.map { case (k, v) => k -> num(v) })
+    // a key that threw records -1.0 and stays out of both totals, so it
+    // can never lower them
+    def wall(r: KeyRun, rep: Int): Double = if (r.ok) r.reps(rep).wallS else -1.0
+    val byName = runs.sortBy(_.name)
+    def perKey(f: KeyRun => Double): String = entries(byName.map(r => r.name -> f(r)))
+    // the steady rep's profile; per-stage rows are QTime's
+    val profiles = obj(byName.filter(_.ok).map { r =>
+      r.name -> obj(r.reps(1).totals.map { case (k, v) => k -> v.toString })
+    })
+    val blockPuts = obj(byName.filter(_.blockPuts > 0).map(r => r.name -> r.blockPuts.toString))
+    val cSorted = runs.map(_.canaryS).sorted
     val (cMin, cMed, cMax) =
       if (cSorted.isEmpty) (0.0, 0.0, 0.0)
       else (cSorted.head, cSorted(cSorted.size / 2), cSorted.last)
@@ -85,7 +45,7 @@ object Bench {
     // headroom for the driver's 2000-char tail window minus sbt's
     // trailing "[success] Total time" line and the JSON envelope.
     val budget = 1500
-    val slowFirst = firsts.toSeq.sortBy(-_._2)
+    val slowFirst = runs.map(r => r.name -> wall(r, 0)).sortBy(-_._2)
     val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var used = 2 // braces
     slowFirst.foreach { case (k, v) =>
@@ -103,12 +63,12 @@ object Bench {
     val benchFile = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         new java.io.File(System.getProperty("user.dir"), defaultName).getPath))
-    val canarySummary =
-      s""""canary_min":${num(cMin)},"canary_med":${num(cMed)},"canary_max":${num(cMax)}"""
+    val summary =
+      s""""metric":"total","value":${num(KeyRunner.total(runs, 0))},"value_steady":${num(KeyRunner.total(runs, 1))},"unit":"sec","nqueries":${runs.size},"nfailed":${runs.count(!_.ok)},"nblockput":${runs.map(_.blockPuts).sum},"reps":2,"canary_min":${num(cMin)},"canary_med":${num(cMed)},"canary_max":${num(cMax)}"""
     val fullLine =
-      s"""{"metric":"total","value":${num(total)},"value_steady":${num(totalSteady)},"unit":"sec","nqueries":${results.size},"nfailed":${failed.size},"reps":2,$canarySummary,"queries":$fullQs,"queries_steady":$fullSteady,"canary":$fullCanary,"sf":"$sfDir"}"""
+      s"""{$summary,"queries":${perKey(wall(_, 0))},"queries_steady":${perKey(wall(_, 1))},"canary":${perKey(_.canaryS)},"profile":$profiles,"blockput":$blockPuts,"sf":"$sfDir"}"""
     val line =
-      s"""{"metric":"total","value":${num(total)},"value_steady":${num(totalSteady)},"unit":"sec","nqueries":${results.size},"nfailed":${failed.size},"reps":2,$canarySummary,"queries":$headline,"queries_file":"${benchFile.getAbsolutePath}","sf":"$sfDir"}"""
+      s"""{$summary,"queries":$headline,"queries_file":"${benchFile.getAbsolutePath}","sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(benchFile.toPath, fullLine + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist $benchFile: $e")

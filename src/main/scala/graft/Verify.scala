@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registry key's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -8,25 +8,17 @@ object Verify {
     val outDir = args(1)
     // optional third arg (local iteration only; the driver passes two):
     // comma-separated query names to dump instead of all
-    val subset = args.lift(2).map(_.split(",").toSet)
+    val subset = args.lift(2).map(_.split(",").toSeq)
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // a key that throws is logged and the dump goes on; the run still
     // fails at the end, so no thrown key passes silently
-    val failed = SparkEntry.queries
-      .filter { case (name, _) => subset.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-      val err =
-        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
-        }
-      // release per-query persists (LSH signatures, SK inputs, …) so a
-      // 100+-query dump doesn't accumulate session-lifetime cache entries
-      spark.catalog.clearCache()
-      err
+    val runs = KeyRunner.run(spark, sfDir, KeyRunner.Parquet(outDir), only = subset)
+    runs.foreach { r =>
+      r.error.foreach(e => System.err.println(s"[verify] ${r.name} failed: ${e.getMessage}"))
+      if (r.blockPuts > 0) System.err.println(s"[verify] ${r.name} block-put WARNs: ${r.blockPuts}")
     }
+    val failed = runs.filterNot(_.ok).map(_.name)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,7 +36,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (failed.nonEmpty) {
-      System.err.println(s"[verify] ${failed.size} failed: ${failed.toSeq.sorted.mkString(", ")}")
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.sorted.mkString(", ")}")
       sys.exit(1)
     }
   }

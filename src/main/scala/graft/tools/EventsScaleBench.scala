@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{GraftSession, KeyRunner}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * streams scattered over ~30 days, in the CURRENT fixture encoding —
   * TimestampType micros, exercising the normalizeEventTs dispatch) and
   * times sessionize / as-of / transition / streaming-window operators
-  * end-to-end. The graded testdata (sf0.1 ≈ 100k events) proves
-  * correctness; this proves the event-time shapes hold at 100× that.
+  * end-to-end (noop sink). The graded testdata (sf0.1 ≈ 100k events)
+  * proves correctness; this proves the event-time shapes hold at 100×
+  * that.
   *
   * Usage: runMain graft.tools.EventsScaleBench [nEvents] [workDir] [q1,q2,...]
   */
@@ -22,54 +23,46 @@ object EventsScaleBench {
       java.nio.file.Files.createTempDirectory("events-scale").toString)
     val spark = GraftSession.local()
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[events-scale] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
-
     val nUsers = math.max(100L, nEvents / 100L)
-    timed(s"generate ($nEvents events, $nUsers users)") {
-      spark.range(nEvents)
-        .select(
-          col("id").as("event_id"),
-          // scattered over 30 days at 1s grain + sub-second micros;
-          // NOT id-ordered, so event-time ops pay their real sorts
-          expr("timestamp_micros(CAST(1704067200 AS BIGINT) * 1000000 + " +
-            "pmod(hash(id, 3), CAST(2592000 AS BIGINT)) * 1000000 + " +
-            "pmod(hash(id, 5), 1000000))").as("ts"),
-          pmod(hash(col("id"), lit(7)), lit(nUsers)).cast("long").as("user_id"),
-          element_at(
-            array(lit("view"), lit("click"), lit("purchase"), lit("error")),
-            (pmod(hash(col("id"), lit(11)), lit(4)) + 1).cast("int")).as("event_type"),
-          (pmod(hash(col("id"), lit(13)), lit(100000)).cast("double") / 100.0).as("value"),
-          concat(lit("{\"k\": "), pmod(hash(col("id"), lit(17)), lit(100)),
-            lit("}")).as("props"))
-        // the fixture contract is a single parquet FILE at
-        // $dir/events.parquet (StreamingOps stages it with a file
-        // copy), so write via a scratch dir and move the part file
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$work/_events_stage")
-      val part = new java.io.File(s"$work/_events_stage").listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      // a prior run may have left a directory-shaped events.parquet here
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$work/events.parquet"))
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$work/events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    val t0 = System.nanoTime()
+    spark.range(nEvents)
+      .select(
+        col("id").as("event_id"),
+        // scattered over 30 days at 1s grain + sub-second micros;
+        // NOT id-ordered, so event-time ops pay their real sorts
+        expr("timestamp_micros(CAST(1704067200 AS BIGINT) * 1000000 + " +
+          "pmod(hash(id, 3), CAST(2592000 AS BIGINT)) * 1000000 + " +
+          "pmod(hash(id, 5), 1000000))").as("ts"),
+        pmod(hash(col("id"), lit(7)), lit(nUsers)).cast("long").as("user_id"),
+        element_at(
+          array(lit("view"), lit("click"), lit("purchase"), lit("error")),
+          (pmod(hash(col("id"), lit(11)), lit(4)) + 1).cast("int")).as("event_type"),
+        (pmod(hash(col("id"), lit(13)), lit(100000)).cast("double") / 100.0).as("value"),
+        concat(lit("{\"k\": "), pmod(hash(col("id"), lit(17)), lit(100)),
+          lit("}")).as("props"))
+      // the fixture contract is a single parquet FILE at
+      // $dir/events.parquet (StreamingOps stages it with a file
+      // copy), so write via a scratch dir and move the part file
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$work/_events_stage")
+    val part = new java.io.File(s"$work/_events_stage").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    // a prior run may have left a directory-shaped events.parquet here
+    org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(s"$work/events.parquet"))
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(s"$work/events.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    println(f"[events-scale] generate ($nEvents events, $nUsers users): " +
+      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     println(s"[events-scale] corpus rows: ${spark.read.parquet(s"$work/events.parquet").count()}")
 
-    args.lift(2).map(_.split(",").toSeq).getOrElse(
+    val names = args.lift(2).map(_.split(",").toSeq).getOrElse(
       Seq("agg-sessionize", "join-asof", "agg-event-transitions",
-        "win-dedup-latest", "stream-window-hourly")).foreach { q =>
-      timed(q) {
-        val n = graft.SparkEntry.queries(q)(spark, work).count()
-        print(s"[events-scale]   rows=$n ")
-      }
-      spark.catalog.clearCache()
+        "win-dedup-latest", "stream-window-hourly"))
+    KeyRunner.run(spark, work, KeyRunner.Noop, only = Some(names)).foreach { r =>
+      r.error.foreach(e => println(s"[events-scale] ${r.name} failed: $e"))
+      r.reps.foreach(rep => println(f"[events-scale] ${r.name}: ${rep.wallS}%.1f s"))
     }
     spark.stop()
   }

@@ -6,6 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Engine-wide unpartitioned-window census: builds every registered
@@ -39,9 +40,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    window-free by construction (that is its point).
   *
   * Listener attribution: QueryExecutionListener fires async on the
-  * listener bus, so the census drains the bus (reflection on the
-  * private[spark] `SparkContext.listenerBus.waitUntilEmpty`) after
-  * each build before crediting captures to the current query.
+  * listener bus, so the census drains the bus (`Bridge.waitUntilEmpty`)
+  * after each build before crediting captures to the current query.
   *
   * stream-* keys are skipped (building them executes streaming jobs);
   * their windows are over watermarked micro-batches, not global sorts.
@@ -59,31 +59,6 @@ object WindowAudit {
 
   def countUnpartitioned(plan: LogicalPlan): Int =
     plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }.size
-
-  private def drainListenerBus(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    val busM = sc.getClass.getMethods.find(_.getName == "listenerBus")
-      .getOrElse(sys.error("SparkContext.listenerBus accessor not found"))
-    val bus = busM.invoke(sc)
-    // Private-API reflection: guard every shape assumption so a Spark
-    // upgrade degrades to a bounded sleep instead of failing the
-    // enforced census spec with an opaque minBy/invoke error (r10
-    // ADVICE). Accepted shapes: waitUntilEmpty() or waitUntilEmpty(long).
-    val candidates = bus.getClass.getMethods.filter(_.getName == "waitUntilEmpty")
-    val usable = candidates.find(_.getParameterCount == 0).orElse(
-      candidates.find(m => m.getParameterCount == 1 &&
-        (m.getParameterTypes()(0) == java.lang.Long.TYPE ||
-          m.getParameterTypes()(0) == classOf[java.lang.Long])))
-    usable match {
-      case Some(m) if m.getParameterCount == 0 => m.invoke(bus)
-      case Some(m) => m.invoke(bus, java.lang.Long.valueOf(30000L))
-      case None =>
-        // Method shape changed — drain by time instead. 2s is far past
-        // the bus's per-event latency at census volume; the EXEC lens
-        // only needs events delivered before the counts are read.
-        Thread.sleep(2000L)
-    }
-  }
 
   /** Run the census over `names` (callers pre-filter stream-*). Errors
     * building a query are returned in the second component instead of
@@ -116,7 +91,7 @@ object WindowAudit {
         try {
           val df = graft.SparkEntry.queries(name)(spark, d)
           val build = countUnpartitioned(df.queryExecution.optimizedPlan)
-          drainListenerBus(spark)
+          Bridge.waitUntilEmpty(spark.sparkContext)
           val exec = Option(execCounts.get(name)).fold(0)(_.intValue)
           rows += CensusRow(name, build, exec)
         } catch {

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
@@ -10,12 +11,17 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
   * sanctioned way for an extension library to construct a DataFrame
   * from a custom LogicalPlan is a shim inside an org.apache.spark.sql
   * subpackage (the same pattern Delta and other plan-extending
-  * libraries use). Keep this file free of any logic — conversions
-  * only.
+  * libraries use). The same package also reaches the `private[spark]`
+  * listener bus. Keep this file free of any logic — conversions and
+  * accessors only.
   */
 object Bridge {
 
   /** DataFrame over a (possibly custom) logical plan. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+
+  /** Listener events arrive on an asynchronous bus; blocks until every
+    * event posted so far has been delivered. */
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -2,7 +2,7 @@ package graft.olist
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.testbridge.ListenerBus
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -35,7 +35,7 @@ trait SparkTestBase extends AnyFunSuite {
     sc.setJobGroup(group, "job census")
     try {
       val out = body
-      ListenerBus.drain(sc)
+      Bridge.waitUntilEmpty(sc)
       (out, jobs.get)
     } finally {
       sc.clearJobGroup()

@@ -3,13 +3,14 @@
 # order the driver replays it. Checked in (r13) so the sequence is part
 # of the repo contract, not a /tmp artifact re-typed each round.
 #
-# The load-bearing ordering rule (r12 lesson): WarnProbe runs over the
-# FULL SparkEntry.queries surface at BENCH conditions (sf0.1, 32
-# threads) as the LAST gate before the close bench. A key landed after
-# an earlier sweep therefore cannot ship unprobed — the r12 tail WARNs
-# (rdd_76992_22/23) came from exactly that gap: three keys merged after
-# a clean 1003-key sweep. Do NOT edit src/ while this runs: the t2/t32
-# Verify dumps must come from the same code or detcompare false-fails.
+# The load-bearing ordering rule (r12 lesson): the bench runs over the
+# FULL SparkEntry.queries surface at bench conditions (sf0.1, 32
+# threads) as the LAST gate, so a key landed after an earlier sweep
+# cannot ship unprobed. Its runner materializes every key's full answer
+# and counts block-put WARNs (`Block rdd_N_M already exists`) per key;
+# the bench step fails when any key threw (`nfailed`) or logged one
+# (`nblockput`). Do NOT edit src/ while this runs: the t2/t32 Verify
+# dumps must come from the same code or detcompare false-fails.
 #
 # r14 hardening (r13 advice item): each step's exit status is
 # accumulated and the script exits nonzero if ANY gate failed, so
@@ -51,14 +52,17 @@ step "detcompare" $?
 echo "=== SMOKE ==="
 sbt -batch 'runMain graft.tools.Smoke' > /tmp/${TAG}_smoke.log 2>&1
 step "smoke" $?
-echo "=== WARNPROBE (full surface, bench conditions) ==="
-SPARK_GRAFT_CPUS=32 sbt -batch 'runMain graft.tools.WarnProbe /root/testdata/sf0.1' > /tmp/${TAG}_warnprobe.log 2>&1
-step "warnprobe" $?
-grep -c "WARN" /tmp/${TAG}_warnprobe.log
 echo "=== BENCH ==="
 mkdir -p bench_runs/${TAG}
 N=$(ls bench_runs/${TAG}/ 2>/dev/null | grep -c '^run')
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 sbt -batch 'runMain graft.Bench' > /tmp/${TAG}_bench.log 2>&1
+rc=$?
+# Bench keeps its JSON as the last stdout line and exits 0 on failed
+# keys, so the gate reads the counts from the map it persisted
+[ $rc -eq 0 ] && python3 -c 'import json, sys
+d = json.load(open("BENCH_LATEST.json"))
+print("nfailed", d["nfailed"], "nblockput", d["nblockput"], d["blockput"])
+sys.exit(1 if d["nfailed"] or d["nblockput"] else 0)'
 step "bench" $?
 # stash the run map under the round tag so a later close-protocol bench
 # of the same tag lands as run2/run3... instead of overwriting run1
