@@ -1,59 +1,61 @@
 package graft.functions
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
-/** Scale-safe global rank + running sum — the [[SurrogateKeys]] two-pass
-  * generalized from "position under a total order" to "position AND
-  * prefix sum of a value column under a total order".
+/** Scale-safe ordered scans — global rank, running sums, running max,
+  * neighbor and last-non-null stamps under a total order, and the
+  * surrogate keys of [[SurrogateKeys]] — all through one two-pass scan.
   *
-  * Semantics are bit-identical to
-  * `row_number() OVER (ORDER BY ...)` plus
-  * `sum(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)` — the oracle
-  * twins stay plain window SQL — but the physical plan has NO
-  * single-partition window (`WindowExec: No Partition Defined`), which
-  * at fact/customer cardinality funnels the whole frame through one
-  * task. Instead:
+  * Semantics are bit-identical to the unpartitioned window each scan
+  * replaces (`row_number()`, `sum`, `max`, `lag`, `lead` or
+  * `last(c, ignoreNulls)` `OVER (ORDER BY ...)`) — the oracle twins stay
+  * plain window SQL — but the physical plan has NO single-partition
+  * window (`WindowExec: No Partition Defined`), which at fact/customer
+  * cardinality funnels the whole frame through one task. Instead
+  * [[scan]] runs:
   *
   *  1. `repartitionByRange` on the order expressions — partition i
   *     holds a contiguous slice of the global order (the same range
   *     exchange a global sort needs anyway);
   *  2. `sortWithinPartitions` — partition order ∘ local order is the
   *     global ORDER BY order;
-  *  3. a stats pass collects ONE (count, sum) pair per partition
-  *     (|partitions| longs to the driver — the only global
-  *     coordination), prefix-summed into per-partition offsets;
-  *  4. a stamping pass emits rank = offset_n(p) + local position and
-  *     cum = offset_s(p) + local running sum, fully parallel.
+  *  3. a summary job collects ONE small summary per partition (the only
+  *     global coordination), which the driver folds into one seed per
+  *     partition;
+  *  4. a stamping pass appends each row's columns from its partition's
+  *     seed and the rows before it, fully in parallel.
   *
   * The order must be TOTAL (unique tiebreak columns at every call
   * site) so the re-sort between the two passes reproduces the same
-  * order — the same invariant [[SurrogateKeys.withSk]] documents. The
-  * input is persisted across the two passes (stats job materializes
-  * the range shuffle; the stamping job reuses the shuffle files and
-  * re-runs only the post-shuffle partition sort).
+  * order. The input is persisted across the two passes (the summary
+  * job materializes the range shuffle; the stamping job reuses the
+  * shuffle files and re-runs only the post-shuffle partition sort). A
+  * frame the caller already cached is left alone, so ops that scan one
+  * input several times (e.g. three ntile axes) keep one
+  * materialization.
   *
-  * The value column must be LongType (cast at the call site); null
-  * values count as 0 toward the running sum.
+  * Value columns of the sum and max scans must be LongType (cast at the
+  * call site); null values count as 0 toward a running sum and never
+  * update a running max.
   */
 object PrefixScan {
 
-  /** Result of [[withRankCumSum]]: the stamped frame plus the two
-    * grand totals the stats pass produced for free (callers that need
-    * `count(*) OVER ()` / `sum(v) OVER ()` use these as literals
-    * instead of a second global window). */
-  final case class Scanned(df: DataFrame, n: Long, total: Long)
+  /** A range-partitioned, locally sorted frame and one summary per
+    * partition. With a single partition the summary job waits until
+    * `summaries` is read: the lone partition's seed folds no summary, so
+    * a scan whose totals nobody reads runs no summary job there (as
+    * `zipWithIndex` runs no count job on one partition). */
+  private final class Sorted[S](val schema: StructType, val rows: RDD[Row], job: () => Array[S]) {
+    lazy val summaries: Array[S] = job()
+  }
 
-  /** Append `rankName` (1-based Long position under ORDER BY `order`)
-    * and, when `valueCol` is set, `cumName` (inclusive running Long sum
-    * of `valueCol` in that order). Runs one eager stats job at call
-    * time (like SurrogateKeys' zipWithIndex). */
-  def withRankCumSum(df: DataFrame, order: Seq[Column],
-                     valueCol: Option[String],
-                     rankName: String = "rn",
-                     cumName: String = "cum"): Scanned = {
+  private def sorted[S: ClassTag](df: DataFrame, order: Seq[Column],
+                                  summarize: Iterator[Row] => S): Sorted[S] = {
     val spark = df.sparkSession
     val parts = math.max(1,
       spark.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
@@ -63,269 +65,171 @@ object PrefixScan {
     val ordered = input
       .repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
-    val vIdx = valueCol.map(ordered.schema.fieldIndex)
-    val rdd = ordered.rdd
-    // Pass 1 (eager): per-partition (count, sum) — materializes the
-    // range shuffle; pass 2 reuses the shuffle files (map stage
-    // skipped), so the input cache can be dropped right after.
-    // A caller-owned cache (sharedCache / explicit persist) is left
-    // alone — ops that scan the same input through several PrefixScan
-    // calls (e.g. three ntile axes) keep one materialization.
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var n = 0L; var s = 0L
-      it.foreach { r =>
-        n += 1
-        vIdx.foreach(i => if (!r.isNullAt(i)) s += r.getLong(i))
-      }
-      Iterator((pid, n, s))
-    }.collect().sortBy(_._1)
+    val rows = ordered.rdd
+    val out = new Sorted(ordered.schema, rows, () => spark.sparkContext.runJob(rows, summarize))
+    // the summary job materializes the range shuffle and later jobs reuse
+    // its files (map stage skipped), so the input cache is done with here
+    if (rows.getNumPartitions > 1) out.summaries
     if (!callerCached) input.unpersist(blocking = false)
-    val nTotal = stats.iterator.map(_._2).sum
-    val sTotal = stats.iterator.map(_._3).sum
-    val offs: Map[Int, (Long, Long)] = {
-      var n = 0L; var s = 0L
-      stats.map { case (pid, pn, ps) =>
-        val e = pid -> (n, s); n += pn; s += ps; e
-      }.toMap
+    out
+  }
+
+  /** Run `summarize` once per partition of `df` range-partitioned and
+    * locally sorted on the total order `order`; the summaries come back
+    * in partition-id order, i.e. in the global order. For callers that
+    * fold the partitions on the driver instead of stamping rows. */
+  def summaries[S: ClassTag](df: DataFrame, order: Seq[Column])(
+      summarize: Iterator[Row] => S): Array[S] =
+    sorted(df, order, summarize).summaries
+
+  /** The ordered scan: [[sorted]], then the driver folds the summaries
+    * with `step` into one seed per partition — from `zero` over the
+    * partitions before it, or after it when `backward` — and `stamp`
+    * pairs each row of a partition with its `added` values, given the
+    * partition's seed. A seed never folds its own partition's summary. */
+  private def scan[S: ClassTag, T](df: DataFrame, order: Seq[Column], added: Seq[StructField])(
+      summarize: Iterator[Row] => S, zero: T)(step: (T, S) => T, backward: Boolean = false)(
+      stamp: (T, Iterator[Row]) => Iterator[(Row, Seq[Any])]): (DataFrame, Sorted[S]) = {
+    val s = sorted(df, order, summarize)
+    val seeds: IndexedSeq[T] =
+      if (s.rows.getNumPartitions <= 1) IndexedSeq(zero)
+      else if (backward) s.summaries.toIndexedSeq.drop(1).scanRight(zero)((x, t) => step(t, x))
+      else s.summaries.toIndexedSeq.scanLeft(zero)(step)
+    val stamped = s.rows.mapPartitionsWithIndex { (pid, it) =>
+      stamp(seeds(pid), it).map { case (row, values) => Row.fromSeq(row.toSeq ++ values) }
     }
-    val baseFields = ordered.schema.fields :+
-      StructField(rankName, LongType, nullable = false)
-    val schema = StructType(
-      if (vIdx.isDefined) baseFields :+ StructField(cumName, LongType, nullable = false)
-      else baseFields)
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val (r0, s0) = offs.getOrElse(pid, (0L, 0L))
-      var i = 0L; var run = s0
-      it.map { row =>
-        i += 1
-        vIdx match {
-          case Some(ix) =>
-            if (!row.isNullAt(ix)) run += row.getLong(ix)
-            Row.fromSeq(row.toSeq :+ (r0 + i) :+ run)
-          case None =>
-            Row.fromSeq(row.toSeq :+ (r0 + i))
-        }
-      }
+    (df.sparkSession.createDataFrame(stamped, StructType(s.schema.fields ++ added)), s)
+  }
+
+  /** Result of [[withRankCumSums]] and [[withRankCumSum]]: the stamped
+    * frame plus the grand totals the summary job produced for free
+    * (callers that need `count(*) OVER ()` / `sum(v) OVER ()` use these
+    * as literals instead of a second global window): the row count and
+    * the total of each value column, in `valueCols` order. */
+  final case class Scanned(df: DataFrame, n: Long, totals: Seq[Long]) {
+    /** The first value column's total (0 without one). */
+    def total: Long = totals.headOption.getOrElse(0L)
+  }
+
+  /** Append `rankName` (1-based Long position under ORDER BY `order`)
+    * and, when `valueCol` is set, `cumName` (inclusive running Long sum
+    * of `valueCol` in that order): [[withRankCumSums]] with at most one
+    * value column. Runs one eager summary job at call time. */
+  def withRankCumSum(df: DataFrame, order: Seq[Column],
+                     valueCol: Option[String],
+                     rankName: String = "rn",
+                     cumName: String = "cum"): Scanned =
+    withRankCumSums(df, order, valueCol.toSeq, rankName, valueCol.map(_ => cumName).toSeq)
+
+  /** One rank column plus an inclusive running Long sum per entry of
+    * `valueCols` — `row_number() OVER (ORDER BY ...)` and
+    * `sum(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)` — all from
+    * one scan whose summary is (count, sum per value column) per
+    * partition. Use several value columns when an op needs several
+    * running sums on the same total order — e.g. per-class cumulative
+    * counts for midranks. */
+  def withRankCumSums(df: DataFrame, order: Seq[Column], valueCols: Seq[String],
+                      rankName: String, cumNames: Seq[String]): Scanned = {
+    val (out, s) = rankScan(df, order, valueCols, rankName, cumNames)
+    val grand = s.summaries.foldLeft(new Array[Long](1 + valueCols.length))(plus)
+    Scanned(out, grand(0), grand.toSeq.tail)
+  }
+
+  /** `withRankCumSum(df, order, None, rankName).df` minus its totals, so
+    * on one partition no summary job runs: [[SurrogateKeys.withSk]]. */
+  private[functions] def withRank(df: DataFrame, order: Seq[Column], rankName: String): DataFrame =
+    rankScan(df, order, Nil, rankName, Nil)._1
+
+  private def plus(a: Array[Long], b: Array[Long]): Array[Long] = a.zip(b).map { case (x, y) => x + y }
+
+  /** Seeds and summaries are `[count, sum of each value column]`. */
+  private def rankScan(df: DataFrame, order: Seq[Column], valueCols: Seq[String],
+                       rankName: String, cumNames: Seq[String]): (DataFrame, Sorted[Array[Long]]) = {
+    require(valueCols.length == cumNames.length, "one cum name per value column")
+    val vIdx = valueCols.map(df.schema.fieldIndex).toArray
+    val k = vIdx.length
+    val add: (Array[Long], Row) => Unit = (acc, r) => {
+      acc(0) += 1
+      var j = 0
+      while (j < k) { if (!r.isNullAt(vIdx(j))) acc(j + 1) += r.getLong(vIdx(j)); j += 1 }
     }
-    Scanned(spark.createDataFrame(stamped, schema), nTotal, sTotal)
+    val added = (rankName +: cumNames).map(StructField(_, LongType, nullable = false))
+    scan(df, order, added)(
+      summarize = it => { val acc = new Array[Long](1 + k); it.foreach(add(acc, _)); acc },
+      zero = new Array[Long](1 + k))(step = plus) { (seed, it) =>
+      val run = seed.clone()
+      it.map { row => add(run, row); (row, run.toSeq) }
+    }
   }
 
   /** Result of [[withRunningMax]]: stamped frame, grand row count, and
     * the grand max (None when every value was null). */
   final case class ScannedMax(df: DataFrame, n: Long, grandMax: Option[Long])
 
-  /** Running MAX under a total order — the prefix-scan twin of
-    * [[withRankCumSum]] for `max(v) OVER (ORDER BY ...)` (inclusive) or
-    * `max(v) OVER (ORDER BY ... ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-    * PRECEDING)` (exclusive — the record-high / prior-peak frame).
-    * Same two passes over the same range exchange: the stats job
-    * collects one (count, max) pair per partition, a driver prefix-max
-    * turns them into per-partition seed maxes, and the stamping pass
-    * emits each row's running max fully in parallel. Max is
-    * associative and order-insensitive within the prefix, so the
-    * result is bit-identical to the single-partition WindowExec form
-    * at any partition count. `maxName` is nullable: exclusive scans
-    * have no prior for the global first row (and an all-null prefix
-    * has no max). Null values never update the running max. Ports
-    * win-drawdown / win-ulcer-index / win-record-highs off the
-    * unpartitioned-window allowlist (r10 verdict item 7). */
+  /** Running MAX under a total order — `max(v) OVER (ORDER BY ...)`
+    * (inclusive) or `max(v) OVER (ORDER BY ... ROWS BETWEEN UNBOUNDED
+    * PRECEDING AND 1 PRECEDING)` (exclusive — the record-high /
+    * prior-peak frame). The summary is (count, max) per partition and a
+    * partition's seed is the max of all partitions before it. Max is
+    * associative and order-insensitive within the prefix, so the result
+    * is bit-identical to the single-partition WindowExec form at any
+    * partition count. `maxName` is nullable: exclusive scans have no
+    * prior for the global first row (and an all-null prefix has no
+    * max). Ports win-drawdown / win-ulcer-index / win-record-highs off
+    * the unpartitioned-window allowlist (r10 verdict item 7). */
   def withRunningMax(df: DataFrame, order: Seq[Column], valueCol: String,
                      maxName: String = "runmax",
                      inclusive: Boolean = true): ScannedMax = {
-    val spark = df.sparkSession
-    val parts = math.max(1,
-      spark.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
-        .getOrElse(spark.sparkContext.defaultParallelism))
-    val callerCached = df.storageLevel != StorageLevel.NONE
-    val input = if (callerCached) df else df.persist()
-    val ordered = input
-      .repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-    val vIdx = ordered.schema.fieldIndex(valueCol)
-    val rdd = ordered.rdd
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var n = 0L; var has = false; var m = Long.MinValue
-      it.foreach { r =>
-        n += 1
-        if (!r.isNullAt(vIdx)) { has = true; m = math.max(m, r.getLong(vIdx)) }
-      }
-      Iterator((pid, n, has, m))
-    }.collect().sortBy(_._1)
-    if (!callerCached) input.unpersist(blocking = false)
-    val nTotal = stats.iterator.map(_._2).sum
-    // seed max of everything BEFORE partition pid
-    val seeds: Map[Int, Option[Long]] = {
-      var cur: Option[Long] = None
-      stats.map { case (pid, _, has, m) =>
-        val e = pid -> cur
-        if (has) cur = Some(cur.fold(m)(math.max(_, m)))
-        e
-      }.toMap
-    }
-    val grand = {
-      val ms = stats.filter(_._3).map(_._4)
-      if (ms.isEmpty) None else Some(ms.max)
-    }
-    val schema = StructType(
-      ordered.schema.fields :+ StructField(maxName, LongType, nullable = true))
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var run: Option[Long] = seeds.getOrElse(pid, None)
+    val v = df.schema.fieldIndex(valueCol)
+    val value: Row => Option[Long] = r => if (r.isNullAt(v)) None else Some(r.getLong(v))
+    val maxOf: (Option[Long], Option[Long]) => Option[Long] = (a, b) =>
+      b.fold(a)(x => Some(a.fold(x)(math.max(_, x))))
+    val (out, s) = scan(df, order, Seq(StructField(maxName, LongType, nullable = true)))(
+      summarize = it => it.foldLeft((0L, Option.empty[Long])) { case ((n, m), r) => (n + 1, maxOf(m, value(r))) },
+      zero = Option.empty[Long])(step = (m, nm) => maxOf(m, nm._2)) { (seed, it) =>
+      var run = seed
       it.map { row =>
-        val v = if (row.isNullAt(vIdx)) None else Some(row.getLong(vIdx))
-        if (inclusive) {
-          v.foreach(x => run = Some(run.fold(x)(math.max(_, x))))
-          Row.fromSeq(row.toSeq :+ run.map(Long.box).orNull)
-        } else {
-          val prior = run
-          v.foreach(x => run = Some(run.fold(x)(math.max(_, x))))
-          Row.fromSeq(row.toSeq :+ prior.map(Long.box).orNull)
-        }
+        val prior = run
+        run = maxOf(run, value(row))
+        (row, Seq((if (inclusive) run else prior).map(Long.box).orNull))
       }
     }
-    ScannedMax(spark.createDataFrame(stamped, schema), nTotal, grand)
-  }
-
-  /** Result of [[withRankCumSums]]: stamped frame, grand row count and
-    * the grand total of each value column, in `valueCols` order. */
-  final case class ScannedN(df: DataFrame, n: Long, totals: Seq[Long])
-
-  /** Multi-value generalization of [[withRankCumSum]]: one rank column
-    * plus an inclusive running Long sum per entry of `valueCols`, all
-    * from the same two passes (one range exchange, one stats collect of
-    * |partitions|·(1+|valueCols|) longs, one stamping pass). Use when an
-    * op needs several `sum(v) OVER (ORDER BY ...)` columns on the same
-    * total order — e.g. per-class cumulative counts for midranks. Same
-    * invariants as [[withRankCumSum]]: total order, LongType values
-    * (nulls count as 0). */
-  def withRankCumSums(df: DataFrame, order: Seq[Column], valueCols: Seq[String],
-                      rankName: String, cumNames: Seq[String]): ScannedN = {
-    require(valueCols.length == cumNames.length, "one cum name per value column")
-    val spark = df.sparkSession
-    val parts = math.max(1,
-      spark.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
-        .getOrElse(spark.sparkContext.defaultParallelism))
-    val callerCached = df.storageLevel != StorageLevel.NONE
-    val input = if (callerCached) df else df.persist()
-    val ordered = input
-      .repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-    val vIdx = valueCols.map(ordered.schema.fieldIndex).toArray
-    val k = vIdx.length
-    val rdd = ordered.rdd
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var n = 0L; val s = new Array[Long](k)
-      it.foreach { r =>
-        n += 1
-        var j = 0
-        while (j < k) { if (!r.isNullAt(vIdx(j))) s(j) += r.getLong(vIdx(j)); j += 1 }
-      }
-      Iterator((pid, n, s))
-    }.collect().sortBy(_._1)
-    if (!callerCached) input.unpersist(blocking = false)
-    val nTotal = stats.iterator.map(_._2).sum
-    val totals = (0 until k).map(j => stats.iterator.map(_._3(j)).sum)
-    val offs: Map[Int, (Long, Array[Long])] = {
-      var n = 0L; val s = new Array[Long](k)
-      stats.map { case (pid, pn, ps) =>
-        val e = pid -> (n, s.clone())
-        n += pn
-        var j = 0; while (j < k) { s(j) += ps(j); j += 1 }
-        e
-      }.toMap
-    }
-    val schema = StructType(ordered.schema.fields ++
-      (StructField(rankName, LongType, nullable = false) +:
-        cumNames.map(c => StructField(c, LongType, nullable = false))))
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val (r0, s0) = offs.getOrElse(pid, (0L, new Array[Long](k)))
-      var i = 0L; val run = s0.clone()
-      it.map { row =>
-        i += 1
-        var j = 0
-        while (j < k) { if (!row.isNullAt(vIdx(j))) run(j) += row.getLong(vIdx(j)); j += 1 }
-        Row.fromSeq((row.toSeq :+ (r0 + i)) ++ run.toSeq)
-      }
-    }
-    ScannedN(spark.createDataFrame(stamped, schema), nTotal, totals)
+    ScannedMax(out, s.summaries.map(_._1).sum, s.summaries.map(_._2).foldLeft(Option.empty[Long])(maxOf))
   }
 
   /** Boundary-stitched neighbor stamp — the scale-safe replacement for
     * `lag(c, 1) OVER (ORDER BY ...)` / `lead(c, 1) OVER (ORDER BY ...)`
     * with NO partition clause, which Spark executes as a full sort into
-    * one task. Range exchange + local sort as in [[withRankCumSum]];
-    * one tiny stats pass collects each partition's FIRST and LAST values
-    * of the tracked columns (2·|partitions| tuples to the driver), so
-    * the stamping pass fills every partition's edge row from its
-    * neighbor partition's edge value and all interior rows from the
-    * adjacent local row. The global first (lag) / last (lead) row gets
-    * null, exactly like the window builtin with no default. Stamped
-    * columns are named `<col><suffix>` and keep the source type. The
-    * order must be TOTAL (same re-sort invariant as withRankCumSum). */
+    * one task. The summary is each partition's FIRST and LAST values of
+    * the tracked columns, so the stamping pass fills every partition's
+    * edge row from the nearest non-empty neighbor partition's edge value
+    * and all interior rows from the adjacent local row. The global first
+    * (lag) / last (lead) row gets null, exactly like the window builtin
+    * with no default. Stamped columns are named `<col><suffix>` and keep
+    * the source type. */
   def withNeighbor(df: DataFrame, order: Seq[Column], cols: Seq[String],
                    lead: Boolean = false, suffix: String = "_adj"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(1,
-      spark.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
-        .getOrElse(spark.sparkContext.defaultParallelism))
-    val callerCached = df.storageLevel != StorageLevel.NONE
-    val input = if (callerCached) df else df.persist()
-    val ordered = input
-      .repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-    val idxs = cols.map(ordered.schema.fieldIndex).toArray
-    val rdd = ordered.rdd
-    val edges: Array[(Int, Option[(Seq[Any], Seq[Any])])] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (!it.hasNext) Iterator((pid, None))
-        else {
-          val first = it.next()
-          var last = first
-          while (it.hasNext) last = it.next()
-          Iterator((pid,
-            Some((idxs.toSeq.map(first.get), idxs.toSeq.map(last.get)))))
-        }
-      }.collect().sortBy(_._1)
-    if (!callerCached) input.unpersist(blocking = false)
-    // carry per partition: nearest non-empty neighbor's edge tuple
-    val carry = new Array[Seq[Any]](edges.length)
-    if (!lead) {
-      var prev: Seq[Any] = null
-      edges.foreach { case (pid, e) =>
-        carry(pid) = prev
-        e.foreach { case (_, lastV) => prev = lastV }
-      }
-    } else {
-      var nxt: Seq[Any] = null
-      edges.reverse.foreach { case (pid, e) =>
-        carry(pid) = nxt
-        e.foreach { case (firstV, _) => nxt = firstV }
-      }
-    }
-    val nulls: Seq[Any] = idxs.toSeq.map(_ => null)
-    val schema = StructType(ordered.schema.fields ++ cols.map(c =>
-      StructField(c + suffix, ordered.schema(c).dataType, nullable = true)))
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val boundary = Option(carry(pid)).getOrElse(nulls)
+    val idxs = cols.map(df.schema.fieldIndex)
+    val tracked: Row => Seq[Any] = r => idxs.map(r.get)
+    val added = cols.map(c => StructField(c + suffix, df.schema(c).dataType, nullable = true))
+    scan(df, order, added)(
+      summarize = it => if (!it.hasNext) None else {
+        val first = it.next()
+        var last = first
+        while (it.hasNext) last = it.next()
+        Some((tracked(first), tracked(last)))
+      },
+      zero = (cols.map(_ => null): Seq[Any]))(
+      step = (carry, edges) => edges.fold(carry) { case (first, last) => if (lead) first else last },
+      backward = lead) { (boundary, it) =>
       if (!lead) {
-        var prev: Seq[Any] = boundary
-        it.map { row =>
-          val out = Row.fromSeq(row.toSeq ++ prev)
-          prev = idxs.toSeq.map(row.get)
-          out
-        }
-      } else new Iterator[Row] {
-        private var cur: Row = if (it.hasNext) it.next() else null
-        def hasNext: Boolean = cur != null
-        def next(): Row = {
-          val nx = if (it.hasNext) it.next() else null
-          val nv = if (nx != null) idxs.toSeq.map(nx.get) else boundary
-          val out = Row.fromSeq(cur.toSeq ++ nv)
-          cur = nx
-          out
-        }
+        var prev = boundary
+        it.map { row => val out = (row, prev); prev = tracked(row); out }
+      } else {
+        val rows = it.buffered
+        rows.map(row => (row, if (rows.hasNext) tracked(rows.head) else boundary))
       }
-    }
-    spark.createDataFrame(stamped, schema)
+    }._1
   }
 
   /** Boundary-stitched EXCLUSIVE last-non-null carry — the scale-safe
@@ -337,78 +241,28 @@ object PrefixScan {
     * UNBOUNDED FOLLOWING)` is this same scan under the REVERSED total
     * order — pass `order.map(_.desc)`-style reversed columns.
     *
-    * Range exchange + local sort as in [[withRankCumSum]]; the stats
-    * pass collects each partition's LAST non-null value per tracked
-    * column (|partitions|·|cols| values to the driver), the driver
-    * prefix-carries them per column independently, and the stamping
-    * pass emits each row's carry (the boundary seed for the partition's
-    * first rows, then the running local value) fully in parallel. The
-    * global first rows (no preceding non-null) get null, exactly like
-    * the window builtin. Stamped columns are `<col><suffix>`, source
-    * type kept. Order must be TOTAL (same re-sort invariant). */
+    * The summary is each partition's LAST non-null value per tracked
+    * column, carried across partitions per column independently; each
+    * row gets the carry of the rows before it. The global first rows
+    * (no preceding non-null) get null, exactly like the window builtin.
+    * Stamped columns are `<col><suffix>`, source type kept. */
   def withLastNonNull(df: DataFrame, order: Seq[Column], cols: Seq[String],
                       suffix: String = "_carry"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(1,
-      spark.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
-        .getOrElse(spark.sparkContext.defaultParallelism))
-    val callerCached = df.storageLevel != StorageLevel.NONE
-    val input = if (callerCached) df else df.persist()
-    val ordered = input
-      .repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-    val idxs = cols.map(ordered.schema.fieldIndex).toArray
-    val rdd = ordered.rdd
-    // per partition, per tracked col: the partition's last non-null
-    val stats: Array[(Int, Array[Any])] = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val lastNN = new Array[Any](idxs.length)
-      it.foreach { r =>
-        var i = 0
-        while (i < idxs.length) {
-          if (!r.isNullAt(idxs(i))) lastNN(i) = r.get(idxs(i))
-          i += 1
-        }
-      }
-      Iterator((pid, lastNN))
-    }.collect().sortBy(_._1)
-    if (!callerCached) input.unpersist(blocking = false)
-    // boundary seed for partition pid: last non-null per col over ALL
-    // preceding partitions (cols carry independently)
-    val seeds = new Array[Array[Any]](stats.length)
-    val run = new Array[Any](idxs.length)
-    stats.foreach { case (pid, lastNN) =>
-      seeds(pid) = run.clone()
+    val idxs = cols.map(df.schema.fieldIndex).toArray
+    val carry: (Array[Any], Row) => Unit = (acc, r) => {
       var i = 0
-      while (i < idxs.length) {
-        if (lastNN(i) != null) run(i) = lastNN(i)
-        i += 1
-      }
+      while (i < idxs.length) { if (!r.isNullAt(idxs(i))) acc(i) = r.get(idxs(i)); i += 1 }
     }
-    val schema = StructType(ordered.schema.fields ++ cols.map(c =>
-      StructField(c + suffix, ordered.schema(c).dataType, nullable = true)))
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val carry: Array[Any] =
-        if (pid < seeds.length && seeds(pid) != null) seeds(pid).clone()
-        else new Array[Any](idxs.length)
-      it.map { row =>
-        val out = Row.fromSeq(row.toSeq ++ carry.toSeq)
-        var i = 0
-        while (i < idxs.length) {
-          if (!row.isNullAt(idxs(i))) carry(i) = row.get(idxs(i))
-          i += 1
-        }
-        out
-      }
-    }
-    spark.createDataFrame(stamped, schema)
+    val added = cols.map(c => StructField(c + suffix, df.schema(c).dataType, nullable = true))
+    scan(df, order, added)(
+      summarize = it => { val acc = new Array[Any](idxs.length); it.foreach(carry(acc, _)); acc },
+      zero = new Array[Any](idxs.length))(
+      step = (run, last) => run.zip(last).map { case (r, l) => if (l != null) l else r }) { (seed, it) =>
+      val run = seed.clone()
+      it.map { row => val out = (row, run.toSeq); carry(run, row); out }
+    }._1
   }
 
-  /** `ntile(k) OVER (ORDER BY ...)` reconstructed from a [[withRankCumSum]]
-    * rank and the total row count — the SQL-standard bucket split (first
-    * `n % k` buckets hold `n/k + 1` rows, the rest `n/k`), matching
-    * Spark's and DuckDB's ntile exactly. Integer arithmetic via floor of
-    * a Long/Long division — exact while ranks stay below 2^53, i.e. for
-    * any realizable row count. */
   /** Result of [[ntileSpans]]: the span table plus the grand row count. */
   final case class Spans(df: DataFrame, n: Long)
 
@@ -457,6 +311,12 @@ object PrefixScan {
     Spans(out, n)
   }
 
+  /** `ntile(k) OVER (ORDER BY ...)` reconstructed from a [[withRankCumSum]]
+    * rank and the total row count — the SQL-standard bucket split (first
+    * `n % k` buckets hold `n/k + 1` rows, the rest `n/k`), matching
+    * Spark's and DuckDB's ntile exactly. Integer arithmetic via floor of
+    * a Long/Long division — exact while ranks stay below 2^53, i.e. for
+    * any realizable row count. */
   def ntileFromRank(k: Long, n: Long, rank: Column): Column = {
     val q = n / k; val rem = n % k; val cut = rem * (q + 1)
     val bucket =

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -14,15 +14,9 @@ import org.apache.spark.sql.types._
   * physical plan is NOT a global window, which would funnel the whole
   * table through one partition (`WindowExec: No Partition Defined` —
   * a one-task straggler/OOM on any table that grows with the facts):
-  *
-  *  1. `repartitionByRange` on the key — partition i holds a contiguous
-  *     key range below partition i+1's (range exchange, same shuffle a
-  *     global sort would need anyway);
-  *  2. sort within each partition — now partition order ∘ local order
-  *     is exactly the global ORDER BY order;
-  *  3. `zipWithIndex` — one lightweight count job collects a single Long
-  *     per partition, prefix-sums the offsets on the driver, and each
-  *     partition stamps offset + local position in parallel.
+  * it is [[PrefixScan]]'s rank scan — range exchange on the key, local
+  * sort, one row count per partition prefix-summed on the driver, and a
+  * parallel stamp of offset + local position.
   *
   * The only global coordination is |partitions| longs; every stage is
   * bounded by a partition, so the pattern holds at 100 TB facts where
@@ -33,40 +27,13 @@ import org.apache.spark.sql.types._
 object SurrogateKeys {
 
   /** Append `skName` = position (1-based, Long unless `skType` says
-    * otherwise) of each row under ORDER BY `keyCols`.
-    *
-    * The INPUT is persisted (not the sorted output): the range
-    * partitioner's sampling pass and the shuffle map stage both read
-    * it, so caching it means the upstream plan (joins included at the
-    * fact call sites) executes once instead of twice. Downstream, the
-    * two `zipWithIndex` jobs share the same shuffle dependency — Spark
-    * skips the map stage on the second job — so only the post-shuffle
-    * partition sort re-runs. The cache entry is evictable
-    * (MEMORY_AND_DISK, LRU) and lives until session end; at true
-    * cluster scale the same slot is a checkpoint.
-    */
+    * otherwise) of each row under ORDER BY `keyCols`. The input is
+    * cached across the scan's two passes under [[PrefixScan]]'s policy
+    * (a caller-cached frame is left alone); at the fact call sites that
+    * keeps the upstream joins from executing twice. */
   def withSk(df: DataFrame, skName: String, keyCols: Seq[String],
              skType: DataType = LongType): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(1,
-      spark.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
-        .getOrElse(spark.sparkContext.defaultParallelism))
-    val input = df.persist()
-    val ordered = input
-      .repartitionByRange(parts, keyCols.map(col): _*)
-      .sortWithinPartitions(keyCols.map(col): _*)
-    val schema = StructType(
-      ordered.schema.fields :+ StructField(skName, LongType, nullable = false))
-    // zipWithIndex runs its per-partition count job eagerly at call time,
-    // which materializes the range shuffle; downstream jobs reuse those
-    // shuffle files (map stage skipped), so the cache has done its job
-    // and can be released here instead of leaking until session end.
-    val indexed = ordered.rdd.zipWithIndex()
-    input.unpersist(blocking = false)
-    val stamped = indexed.map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ (idx + 1L))
-    }
-    val out = spark.createDataFrame(stamped, schema)
+    val out = PrefixScan.withRank(df, keyCols.map(col), skName)
     if (skType == LongType) out else out.withColumn(skName, col(skName).cast(skType))
   }
 }

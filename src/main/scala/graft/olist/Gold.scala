@@ -14,8 +14,8 @@ import Functions._
   * (`06_create_gold_tables.sql:55` etc., `07:198,291`) becomes a
   * deterministic dense key in natural-key order — reproducible across
   * reruns, which IDENTITY insert order is not (SURVEY §7 hard part 1).
-  * Assignment is partition-offset (graft.functions.SurrogateKeys: range
-  * partition + local sort + zipWithIndex) for dims and facts alike — no
+  * Assignment is partition-offset (graft.functions.SurrogateKeys, a rank
+  * scan of PrefixScan's one ordered scan) for dims and facts alike — no
   * single-partition global window anywhere in the gold build, so the
   * same code survives fact tables that outgrow one task.
   *

@@ -19,8 +19,8 @@ object RelJoins extends KeyModule {
     * natural-key order (SURVEY §7 hard part 1 — never
     * monotonically_increasing_id, which is partition-dependent). The
     * customer dim grows with the fact data, so assignment is the
-    * partition-offset pattern (SurrogateKeys.withSk: range partition +
-    * local sort + zipWithIndex), not a single-partition global window. */
+    * partition-offset pattern (SurrogateKeys.withSk: a rank scan of
+    * PrefixScan's ordered scan), not a single-partition global window. */
   private def dimCustomer(s: SparkSession, d: String): DataFrame =
     graft.functions.SurrogateKeys.withSk(
       customer(s, d).select(

@@ -85,9 +85,9 @@ object RelMore121 extends KeyModule {
     // PrefixScan neighbor stamp paid its sort TWICE per ordering (stats
     // collect + stamp re-execution) to produce a column we immediately
     // summed away, and materialized li once per call. Now: li cached
-    // once; per ordering, one range exchange + local sort + a single
-    // linear mapPartitions pass emitting (local delta-byte sum, first,
-    // last, n) per partition; the ≤|partitions| boundary deltas (32
+    // once; per ordering, one PrefixScan.summaries pass (range exchange +
+    // local sort) emitting (local delta-byte sum, first, last, n) per
+    // partition; the ≤|partitions| boundary deltas (32
     // bounded by construction — shuffle.partitions summaries, never
     // data rows) fold on the driver with the same exact integer varint
     // arithmetic. Identical totals: the concatenated range-sorted
@@ -101,13 +101,8 @@ object RelMore121 extends KeyModule {
       else if (zz < 268435456L) 4L else if (zz < 34359738368L) 5L else 6L
     }
     def orderedBytes(order: Seq[org.apache.spark.sql.Column]): (Long, Long) = {
-      val parts = math.max(1,
-        s.conf.getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
-          .getOrElse(s.sparkContext.defaultParallelism))
-      val ordered = li.repartitionByRange(parts, order: _*)
-        .sortWithinPartitions(order: _*)
-      val okIdx = ordered.schema.fieldIndex("l_orderkey")
-      val summaries = ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
+      val okIdx = li.schema.fieldIndex("l_orderkey")
+      val summaries = graft.functions.PrefixScan.summaries(li, order) { it =>
         var first = 0L; var last = 0L; var localSum = 0L; var n = 0L
         var nonEmpty = false
         it.foreach { r =>
@@ -116,11 +111,11 @@ object RelMore121 extends KeyModule {
           else localSum += varintBytesL(k - last)
           last = k; n += 1
         }
-        Iterator((pid, nonEmpty, first, last, localSum, n))
-      }.collect().sortBy(_._1)
+        (nonEmpty, first, last, localSum, n)
+      }
       var prev = 0L // the lag(…, 1, 0) default: global first row deltas vs 0
       var bytes = 0L; var n = 0L
-      summaries.foreach { case (_, nonEmpty, first, last, localSum, cnt) =>
+      summaries.foreach { case (nonEmpty, first, last, localSum, cnt) =>
         if (nonEmpty) {
           bytes += varintBytesL(first - prev) + localSum
           prev = last; n += cnt

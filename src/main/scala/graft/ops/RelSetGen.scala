@@ -99,7 +99,7 @@ object RelSetGen extends KeyModule {
     * (`06_create_gold_tables.sql:55,70,86,100,128,147`; reseed `07:198`).
     * Dense 1..N in natural-key order, reproducible across reruns
     * (= reseed semantics). Assignment is the partition-offset pattern
-    * (SurrogateKeys.withSk — range partition + local sort + zipWithIndex),
+    * (SurrogateKeys.withSk — a rank scan of PrefixScan's ordered scan),
     * not a single-partition global window: the part table scales with the
     * warehouse, and the oracle stays the plain row_number window SQL. */
   val skIdentity: Q = (s, d) =>

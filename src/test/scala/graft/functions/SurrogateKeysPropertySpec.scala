@@ -1,6 +1,11 @@
 package graft.functions
 
 import graft.olist.SparkTestBase
+import graft.ops.Tables.withShufflePartitions
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Randomized (seeded, reproducible) property: the partition-offset SK
   * assigner must equal `row_number() OVER (ORDER BY key)` for any
@@ -37,5 +42,41 @@ class SurrogateKeysPropertySpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val expected = rows.sorted.zipWithIndex.map { case (p, i) => p -> (i + 1L) }.toMap
     assert(got == expected)
+  }
+
+  test("withSk leaves a caller's cache in place") {
+    import spark.implicits._
+    val df = (1L to 50L).toDF("k").persist()
+    try {
+      df.count()
+      SurrogateKeys.withSk(df, "sk", Seq("k")).collect()
+      assert(df.storageLevel != StorageLevel.NONE, "withSk evicted the caller's cache entry")
+    } finally df.unpersist()
+  }
+
+  /** The range exchange + local sort + `zipWithIndex` assignment that
+    * `withSk` replaced: the reference for its eager job count. */
+  private def zipped(df: DataFrame, sk: String, keys: Seq[String]): DataFrame = {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val input = df.persist()
+    val ordered = input.repartitionByRange(parts, keys.map(col): _*)
+      .sortWithinPartitions(keys.map(col): _*)
+    val indexed = ordered.rdd.zipWithIndex()
+    input.unpersist(blocking = false)
+    spark.createDataFrame(indexed.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) },
+      StructType(ordered.schema.fields :+ StructField(sk, LongType, nullable = false)))
+  }
+
+  test("withSk runs no more eager jobs than zipWithIndex, at 1 and 4 partitions") {
+    import spark.implicits._
+    val df = (1L to 300L).map(k => (k * 7 % 301, k)).toDF("k", "v")
+    Seq(1, 4).foreach { parts =>
+      withShufflePartitions(spark, parts) {
+        val (ref, refJobs) = jobsOf(zipped(df, "sk", Seq("k")))
+        val (got, jobs) = jobsOf(SurrogateKeys.withSk(df, "sk", Seq("k")))
+        assert(jobs == refJobs, s"parts=$parts")
+        assert(got.collect().toSet == ref.collect().toSet, s"parts=$parts")
+      }
+    }
   }
 }
