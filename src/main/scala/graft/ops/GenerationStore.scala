@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-atomic state commits for foreachBatch-maintained stores —
   * the generation-dir + manifest-pointer pattern sink-manifest-atomic
@@ -62,6 +63,18 @@ object GenerationStore {
     * committed the swap but not the streaming offset). */
   def alreadyApplied(root: String, batchId: Long): Boolean =
     batchId <= read(root).lastBatchId
+
+  /** Apply one foreachBatch micro-batch exactly once: a replayed
+    * `batchId` is skipped before its `delta` is even built; otherwise
+    * `delta` is merged with the live generation by `merge(live, delta)`
+    * (or stands alone before the first commit) and committed as the
+    * next generation. */
+  def mergeBatch(s: SparkSession, root: String, batchId: Long)(delta: => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): Unit =
+    if (!alreadyApplied(root, batchId)) {
+      val next = read(root).dataDir.fold(delta)(dir => merge(s.read.parquet(dir), delta))
+      commit(root, batchId)(next.write.mode("overwrite").parquet(_))
+    }
 
   /** Commit one generation: `write` receives the private gen dir to
     * fill (typically df.write.parquet), then the manifest pointer is

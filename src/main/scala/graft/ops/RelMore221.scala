@@ -39,7 +39,7 @@ object RelMore221 extends KeyModule {
     * is the withRankCumSum rank, scale-safe). */
   /** Exact integer log-bucket index over a BIGINT column `c`: unit
     * buckets below 16, else 16·MSB + 4 mantissa bits (base 2^(1/16)).
-    * Shared with stream-ddsketch-incremental (RelMore222). */
+    * Shared with stream-ddsketch-incremental (StreamingOps). */
   private[ops] val idxExpr: String = "CASE WHEN c < 16 THEN c ELSE " +
     "16 * (length(conv(CAST(c AS STRING), 10, 2)) - 1) + " +
     "(c div shiftleft(1L, length(conv(CAST(c AS STRING), 10, 2)) - 5) - 16) END"

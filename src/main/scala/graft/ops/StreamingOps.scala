@@ -1,20 +1,26 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import Tables._
 
-/** Structured Streaming surface (additive — the reference is pure batch,
-  * SURVEY §2.10). The events table is replayed through a real streaming
-  * source with Trigger.AvailableNow (process-everything-then-stop), a
-  * memory sink, and — for the windowed op — event-time tumbling windows
-  * with a watermark. The same topology pointed at a live directory/Kafka
-  * is the production deployment; AvailableNow makes it deterministic and
-  * batch-equivalent, which is what the oracle checks.
+/** The stream family: every `stream-*` key (additive — the reference is
+  * pure batch, SURVEY §2.10). Each key replays staged files through a
+  * real streaming source with Trigger.AvailableNow
+  * (process-everything-then-stop) into a memory table, a parquet sink or
+  * a foreachBatch generation store, with event-time windows, watermarks
+  * and state stores where the key needs them. The same topology pointed
+  * at a live directory/Kafka is the production deployment; AvailableNow
+  * makes it deterministic and batch-equivalent, which is what the oracle
+  * checks. Every staging, scratch and run decision lives in the replay
+  * harness at the top; the keys below only build their queries.
   */
 object StreamingOps extends KeyModule {
+
+  // ---- replay harness ----------------------------------------------------
 
   /** Copy-to-temp + atomic rename: a plain REPLACE_EXISTING copy is a
     * truncate-then-write, so a concurrent reader of the same staged
@@ -38,100 +44,179 @@ object StreamingOps extends KeyModule {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Scope a state-partition count to one streaming execution. The number
-    * of state stores a stateful query creates is frozen at checkpoint
-    * creation from spark.sql.shuffle.partitions, and EVERY micro-batch
-    * pays one state-store commit (snapshot/delta file + fsync) per
-    * partition per stateful operator — for a join that is 4 stores per
-    * partition. State partitions must therefore be sized to the stateful
-    * KEY CARDINALITY of the stream, not to the session default: at this
-    * fixture's volume (≤100k events) 32 partitions is pure commit
-    * overhead, while a 100 TB/day deployment of the same topology would
-    * raise the number with cluster size. The session value is restored
-    * in a finally so batch queries are untouched. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(f: => T): T =
-    Tables.withShufflePartitions(s, n)(f)
+  /** A key whose state partitions are sized to the stream, not to the
+    * session. The number of state stores a stateful query creates is
+    * frozen at checkpoint creation from spark.sql.shuffle.partitions, and
+    * EVERY micro-batch pays one state-store commit (snapshot/delta file +
+    * fsync) per partition per stateful operator — for a join that is 4
+    * stores per partition. State partitions must therefore be sized to
+    * the stateful KEY CARDINALITY of the stream: at this fixture's volume
+    * (≤100k events) 32 partitions is pure commit overhead, while a
+    * 100 TB/day deployment of the same topology would raise the number
+    * with cluster size. The session value is restored afterwards, so
+    * batch queries are untouched. */
+  private def stateful(name: String)(body: Replay => DataFrame): Q =
+    (s, d) => withShufflePartitions(s, 4)(body(new Replay(s, d, name)))
 
-  private def streamEvents(s: SparkSession, d: String, withTs: Boolean): DataFrame = {
+  /** A key that runs on the session's shuffle-partition count. */
+  private def replay(name: String)(body: Replay => DataFrame): Q =
+    (s, d) => body(new Replay(s, d, name))
+
+  /** The state store transformWithState requires. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** One key's replay, named `name`: its query, its memory table, its
+    * checkpoint `ckpt` and its scratch root (staged sources, sinks, the
+    * generation store) all carry the name, so no key touches another
+    * key's dirs. Entering stops a stale query of that name and wipes both
+    * dirs, so every replay starts from the staged files as they are now
+    * (checkpoints and scratch are also namespaced by dataset dir and pid,
+    * Tables.tmp). Staged sources read events.ts as a nanos long when the
+    * fixture encodes it as int64 TIMESTAMP(NANOS), which Spark 4 rejects
+    * without the legacy conf. */
+  private final class Replay(val s: SparkSession, val d: String, val name: String) {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // FileStreamSource wants a directory to monitor: stage the single
-    // parquet file into one (a live deployment would point this at the
-    // landing directory / object-store prefix directly). Tables.tmp →
-    // pid-namespaced, so no cross-process interference.
-    val srcDir = new java.io.File(Tables.tmp("stream-src", d))
-    srcDir.mkdirs()
-    val staged = new java.io.File(srcDir, "events.parquet")
-    // always refresh: an exists() guard would silently keep serving a
-    // stale copy if the dataset at the same path were regenerated, and
-    // the copy is cheap relative to the query (checkpoints are wiped per
-    // run, so replay always starts from the staged file as it is now)
-    stageAtomically(s"$d/events.parquet", staged)
-    // Derive the stream schema from the staged file instead of hard-coding
-    // the ts encoding: the fixture has shipped both int64-nanos and
-    // timestamp[us], and an explicit LongType schema over micros data does
-    // not throw — it silently collapses all timestamps 1000× (Jan 2024 →
-    // 43 minutes of 1970), which detonates every event-time window.
-    val inferred = s.read.parquet(staged.getAbsolutePath).schema
-    val schema = if (withTs) inferred
-                 else StructType(inferred.filterNot(_.name == "ts"))
-    val df = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
-    if (withTs) {
-      val out = Tables.normalizeEventTs(df.withColumn("event_ts", col("ts")), "event_ts")
-        .drop("ts")
-      // Sanity tripwire on the staged file (batch-side, cheap single-row
-      // scan): a unit drift that survives the dtype dispatch would shift
-      // timestamps by ~1000× — catch it before it produces plausible but
-      // wrong windows.
-      val probe = Tables.normalizeEventTs(
-        s.read.parquet(staged.getAbsolutePath).limit(1)).select(col("ts")).collect()
-      probe.headOption.map(_.getTimestamp(0)).foreach { t0 =>
-        require(t0.after(java.sql.Timestamp.valueOf("2000-01-01 00:00:00")) &&
-          t0.before(java.sql.Timestamp.valueOf("2100-01-01 00:00:00")),
-          s"events.ts sanity check failed: first ts=$t0 is outside " +
-            "[2000,2100) — probable timestamp-unit drift in the fixture encoding")
+    s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
+    private val root = Tables.tmp(name, d)
+    val ckpt: String = Tables.tmp(s"ckpt-$name", d)
+    Seq(root, ckpt).foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+
+    def dir(sub: String): String = s"$root/$sub"
+
+    /** Stages `df` as the one parquet file `dir(sub)/file.parquet`. */
+    def stage(df: DataFrame, sub: String, file: String): Unit = {
+      val tmpDir = dir(s"stage/$file")
+      df.coalesce(1).write.mode("overwrite").parquet(tmpDir)
+      val part = new java.io.File(tmpDir).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      new java.io.File(dir(sub)).mkdirs()
+      stageAtomically(part.getAbsolutePath, new java.io.File(dir(sub), s"$file.parquet"))
+    }
+
+    /** Copies the dataset's events.parquet `copies` times into dir("src").
+      * Always a fresh copy: an exists() guard would silently keep serving
+      * a stale copy if the dataset at the same path were regenerated. */
+    def stageEvents(copies: Int): String = {
+      new java.io.File(dir("src")).mkdirs()
+      (0 until copies).foreach(i =>
+        stageAtomically(s"$d/events.parquet", new java.io.File(dir("src"), s"events_$i.parquet")))
+      dir("src")
+    }
+
+    /** Writes `df` as `files` parquet files into dir("src"), the source
+      * that maxFilesPerTrigger splits into several micro-batches. */
+    def stageSplit(df: DataFrame, files: Int): String = {
+      df.repartition(files).write.mode("overwrite").parquet(dir("src"))
+      dir("src")
+    }
+
+    /** A file stream over the staged dir `path`, at most `maxFiles` files
+      * per micro-batch when positive. */
+    def source(path: String, schema: StructType, maxFiles: Int = 0): DataFrame = {
+      val r = s.readStream.schema(schema)
+      (if (maxFiles > 0) r.option("maxFilesPerTrigger", maxFiles.toString) else r).parquet(path)
+    }
+
+    /** The events table as a stream: one staged copy, read with the
+      * schema of the staged file instead of a hard-coded ts encoding (the
+      * fixture has shipped both int64-nanos and timestamp[us], and an
+      * explicit LongType schema over micros data does not throw — it
+      * silently collapses all timestamps 1000×). With `withTs`, ts becomes
+      * event_ts; without it, ts is left out. */
+    def events(withTs: Boolean): DataFrame = {
+      val src = stageEvents(1)
+      val inferred = s.read.parquet(src).schema
+      if (!withTs) source(src, StructType(inferred.filterNot(_.name == "ts")))
+      else {
+        // Sanity tripwire on the staged file (batch-side, cheap single-row
+        // scan): a unit drift that survives the dtype dispatch would shift
+        // timestamps by ~1000× — catch it before it produces plausible but
+        // wrong windows.
+        val probe = normalizeEventTs(s.read.parquet(src).limit(1)).select(col("ts")).collect()
+        probe.headOption.map(_.getTimestamp(0)).foreach { t0 =>
+          require(t0.after(java.sql.Timestamp.valueOf("2000-01-01 00:00:00")) &&
+            t0.before(java.sql.Timestamp.valueOf("2100-01-01 00:00:00")),
+            s"events.ts sanity check failed: first ts=$t0 is outside " +
+              "[2000,2100) — probable timestamp-unit drift in the fixture encoding")
+        }
+        eventTs(source(src, inferred)).drop("ts")
       }
-      out
-    } else df
+    }
+
+    /** The one run-to-completion path: `df` runs under AvailableNow with
+      * this replay's name and checkpoint into the sink `sink` configures. */
+    def run(df: DataFrame)(sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+      val q = sink(df.writeStream.queryName(name).option("checkpointLocation", ckpt))
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    }
+
+    /** Runs `df` into the memory table `name` and returns the table. */
+    def toTable(df: DataFrame, mode: String = "complete"): DataFrame = {
+      val q = run(df)(_.format("memory").outputMode(mode))
+      // Update-mode memory sinks append one row per touched key per
+      // micro-batch, so the read-back table is only the final state if
+      // ALL input landed in one data batch (true today: single staged
+      // file, no maxFilesPerTrigger). Make that invariant explicit —
+      // a future multi-file staging or trigger limit must fail loudly
+      // here instead of silently duplicating keys.
+      if (mode == "update") {
+        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        require(dataBatches <= 1,
+          s"$name: update-mode memory sink consumed $dataBatches data micro-batches; " +
+            "the single-batch invariant is violated and per-key rows would duplicate")
+      }
+      s.table(name)
+    }
+
+    /** Appends `df` to the parquet sink dir("sink") and reads the sink
+      * back. Across runs the sink accumulates, with exactly-once file
+      * commits. */
+    def toFiles(df: DataFrame): DataFrame = {
+      run(df)(_.format("parquet").option("path", dir("sink")))
+      s.read.parquet(dir("sink"))
+    }
+
+    /** Merges each micro-batch of `df`, as `delta` of it, into the
+      * generation store at dir("store") through `merge`, and returns the
+      * final generation. */
+    def toStore(df: DataFrame)(delta: DataFrame => DataFrame)(
+        merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      val store = dir("store")
+      run(df)(_.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        GenerationStore.mergeBatch(s, store, batchId)(delta(batch))(merge)
+      })
+      s.read.parquet(GenerationStore.read(store).dataDir.get)
+    }
   }
 
-  private def runToTable(s: SparkSession, agg: DataFrame, name: String,
-                         d: String, mode: String = "complete"): DataFrame = {
-    s.streams.active.filter(q => Option(q.name).contains(name)).foreach(_.stop())
-    // checkpoint namespaced by dataset dir (Tables.tmp invariant): a
-    // concurrent run at another scale factor must not delete this run's
-    // live offset log / state store
-    val ckpt = Tables.tmp(s"ckpt-$name", d)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // Update-mode memory sinks append one row per touched key per
-    // micro-batch, so the read-back table is only the final state if
-    // ALL input landed in one data batch (true today: single staged
-    // file, no maxFilesPerTrigger). Make that invariant explicit —
-    // a future multi-file staging or trigger limit must fail loudly
-    // here instead of silently duplicating keys.
-    if (mode == "update") {
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches <= 1,
-        s"$name: update-mode memory sink consumed $dataBatches data micro-batches; " +
-          "the single-batch invariant is violated and per-key rows would duplicate")
-    }
-    s.table(name)
+  /** Adds event_ts, the microsecond timestamp of `ts` in whatever
+    * encoding it arrives (Tables.normalizeEventTs). */
+  private def eventTs(df: DataFrame): DataFrame =
+    normalizeEventTs(df.withColumn("event_ts", col("ts")), "event_ts")
+
+  /** One row `days` after the latest event of `raw` (ts in epoch nanos,
+    * Tables.eventsTsNanos): once it arrives, the watermark passes every
+    * real window, session, timer and join band. `ids` are its other
+    * columns; no real event matches them. */
+  private def sentinel(raw: DataFrame, days: Long, ids: (String, Long)*): DataFrame = {
+    val far = raw.agg(max(col("ts"))).head().getLong(0) + days * 86400L * 1000000000L
+    raw.limit(1).select(ids.map { case (c, v) => lit(v).as(c) } :+ lit(far).as("ts"): _*)
   }
+
+  // ---- keys --------------------------------------------------------------
 
   /** stream-agg-counts — streaming groupBy over the event stream,
     * AvailableNow replay: per-type counts and exact decimal totals. */
-  val streamAggCounts: Q = (s, d) => withStatePartitions(s, 4) {
-    val agg = streamEvents(s, d, withTs = false)
+  val streamAggCounts: Q = stateful("stream_agg_counts") { r =>
+    val agg = r.events(withTs = false)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         outNum(sum(dec2(col("value")))).as("total_value"))
-    runToTable(s, agg, "stream_agg_counts", d).orderBy("event_type")
+    r.toTable(agg).orderBy("event_type")
   }
 
   val streamAggCountsSql: String =
@@ -145,15 +230,15 @@ object StreamingOps extends KeyModule {
     * watermark (the late-data contract a live pipeline needs; under
     * AvailableNow replay in complete mode every window is emitted, so
     * the result equals the batch date_trunc aggregation). */
-  val streamWindowHourly: Q = (s, d) => withStatePartitions(s, 4) {
-    val agg = streamEvents(s, d, withTs = true)
+  val streamWindowHourly: Q = stateful("stream_window_hourly") { r =>
+    val agg = r.events(withTs = true)
       .withWatermark("event_ts", "1 hour")
       .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n_events"))
-    runToTable(s, agg, "stream_window_hourly", d).orderBy("window_start", "event_type")
+    r.toTable(agg).orderBy("window_start", "event_type")
   }
 
   val streamWindowHourlySql: String =
@@ -171,15 +256,15 @@ object StreamingOps extends KeyModule {
     * windows. Under AvailableNow complete-mode replay the result
     * equals the batch union of both per-event window assignments,
     * which is what the oracle spells. */
-  val streamSlidingWindow: Q = (s, d) => withStatePartitions(s, 4) {
-    val agg = streamEvents(s, d, withTs = true)
+  val streamSlidingWindow: Q = stateful("stream_sliding_window") { r =>
+    val agg = r.events(withTs = true)
       .withWatermark("event_ts", "1 hour")
       .groupBy(window(col("event_ts"), "2 hours", "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n_events"))
-    runToTable(s, agg, "stream_sliding_window", d).orderBy("window_start", "event_type")
+    r.toTable(agg).orderBy("window_start", "event_type")
   }
 
   val streamSlidingWindowSql: String =
@@ -199,11 +284,11 @@ object StreamingOps extends KeyModule {
     * state merge is order-independent; AvailableNow replay makes the
     * final state equal the batch aggregate, which is what the oracle
     * checks. */
-  val streamStatefulCount: Q = (s, d) => withStatePartitions(s, 4) {
-    import s.implicits._
+  val streamStatefulCount: Q = stateful("stream_stateful_count") { r =>
+    import r.s.implicits._
     import org.apache.spark.sql.streaming.GroupState
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val typed = streamEvents(s, d, withTs = false)
+    val typed = r.events(withTs = false)
       .select(col("user_id"),
         (dec2(col("value")) * 100).cast(LongType).as("cents"))
       .as[(Long, Long)]
@@ -213,13 +298,12 @@ object StreamingOps extends KeyModule {
         (user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
           val (n0, c0) = state.getOption.getOrElse((0L, 0L))
           var n = n0; var c = c0
-          rows.foreach { r => n += 1; c += r._2 }
+          rows.foreach { row => n += 1; c += row._2 }
           state.update((n, c))
           (user, n, c / 100.0)
       }
       .toDF("user_id", "n_events", "total_value")
-    runToTable(s, counted, "stream_stateful_count", d, mode = "update")
-      .orderBy("user_id")
+    r.toTable(counted, mode = "update").orderBy("user_id")
   }
 
   val streamStatefulCountSql: String =
@@ -233,21 +317,14 @@ object StreamingOps extends KeyModule {
     * the id column). The events file is staged TWICE into the source dir
     * so the stream genuinely carries duplicates; the dedup state must
     * collapse them back to the batch per-type counts. */
-  val streamDedupIds: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = new java.io.File(Tables.tmp("stream-src-dup", d))
-    srcDir.mkdirs()
-    // always refresh (same staleness guard as streamEvents)
-    Seq("events_a.parquet", "events_b.parquet").foreach { n =>
-      stageAtomically(s"$d/events.parquet", new java.io.File(srcDir, n))
-    }
+  val streamDedupIds: Q = stateful("stream_dedup_ids") { r =>
     val schema = new StructType()
       .add("event_id", LongType).add("event_type", StringType)
-    val deduped = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
+    val deduped = r.source(r.stageEvents(2), schema)
       .dropDuplicates("event_id")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"))
-    runToTable(s, deduped, "stream_dedup_ids", d).orderBy("event_type")
+    r.toTable(deduped).orderBy("event_type")
   }
 
   val streamDedupIdsSql: String =
@@ -264,15 +341,15 @@ object StreamingOps extends KeyModule {
     * under AvailableNow replay it equals the batch join, which is what
     * the oracle checks. The dim side is dimension-sized → Catalyst
     * broadcasts it into each micro-batch. */
-  val streamJoinStatic: Q = (s, d) => withStatePartitions(s, 4) {
-    val dim = customer(s, d).select(
+  val streamJoinStatic: Q = stateful("stream_join_static") { r =>
+    val dim = customer(r.s, r.d).select(
       col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val agg = streamEvents(s, d, withTs = false)
+    val agg = r.events(withTs = false)
       .join(dim, Seq("user_id"), "inner")
       .groupBy("segment")
       .agg(count(lit(1)).as("n_events"),
         outNum(sum(dec2(col("value")))).as("total_value"))
-    runToTable(s, agg, "stream_join_static", d).orderBy("segment")
+    r.toTable(agg).orderBy("segment")
   }
 
   val streamJoinStaticSql: String =
@@ -292,22 +369,11 @@ object StreamingOps extends KeyModule {
     * aggregates; AvailableNow replay makes it equal the batch query.
     * Sink + checkpoint are wiped per run so the replay is
     * deterministic regardless of prior state. */
-  val streamSinkFiles: Q = (s, d) => withStatePartitions(s, 4) {
-    val sink = Tables.tmp("stream-sink-files", d)
-    val ckpt = Tables.tmp("ckpt-stream-sink-files", d)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sink))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    val transformed = streamEvents(s, d, withTs = false)
+  val streamSinkFiles: Q = stateful("stream_sink_files") { r =>
+    val transformed = r.events(withTs = false)
       .filter(col("value") >= 100.0)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val q = transformed.writeStream
-      .format("parquet")
-      .option("path", sink)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(sink)
+    r.toFiles(transformed)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         outNum(sum(dec2(col("value")))).as("total_value"))
@@ -342,50 +408,16 @@ object StreamingOps extends KeyModule {
     * is idempotent, so the store's batchId replay guard is belt and
     * braces here (contrast stream-mv-incremental, where it's
     * load-bearing). */
-  val streamForeachUpsert: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val root = Tables.tmp("stream-upsert-target", d)
-    val ckpt = Tables.tmp("ckpt-stream-upsert", d)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    val srcDir = new java.io.File(Tables.tmp("stream-src-upsert", d))
-    srcDir.mkdirs()
-    Seq("events_a.parquet", "events_b.parquet").foreach { n =>
-      stageAtomically(s"$d/events.parquet", new java.io.File(srcDir, n))
-    }
+  val streamForeachUpsert: Q = stateful("stream_foreachbatch_upsert") { r =>
     // schema inferred from the staged file, not hard-coded: the fixture's
     // ts encoding has drifted before (int64-nanos vs timestamp[us]) and a
     // wrong explicit LongType silently collapses all event times 1000×
-    val inferred = s.read.parquet(
-      new java.io.File(srcDir, "events_a.parquet").getAbsolutePath).schema
-    val stream = Tables.normalizeEventTs(
-      s.readStream.schema(inferred)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.getAbsolutePath)
-        .withColumn("event_ts", col("ts")), "event_ts")
-      .drop("ts")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("event_ts").desc, col("event_id").desc)
+    val src = r.stageEvents(2)
+    val stream = eventTs(r.source(src, r.s.read.parquet(src).schema, maxFiles = 1)).drop("ts")
+    val w = Window.partitionBy("user_id").orderBy(col("event_ts").desc, col("event_id").desc)
     def winners(df: DataFrame): DataFrame =
       df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!GenerationStore.alreadyApplied(root, batchId)) {
-          val b = winners(batch)
-          val merged = GenerationStore.read(root).dataDir match {
-            case Some(dir) => winners(s.read.parquet(dir).unionByName(b))
-            case None => b
-          }
-          GenerationStore.commit(root, batchId)(
-            merged.write.mode("overwrite").parquet(_))
-        }
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(GenerationStore.read(root).dataDir.get)
+    r.toStore(stream)(winners)((live, batch) => winners(live.unionByName(batch)))
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"), col("value").as("last_value"))
       .orderBy("user_id")
@@ -420,28 +452,10 @@ object StreamingOps extends KeyModule {
     * closes and is filtered by user_id at read-back. */
   private val SessionGapMin = 10
 
-  val streamSessionWindow: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = new java.io.File(Tables.tmp("sess-win-src", d))
-    val sink = Tables.tmp("sess-win-sink", d)
-    val ckpt = Tables.tmp("ckpt-sess-win", d)
-    val stage = Tables.tmp("sess-win-stage", d)
-    Seq(srcDir.getAbsolutePath, sink, ckpt, stage).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    srcDir.mkdirs()
-    val raw = eventsTsNanos(s, d).select(col("event_id"), col("user_id"), col("ts"))
-    def stageBatch(df: DataFrame, name: String): Unit = {
-      val tmpDir = s"$stage/$name"
-      df.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      stageAtomically(part.getAbsolutePath, new java.io.File(srcDir, s"$name.parquet"))
-    }
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType).add("ts", LongType)
-    def runOnce(): Unit = {
-      val agg = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
-        .withColumn("event_ts", expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"))
+  val streamSessionWindow: Q = stateful("stream_session_window") { r =>
+    val raw = eventsTsNanos(r.s, r.d).select(col("event_id"), col("user_id"), col("ts"))
+    def runOnce(): DataFrame = r.toFiles(
+      eventTs(r.source(r.dir("src"), raw.schema))
         .withWatermark("event_ts", "1 minute")
         .groupBy(session_window(col("event_ts"), s"$SessionGapMin minutes"),
           col("user_id"))
@@ -449,19 +463,11 @@ object StreamingOps extends KeyModule {
         .select(col("user_id"),
           date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
             .as("session_start"),
-          col("n_events"))
-      val q = agg.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    stageBatch(raw, "a")
+          col("n_events")))
+    r.stage(raw, "src", "a")
     runOnce()
-    val maxTs = raw.agg(max(col("ts"))).head().getLong(0)
-    stageBatch(raw.limit(1).select(lit(-100L).as("event_id"),
-      lit(-1L).as("user_id"), lit(maxTs + 30L * 86400L * 1000000000L).as("ts")), "b")
-    runOnce()
-    s.read.parquet(sink).filter(col("user_id") >= 0)
+    r.stage(sentinel(raw, 30, "event_id" -> -100L, "user_id" -> -1L), "src", "b")
+    runOnce().filter(col("user_id") >= 0)
       .orderBy("user_id", "session_start")
   }
 
@@ -509,47 +515,23 @@ object StreamingOps extends KeyModule {
     * max event time truncated to MILLISECONDS). The file sink
     * accumulates across both runs with exactly-once file commits, so
     * the read-back is the union of both runs' emissions. */
-  val streamLateDrop: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = new java.io.File(Tables.tmp("stream-late-src", d))
-    val sink = Tables.tmp("stream-late-sink", d)
-    val ckpt = Tables.tmp("ckpt-stream-late-drop", d)
-    val stage = Tables.tmp("stream-late-stage", d)
-    Seq(srcDir.getAbsolutePath, sink, ckpt, stage).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    srcDir.mkdirs()
-    val raw = eventsTsNanos(s, d).select(col("event_id"), col("event_type"), col("ts"))
-    val isEarlyOnTime = expr(
-      "timestamp_micros((ts - pmod(ts, 1000)) div 1000) < timestamp'2024-01-20 00:00:00'") &&
-      col("event_id") % 5 =!= 0
-    def stageBatch(df: DataFrame, name: String): Unit = {
-      val tmpDir = s"$stage/$name"
-      df.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      stageAtomically(part.getAbsolutePath, new java.io.File(srcDir, s"$name.parquet"))
-    }
-    val schema = new StructType()
-      .add("event_id", LongType).add("event_type", StringType).add("ts", LongType)
-    def runOnce(): Unit = {
-      val q = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
-        .withColumn("event_ts", expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"))
+  val streamLateDrop: Q = stateful("stream_late_drop") { r =>
+    val raw = eventsTsNanos(r.s, r.d).select(col("event_id"), col("event_type"), col("ts"))
+    val timed = eventTs(raw)
+    val isEarlyOnTime =
+      col("event_ts") < expr("timestamp'2024-01-20 00:00:00'") && col("event_id") % 5 =!= 0
+    def runOnce(): DataFrame = r.toFiles(
+      eventTs(r.source(r.dir("src"), raw.schema))
         .withWatermark("event_ts", "1 hour")
         .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n_events"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    stageBatch(raw.filter(isEarlyOnTime), "a")
+          col("event_type"), col("n_events")))
+    r.stage(timed.filter(isEarlyOnTime).drop("event_ts"), "src", "a")
     runOnce()
-    stageBatch(raw.filter(!isEarlyOnTime), "b")
-    runOnce()
-    s.read.parquet(sink).orderBy("window_start", "event_type")
+    r.stage(timed.filter(!isEarlyOnTime).drop("event_ts"), "src", "b")
+    runOnce().orderBy("window_start", "event_type")
   }
 
   val streamLateDropSql: String =
@@ -582,10 +564,10 @@ object StreamingOps extends KeyModule {
     * sink consumes). State is a per-user Map[event_type → count], an
     * order-free merge; AvailableNow replay makes the final snapshot
     * equal the batch per-(user, type) counts. */
-  val streamFlatmapState: Q = (s, d) => withStatePartitions(s, 4) {
-    import s.implicits._
+  val streamFlatmapState: Q = stateful("stream_flatmap_state") { r =>
+    import r.s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val typed = streamEvents(s, d, withTs = false)
+    val typed = r.events(withTs = false)
       .select(col("user_id"), col("event_type")).as[(Long, String)]
     val counted = typed
       .groupByKey(_._1)
@@ -598,8 +580,7 @@ object StreamingOps extends KeyModule {
           merged.iterator.map { case (t, c) => (user, t, c) }
       }
       .toDF("user_id", "event_type", "n_events")
-    runToTable(s, counted, "stream_flatmap_state", d, mode = "update")
-      .orderBy("user_id", "event_type")
+    r.toTable(counted, mode = "update").orderBy("user_id", "event_type")
   }
 
   val streamFlatmapStateSql: String =
@@ -617,38 +598,29 @@ object StreamingOps extends KeyModule {
     * emitted matches equal the batch interval join, which is what the
     * oracle checks. Inner join + append mode: matches emit as both
     * sides arrive. */
-  val streamStreamJoin: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stage = Tables.tmp("ss-join-stage", d)
-    val dirs = Seq("a", "b").map(n => new java.io.File(Tables.tmp(s"ss-join-src-$n", d)))
-    dirs.foreach { f =>
-      org.apache.commons.io.FileUtils.deleteQuietly(f); f.mkdirs()
-    }
-    val raw = eventsTsNanos(s, d).select(col("event_id"), col("user_id"), col("ts"))
-    def stageSide(even: Boolean, dir: java.io.File, name: String): Unit = {
-      val tmpDir = s"$stage/$name"
-      raw.filter(if (even) col("event_id") % 2 === 0 else col("event_id") % 2 === 1)
-        .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      stageAtomically(part.getAbsolutePath, new java.io.File(dir, s"$name.parquet"))
-    }
-    stageSide(even = true, dirs(0), "a")
-    stageSide(even = false, dirs(1), "b")
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType).add("ts", LongType)
-    def side(dir: java.io.File, suffix: String): DataFrame =
-      s.readStream.schema(schema).parquet(dir.getAbsolutePath)
+  val streamStreamJoin: Q = stateful("stream_stream_join") { r =>
+    val raw = eventsTsNanos(r.s, r.d).select(col("event_id"), col("user_id"), col("ts"))
+    r.stage(raw.filter(col("event_id") % 2 === 0), "src-a", "a")
+    r.stage(raw.filter(col("event_id") % 2 === 1), "src-b", "b")
+    val joined = bandJoin(r, raw.schema, "inner")
+      .select(col("user_a").as("user_id"), col("event_id_a"), col("event_id_b"))
+    r.toTable(joined, mode = "append")
+      .orderBy("user_id", "event_id_a", "event_id_b")
+  }
+
+  /** The ±1 h event-time band join of the even-id events staged in
+    * dir("src-a") with the odd-id ones in dir("src-b"), both sides
+    * watermarked 2 h. */
+  private def bandJoin(r: Replay, schema: StructType, how: String): DataFrame = {
+    def side(suffix: String): DataFrame =
+      eventTs(r.source(r.dir(s"src-$suffix"), schema))
         .select(col("event_id").as(s"event_id_$suffix"),
           col("user_id").as(s"user_$suffix"),
-          expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)").as(s"ts_$suffix"))
+          col("event_ts").as(s"ts_$suffix"))
         .withWatermark(s"ts_$suffix", "2 hours")
-    val joined = side(dirs(0), "a").join(side(dirs(1), "b"),
+    side("a").join(side("b"),
       expr("user_a = user_b AND " +
-        "ts_b BETWEEN ts_a - INTERVAL 1 HOUR AND ts_a + INTERVAL 1 HOUR"))
-      .select(col("user_a").as("user_id"), col("event_id_a"), col("event_id_b"))
-    runToTable(s, joined, "stream_stream_join", d, mode = "append")
-      .orderBy("user_id", "event_id_a", "event_id_b")
+        "ts_b BETWEEN ts_a - INTERVAL 1 HOUR AND ts_a + INTERVAL 1 HOUR"), how)
   }
 
   val streamStreamJoinSql: String =
@@ -670,28 +642,19 @@ object StreamingOps extends KeyModule {
     * i.e. a pipeline restart from a compacted snapshot loses nothing.
     * At 100 TB this is how stateful jobs bootstrap without replaying
     * the full history through the stream. */
-  val streamInitialState: Q = (s, d) => withStatePartitions(s, 4) {
-    import s.implicits._
+  val streamInitialState: Q = stateful("stream_initial_state") { r =>
+    import r.s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // historical partition → initial state (a batch KeyValueGroupedDataset)
-    val hist = eventsTsNanos(s, d).filter(col("event_id") % 3 === 0)
+    val hist = eventsTsNanos(r.s, r.d).filter(col("event_id") % 3 === 0)
       .groupBy("user_id").agg(count(lit(1)).as("n"))
       .select(col("user_id"), col("n")).as[(Long, Long)]
       .groupByKey(_._1).mapValues(_._2)
     // live stream = the remainder, staged into its own source dir
-    val srcDir = new java.io.File(Tables.tmp("init-state-src", d))
-    org.apache.commons.io.FileUtils.deleteQuietly(srcDir)
-    srcDir.mkdirs()
-    val stage = Tables.tmp("init-state-stage", d)
-    val rest = eventsTsNanos(s, d).filter(col("event_id") % 3 =!= 0)
+    val rest = eventsTsNanos(r.s, r.d).filter(col("event_id") % 3 =!= 0)
       .select(col("event_id"), col("user_id"))
-    rest.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    stageAtomically(part.getAbsolutePath, new java.io.File(srcDir, "rest.parquet"))
-    val schema = new StructType().add("event_id", LongType).add("user_id", LongType)
-    val typed = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
+    r.stage(rest, "src", "rest")
+    val typed = r.source(r.dir("src"), rest.schema)
       .select(col("user_id")).as[Long]
     val counted = typed.groupByKey(identity)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout(), hist) {
@@ -701,8 +664,7 @@ object StreamingOps extends KeyModule {
           (user, n)
       }
       .toDF("user_id", "n_events")
-    runToTable(s, counted, "stream_initial_state", d, mode = "update")
-      .orderBy("user_id")
+    r.toTable(counted, mode = "update").orderBy("user_id")
   }
 
   val streamInitialStateSql: String =
@@ -720,27 +682,10 @@ object StreamingOps extends KeyModule {
     * day stays open), run 2's far-future sentinel closes everything
     * real. The sentinel's own windows stay open and are never emitted
     * — no filtering needed beyond the read-back. */
-  val streamWindowedRollup: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = new java.io.File(Tables.tmp("wroll-src", d))
-    val sink = Tables.tmp("wroll-sink", d)
-    val ckpt = Tables.tmp("ckpt-wroll", d)
-    val stage = Tables.tmp("wroll-stage", d)
-    Seq(srcDir.getAbsolutePath, sink, ckpt, stage).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    srcDir.mkdirs()
-    val raw = eventsTsNanos(s, d).select(col("event_id"), col("ts"))
-    def stageBatch(df: DataFrame, name: String): Unit = {
-      val tmpDir = s"$stage/$name"
-      df.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      stageAtomically(part.getAbsolutePath, new java.io.File(srcDir, s"$name.parquet"))
-    }
-    val schema = new StructType().add("event_id", LongType).add("ts", LongType)
-    def runOnce(): Unit = {
-      val hourly = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
-        .withColumn("event_ts", expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"))
+  val streamWindowedRollup: Q = stateful("stream_windowed_rollup") { r =>
+    val raw = eventsTsNanos(r.s, r.d).select(col("event_id"), col("ts"))
+    def runOnce(): DataFrame = {
+      val hourly = eventTs(r.source(r.dir("src"), raw.schema))
         .withWatermark("event_ts", "1 hour")
         .groupBy(window(col("event_ts"), "1 hour"))
         .agg(count(lit(1)).as("n_hourly"))
@@ -750,18 +695,12 @@ object StreamingOps extends KeyModule {
           count(lit(1)).as("n_hours"))
         .select(date_format(col("day.start"), "yyyy-MM-dd").as("day"),
           col("n_events"), col("n_hours"))
-      val q = daily.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      r.toFiles(daily)
     }
-    stageBatch(raw, "a")
+    r.stage(raw, "src", "a")
     runOnce()
-    val maxTs = raw.agg(max(col("ts"))).head().getLong(0)
-    stageBatch(raw.limit(1).select(lit(-100L).as("event_id"),
-      lit(maxTs + 30L * 86400L * 1000000000L).as("ts")), "b")
-    runOnce()
-    s.read.parquet(sink).orderBy("day")
+    r.stage(sentinel(raw, 30, "event_id" -> -100L), "src", "b")
+    runOnce().orderBy("day")
   }
 
   val streamWindowedRollupSql: String =
@@ -787,30 +726,12 @@ object StreamingOps extends KeyModule {
     * session-close-and-release pattern: at 100 TB/day state size is
     * |open sessions|, not |users ever seen|. Oracle: the batch per-user
     * counts (every session closes once the stream drains). */
-  val streamStateTimeout: Q = (s, d) => withStatePartitions(s, 4) {
-    import s.implicits._
+  val streamStateTimeout: Q = stateful("stream_state_timeout") { r =>
+    import r.s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = new java.io.File(Tables.tmp("state-timeout-src", d))
-    val sink = Tables.tmp("state-timeout-sink", d)
-    val ckpt = Tables.tmp("ckpt-state-timeout", d)
-    val stage = Tables.tmp("state-timeout-stage", d)
-    Seq(srcDir.getAbsolutePath, sink, ckpt, stage).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    srcDir.mkdirs()
-    val raw = eventsTsNanos(s, d).select(col("event_id"), col("user_id"), col("ts"))
-    def stageBatch(df: DataFrame, name: String): Unit = {
-      val tmpDir = s"$stage/$name"
-      df.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      stageAtomically(part.getAbsolutePath, new java.io.File(srcDir, s"$name.parquet"))
-    }
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType).add("ts", LongType)
-    def runOnce(): Unit = {
-      val typed = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
-        .withColumn("event_ts", expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"))
+    val raw = eventsTsNanos(r.s, r.d).select(col("event_id"), col("user_id"), col("ts"))
+    def runOnce(): DataFrame = {
+      val typed = eventTs(r.source(r.dir("src"), raw.schema))
         .withWatermark("event_ts", "1 hour")
         .select(col("user_id"), col("event_ts")).as[(Long, java.sql.Timestamp)]
       val closed = typed.groupByKey(_._1)
@@ -824,7 +745,7 @@ object StreamingOps extends KeyModule {
               Iterator.single((user, n))
             } else {
               var (n, maxMs) = state.getOption.getOrElse((0L, 0L))
-              rows.foreach { r => n += 1; maxMs = math.max(maxMs, r._2.getTime) }
+              rows.foreach { row => n += 1; maxMs = math.max(maxMs, row._2.getTime) }
               state.update((n, maxMs))
               // close 2h (event time) after the last event seen so far
               state.setTimeoutTimestamp(maxMs + 2L * 3600 * 1000)
@@ -832,18 +753,12 @@ object StreamingOps extends KeyModule {
             }
         }
         .toDF("user_id", "n_events")
-      val q = closed.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      r.toFiles(closed)
     }
-    stageBatch(raw, "a")
+    r.stage(raw, "src", "a")
     runOnce()
-    val maxTs = raw.agg(max(col("ts"))).head().getLong(0)
-    stageBatch(raw.limit(1).select(lit(-100L).as("event_id"),
-      lit(-1L).as("user_id"), lit(maxTs + 30L * 86400L * 1000000000L).as("ts")), "b")
-    runOnce()
-    s.read.parquet(sink).filter(col("user_id") >= 0).orderBy("user_id")
+    r.stage(sentinel(raw, 30, "event_id" -> -100L, "user_id" -> -1L), "src", "b")
+    runOnce().filter(col("user_id") >= 0).orderBy("user_id")
   }
 
   val streamStateTimeoutSql: String =
@@ -914,15 +829,11 @@ object StreamingOps extends KeyModule {
     * service runs. Ordering is (ts, event_id) descending: replay- and
     * partition-order-independent. Oracle: the batch top-3-per-user
     * window. */
-  val streamTwsListState: Q = (s, d) => withStatePartitions(s, 4) {
-    import s.implicits._
+  val streamTwsListState: Q = stateful("stream_tws_list_state") { r =>
+    import r.s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val typed = streamEvents(s, d, withTs = true)
+    withConfs(r.s, RocksDb) {
+      val typed = r.events(withTs = true)
         .select(col("user_id"), col("event_id"),
           unix_micros(col("event_ts")).as("ts_us"))
         .as[(Long, Long, Long)]
@@ -930,13 +841,7 @@ object StreamingOps extends KeyModule {
         .transformWithState(new RecentIdsProcessor,
           TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "latest3")
-      runToTable(s, snap, "stream_tws_list", d, mode = "update")
-        .orderBy("user_id")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+      r.toTable(snap, mode = "update").orderBy("user_id")
     }
   }
 
@@ -999,58 +904,25 @@ object StreamingOps extends KeyModule {
     * AvailableNow runs: run 1 arms every timer (sink stays empty),
     * run 2's far-future sentinel advances the watermark and fires them
     * all. RocksDB provider required by the API, restored afterwards. */
-  val streamTwsTimers: Q = (s, d) => withStatePartitions(s, 4) {
-    import s.implicits._
+  val streamTwsTimers: Q = stateful("stream_tws_timers") { r =>
+    import r.s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val srcDir = new java.io.File(Tables.tmp("tws-timer-src", d))
-      val sink = Tables.tmp("tws-timer-sink", d)
-      val ckpt = Tables.tmp("ckpt-tws-timer", d)
-      val stage = Tables.tmp("tws-timer-stage", d)
-      Seq(srcDir.getAbsolutePath, sink, ckpt, stage).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-      srcDir.mkdirs()
-      val raw = eventsTsNanos(s, d).select(col("event_id"), col("user_id"), col("ts"))
-      def stageBatch(df: DataFrame, name: String): Unit = {
-        val tmpDir = s"$stage/$name"
-        df.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-        val part = new java.io.File(tmpDir).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-        stageAtomically(part.getAbsolutePath, new java.io.File(srcDir, s"$name.parquet"))
-      }
-      val schema = new StructType()
-        .add("event_id", LongType).add("user_id", LongType).add("ts", LongType)
-      def runOnce(): Unit = {
-        val typed = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
-          .withColumn("event_ts", expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"))
+    withConfs(r.s, RocksDb) {
+      val raw = eventsTsNanos(r.s, r.d).select(col("event_id"), col("user_id"), col("ts"))
+      def runOnce(): DataFrame = {
+        val typed = eventTs(r.source(r.dir("src"), raw.schema))
           .withWatermark("event_ts", "1 hour")
           .select(col("user_id"), col("event_ts")).as[(Long, java.sql.Timestamp)]
         val closed = typed.groupByKey(_._1)
           .transformWithState(new TimerCloseProcessor,
             TimeMode.EventTime(), OutputMode.Append())
           .toDF("user_id", "n_events")
-        val q = closed.writeStream.format("parquet")
-          .option("path", sink).option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        r.toFiles(closed)
       }
-      stageBatch(raw, "a")
+      r.stage(raw, "src", "a")
       runOnce()
-      val maxTs = raw.agg(max(col("ts"))).head().getLong(0)
-      stageBatch(raw.limit(1).select(lit(-100L).as("event_id"),
-        lit(-1L).as("user_id"), lit(maxTs + 30L * 86400L * 1000000000L).as("ts")), "b")
-      runOnce()
-      s.read.parquet(sink).filter(col("user_id") >= 0).orderBy("user_id")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+      r.stage(sentinel(raw, 30, "event_id" -> -100L, "user_id" -> -1L), "src", "b")
+      runOnce().filter(col("user_id") >= 0).orderBy("user_id")
     }
   }
 
@@ -1070,28 +942,18 @@ object StreamingOps extends KeyModule {
     * snapshot equal the batch per-(user, type) counts joined with the
     * per-user max. The provider conf is restored after the run so the
     * legacy-API ops keep exercising the default HDFS-backed store. */
-  val streamTransformWithState: Q = (s, d) => withStatePartitions(s, 4) {
-    import s.implicits._
+  val streamTransformWithState: Q = stateful("stream_transform_with_state") { r =>
+    import r.s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val typed = streamEvents(s, d, withTs = false)
+    withConfs(r.s, RocksDb) {
+      val typed = r.events(withTs = false)
         .select(col("user_id"), col("event_type"), col("value"))
         .as[(Long, String, Double)]
       val snap = typed.groupByKey(_._1)
         .transformWithState(new UserStatsProcessor,
           TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "event_type", "n_type", "max_value")
-      runToTable(s, snap, "stream_tws", d, mode = "update")
-        .orderBy("user_id", "event_type")
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+      r.toTable(snap, mode = "update").orderBy("user_id", "event_type")
     }
   }
 
@@ -1118,55 +980,19 @@ object StreamingOps extends KeyModule {
     * engine null-ordering). The file sink accumulates across runs, so
     * the read-back is matches ∪ expired-unmatched = the batch LEFT
     * JOIN, which is what the oracle checks. */
-  val streamLeftOuterJoin: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stage = Tables.tmp("ss-loj-stage", d)
-    val sink = Tables.tmp("ss-loj-sink", d)
-    val ckpt = Tables.tmp("ckpt-ss-loj", d)
-    val dirs = Seq("a", "b").map(n => new java.io.File(Tables.tmp(s"ss-loj-src-$n", d)))
-    (dirs.map(_.getAbsolutePath) ++ Seq(sink, ckpt, stage)).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    dirs.foreach(_.mkdirs())
-    val raw = eventsTsNanos(s, d).select(col("event_id"), col("user_id"), col("ts"))
-    def stageInto(df: DataFrame, dir: java.io.File, name: String): Unit = {
-      val tmpDir = s"$stage/$name"
-      df.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      stageAtomically(part.getAbsolutePath, new java.io.File(dir, s"$name.parquet"))
-    }
-    stageInto(raw.filter(col("event_id") % 2 === 0), dirs(0), "a")
-    stageInto(raw.filter(col("event_id") % 2 === 1), dirs(1), "b")
-    val schema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType).add("ts", LongType)
-    def side(dir: java.io.File, suffix: String): DataFrame =
-      s.readStream.schema(schema).parquet(dir.getAbsolutePath)
-        .select(col("event_id").as(s"event_id_$suffix"),
-          col("user_id").as(s"user_$suffix"),
-          expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)").as(s"ts_$suffix"))
-        .withWatermark(s"ts_$suffix", "2 hours")
-    def runOnce(): Unit = {
-      val joined = side(dirs(0), "a").join(side(dirs(1), "b"),
-        expr("user_a = user_b AND " +
-          "ts_b BETWEEN ts_a - INTERVAL 1 HOUR AND ts_a + INTERVAL 1 HOUR"),
-        "left_outer")
+  val streamLeftOuterJoin: Q = stateful("stream_left_outer_join") { r =>
+    val raw = eventsTsNanos(r.s, r.d).select(col("event_id"), col("user_id"), col("ts"))
+    r.stage(raw.filter(col("event_id") % 2 === 0), "src-a", "a")
+    r.stage(raw.filter(col("event_id") % 2 === 1), "src-b", "b")
+    def runOnce(): DataFrame = r.toFiles(
+      bandJoin(r, raw.schema, "left_outer")
         .select(col("user_a").as("user_id"), col("event_id_a"),
-          coalesce(col("event_id_b"), lit(-1L)).as("event_id_b"))
-      val q = joined.writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+          coalesce(col("event_id_b"), lit(-1L)).as("event_id_b")))
     runOnce()
     // watermark-advancing sentinels: +10 days, unmatched by construction
-    val maxTs = raw.agg(max(col("ts"))).head().getLong(0)
-    val far = maxTs + 10L * 86400L * 1000000000L
-    stageInto(raw.limit(1).select(lit(-100L).as("event_id"),
-      lit(-1L).as("user_id"), lit(far).as("ts")), dirs(0), "a2")
-    stageInto(raw.limit(1).select(lit(-101L).as("event_id"),
-      lit(-2L).as("user_id"), lit(far).as("ts")), dirs(1), "b2")
-    runOnce()
-    s.read.parquet(sink).filter(col("user_id") >= 0)
+    r.stage(sentinel(raw, 10, "event_id" -> -100L, "user_id" -> -1L), "src-a", "a2")
+    r.stage(sentinel(raw, 10, "event_id" -> -101L, "user_id" -> -2L), "src-b", "b2")
+    runOnce().filter(col("user_id") >= 0)
       .orderBy("user_id", "event_id_a", "event_id_b")
   }
 
@@ -1194,27 +1020,18 @@ object StreamingOps extends KeyModule {
     * not days. The staged source lands the same file twice (every
     * event exactly duplicated, identical timestamps → trivially inside
     * the delay), so the deduped aggregate equals the batch DISTINCT. */
-  val streamDedupWithinWatermark: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = new java.io.File(Tables.tmp("stream-src-dupwm", d))
-    srcDir.mkdirs()
-    Seq("events_a.parquet", "events_b.parquet").foreach { n =>
-      stageAtomically(s"$d/events.parquet", new java.io.File(srcDir, n))
-    }
+  val streamDedupWithinWatermark: Q = stateful("stream_dedup_within_watermark") { r =>
     // inferred schema + dtype-dispatched conversion: see streamForeachUpsert
-    val inferred = s.read.parquet(
-      new java.io.File(srcDir, "events_a.parquet").getAbsolutePath).schema
-    val deduped = Tables.normalizeEventTs(
-      s.readStream.schema(StructType(inferred.filter(f =>
-          Seq("event_id", "event_type", "ts").contains(f.name))))
-        .parquet(srcDir.getAbsolutePath)
-        .withColumn("event_ts", col("ts")), "event_ts")
+    val src = r.stageEvents(2)
+    val inferred = r.s.read.parquet(src).schema
+    val deduped = eventTs(r.source(src, StructType(inferred.filter(f =>
+        Seq("event_id", "event_type", "ts").contains(f.name)))))
       .drop("ts")
       .withWatermark("event_ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"))
-    runToTable(s, deduped, "stream_dedup_within_wm", d).orderBy("event_type")
+    r.toTable(deduped).orderBy("event_type")
   }
 
   val streamDedupWithinWatermarkSql: String =
@@ -1228,29 +1045,21 @@ object StreamingOps extends KeyModule {
     * files as THREE micro-batches, and the complete-mode aggregate
     * must still equal one batch pass over the union — the incremental-
     * state contract that every other op in this file gets to sidestep
-    * by single-file staging (runToTable's update-mode guard documents
+    * by single-file staging (toTable's update-mode guard documents
     * why that shortcut is load-bearing). This op is the positive
     * control: state carried across batch boundaries, counts and sums
     * accumulated incrementally, equal to the 3× batch answer. In
     * production the trigger limit is the backfill throttle (bounded
     * state growth per batch, checkpoint after each), so replaying a
     * month of landed files neither OOMs nor skews results. */
-  val streamMultiBatch: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcDir = new java.io.File(Tables.tmp("stream-src-multi", d))
-    srcDir.mkdirs()
-    Seq("events_a.parquet", "events_b.parquet", "events_c.parquet").foreach { n =>
-      stageAtomically(s"$d/events.parquet", new java.io.File(srcDir, n))
-    }
+  val streamMultiBatch: Q = stateful("stream_multi_batch") { r =>
     val schema = new StructType()
       .add("event_id", LongType).add("event_type", StringType).add("value", DoubleType)
-    val agg = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.getAbsolutePath)
+    val agg = r.source(r.stageEvents(3), schema, maxFiles = 1)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         outNum(sum(dec2(col("value")))).as("total_value"))
-    runToTable(s, agg, "stream_multi_batch", d).orderBy("event_type")
+    r.toTable(agg).orderBy("event_type")
   }
 
   val streamMultiBatchSql: String =
@@ -1271,40 +1080,17 @@ object StreamingOps extends KeyModule {
     * state carries ACROSS micro-batches in one run, this one proves
     * offsets carry across RUNS — the restart-shaped half of
     * exactly-once. */
-  val streamIncrementalEtl: Q = (s, d) => withStatePartitions(s, 4) {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stage = Tables.tmp("ss-inc-stage", d)
-    val srcDir = new java.io.File(Tables.tmp("ss-inc-src", d))
-    val sink = Tables.tmp("ss-inc-sink", d)
-    val ckpt = Tables.tmp("ckpt-ss-inc", d)
-    Seq(srcDir.getAbsolutePath, sink, ckpt, stage).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    srcDir.mkdirs()
-    val raw = eventsTsNanos(s, d)
+  val streamIncrementalEtl: Q = stateful("stream_incremental_etl") { r =>
+    val raw = eventsTsNanos(r.s, r.d)
       .select(col("event_id"), col("event_type"), col("value"))
-    def stageInto(df: DataFrame, name: String): Unit = {
-      val tmpDir = s"$stage/$name"
-      df.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      stageAtomically(part.getAbsolutePath, new java.io.File(srcDir, s"$name.parquet"))
-    }
-    val schema = new StructType()
-      .add("event_id", LongType).add("event_type", StringType).add("value", DoubleType)
-    def runOnce(): Unit = {
-      val q = s.readStream.schema(schema).parquet(srcDir.getAbsolutePath)
+    def runOnce(): DataFrame = r.toFiles(
+      r.source(r.dir("src"), raw.schema)
         .select(col("event_id"), col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    stageInto(raw.filter(col("event_id") % 2 === 0), "a")
+          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents")))
+    r.stage(raw.filter(col("event_id") % 2 === 0), "src", "a")
     runOnce()
-    stageInto(raw.filter(col("event_id") % 2 === 1), "b")
+    r.stage(raw.filter(col("event_id") % 2 === 1), "src", "b")
     runOnce()
-    s.read.parquet(sink)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("cents_sum"),
         // xor-style order-free id checksum: doubles on reprocessing
@@ -1330,32 +1116,24 @@ object StreamingOps extends KeyModule {
     * invariant that makes the split affordable at scale. Graded as
     * per-(sink, event_type) counts: quarantine + main must partition
     * the stream exactly. */
-  val streamDeadLetter: Q = (s, d) => withStatePartitions(s, 4) {
-    val main = Tables.tmp("stream-dlq-main", d)
-    val dlq = Tables.tmp("stream-dlq-quarantine", d)
-    val ckpt = Tables.tmp("ckpt-stream-dlq", d)
-    Seq(main, dlq, ckpt).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    val stream = streamEvents(s, d, withTs = false)
+  val streamDeadLetter: Q = stateful("stream_dead_letter") { r =>
+    val main = r.dir("main")
+    val dlq = r.dir("quarantine")
+    val stream = r.events(withTs = false)
       .withColumn("valid",
         get_json_object(col("props"), "$.k").cast(IntegerType) < 80 &&
           col("value") >= 0)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        batch.filter(col("valid")).drop("valid")
-          .write.mode("append").parquet(main)
-        batch.filter(!col("valid")).drop("valid")
-          .write.mode("append").parquet(dlq)
-        batch.unpersist()
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    r.run(stream)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      batch.persist()
+      batch.filter(col("valid")).drop("valid")
+        .write.mode("append").parquet(main)
+      batch.filter(!col("valid")).drop("valid")
+        .write.mode("append").parquet(dlq)
+      batch.unpersist()
+      ()
+    })
     val readBack = (dir: String, label: String) =>
-      s.read.parquet(dir).groupBy("event_type")
+      r.s.read.parquet(dir).groupBy("event_type")
         .agg(count(lit(1)).as("n")).withColumn("sink", lit(label))
     readBack(main, "main").unionByName(readBack(dlq, "quarantine"))
       .select("sink", "event_type", "n")
@@ -1380,8 +1158,8 @@ object StreamingOps extends KeyModule {
     * aggregate. Windows align to the epoch exactly as Spark's
     * window() does, which the oracle mirrors with integer epoch
     * arithmetic. */
-  val streamWindowedTopk: Q = (s, d) => withStatePartitions(s, 4) {
-    val agg = streamEvents(s, d, withTs = true)
+  val streamWindowedTopk: Q = stateful("stream_windowed_topk") { r =>
+    val agg = r.events(withTs = true)
       .withWatermark("event_ts", "1 hour")
       .groupBy(window(col("event_ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1389,9 +1167,8 @@ object StreamingOps extends KeyModule {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("n_events"), col("cents"))
-    val tbl = runToTable(s, agg, "stream_windowed_topk", d)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("window_start").orderBy(col("n_events").desc, col("event_type").asc)
+    val tbl = r.toTable(agg)
+    val w = Window.partitionBy("window_start").orderBy(col("n_events").desc, col("event_type").asc)
     tbl.withColumn("rk", row_number().over(w)).filter(col("rk") <= 2)
       .select(col("window_start"), col("rk"), col("event_type"), col("n_events"),
         (col("cents").cast(DoubleType) / 100).as("revenue"))
@@ -1411,6 +1188,281 @@ object StreamingOps extends KeyModule {
       |       CAST(cents AS DOUBLE) / 100 AS revenue
       |FROM ranked WHERE rk <= 2
       |ORDER BY window_start, rk""".stripMargin
+
+  /** stream-progress-metrics — per-micro-batch progress accounting
+    * from `query.recentProgress`: numInputRows summed across batches
+    * must equal the rows the sink aggregated, and `maxFilesPerTrigger`
+    * must actually bound each batch (multiple data batches under
+    * AvailableNow). This is the observability contract a production
+    * stream runs on: progress rows/sec and batch sizes feed lag
+    * alerts and autoscaling, and bounded-batch AvailableNow is how a
+    * 100 TB backlog drains in controlled chunks (unbounded, the first
+    * micro-batch would try to swallow the full backlog and OOM the
+    * state store). The staged source is written as 6 files with
+    * maxFilesPerTrigger=2, so the run provably splits into ≥2 data
+    * batches at any scale factor. Oracle pins the row count from the
+    * batch table and both contracts as 1. */
+  val streamProgressMetrics: Q = replay("stream_progress_metrics") { r =>
+    val src = r.stageSplit(
+      r.s.read.parquet(s"${r.d}/events.parquet").select(col("event_id"), col("event_type")), 6)
+    val q = r.run(r.source(src, r.s.read.parquet(src).schema, maxFiles = 2)
+      .groupBy().agg(count(lit(1)).as("n_rows")))(_.format("memory").outputMode("complete"))
+    val progress = q.recentProgress
+    val inputRows = progress.map(_.numInputRows).sum
+    val dataBatches = progress.count(_.numInputRows > 0)
+    val tableRows = r.s.table(r.name).collect().head.getLong(0)
+    r.s.range(1).select(
+      lit(tableRows).as("n_rows"),
+      lit(if (inputRows == tableRows) 1 else 0).as("progress_rows_match"),
+      lit(if (dataBatches >= 2) 1 else 0).as("multi_batch"))
+  }
+
+  val streamProgressMetricsSql: String =
+    """SELECT count(*) AS n_rows,
+      |       CAST(1 AS INT) AS progress_rows_match,
+      |       CAST(1 AS INT) AS multi_batch
+      |FROM events""".stripMargin
+
+  /** stream-state-reader — the Spark 4 state-store BATCH reader:
+    * `spark.read.format("statestore").load(checkpoint)` exposes a
+    * streaming aggregation's live state as a DataFrame (key struct,
+    * value struct = the agg buffer, partition_id), and
+    * `format("state-metadata")` lists the stateful operators behind
+    * it. At scale this is how streaming state gets audited, backfilled
+    * against, and debugged WITHOUT stopping the query or replaying the
+    * log — state for a 100 TB-backlog aggregation is itself a table,
+    * so every relational audit in this engine applies to it. The op
+    * runs a keyed count to a checkpoint, then grades the STATE
+    * contents (not the sink) against the batch truth; the metadata
+    * flag proves the operator enumeration read the same checkpoint.
+    * partition_id is config-dependent and deliberately excluded from
+    * the graded output. */
+  val streamStateReader: Q = replay("stream_state_reader") { r =>
+    val src = r.stageSplit(
+      r.s.read.parquet(s"${r.d}/events.parquet").select(col("event_id"), col("event_type")), 4)
+    r.toTable(r.source(src, r.s.read.parquet(src).schema)
+      .groupBy("event_type").agg(count(lit(1)).as("n_events")))
+    val isAggState = r.s.read.format("state-metadata").load(r.ckpt)
+      .filter(col("operatorName") === "stateStoreSave").count() == 1L
+    r.s.read.format("statestore").load(r.ckpt)
+      .select(col("key.event_type").as("event_type"),
+        col("value.count").as("n_events"),
+        lit(if (isAggState) 1 else 0).as("agg_operator_listed"))
+      .orderBy("event_type")
+  }
+
+  val streamStateReaderSql: String =
+    """SELECT event_type, count(*) AS n_events,
+      |       CAST(1 AS INT) AS agg_operator_listed
+      |FROM events
+      |GROUP BY event_type
+      |ORDER BY event_type""".stripMargin
+
+  /** stream-mv-incremental — a per-key aggregate MV maintained BY THE
+    * STREAM: each micro-batch is aggregated alone (counts, exact-cents
+    * sums, max id, a conditional count) and full-outer state-merged
+    * into the stored MV parquet, atomically swapped per batch — the
+    * foreachBatch form of agg-mv-delta-refresh's algebra, and the
+    * AGGREGATE-merge counterpart of stream-foreachbatch-upsert's
+    * row-level latest-wins. The source is staged as 4 files with
+    * maxFilesPerTrigger=1, so the MV provably survives ≥4 sequential
+    * merge generations before the oracle (a full recompute over all
+    * events) grades the final state — associativity and the
+    * empty-initial-state edge are both exercised, not assumed.
+    * SCALE: per batch the stream pays agg(|batch|) + a merge join on
+    * the touched key domain; the events fact is never rescanned —
+    * 100 TB of history costs the same per batch as 100 MB. Exactly-
+    * once: the checkpoint gives at-least-once batch delivery into
+    * foreachBatch, and a replayed batch would DOUBLE-COUNT these
+    * additive counters — so every commit goes through GenerationStore,
+    * which (a) swaps a manifest pointer atomically (a crash at any
+    * point leaves the previous MV readable, never a half-deleted
+    * store) and (b) records the last-applied batchId IN THE SAME
+    * commit, so a replay whose swap completed before the offset
+    * commit is detected (`alreadyApplied`) and skipped. That pairing —
+    * state and applied-watermark committed in one atomic unit — is
+    * what upgrades at-least-once delivery to exactly-once effect for
+    * non-idempotent merges; GenerationStoreSpec kills a writer between
+    * the data write and the pointer swap and replays to prove it. */
+  val streamMvIncremental: Q = replay("stream_mv_incremental") { r =>
+    // 4 staged files → 4 micro-batches → 4 merge generations. Columns
+    // are pruned to the MV's needs before staging; ts stays out so the
+    // op is independent of the fixture's drifting ts encoding.
+    val src = r.stageSplit(r.s.read.parquet(s"${r.d}/events.parquet")
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value")), 4)
+    def states(df: DataFrame): DataFrame =
+      df.groupBy("user_id").agg(
+        count(lit(1)).as("n"),
+        sum(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
+          .as("sum_cents"),
+        sum(when(col("event_type") === "click", 1L).otherwise(0L))
+          .as("n_click"),
+        max(col("event_id")).as("max_event_id"))
+    val mv = r.toStore(r.source(src, r.s.read.parquet(src).schema, maxFiles = 1))(states) {
+      (live, pb) =>
+        live.as("b").join(pb.as("p"), Seq("user_id"), "full_outer")
+          .select(
+            col("user_id"),
+            (coalesce(col("b.n"), lit(0L)) +
+              coalesce(col("p.n"), lit(0L))).as("n"),
+            (coalesce(col("b.sum_cents"), lit(0L)) +
+              coalesce(col("p.sum_cents"), lit(0L))).as("sum_cents"),
+            (coalesce(col("b.n_click"), lit(0L)) +
+              coalesce(col("p.n_click"), lit(0L))).as("n_click"),
+            greatest(col("b.max_event_id"), col("p.max_event_id"))
+              .as("max_event_id"))
+    }
+    mv.select("user_id", "n", "sum_cents", "n_click", "max_event_id")
+      .orderBy("user_id")
+  }
+
+  val streamMvIncrementalSql: String =
+    """SELECT user_id,
+      |       CAST(count(*) AS BIGINT) AS n,
+      |       CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
+      |         AS sum_cents,
+      |       CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
+      |         AS n_click,
+      |       max(event_id) AS max_event_id
+      |FROM events
+      |GROUP BY user_id
+      |ORDER BY user_id""".stripMargin
+
+  /** Slots of the stream-kmv-incremental sketch. */
+  private val K = 8
+
+  /** stream-kmv-incremental — COUNT DISTINCT maintained by the stream
+    * without storing identities: per event_type, the stored state is a
+    * K-minimum-values array of 52-bit user-id hashes; each micro-batch
+    * contributes its own KMV and the merge is pure array algebra —
+    * sort(distinct(stored ∪ batch))[1..K] — which is associative and
+    * idempotent, so batch order and replay cannot corrupt the sketch
+    * (contrast stream-mv-incremental's additive counters, which DO
+    * need exactly-once; here the store's replay guard is belt and
+    * braces). Four staged files at maxFilesPerTrigger=1 force four
+    * merge generations; the oracle recomputes the K-th smallest hash
+    * per type from ALL events, so the pass certifies the streamed merge
+    * equals the batch sketch — the KMV merge theorem again, now across
+    * micro-batches (agg-kmv-rolling-merge's streaming twin). State is
+    * K longs per key regardless of stream length: the 100 TB/day
+    * firehose costs the same state as a trickle. Per-batch KMVs use
+    * collect_set bounded by the per-type distinct-user domain of ONE
+    * micro-batch (and the merge immediately re-caps at K); a firehose
+    * deployment swaps that for the capped_distinct_list aggregate, same
+    * contract. State commits go through GenerationStore (full next
+    * state into a private gen dir, then an atomic manifest-pointer swap
+    * + replayed-batch guard), so a crash at ANY point leaves a readable
+    * sketch. Types whose distinct-user domain is still < K are DROPPED
+    * from the output (a KMV below capacity estimates nothing; its kth
+    * slot is undefined), matching both the oracle's WHERE rn = K and
+    * agg-kmv-rolling-merge's documented drop-out semantics. */
+  val streamKmvIncremental: Q = replay("stream_kmv_incremental") { r =>
+    val src = r.stageSplit(r.s.read.parquet(s"${r.d}/events.parquet")
+      .select(col("event_id"), col("user_id"), col("event_type")), 4)
+    val emptyArr = expr("CAST(array() AS ARRAY<BIGINT>)")
+    def kmvOf(df: DataFrame): DataFrame =
+      df.select(col("event_type"),
+          expr("hex_slice_long(md5(CAST(user_id AS STRING)), 1, 13)").as("h"))
+        .distinct()
+        .groupBy("event_type")
+        .agg(slice(array_sort(collect_set(col("h"))), 1, K).as("ks"))
+    val sketch = r.toStore(r.source(src, r.s.read.parquet(src).schema, maxFiles = 1))(kmvOf) {
+      (live, pb) =>
+        live.as("b")
+          .join(pb.as("p"), Seq("event_type"), "full_outer")
+          .select(col("event_type"),
+            slice(array_sort(array_distinct(concat(
+              coalesce(col("b.ks"), emptyArr),
+              coalesce(col("p.ks"), emptyArr)))), 1, K).as("ks"))
+    }
+    sketch.filter(size(col("ks")) === K)
+      .select(col("event_type"),
+        element_at(col("ks"), K).as("kth_hash"),
+        size(col("ks")).cast("int").as("n_slots"))
+      .withColumn("est_distinct",
+        expr(s"(${K - 1}L * ${1L << 52}L) div kth_hash"))
+      .select("event_type", "kth_hash", "est_distinct", "n_slots")
+      .orderBy("event_type")
+  }
+
+  val streamKmvIncrementalSql: String =
+    s"""WITH mh AS (
+       |  SELECT DISTINCT event_type,
+       |         CAST(('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h
+       |  FROM events),
+       |ranked AS (
+       |  SELECT event_type, h,
+       |         row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+       |  FROM mh),
+       |counts AS (SELECT event_type, CAST(count(*) AS BIGINT) AS c FROM mh GROUP BY 1)
+       |SELECT r.event_type, r.h AS kth_hash,
+       |       (${K - 1} * ${1L << 52}) // r.h AS est_distinct,
+       |       CAST(least($K, c.c) AS INT) AS n_slots
+       |FROM ranked r JOIN counts c ON c.event_type = r.event_type
+       |WHERE r.rn = $K
+       |ORDER BY r.event_type""".stripMargin
+
+  /** stream-ddsketch-incremental — p50/p90/p99 maintained BY THE
+    * STREAM, the streaming face of agg-ddsketch-quantile: each
+    * micro-batch log-buckets its values with the exact integer
+    * base-2^(1/16) index (RelMore221.idxExpr — no float log, both
+    * engines agree bit-for-bit) and full-outer ADDS its bucket counts
+    * into the stored sketch through GenerationStore's atomic
+    * generation/manifest commit; the final quantile walk answers from
+    * the merged buckets alone. Bucket counts add, so the store's
+    * batchId replay guard is load-bearing here exactly as in
+    * stream-mv-incremental. Four staged files at maxFilesPerTrigger=1
+    * force four merge generations, and the oracle recomputes the
+    * identical bucketing + walk + exact k-th over ALL rows, so a pass
+    * certifies that four additive merges equal one global sketch — the
+    * mergeability theorem, now across micro-batches, with
+    * crash-atomicity and replay-dedup inherited from the store. SCALE:
+    * per batch the stream pays bucket(|batch|) + a merge join on
+    * ≤ ~600 bucket rows; state is the bucket table regardless of
+    * stream length, and the 100 TB/day firehose keeps the same ~KB
+    * sketch a trickle does. The exact verification rank rides
+    * PrefixScan (no unpartitioned window). */
+  val streamDdsketchIncremental: Q = replay("stream_ddsketch_incremental") { r =>
+    val src = r.stageSplit(orders(r.s, r.d)
+      .select(expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("c")), 4)
+    val buckets = r.toStore(r.source(src, r.s.read.parquet(src).schema, maxFiles = 1))(
+      _.withColumn("idx", expr(RelMore221.idxExpr)).groupBy("idx").agg(count(lit(1)).as("cnt"))) {
+      (live, pb) =>
+        live.as("b")
+          .join(pb.as("p"), Seq("idx"), "full_outer")
+          .select(col("idx"),
+            (coalesce(col("b.cnt"), lit(0L)) +
+              coalesce(col("p.cnt"), lit(0L))).as("cnt"))
+    }
+    val scanned = graft.functions.PrefixScan.withRankCumSum(
+      buckets, Seq(col("idx")), Some("cnt"), rankName = "rn", cumName = "cum")
+    val n = scanned.total
+    val ranked = graft.functions.PrefixScan.withRankCumSum(
+      r.s.read.parquet(src), Seq(col("c")), None,
+      rankName = "crn").df.sharedCache()
+    import r.s.implicits._
+    val qs = Seq(500L, 900L, 990L).toDF("q_pm")
+      .withColumn("k", expr(s"(q_pm * ${n}L + 999L) div 1000L"))
+    val hit = qs.join(scanned.df, col("cum") >= col("k"))
+      .groupBy("q_pm", "k").agg(min("idx").as("idx"))
+    val est = hit.select(col("q_pm"), col("k"), col("idx"),
+        expr(RelMore221.loExpr).as("lo"), expr(RelMore221.hiExpr).as("hi"))
+      .select(col("q_pm"), col("k"), col("idx").as("bucket_idx"),
+        expr("(lo + hi) div 2").as("est_cents"),
+        expr("(hi - lo + 1) * 500 div lo").as("bound_pm"))
+    val exact = est.select("q_pm", "k").join(ranked, col("crn") === col("k"))
+      .select(col("q_pm"), col("c").as("exact_cents"))
+    est.join(exact, "q_pm")
+      .select(col("q_pm"), lit(n).as("n"), col("bucket_idx"),
+        col("est_cents"), col("exact_cents"),
+        expr("abs(est_cents - exact_cents) * 1000 div exact_cents").as("rel_err_pm"),
+        col("bound_pm"))
+      .orderBy("q_pm")
+  }
+
+  /** Same oracle as the batch op: the streamed four-generation merge
+    * must equal the one-shot global sketch. */
+  val streamDdsketchIncrementalSql: String = RelMore221.aggDdsketchQuantileSql
 
   val keys: Seq[Key] = Seq(
     Key("stream-dead-letter", streamDeadLetter, streamDeadLetterSql),
@@ -1436,5 +1488,10 @@ object StreamingOps extends KeyModule {
     Key("stream-stateful-count", streamStatefulCount, streamStatefulCountSql),
     Key("stream-dedup-ids", streamDedupIds, streamDedupIdsSql),
     Key("stream-join-static", streamJoinStatic, streamJoinStaticSql),
-    Key("stream-windowed-topk", streamWindowedTopk, streamWindowedTopkSql))
+    Key("stream-windowed-topk", streamWindowedTopk, streamWindowedTopkSql),
+    Key("stream-progress-metrics", streamProgressMetrics, streamProgressMetricsSql),
+    Key("stream-state-reader", streamStateReader, streamStateReaderSql),
+    Key("stream-mv-incremental", streamMvIncremental, streamMvIncrementalSql),
+    Key("stream-kmv-incremental", streamKmvIncremental, streamKmvIncrementalSql),
+    Key("stream-ddsketch-incremental", streamDdsketchIncremental, streamDdsketchIncrementalSql))
 }

@@ -41,20 +41,14 @@ object Tables {
     normalizeEventTs(t(s, d, "events"))
   }
 
-  /** Normalize an events-shaped frame so `ts` is microsecond
-    * TimestampType regardless of the parquet encoding it arrived in.
-    * LongType = legacy nanos-as-long; NTZ = timestamp[us] without tz
-    * (instant-identical under the UTC session timezone every entrypoint
-    * sets); TimestampType passes through. Anything else is an encoding
-    * we have not audited — fail loudly rather than compute garbage. */
   /** Batch-read events with `ts` normalized to a LONG OF EPOCH NANOS
     * regardless of parquet encoding. The staged-stream ops re-stage
-    * events through scratch parquet with an explicit LongType `ts`
-    * schema and convert via `timestamp_micros((ts - pmod(ts,1000)) div
-    * 1000)` — nanos-long is the representation all of that arithmetic
-    * (including the `+30 days in nanos` sentinel offsets) assumes, so
-    * normalize here once instead of per-op. micros→nanos (×1000) cannot
-    * overflow Long for any timestamp this side of year 2262. */
+    * events through scratch parquet with a LongType `ts` and convert it
+    * back through normalizeEventTs — nanos-long is the representation
+    * all of that arithmetic (including the sentinel offsets in nanos)
+    * assumes, so normalize here once instead of per-op. micros→nanos
+    * (×1000) cannot overflow Long for any timestamp this side of year
+    * 2262. */
   def eventsTsNanos(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")
@@ -68,6 +62,12 @@ object Tables {
     }
   }
 
+  /** Normalize an events-shaped frame so column `c` is microsecond
+    * TimestampType regardless of the parquet encoding it arrived in.
+    * LongType = legacy nanos-as-long; NTZ = timestamp[us] without tz
+    * (instant-identical under the UTC session timezone every entrypoint
+    * sets); TimestampType passes through. Anything else is an encoding
+    * we have not audited — fail loudly rather than compute garbage. */
   def normalizeEventTs(df: DataFrame, c: String = "ts"): DataFrame =
     df.schema(c).dataType match {
       case LongType =>
@@ -153,8 +153,8 @@ object Tables {
     * PLANNING time, not at DataFrame construction — a lazy plan built
     * in this scope but executed after it inherits the restored value.
     * Callers must therefore run the actions they want resized INSIDE
-    * the scope (streaming: awaitTermination; batch iterative ops:
-    * sharedCache + count the loop output, return the cached frame). */
+    * the scope (streaming: run the query to completion; batch iterative
+    * ops: sharedCache + count the loop output, return the cached frame). */
   def withShufflePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)

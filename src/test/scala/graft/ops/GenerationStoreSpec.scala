@@ -61,6 +61,29 @@ class GenerationStoreSpec extends SparkTestBase {
     assert(spark.read.parquet(st.dataDir.get).head.getLong(0) == 15L)
   }
 
+  test("mergeBatch applies a replayed batch id once: no doubled count, no new generation") {
+    val root = freshRoot("merge-replay")
+    var built = 0
+    def applyBatch(batchId: Long, add: Long): Unit =
+      GenerationStore.mergeBatch(spark, root, batchId) {
+        built += 1
+        spark.range(1).select(lit(add).as("n"))
+      }((live, delta) => live.unionByName(delta).agg(sum("n").as("n")))
+    applyBatch(0L, 10L)
+    applyBatch(1L, 5L)
+    val before = GenerationStore.read(root)
+    val files = new java.io.File(before.dataDir.get).list().toSet
+    // the restart re-offers batch 1: the additive merge must not run again
+    applyBatch(1L, 5L)
+    val after = GenerationStore.read(root)
+    assert(after == before, after)
+    assert(new java.io.File(after.dataDir.get).list().toSet == files,
+      "the replayed batch published a generation")
+    assert(spark.read.parquet(after.dataDir.get).head.getLong(0) == 15L,
+      "replayed batch was double-counted")
+    assert(built == 2, s"the replayed batch's delta was built: $built builds")
+  }
+
   test("superseded generations are pruned; orphans from killed writers are invisible") {
     val root = freshRoot("prune")
     GenerationStore.commit(root, 0L) { dir =>

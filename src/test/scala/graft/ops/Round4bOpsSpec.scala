@@ -91,14 +91,6 @@ class Round4bOpsSpec extends SparkTestBase {
       .filter(col("n_sessions") =!= col("n_naive")).count() == 0)
   }
 
-  test("stream-foreachbatch-upsert: one row per user, equal to the batch argmax") {
-    val got = run("stream-foreachbatch-upsert").cache()
-    val users = got.select("user_id").distinct().count()
-    assert(got.count() == users)
-    val nUsers = Tables.events(spark, sf).select("user_id").distinct().count()
-    assert(users == nUsers)
-  }
-
   test("agg-bitmap-distinct: the bitmap rollup reproduces exact distinct counts") {
     val got = run("agg-bitmap-distinct").cache()
     assert(got.count() > 0)

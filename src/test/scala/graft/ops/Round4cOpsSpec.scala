@@ -5,7 +5,7 @@ import graft.olist.SparkTestBase
 
 /** Structural invariants for the third round-4 operator batch
   * (sequence packing, BPE pair counting, int8 embedding quantization,
-  * regression aggregates, streaming session windows) over the sf0.001
+  * regression aggregates) over the sf0.001
   * testdata. The oracle harness checks exact values; these check the
   * properties that must hold at any scale. */
 class Round4cOpsSpec extends SparkTestBase {
@@ -106,19 +106,5 @@ class Round4cOpsSpec extends SparkTestBase {
         col("n_regionkey").cast("long"))
     assert(got.count() == src.count())
     assert(got.exceptAll(src).count() == 0 && src.exceptAll(got).count() == 0)
-  }
-
-  test("stream-session-window: sessions partition events and respect the gap") {
-    val got = run("stream-session-window").cache()
-    // every event lands in exactly one session
-    val nEvents = Tables.events(spark, sf).count()
-    assert(got.agg(sum("n_events")).head.getLong(0) == nEvents)
-    // a user's session count never exceeds their event count, and the
-    // session starts within a user are strictly increasing (disjoint)
-    val perUser = got.groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_ev"))
-    assert(perUser.filter(col("n_sessions") > col("n_ev")).count() == 0)
-    assert(got.groupBy("user_id", "session_start").count()
-      .filter(col("count") > 1).count() == 0)
   }
 }

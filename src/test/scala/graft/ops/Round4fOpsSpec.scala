@@ -37,28 +37,6 @@ class Round4fOpsSpec extends SparkTestBase {
     }
   }
 
-  test("stream-flatmap-state: final snapshot equals the batch counts") {
-    val got = run("stream-flatmap-state").cache()
-    val batch = Tables.events(spark, sf)
-      .groupBy("user_id", "event_type").agg(count(lit(1)).as("n_events"))
-    assert(got.count() == batch.count())
-    assert(got.exceptAll(batch).count() == 0 && batch.exceptAll(got).count() == 0)
-  }
-
-  test("stream-stream-join: every pair respects the parity split and time band") {
-    val got = run("stream-stream-join").cache()
-    assert(got.count() > 0)
-    assert(got.filter(col("event_id_a") % 2 =!= 0).count() == 0)
-    assert(got.filter(col("event_id_b") % 2 =!= 1).count() == 0)
-    // time-band check against the source events
-    val ev = Tables.events(spark, sf).select(col("event_id"), col("ts"))
-    val joined = got
-      .join(ev.select(col("event_id").as("event_id_a"), col("ts").as("ts_a")), Seq("event_id_a"))
-      .join(ev.select(col("event_id").as("event_id_b"), col("ts").as("ts_b")), Seq("event_id_b"))
-    assert(joined.filter(
-      abs(col("ts_b").cast("long") - col("ts_a").cast("long")) > 3600).count() == 0)
-  }
-
   test("emb-norm-outliers: moments are sane and outliers bounded") {
     val got = run("emb-norm-outliers").cache()
     assert(got.count() > 0)

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import graft.olist.SparkTestBase
 
-/** Structural invariants for the RelMore5 batch + stream-state-timeout. */
+/** Structural invariants for the RelMore5 batch. */
 class Round4kOpsSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -50,13 +50,5 @@ class Round4kOpsSpec extends SparkTestBase {
     val codeLabels = df.select(explode(split(col("pq_code"), "-")).as("l"))
       .distinct().collect().map(_.getString(0)).toSet
     assert(codeLabels.subsetOf(labels))
-  }
-
-  test("stream-state-timeout: every user closes exactly once with its batch count") {
-    val got = run("stream-state-timeout")
-    val exp = Tables.events(spark, sf).groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"))
-    assert(got.exceptAll(exp).count() == 0)
-    assert(exp.exceptAll(got).count() == 0)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.olist.SparkTestBase
 
 /** Structural invariants for batch G: SQL Q5, FILTER aggregates,
-  * collation, ANN recall, warm-start state, chained window rollup. */
+  * collation, ANN recall. */
 class Round4mOpsSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -37,23 +37,5 @@ class Round4mOpsSpec extends SparkTestBase {
     assert(df.count() > 0)
     assert(df.filter(col("n_match") > col("n_ivf")).count() == 0)
     assert(df.filter(col("recall_micro") < 0 || col("recall_micro") > 1000000).count() == 0)
-  }
-
-  test("stream-initial-state: warm-start + stream equals the full batch counts") {
-    val got = run("stream-initial-state")
-    val exp = Tables.events(spark, sf).groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"))
-    assert(got.exceptAll(exp).count() == 0)
-    assert(exp.exceptAll(got).count() == 0)
-  }
-
-  test("stream-windowed-rollup: daily totals equal the batch rollup") {
-    val got = run("stream-windowed-rollup")
-    val exp = Tables.events(spark, sf)
-      .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(date_trunc("hour", col("ts"))).as("n_hours"))
-    assert(got.exceptAll(exp).count() == 0)
-    assert(exp.exceptAll(got).count() == 0)
   }
 }

@@ -40,12 +40,4 @@ class Round4oOpsSpec extends SparkTestBase {
     assert(df.filter(col("n_trunc") =!= 3).count() == 0)
     assert(df.filter(col("n_match") > 3 || col("n_match") < 0).count() == 0)
   }
-
-  test("stream-tws-timers: timer-closed counts equal the batch counts") {
-    val got = run("stream-tws-timers")
-    val exp = Tables.events(spark, sf).groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"))
-    assert(got.exceptAll(exp).count() == 0)
-    assert(exp.exceptAll(got).count() == 0)
-  }
 }

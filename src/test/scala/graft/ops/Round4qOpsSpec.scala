@@ -9,19 +9,6 @@ class Round4qOpsSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
   private def run(name: String) = graft.SparkEntry.queries(name)(spark, sf)
 
-  test("stream-tws-list-state: bounded buffer equals the batch top-3") {
-    val got = run("stream-tws-list-state")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(desc("ts"), desc("event_id"))
-    val exp = Tables.events(spark, sf)
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-      .groupBy("user_id")
-      // collect_list order is partition-dependent: sort by rk explicitly
-      .agg(expr("concat_ws(',', transform(array_sort(collect_list(struct(rk, event_id))), s -> s.event_id))").as("latest3"))
-    assert(got.exceptAll(exp).count() == 0)
-    assert(exp.exceptAll(got).count() == 0)
-  }
-
   test("ann-filtered-search: neighbors share the query's label") {
     val df = run("ann-filtered-search").cache()
     val labels = Tables.embeddings(spark, sf)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.olist.SparkTestBase
 
 /** Structural invariants for batch T (forecast backtest, freshness,
-  * threshold curve, sliding windows). */
+  * threshold curve). */
 class Round4zOpsSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -29,12 +29,5 @@ class Round4zOpsSpec extends SparkTestBase {
     val byT = got.map(r => r.getInt(0) -> r.getLong(1)).toMap
     val counts = byT.toSeq.sortBy(_._1).map(_._2)
     assert(counts.zip(counts.tail).forall { case (a, b) => a >= b })
-  }
-
-  test("stream-sliding-window: every window total is the sum of two tumbling halves") {
-    val got = run("stream-sliding-window")
-    val sliding = got.agg(sum("n_events")).collect()(0).getLong(0)
-    // each event lands in exactly two 2h/1h windows
-    assert(sliding == 2 * Tables.events(spark, sf).count())
   }
 }

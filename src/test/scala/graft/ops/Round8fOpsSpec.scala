@@ -48,16 +48,4 @@ class Round8fOpsSpec extends SparkTestBase {
       .count()
     assert(rows.map(_.getAs[Long]("n_pairs")).sum == nSampled * (nSampled - 1) / 2)
   }
-
-  test("stream-incremental-etl: second run does not reprocess the first shard") {
-    val rows = run("stream-incremental-etl").collect()
-    val direct = Tables.events(spark, sf).groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("event_id").as("ids")).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    rows.foreach { r =>
-      val (n, ids) = direct(r.getAs[String]("event_type"))
-      assert(r.getAs[Long]("n_events") == n, "row count drifted: reprocessing or loss")
-      assert(r.getAs[Long]("id_sum") == ids, "id checksum drifted: duplicated shard A")
-    }
-  }
 }
