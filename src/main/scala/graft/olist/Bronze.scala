@@ -1,6 +1,7 @@
 package graft.olist
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 import scala.util.control.NonFatal
 
@@ -52,10 +53,13 @@ class Bronze(spark: SparkSession, warehouse: String, audit: Audit) {
   }
 
   /** Load all 9 bronze tables (`03:87-115`). */
-  def loadAll(csvDir: String): Map[String, Long] =
-    Steps.run(Schemas.bronzeTables.map { case (table, schema, pipe) =>
+  def loadAll(csvDir: String): Map[String, Long] = {
+    val rows = Steps.run(Schemas.bronzeTables.map { case (table, schema, pipe) =>
       Steps.step(table)(loadOne(csvDir, table, schema, pipe))
     }).toMap
+    Bridge.waitUntilEmpty(spark.sparkContext) // see Audit: releases the last write's plan
+    rows
+  }
 
   def table(name: String): DataFrame = Schemas.read(spark, warehouse, "bronze", name)
 }

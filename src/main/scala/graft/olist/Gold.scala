@@ -1,6 +1,7 @@
 package graft.olist
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -195,7 +196,7 @@ object Gold {
         if (r.getLong(1) > 0) Some(r.getLong(0)) else None
       } catch { case NonFatal(_) => None }
 
-    Steps.run(Seq(
+    val rows = Steps.run(Seq(
       existingDimDate match {
         case Some(rows) => Steps.step("dim_date")(rows)
         case None => write("dim_date")(dimDate(spark))
@@ -212,6 +213,8 @@ object Gold {
       // its point-lookup key is review_id
       writeFact("fact_reviews", "review_id", "fact_orders")(
         factReviews(silver("order_reviews"), gold("fact_orders"))))).toMap
+    Bridge.waitUntilEmpty(spark.sparkContext) // see Audit: releases the last write's plan
+    rows
   }
 
   def table(spark: SparkSession, warehouse: String, name: String): DataFrame =

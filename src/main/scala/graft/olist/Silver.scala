@@ -1,6 +1,7 @@
 package graft.olist
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Functions._
@@ -220,7 +221,7 @@ object Silver {
     def load(table: String, after: String*)(df: => DataFrame) =
       Steps.step(table, after: _*)(audit.overwrite("silver-etl", s"bronze→$table", "silver", table,
         s"$warehouse/silver/$table")(df))
-    Steps.run(Seq(
+    val rows = Steps.run(Seq(
       load("customers")(customers(bronze.table("olist_customers"))),
       load("sellers")(sellers(bronze.table("olist_sellers"))),
       load("product_category_translation")(
@@ -232,6 +233,8 @@ object Silver {
       load("order_items")(orderItems(bronze.table("olist_order_items"))),
       load("order_payments")(orderPayments(bronze.table("olist_order_payments"))),
       load("order_reviews")(orderReviews(bronze.table("olist_order_reviews"))))).toMap
+    Bridge.waitUntilEmpty(spark.sparkContext) // see Audit: releases the last write's plan
+    rows
   }
 
   def table(spark: SparkSession, warehouse: String, name: String): DataFrame =

@@ -78,8 +78,12 @@ object GenerationStore {
 
   /** Commit one generation: `write` receives the private gen dir to
     * fill (typically df.write.parquet), then the manifest pointer is
-    * swapped atomically and superseded generations are pruned. */
+    * swapped atomically and superseded generations are pruned. A
+    * `batchId` not beyond the live one is refused before anything is
+    * deleted: its gen dir may be the live generation. */
   def commit(root: String, batchId: Long)(write: String => Unit): Unit = {
+    val liveBatch = read(root).lastBatchId
+    require(batchId > liveBatch, s"GenerationStore $root: batch $batchId is not beyond the live batch $liveBatch")
     Files.createDirectories(Paths.get(root))
     val genName = s"gen-$batchId"
     val genDir = Paths.get(root, genName)

@@ -193,10 +193,22 @@ object Tables {
     * path, whether at different scale factors (a Bench at sf0.1
     * overwriting a Verify's sf0.01 staging mid-query) or at the SAME
     * one (two same-sf JVMs deleting each other's live sink/checkpoint
-    * dirs). Scratch is process-private by construction; per-pid dirs
-    * are garbage after the process exits and cheap to leave behind. */
-  def tmp(name: String, d: String): String =
-    s"/tmp/graft-ops/p${ProcessHandle.current().pid()}/$name-${d.replaceAll("[^A-Za-z0-9]", "_")}"
+    * dirs). Scratch is process-private by construction, and the first
+    * call registers `scratchHook`, which removes it at JVM exit. */
+  def tmp(name: String, d: String): String = {
+    scratchHook
+    s"$scratchRoot/$name-${d.replaceAll("[^A-Za-z0-9]", "_")}"
+  }
+
+  /** This JVM's scratch root under `/tmp/graft-ops`. */
+  private[ops] val scratchRoot = new java.io.File(s"/tmp/graft-ops/p${ProcessHandle.current().pid()}")
+
+  /** Deletes `scratchRoot`, and only it, at JVM exit; registered once. */
+  private[ops] lazy val scratchHook: Thread = {
+    val hook = new Thread(() => org.apache.commons.io.FileUtils.deleteQuietly(scratchRoot), "graft-ops-scratch")
+    Runtime.getRuntime.addShutdownHook(hook)
+    hook
+  }
 
   /** Per-process parquet fixture with atomic publish — the ONE place
     * the stored-base pattern lives (r14: extracted from the twin

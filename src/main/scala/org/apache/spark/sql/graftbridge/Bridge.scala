@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
@@ -24,4 +25,7 @@ object Bridge {
   /** Listener events arrive on an asynchronous bus; blocks until every
     * event posted so far has been delivered. */
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Posts `event` to every listener on the bus. */
+  def post(sc: SparkContext, event: SparkListenerEvent): Unit = sc.listenerBus.post(event)
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** The audited load protocol (`Audit.overwrite`): the row count comes
-  * from the write job itself, a load is one write job plus one audit
-  * append, and the audit trail holds one row per load. */
+  * from the write job itself, a load is one write job (its audit row
+  * runs none), and the audit trail holds one row per load. */
 class LoadProtocolSpec extends SparkTestBase {
 
   test("empty frame: returns 0 without waiting out the bound, audits rows_inserted = 0") {
@@ -33,15 +33,15 @@ class LoadProtocolSpec extends SparkTestBase {
     assert(bronze.table("olist_sellers").count() == 0L)
   }
 
-  test("one bronze load is exactly 2 jobs: the CSV→parquet write and the audit append") {
+  test("one bronze load is exactly 1 job: the CSV→parquet write") {
     val csv = tempDir("load-jobs-csv")
     Fixtures.writeAll(csv)
     val wh = tempDir("load-jobs-wh")
     val bronze = new Bronze(spark, wh, new Audit(spark, wh))
     def load() = bronze.loadOne(csv, "olist_customers", Schemas.bronzeCustomers, pipe = false)
     // a fresh table, then an overwrite of the existing one
-    assert(jobsOf(load()) == (5L, 2))
-    assert(jobsOf(load()) == (5L, 2))
+    assert(jobsOf(load()) == (5L, 1))
+    assert(jobsOf(load()) == (5L, 1))
   }
 
   test("audit: one row per load, with its start, end and duration") {

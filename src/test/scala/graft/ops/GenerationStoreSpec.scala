@@ -84,6 +84,19 @@ class GenerationStoreSpec extends SparkTestBase {
     assert(built == 2, s"the replayed batch's delta was built: $built builds")
   }
 
+  test("a commit at the live batch id throws and leaves the live generation readable") {
+    val root = freshRoot("commit-live")
+    GenerationStore.commit(root, 3L)(spark.range(6).toDF("v").write.parquet(_))
+    val before = GenerationStore.read(root)
+    var wrote = false
+    Seq(3L, 2L).foreach { id =>
+      intercept[IllegalArgumentException](GenerationStore.commit(root, id)(_ => wrote = true))
+    }
+    assert(!wrote, "the refused commit ran its write")
+    assert(GenerationStore.read(root) == before)
+    assert(spark.read.parquet(before.dataDir.get).count() == 6)
+  }
+
   test("superseded generations are pruned; orphans from killed writers are invisible") {
     val root = freshRoot("prune")
     GenerationStore.commit(root, 0L) { dir =>

@@ -52,6 +52,17 @@ step "detcompare" $?
 echo "=== SMOKE ==="
 sbt -batch 'runMain graft.tools.Smoke' > /tmp/${TAG}_smoke.log 2>&1
 step "smoke" $?
+echo "=== PIPELINE ==="
+# the pipeline benchmark's own tests, then one short pipeline-2k run:
+# its output checks (row counts, gold idempotence, 25 SUCCESS audit
+# rows per full run and 6 per gold rebuild) pass only when the last
+# line reports "correct": true
+python3 -m unittest discover -s perfbench/tests > /tmp/${TAG}_pipeline.log 2>&1
+rc=$?
+python3 perfbench/run.py --workload pipeline-2k --seed 11 --seconds 1 --trace 0 >> /tmp/${TAG}_pipeline.log 2>&1
+tail -n 1 /tmp/${TAG}_pipeline.log | python3 -c 'import json, sys
+sys.exit(0 if json.loads(sys.stdin.read()).get("correct") is True else 1)' || rc=1
+step "pipeline" $rc
 echo "=== BENCH ==="
 mkdir -p bench_runs/${TAG}
 N=$(ls bench_runs/${TAG}/ 2>/dev/null | grep -c '^run')
